@@ -95,7 +95,6 @@ class TestJoinStrategies:
         """Q3 shape: the segment and date predicates must reach the
         parquet scans, the filtered customer side must broadcast, and the
         plan must end in a TakeOrdered, not a global sort."""
-        from unraveldocs_spark.trainingdata import _t  # noqa: F401
         from unraveldocs_spark.queries import q_shipping_priority
 
         plan = plan_of(q_shipping_priority(spark, SF), "formatted")
@@ -979,3 +978,64 @@ class TestDedupIncrementPlan:
             if "doc_id" in l and ">=" in l and "Condition" in l
         ]
         assert len(cond_lines) >= 2, fmt  # bands_new branch AND newdocs spine
+
+
+class TestScanFanOut:
+    """scanfan.scan(fan=True): round-robin fan-out to defaultParallelism
+    behind a checkpoint barrier only when the parquet input has fewer row
+    groups than cores; identity otherwise."""
+
+    @staticmethod
+    def _write(tmp_path, name, n_rows, row_group_size):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tbl = pa.table({
+            "a": list(range(n_rows)),
+            "b": [i * 3 for i in range(n_rows)],
+            "c": [f"wide-{i}" for i in range(n_rows)],
+        })
+        pq.write_table(tbl, tmp_path / f"{name}.parquet",
+                       row_group_size=row_group_size)
+        assert pq.ParquetFile(tmp_path / f"{name}.parquet").num_row_groups == (
+            -(-n_rows // row_group_size)
+        )
+
+    def test_narrow_scan_fans_out_behind_a_barrier(self, spark, tmp_path):
+        from unraveldocs_spark.scanfan import scan
+
+        cores = spark.sparkContext.defaultParallelism
+        assert cores > 1
+        self._write(tmp_path, "t", 64, 64)  # one row group < cores
+        df = scan(spark, str(tmp_path), "t", fan=True)
+        assert df.rdd.getNumPartitions() == cores
+        derived = df.withColumn("d", F.col("a") * 2).filter(F.col("d") > 10)
+        plan = plan_of(derived, "formatted")
+        # the derived-column filter runs on the checkpointed rows: the
+        # parquet scan is not in the plan at all, so nothing re-derives
+        # the expression on the unsplit single-task scan
+        assert "Scan ExistingRDD" in plan
+        assert "Scan parquet" not in plan and "PushedFilters" not in plan
+        assert "Filter" in plan
+        assert derived.count() == 64 - 6
+
+    def test_wide_scan_is_identity(self, spark, tmp_path):
+        from unraveldocs_spark.scanfan import scan
+
+        cores = spark.sparkContext.defaultParallelism
+        self._write(tmp_path, "t", 16 * cores, 16)  # row groups == cores
+        df = scan(spark, str(tmp_path), "t", fan=True)
+        plan = plan_of(df, "formatted")
+        assert "Scan parquet" in plan
+        assert "Exchange" not in plan and "ExistingRDD" not in plan
+
+    def test_fan_out_checkpoints_only_selected_columns(self, spark, tmp_path):
+        from unraveldocs_spark.scanfan import scan
+
+        self._write(tmp_path, "t", 64, 64)
+        df = scan(spark, str(tmp_path), "t", cols=["a", "b"], fan=True)
+        assert df.columns == ["a", "b"]
+        (rdd_line,) = [
+            l for l in plan_of(df, "simple").splitlines() if "ExistingRDD" in l
+        ]
+        assert "a#" in rdd_line and "b#" in rdd_line and "c#" not in rdd_line

@@ -574,16 +574,16 @@ def test_minhash_wide_band_candidates_subset(spark):
     default bands."""
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _JACCARD_DEN,
         _JACCARD_NUM,
         _minhash_candidate_pairs,
         _spark_shingles,
-        _t,
     )
 
     sh = (
-        _t(spark, "/root/testdata/sf0.001", "documents")
+        scan(spark, "/root/testdata/sf0.001", "documents")
         .select("doc_id", _spark_shingles(F.col("text")).alias("sh"))
         .filter(F.size("sh") > 0)
     )
@@ -1020,13 +1020,13 @@ class TestParagraphUpperBound:
     def test_bound_dominates_true_paragraph_count(self, spark):
         from pyspark.sql import functions as F
 
+        from unraveldocs_spark.scanfan import scan
         from unraveldocs_spark.trainingdata import (
             _paragraphs,
-            _t,
             paragraph_upper_bound,
         )
 
-        d = _t(spark, "/root/testdata/sf0.01", "documents")
+        d = scan(spark, "/root/testdata/sf0.01", "documents")
         n_paras = _paragraphs(d).count()
         assert paragraph_upper_bound(d) >= n_paras
 

@@ -135,14 +135,14 @@ def _banded_candidates(d, n_bands: int, n_rows: int):
 def measure(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _paragraphs,
         _spark_shingles,
-        _t,
         q_line_dedup,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     n_docs = d.count()
     sh = d.select("doc_id", _spark_shingles(F.col("text")).alias("sh")).filter(
         F.size("sh") > 0

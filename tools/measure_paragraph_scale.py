@@ -34,17 +34,17 @@ MULTS = (1, 4)
 def measure(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _minhash_candidate_pairs,
         _paragraphs,
         _spark_shingles,
-        _t,
         minhash_band_shape,
         paragraph_upper_bound,
         q_dedup_paragraph,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     n_docs = docs.count()
     pub = paragraph_upper_bound(docs)
     shape = minhash_band_shape(pub)

@@ -39,17 +39,17 @@ from measure_dedup_scale import MULTS, build_corpus  # noqa: E402
 def measure(spark, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _ESUB_K,
         _jaccard_pairs,
-        _t,
         connected_components,
         minhash_band_shape,
         q_exact_substring_dedup,
         q_stratified_split,
     )
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     n_docs = d.count()
 
     # --- exact_substring_dedup volumes -----------------------------------

@@ -190,17 +190,19 @@ class DirCheckpointStore:
         return self.append(remaining, run_id=run_id, compacted=True)
 
     # -- read -------------------------------------------------------------
-    def _live_snapshots(self) -> list[str]:
-        """Snapshots a reader must scan: everything from the most recent
-        compacted snapshot (which holds full state) onward."""
+    def _live_snapshots(self, upto: str | None = None) -> list[str]:
+        """Snapshots a reader must scan for the state AS OF ``upto``
+        (default: the latest): the most recent compacted snapshot <=
+        ``upto`` (which holds full state) plus every append after it."""
         snaps = self.snapshots()
-        last_compacted = None
-        for s in snaps:
-            if self._manifest(s).get("compacted"):
-                last_compacted = s
-        if last_compacted is None:
+        if upto is not None:
+            snaps = [s for s in snaps if self._snap_num(s) <= self._snap_num(upto)]
+            if not snaps or snaps[-1] != upto:
+                raise ValueError(f"unknown snapshot {upto!r}")
+        compacted = [s for s in snaps if self._manifest(s).get("compacted")]
+        if not compacted:
             return snaps
-        cutoff = self._snap_num(last_compacted)
+        cutoff = self._snap_num(compacted[-1])
         return [s for s in snaps if self._snap_num(s) >= cutoff]
 
     def results(self, spark: SparkSession) -> DataFrame:
@@ -282,17 +284,9 @@ class DirCheckpointStore:
         from pyspark.sql import functions as F
 
         def keys_at(s):
-            # cumulative state AS OF s: latest compacted snapshot <= s
-            # (full state) plus every append after it up to s
-            upto = [x for x in self.snapshots()
-                    if self._snap_num(x) <= self._snap_num(s)]
-            if not upto or upto[-1] != s:
-                raise ValueError(f"unknown snapshot {s!r}")
-            compacted = [x for x in upto if self._manifest(x).get("compacted")]
-            start = self._snap_num(compacted[-1]) if compacted else 0
             paths = [
                 os.path.join(self.snap_dir, x, "results")
-                for x in upto if self._snap_num(x) >= start
+                for x in self._live_snapshots(upto=s)
             ]
             return (
                 spark.read.schema(self.results_schema).parquet(*paths)

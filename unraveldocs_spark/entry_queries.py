@@ -17,12 +17,14 @@ from .extract import extract_stage
 from .pipeline import salted_repartition
 from .queries import _spark_java_word_count, _sql_java_word_count
 from .rollup import conversation_rollup
+from .scanfan import scan
+from .trainingdata import digest56
 
 
 def derived_transcripts(spark, sf_dir):
     """documents -> transcripts(conv_id, turn_idx, role, text, tool, ts):
     conversation = source, turn order = doc_id order within source."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("doc_id")
     role = (
         F.when(F.col("doc_id") % 5 == 4, F.lit("tool"))
@@ -128,7 +130,7 @@ def q_extract_synthetic(spark, sf_dir):
 def q_simhash_near_dupes(spark, sf_dir):
     from .textanalysis import simhash_near_dupes
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     return simhash_near_dupes(d, max_hamming=16)
 
 
@@ -138,7 +140,7 @@ def q_lang_id(spark, sf_dir):
     equivalent."""
     from .textanalysis import lang_id_expr
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     return d.select(
         "doc_id", lang_id_expr(F.col("text")).alias("lang_pred")
     ).orderBy("doc_id")
@@ -149,7 +151,7 @@ def q_winnow_fingerprints(spark, sf_dir):
     (the checksum pins the selected hash VALUES, not just how many)."""
     from .textanalysis import fingerprint_stage
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     fp_sum = F.aggregate(
         F.col("fingerprints"),
         F.lit(0).cast("long"),
@@ -171,7 +173,7 @@ def _cos_e4(df):
 def q_ann_lsh(spark, sf_dir):
     from .similarity import lsh_topk
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = scan(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
     return _cos_e4(
         lsh_topk(e.filter(F.col("vec_id") != 0), qvec, k=10, probe_hamming=5)
@@ -181,7 +183,7 @@ def q_ann_lsh(spark, sf_dir):
 def q_ann_ivf(spark, sf_dir):
     from .similarity import ivf_topk
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = scan(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
     return _cos_e4(
         ivf_topk(e.filter(F.col("vec_id") != 0), qvec, k=10, n_centroids=16, nprobe=6)
@@ -193,7 +195,7 @@ def q_ann_pq(spark, sf_dir):
     the 8-byte code column (similarity.pq_topk)."""
     from .similarity import pq_topk
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = scan(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
     return pq_topk(e.filter(F.col("vec_id") != 0), qvec, k=10)
 
@@ -206,7 +208,7 @@ def q_pdf_layout(spark, sf_dir):
     verified against a DuckDB oracle that re-derives the expected lines
     with window functions — two independent implementations of the
     clustering rules (pdflayout.py)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 12)
     runs = F.reverse(
         F.transform(
@@ -278,7 +280,7 @@ FROM doc_text ORDER BY conv_id, turn_idx
 def q_multimodal_decode(spark, sf_dir):
     from .multimodal import attach_binary_payload, decode_stage
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     return decode_stage(attach_binary_payload(d)).orderBy("doc_id")
 
 
@@ -287,7 +289,7 @@ def q_multimodal_resize(spark, sf_dir):
     arithmetic fit into 224x224) downstream of the decode stage."""
     from .multimodal import attach_binary_payload, decode_stage, resize_plan_stage
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     return resize_plan_stage(decode_stage(attach_binary_payload(d))).orderBy(
         "doc_id"
     )
@@ -321,7 +323,7 @@ def q_multimodal_features(spark, sf_dir):
     so hashing never depends on list canonicalization."""
     from .multimodal import attach_binary_payload, feature_stage
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     return feature_stage(attach_binary_payload(d)).orderBy("doc_id")
 
 
@@ -350,7 +352,7 @@ def q_frame_sample(spark, sf_dir):
     downstream of the Arrow decode stage (multimodal.frame_sample_stage)."""
     from .multimodal import attach_binary_payload, decode_stage, frame_sample_stage
 
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     return frame_sample_stage(
         decode_stage(attach_binary_payload(d)), every_n=30
     ).orderBy("doc_id", "frame_no")
@@ -744,25 +746,17 @@ def q_conversation_pack(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_turns_kept"),
             F.sum("n_tokens").cast("bigint").alias("n_tokens_kept"),
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.array_join(
-                            F.transform(
-                                F.array_sort(
-                                    F.collect_list(F.struct("turn_idx", "line"))
-                                ),
-                                lambda s: s["line"],
-                            ),
-                            "\n",
-                        ).cast("binary")
+            digest56(
+                F.array_join(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(F.struct("turn_idx", "line"))
+                        ),
+                        lambda s: s["line"],
                     ),
-                    1,
-                    14,
-                ),
-                16,
-                10,
-            ).cast("bigint").alias("example_digest"),
+                    "\n",
+                )
+            ).alias("example_digest"),
         )
         .orderBy("conv_id")
     )
@@ -835,7 +829,7 @@ def q_preference_pairs(spark, sf_dir):
     conversation, not corpus size, so no salting is needed on the pair
     key (unlike the extraction stage's conv_id salt, where payload
     bytes ride the shuffle)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     w0 = Window.partitionBy("source").orderBy("doc_id")
     turn_idx = (F.row_number().over(w0) - 1).cast("int")
     t = d.select(
@@ -880,11 +874,6 @@ def q_preference_pairs(spark, sf_dir):
 
     def pick(rn, col):
         return F.max(F.when(F.col(rn) == 1, F.col(col)))
-
-    def digest56(col):
-        return F.conv(
-            F.substring(F.md5(col.cast("binary")), 1, 14), 16, 10
-        ).cast("bigint")
 
     g = (
         ranked.groupBy("conv_id", F.col("prompt_idx").cast("int").alias("prompt_idx"))
@@ -1000,7 +989,7 @@ def q_best_of_n(spark, sf_dir):
     attribution window, then one (conv_id, prompt_idx) rank sharing
     its Exchange with the groupBy; two hash Exchanges total, no
     self-join, no explode."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = scan(spark, sf_dir, "documents")
     w0 = Window.partitionBy("source").orderBy("doc_id")
     turn_idx = (F.row_number().over(w0) - 1).cast("int")
     t = d.select(
@@ -1037,11 +1026,6 @@ def q_best_of_n(spark, sf_dir):
         F.col("reward").desc(), F.col("turn_idx").asc()
     )
     ranked = resp.withColumn("rn", F.row_number().over(w_b))
-
-    def digest56(col):
-        return F.conv(
-            F.substring(F.md5(col.cast("binary")), 1, 14), 16, 10
-        ).cast("bigint")
 
     g = ranked.groupBy(
         "conv_id", F.col("prompt_idx").cast("int").alias("prompt_idx")

@@ -144,7 +144,6 @@ def run_extraction(
     store=None,
     num_partitions: int | None = None,
     salt: int = DEFAULT_SALT,
-    checkpoint: bool = True,
 ) -> dict:
     """Run the pipeline once.  Returns a dict with the snapshot id, run id,
     rollup DataFrame and basic counters.  With a ``store``, previously
@@ -164,7 +163,7 @@ def run_extraction(
 
     t0 = time.monotonic()
     snapshot_id = None
-    if store is not None and checkpoint:
+    if store is not None:
         # materialize once; lineage derives from the same computed result
         extractions = extractions.persist()
         n = extractions.count()

@@ -18,29 +18,10 @@ Parity rules used throughout (the driver hash-compares values):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _tf(
-    spark: SparkSession, sf_dir: str, name: str, cols: list[str] | None = None
-) -> DataFrame:
-    """_t plus scale-adaptive scan fan-out (scanfan.fan_out): spreads
-    heavy per-row work above single-row-group driver parquet across all
-    cores; identity when the input already splits to >= core count.
-    ``cols`` prunes the projection BEFORE the fan-out barrier — the
-    checkpoint materializes every column it is given, so wide unused
-    columns (e.g. events.props JSON) must not ride through it."""
-    from .scanfan import fan_out
-
-    df = _t(spark, sf_dir, name)
-    if cols is not None:
-        df = df.select(*cols)
-    return fan_out(spark, df, f"{sf_dir}/{name}.parquet")
+from .scanfan import scan
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +32,7 @@ def _tf(
 def q_pricing_summary(spark, sf_dir):
     """groupBy two low-cardinality keys; partial aggregation map-side, one
     shuffle; money sums exact via DECIMAL(18,2)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = scan(spark, sf_dir, "lineitem")
     dec = lambda c: F.col(c).cast("decimal(18,2)")
     return (
         li.groupBy("l_returnflag", "l_linestatus")
@@ -92,7 +73,7 @@ _SIZE_CAP = 260  # byte-cap analog against n_chars
 
 
 def q_upload_validation(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     status = (
         F.when(~F.col("lang").isin(*_LANG_ALLOWLIST), F.lit("FAILED_VALIDATION"))
         .when(F.col("n_chars") > _SIZE_CAP, F.lit("FAILED_SIZE"))
@@ -141,7 +122,7 @@ FROM per_file GROUP BY source ORDER BY source
 # ---------------------------------------------------------------------------
 
 def q_collection_rollup(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     status = (
         F.when(F.col("doc_id") % 10 < 7, F.lit("COMPLETED"))
         .when(F.col("doc_id") % 10 < 9, F.lit("FAILED"))
@@ -195,8 +176,8 @@ FROM agg ORDER BY conv_id
 def q_anti_join_resume(spark, sf_dir):
     """Orders with no lineitems — the left-anti resume primitive
     (ExtractTextFromDocumentImpl.java:50-54: skip keys already done)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    o = scan(spark, sf_dir, "orders")
+    li = scan(spark, sf_dir, "lineitem")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_anti")
         .select("o_orderkey", "o_orderstatus")
@@ -212,8 +193,8 @@ ORDER BY o_orderkey
 
 
 def q_semi_join_exists(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = scan(spark, sf_dir, "customer")
+    o = scan(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", "c_mktsegment")
@@ -231,9 +212,9 @@ ORDER BY c_custkey
 def q_left_join_pending_default(spark, sf_dir):
     """orders left-join per-order line counts; missing side defaults to
     PENDING (GetCollectionResultImpl.java:46-52 coalesce-to-PENDING)."""
-    o = _t(spark, sf_dir, "orders")
+    o = scan(spark, sf_dir, "orders")
     li = (
-        _t(spark, sf_dir, "lineitem")
+        scan(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(F.count(F.lit(1)).alias("n_lines"))
     )
@@ -264,8 +245,8 @@ ORDER BY o_orderkey
 def q_in_list_lookup(spark, sf_dir):
     """documentId IN (:ids) batch lookup (OcrDataRepository.java:14) —
     broadcastable isin over a small key list."""
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
+    n = scan(spark, sf_dir, "nation")
+    c = scan(spark, sf_dir, "customer")
     keys = [
         r.n_nationkey for r in n.filter(F.col("n_nationkey") % 5 == 0).collect()
     ]
@@ -287,9 +268,9 @@ def q_broadcast_star_join(spark, sf_dir):
     """customer ⋈ nation ⋈ region with explicit broadcast of the dims —
     the plan a 100TB fact scan wants (small sides broadcast, no shuffle
     of the fact table)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    c = scan(spark, sf_dir, "customer")
+    n = scan(spark, sf_dir, "nation")
+    r = scan(spark, sf_dir, "region")
     return (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -318,7 +299,7 @@ GROUP BY r_name ORDER BY r_name
 def q_search_filter(spark, sf_dir):
     """3-way lower-contains OR search (CustomUserRepositoryImpl.java:47-51
     / DocumentSearchRepository.java:51-66)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     q = "merge"
     cond = (
         F.lower(F.col("text")).contains(q)
@@ -338,7 +319,7 @@ ORDER BY doc_id
 def q_topn_recent(spark, sf_dir):
     """newest-first + page size (DocumentSearchService.java:174-186) with a
     unique tiebreak so the top-N set is deterministic."""
-    o = _t(spark, sf_dir, "orders")
+    o = scan(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_orderdate").desc(), F.col("o_orderkey").desc())
         .select("o_orderkey", F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date"))
@@ -361,7 +342,7 @@ def q_paginate_offset(spark, sf_dir):
     a pipeline.  At scale use ``orderBy(...).limit(offset+size)`` (top-K
     fold, what q_topn_recent does) or keyset pagination on the sort key;
     do not copy this window into production paths."""
-    o = _t(spark, sf_dir, "orders")
+    o = scan(spark, sf_dir, "orders")
     w = Window.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
         o.withColumn("rn", F.row_number().over(w))
@@ -382,7 +363,7 @@ SELECT o_orderkey, CAST(rn AS INT) AS rn FROM (
 def q_time_window_counts(spark, sf_dir):
     """counts by status after a time boundary
     (DashboardMetricsCacheService.java:40-58) — single-pass conditional agg."""
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     cutoff = "2024-06-01"
     return (
         e.groupBy("event_type")
@@ -405,7 +386,7 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 def q_distinct_count(spark, sf_dir):
     """COUNT(DISTINCT ...) pagination totals (CustomUserRepositoryImpl.java:24)."""
-    o = _t(spark, sf_dir, "orders")
+    o = scan(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderstatus")
         .agg(F.countDistinct("o_custkey").alias("n_customers"))
@@ -421,7 +402,7 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 
 def q_group_stats(spark, sf_dir):
     """GROUP BY fileType count/sum (DocumentCollectionRepository.java:24-37)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     return (
         d.groupBy("lang")
         .agg(
@@ -459,13 +440,13 @@ def q_shipping_priority(spark, sf_dir):
     Money through DECIMAL(18,4) per the FP-parity rules; TakeOrdered
     caps the result driver-side."""
     cutoff = F.to_timestamp(F.lit(_SP_CUTOFF))
-    c = _t(spark, sf_dir, "customer").filter(
+    c = scan(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == _SP_SEGMENT
     ).select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff).select(
+    o = scan(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff).select(
+    li = scan(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff).select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     dec = lambda col: F.col(col).cast("decimal(18,2)")
@@ -516,7 +497,7 @@ def q_group_stats_cube(spark, sf_dir):
     Scale shape: Spark expands the cube map-side (one Expand node) and
     aggregates through a single shuffle — same cost class as the flat
     groupBy, not 4 separate scans."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     return (
         d.cube("lang", "source")
         .agg(
@@ -539,7 +520,7 @@ ORDER BY lang NULLS FIRST, source NULLS FIRST
 
 def q_union_shards(spark, sf_dir):
     """unionByName checkpoint-shard stitch (SURVEY.md §2.8)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     even = d.filter(F.col("doc_id") % 2 == 0)
     odd = d.filter(F.col("doc_id") % 2 == 1)
     return (
@@ -562,7 +543,7 @@ SELECT lang, COUNT(*) AS n_docs FROM (
 def q_pdf_extension_predicate(spark, sf_dir):
     """strip query string, lowercase, endswith '.pdf'
     (ExtractImageURL.java:78-85) over a deterministically derived URL."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     url = F.concat(
         F.lit("https://cdn/"),
         F.col("source"),
@@ -597,7 +578,7 @@ ORDER BY doc_id
 
 def q_text_preview(spark, sf_dir):
     """text[:200] + '...' (DocumentSearchService.java:188-194)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     preview = F.when(
         F.length("text") > 200, F.concat(F.substring("text", 1, 200), F.lit("..."))
     ).otherwise(F.col("text"))
@@ -614,7 +595,7 @@ FROM documents ORDER BY doc_id
 def q_tag_split(spark, sf_dir):
     """split(',') -> trim -> drop empties (GetOcrDataImpl.java:65-71) via
     higher-order functions."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     tags_raw = F.concat(F.lit(" "), F.col("lang"), F.lit(" , "), F.col("source"), F.lit(" ,, misc ,"))
     tags = F.filter(
         F.transform(F.split(tags_raw, ","), lambda x: F.trim(x)),
@@ -640,7 +621,7 @@ FROM documents ORDER BY doc_id
 def q_fence_strip(spark, sf_dir):
     """markdown fence strip (AiClassificationService.java:155-159) as
     pure regexp built-ins over a deterministically fenced payload."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     fenced = F.when(
         F.col("doc_id") % 3 == 0,
         F.concat(F.lit("```json\n"), F.col("text"), F.lit("\n```")),
@@ -677,7 +658,7 @@ FROM src ORDER BY doc_id
 def q_truncate_text(spark, sf_dir):
     """AI input truncation text[:N] (AiClassificationService.java:191-198),
     N scaled down to the synthetic doc sizes."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     cap = 120
     return d.select(
         "doc_id",
@@ -726,7 +707,7 @@ def _sql_java_word_count(expr: str) -> str:
 def q_word_char_counts(spark, sf_dir):
     """getCharacterCount/getWordCount (OcrResult.java:76-88): untrimmed
     ASCII-\\s split with isBlank guard."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.length("text").alias("n_chars_text"),
@@ -743,7 +724,7 @@ FROM documents ORDER BY doc_id
 
 def q_error_type_sanitize(spark, sf_dir):
     """metric-tag sanitizer (OcrMetrics.java:162-170)."""
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     sanitized = F.substring(
         F.regexp_replace(F.lower(F.col("props")), "[^a-z0-9_]", "_"), 1, 50
     )
@@ -762,7 +743,7 @@ FROM events ORDER BY event_id LIMIT 500
 
 def q_log_sanitize(spark, sf_dir):
     """CR/LF strip (SanitizeLogging.java)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     return d.select(
         "doc_id", F.regexp_replace("text", "[\r\n]", "").alias("log_safe")
     ).orderBy("doc_id")
@@ -777,7 +758,7 @@ FROM documents ORDER BY doc_id
 def q_turn_window(spark, sf_dir):
     """row_number over (partition, order) — the per-conversation turn
     check (SURVEY.md §2.8)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy("doc_id")
     return d.select(
         "doc_id", "source", (F.row_number().over(w) - 1).alias("turn_idx")
@@ -842,7 +823,7 @@ def q_filename_rewrite(spark, sf_dir):
     """DOCX filename derivation name[:lastIndexOf('.')] + '.docx'
     (DownloadOcrServiceImpl.java:71-72) + collection default name
     'Collection-' + timestamp (DocumentUploadImpl.java:66-69)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     fname = F.concat(
         F.col("source"), F.lit("-"), F.col("doc_id").cast("string"),
         F.when(F.col("doc_id") % 2 == 0, F.lit(".pdf")).otherwise(F.lit(".tar.gz")),
@@ -879,7 +860,7 @@ def q_classify_parse(spark, sf_dir):
     """AI classification response parse with per-field defaults
     (AiClassificationService.java:160-178): document_type -> 'other',
     confidence -> 0.5, over deterministically constructed JSON payloads."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     payload = (
         F.when(
             F.col("doc_id") % 3 == 0,
@@ -926,7 +907,7 @@ FROM src ORDER BY doc_id
 def q_array_mean_confidence(spark, sf_dir):
     """mean of an array column — the Vision block-confidence average
     (GoogleVisionOcrProvider.java:283-295) over the embedding vectors."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = scan(spark, sf_dir, "embeddings")
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     mean = F.aggregate(dv, F.lit(0.0), lambda acc, x: acc + x) / F.size("embedding")
     return e.select(
@@ -945,7 +926,7 @@ FROM embeddings ORDER BY vec_id
 def q_daily_quota(spark, sf_dir):
     """daily OCR quota counter: groupBy(user, day).count vs tier limit
     (OcrQuotaService.java:60-87, limits OcrProperties.java:85-116)."""
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     day = F.date_format("ts", "yyyy-MM-dd")
     return (
         e.groupBy(F.col("user_id"), day.alias("day"))
@@ -979,7 +960,7 @@ def q_explode_unnest(spark, sf_dir):
     """Collection ⋈ files 1:N unnest (DocumentCollectionRepository.java:24-37
     `JOIN c.files f`): documents grouped into per-source arrays, exploded
     back out with per-element position."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     collections = d.groupBy("source").agg(
         F.sort_array(F.collect_list("doc_id")).alias("file_ids")
     )
@@ -1007,7 +988,7 @@ ORDER BY source, file_pos
 def q_soft_delete_filter(spark, sf_dir):
     """`deletedAt IS NULL` baseline predicate
     (CustomUserRepositoryImpl.java:27) over a derived deleted_at column."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     deleted_at = F.when(
         F.col("doc_id") % 7 == 0, F.lit("2026-02-01")
     ).otherwise(F.lit(None))
@@ -1081,7 +1062,7 @@ def q_search_ranked(spark, sf_dir):
     as ROUND(score*100) BIGINT (exact: 2a + 1.5b + c is a multiple of
     0.5)."""
     q = _SR_QUERY
-    d = _tf(spark, sf_dir, "documents").filter(F.col("lang") == _SR_LANG)
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("lang") == _SR_LANG)
     fname = F.lower(
         F.concat(F.col("source"), F.lit("-"), F.col("doc_id").cast("string"))
     )
@@ -1143,7 +1124,7 @@ def q_search_bm25(spark, sf_dir):
     corpus stats (N, sum_dl, per-term df) are ONE global aggregate row
     broadcast back — a single Exchange, then an embarrassingly parallel
     scoring scan + TakeOrdered."""
-    d = _tf(spark, sf_dir, "documents").filter(F.col("lang") == _SR_LANG)
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("lang") == _SR_LANG)
     # isin -> codegen InSet hash probe per token (array_contains was a
     # 33-element linear scan per token); identical membership semantics
     stops = list(ES_ENGLISH_STOPWORDS)
@@ -1283,7 +1264,7 @@ def q_search_bm25f(spark, sf_dir):
 
     Scale shape: identical to search_bm25 — zero explode, one global
     stats aggregate broadcast back, embarrassingly parallel scoring."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("lang") == _SR_LANG)
+    d = scan(spark, sf_dir, "documents").filter(F.col("lang") == _SR_LANG)
     stop_arr = F.array(*[F.lit(w) for w in ES_ENGLISH_STOPWORDS])
     toks = F.filter(
         F.split(F.lower(F.col("text")), _SR_TOKEN_SPLIT),
@@ -1445,7 +1426,7 @@ def q_vision_metrics(spark, sf_dir):
     arithmetic — independent of the JSON path."""
     from .extract import vision_metrics_stage
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     k = (F.col("doc_id") % 3).cast("int")  # 0..2 blocks
     mode = (F.col("doc_id") % 4).cast("int")
 
@@ -1549,7 +1530,7 @@ def q_edit_upsert(spark, sf_dir):
     view the store's upsert would publish."""
     from .edits import ERR_NOT_COMPLETED, apply_edits
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     status = (
         F.when(F.col("doc_id") % 10 < 7, F.lit("COMPLETED"))
         .when(F.col("doc_id") % 10 < 9, F.lit("FAILED"))
@@ -1632,8 +1613,8 @@ def q_provider_resolution(spark, sf_dir):
     the rest fall back to Tesseract — then roll up per user.  The dim
     broadcast means the fact scan never shuffles for the join; the only
     shuffle is the per-user window/rollup."""
-    e = _t(spark, sf_dir, "events")
-    c = _t(spark, sf_dir, "customer")
+    e = scan(spark, sf_dir, "events")
+    c = scan(spark, sf_dir, "customer")
     dim = c.select(
         F.col("c_custkey").alias("user_id"),
         (F.col("c_custkey") % 5 == 0).alias("is_paid"),
@@ -1731,25 +1712,25 @@ def q_regional_revenue(spark, sf_dir):
     on those keys.  The date filter reaches the orders scan.  Money
     through DECIMAL per the FP-parity rules."""
     r = (
-        _t(spark, sf_dir, "region")
+        scan(spark, sf_dir, "region")
         .filter(F.col("r_name") == _RR_REGION)
         .select("r_regionkey")
     )
-    n = _t(spark, sf_dir, "nation")
+    n = scan(spark, sf_dir, "nation")
     nr = F.broadcast(
         n.join(r, n.n_regionkey == r.r_regionkey).select("n_nationkey", "n_name")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = scan(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    c = scan(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = (
-        _t(spark, sf_dir, "orders")
+        scan(spark, sf_dir, "orders")
         .filter(
             (F.col("o_orderdate") >= F.to_timestamp(F.lit(_RR_START)))
             & (F.col("o_orderdate") < F.to_timestamp(F.lit(_RR_END)))
         )
         .select("o_orderkey", "o_custkey")
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = scan(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     dec = lambda col: F.col(col).cast("decimal(18,2)")
@@ -1822,7 +1803,7 @@ def q_delete_reclaim(spark, sf_dir):
     single groupBy(source) shuffle; at 100 TB the deleted-key set would
     broadcast into a semi-join against a source-bucketed table instead of
     the derived modulus."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     coll_num = F.substring(F.col("source"), 4, 10).cast("int")
     status = (
         F.when(~F.col("lang").isin(*_LANG_ALLOWLIST), F.lit("FAILED_VALIDATION"))
@@ -1881,7 +1862,7 @@ def q_encrypted_stats(spark, sf_dir):
 
     Scale shape: one groupBy(source) hash aggregate; the encrypted count
     is a conditional agg inside it, not a second scan."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     is_enc = (F.col("doc_id") % _ENCRYPTED_MOD) == 3
     iv = F.when(is_enc, F.hex(F.col("doc_id")))  # else NULL
     return (
@@ -1938,7 +1919,7 @@ def q_ai_enrich(spark, sf_dir):
     CLASSIFY_DEFAULTS triple; valid JSON missing a field gets per-field
     defaults ('other', '', 0.5).  Scale shape: pure narrow transforms,
     zero shuffles before the final presentation sort."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     status = (
         F.when(F.col("doc_id") % 10 < 7, F.lit("COMPLETED"))
         .when(F.col("doc_id") % 10 < 9, F.lit("FAILED"))
@@ -2091,8 +2072,8 @@ def q_storage_admission(spark, sf_dir):
     Exchange is the per-owner admission window, keyed by owner pool —
     team pools are the natural hot keys and would be salted upstream
     exactly like the conv_id extraction pipeline."""
-    e = _tf(spark, sf_dir, "events", cols=["event_id", "user_id", "ts", "value"])
-    c = _t(spark, sf_dir, "customer")
+    e = scan(spark, sf_dir, "events", cols=["event_id", "user_id", "ts", "value"], fan=True)
+    c = scan(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     team_id = (ck % 40).cast("bigint")
     has_sub = ck % 11 != 0
@@ -2232,12 +2213,12 @@ def q_dashboard_kpi(spark, sf_dir):
     aggregate whose 1-row global max ("now") broadcasts back; the final
     rollup is a single-row aggregate — partial map-side sums everywhere,
     no wide shuffle at any size."""
-    c = _t(spark, sf_dir, "customer")
+    c = scan(spark, sf_dir, "customer")
     # NOT fanned out: the per-user min/max aggregation collapses 1M rows
     # map-side during the scan, so a pre-aggregation shuffle would move
     # more bytes than it saves (fan-out only pays when per-row work
     # dominates; measured 1.15s unfanned vs 2.1s fanned at sf1.0)
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     # per-user activity is read twice (global "now" + the user join):
     # materialize the narrow #users-sized aggregate once
     activity = e.groupBy(F.col("user_id")).agg(
@@ -2400,7 +2381,7 @@ def q_search_phrase(spark, sf_dir):
     ``try_element_at`` lookahead, NULL-safe at the array tail), so the
     whole query is one embarrassingly parallel scan plus the
     presentation sort; the lang filter pushes to the parquet scan."""
-    d = _tf(spark, sf_dir, "documents").filter(F.col("lang") == _SR_LANG)
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("lang") == _SR_LANG)
     toks = F.filter(
         F.split(F.lower(F.col("text")), _SR_TOKEN_SPLIT),
         lambda t: t != F.lit(""),

@@ -41,12 +41,8 @@ def build_session(
         # compute-heavy stage that reads them (e.g. 64-dim cosine per
         # candidate pair).  A lower floor only binds when shuffle bytes
         # are tiny relative to the core count — at production volumes
-        # totalBytes/parallelism >> this floor, so the setting is inert
-        # there; override via env for cluster tuning.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-        )
+        # totalBytes/parallelism >> this floor, so the setting is inert.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         # 128m is right for a real cluster reading 100 TB; the local bench

@@ -23,25 +23,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .generator import mix64
-from .scanfan import fan_out
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _tf(spark, sf_dir, name, cols=None):
-    """_t plus scale-adaptive scan fan-out: when the parquet input has
-    fewer row groups than cores (single-row-group driver files), the
-    heavy per-row work above the scan would run on 1-2 tasks; a
-    round-robin repartition spreads it.  Identity at production scale
-    (see scanfan.fan_out).  ``cols`` prunes the projection BEFORE the
-    fan-out barrier — the checkpoint materializes every column it is
-    given, so wide unused columns must not ride through it."""
-    df = _t(spark, sf_dir, name)
-    if cols is not None:
-        df = df.select(*cols)
-    return fan_out(spark, df, f"{sf_dir}/{name}.parquet")
+# fan_out stays bound here although every scan goes through scan():
+# perfbench/workloads.py times the fan-out by patching
+# trainingdata.fan_out and scanfan.fan_out by name
+from .scanfan import fan_out, scan  # noqa: F401
 
 
 # ---------------------------------------------------------------------------
@@ -49,7 +34,7 @@ def _tf(spark, sf_dir, name, cols=None):
 # ---------------------------------------------------------------------------
 
 def q_dedup_exact(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     return (
         d.groupBy(F.md5(F.col("text").cast("binary")).alias("content_hash"))
         .agg(
@@ -106,7 +91,7 @@ def q_dedup_ngram_jaccard_blocked(spark, sf_dir):
     10,000x the work.  Kept out of the driver registry; pytest uses it to
     cross-check the exact-Jaccard arithmetic of the banded query below on
     the pairs both generate."""
-    d = _t(spark, sf_dir, "documents").select(
+    d = scan(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
         F.floor(F.col("n_chars") / F.lit(16)).cast("long").alias("len_bucket"),
@@ -139,9 +124,9 @@ def _jaccard_pairs(spark, sf_dir):
     confirmed by exact shingle Jaccard >= 2/10.  Shared by the ranked
     pair query below and the cluster-resolution query, which must not
     inherit an ORDER BY it immediately discards."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     cands = _minhash_candidate_pairs(
-        _tf(spark, sf_dir, "documents")
+        scan(spark, sf_dir, "documents", fan=True)
         .select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
         shape_n=docs.count(),  # metadata-cheap parquet count
     )
@@ -224,14 +209,20 @@ _MH_A = [1 + mix64(1000 + j) % (_MH_P - 1) for j in range(_MH_K)]
 _MH_B = [mix64(2000 + j) % _MH_P for j in range(_MH_K)]
 
 
+def digest56(col):
+    """md5-56: the first 14 hex digits of the md5 of string ``col`` as a
+    BIGINT — the engine-neutral content digest; the DuckDB side spells
+    it ``('0x' || substr(md5(x), 1, 14))::BIGINT``."""
+    return F.conv(
+        F.substring(F.md5(col.cast("binary")), 1, 14), 16, 10
+    ).cast("bigint")
+
+
 def _spark_shingle_hashes(sh_col):
     """md5-prefix -> bigint mod P per shingle (engine-neutral hash)."""
     return F.transform(
         sh_col,
-        lambda s: F.pmod(
-            F.conv(F.substring(F.md5(s.cast("binary")), 1, 14), 16, 10).cast("bigint"),
-            F.lit(_MH_P),
-        ),
+        lambda s: F.pmod(digest56(s), F.lit(_MH_P)),
     )
 
 
@@ -356,14 +347,92 @@ def _minhash_bands(d, n_bands: int, n_rows: int):
     ).select("doc_id", "band.band_idx", "band.band_key")
 
 
+def _hyperplane_candidate_pairs(e, n_bands: int, band_bits: int,
+                                symmetric: bool):
+    """embedding DataFrame (vec_id, embedding) -> deduplicated candidate
+    pairs colliding in at least one random-hyperplane LSH band, with the
+    cosine ``_cos`` of each pair.  The band key (band_idx, band_val) is
+    data-dependent, like the MinHash bands above.  Shared by
+    q_dedup_embedding_cosine (``symmetric=False``: pairs (vec_a, vec_b)
+    with vec_a < vec_b) and q_knn_join (``symmetric=True``: pairs
+    (vec_id, nbr_id) both ways, so each vector sees every candidate).
+
+    Both derived tables are materialized once: ``unit`` feeds the a- and
+    b-side join-backs, and ``sigs`` feeds both sides of the band
+    self-join (Catalyst broadcast one side and re-ran the PYTHON
+    signature stage for it — the worst thing to compute twice)."""
+    from .similarity import EMB_DIM, signature_stage
+
+    left, right = ("vec_id", "nbr_id") if symmetric else ("vec_a", "vec_b")
+    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    norm = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, x: acc + x * x))
+    unit = (
+        e.select("vec_id", dv.alias("v"), norm.alias("nrm"))
+        .select(
+            "vec_id",
+            F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("unit"),
+        )
+        .localCheckpoint()
+    )
+    sigs = signature_stage(e, dim=EMB_DIM, bits=n_bands * band_bits).select(
+        "vec_id", "signature"
+    ).localCheckpoint()
+    mask = (1 << band_bits) - 1
+    # candidate generation stays NARROW (ids + band key only): the 64-dim
+    # vectors never ride through the explode or the pair dedup shuffle —
+    # they join back per side after the candidate set is deduplicated
+    bands = sigs.select(
+        "vec_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band_idx"),
+                        F.shiftright(F.col("signature"), b * band_bits)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("band_val"),
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("band"),
+    ).select("vec_id", "band.band_idx", "band.band_val")
+    a, b = bands.alias("a"), bands.alias("b")
+    ids = (
+        F.col("a.vec_id") != F.col("b.vec_id") if symmetric
+        else F.col("a.vec_id") < F.col("b.vec_id")
+    )
+    cand_ids = (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & ids,
+        )
+        .select(F.col("a.vec_id").alias(left), F.col("b.vec_id").alias(right))
+        .dropDuplicates([left, right])
+    )
+    ua = unit.select(F.col("vec_id").alias(left), F.col("unit").alias("unit_a"))
+    ub = unit.select(F.col("vec_id").alias(right), F.col("unit").alias("unit_b"))
+    cos = F.aggregate(
+        F.zip_with(F.col("unit_a"), F.col("unit_b"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    return (
+        cand_ids.join(ua, left).join(ub, right)
+        .select(left, right, cos.alias("_cos"))
+    )
+
+
 def q_dedup_minhash_lsh(spark, sf_dir):
     """Candidate pairs by LSH band collision, confirmed by exact shingle
     Jaccard — the standard shingle->minhash->band->bucket-join pipeline.
     At scale: explode to (band_idx, band_key) rows, shuffle on the band
     key, join within buckets only."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     cands = _minhash_candidate_pairs(
-        _tf(spark, sf_dir, "documents")
+        scan(spark, sf_dir, "documents", fan=True)
         .select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
         shape_n=docs.count(),
     )
@@ -553,7 +622,7 @@ def q_dedup_paragraph(spark, sf_dir):
     banded join's scale properties (never O(n^2/#blocks)).  Output decodes
     para_id back to (doc, para_idx) and carries each side's exact-copy
     count, so both stages are driver-hash-verified in one result."""
-    paras = _paragraphs(_tf(spark, sf_dir, "documents")).withColumn(
+    paras = _paragraphs(scan(spark, sf_dir, "documents", fan=True)).withColumn(
         "para_id", F.col("doc_id") * _PARA_STRIDE + F.col("para_idx")
     )
     keepers = (
@@ -581,7 +650,7 @@ def q_dedup_paragraph(spark, sf_dir):
             F.col("para_id").alias("doc_id"),
             _spark_shingles(F.col("para")).alias("sh"),
         ),
-        shape_n=paragraph_upper_bound(_t(spark, sf_dir, "documents")),
+        shape_n=paragraph_upper_bound(scan(spark, sf_dir, "documents")),
     )
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
@@ -695,72 +764,11 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     embedding dedup.  Band bits scale with corpus size via
     :func:`embedding_band_bits` (BENCH/BAND_BITS.md rule; 4-bit at
     driver scales, oracle-mirrored)."""
-    from .similarity import EMB_DIM, signature_stage
-
-    band_bits = embedding_band_bits(_t(spark, sf_dir, "embeddings").count())
-    e = _tf(spark, sf_dir, "embeddings")
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    norm = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, x: acc + x * x))
-    # materialize both derived tables: `unit` feeds the a- and b-side
-    # join-backs (was normalized twice) and `sigs` feeds both sides of
-    # the band self-join (Catalyst broadcast one side and re-ran the
-    # PYTHON signature stage for it — the worst thing to compute twice)
-    unit = (
-        e.select("vec_id", dv.alias("v"), norm.alias("nrm"))
-        .select(
-            "vec_id",
-            F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("unit"),
-        )
-        .localCheckpoint()
-    )
-    sigs = signature_stage(e, dim=EMB_DIM, bits=_EC_BANDS * band_bits).select(
-        "vec_id", "signature"
-    ).localCheckpoint()
-    mask = (1 << band_bits) - 1
-    # candidate generation stays NARROW (ids + band key only): the 64-dim
-    # vectors never ride through the explode or the pair dedup shuffle —
-    # they join back per side after the candidate set is deduplicated
-    bands = sigs.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftright(F.col("signature"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for b in range(_EC_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("vec_id", "band.band_idx", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-    ua = unit.select(F.col("vec_id").alias("vec_a"), F.col("unit").alias("unit_a"))
-    ub = unit.select(F.col("vec_id").alias("vec_b"), F.col("unit").alias("unit_b"))
-    cands = cand_ids.join(ua, "vec_a").join(ub, "vec_b")
-    cos = F.aggregate(
-        F.zip_with(F.col("unit_a"), F.col("unit_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    band_bits = embedding_band_bits(scan(spark, sf_dir, "embeddings").count())
+    e = scan(spark, sf_dir, "embeddings", fan=True)
+    cands = _hyperplane_candidate_pairs(e, _EC_BANDS, band_bits, symmetric=False)
     return (
-        cands.select("vec_a", "vec_b", cos.alias("_cos"))
-        .filter(F.col("_cos") >= _COS_THRESHOLD)
+        cands.filter(F.col("_cos") >= _COS_THRESHOLD)
         .select(
             "vec_a",
             "vec_b",
@@ -814,7 +822,7 @@ SQL_DEDUP_EMBEDDING_COSINE = _duck_embedding_cosine_sql()
 # ---------------------------------------------------------------------------
 
 def q_ann_topk(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
+    e = scan(spark, sf_dir, "embeddings")
     qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
     qlit = F.array(*[F.lit(x) for x in qvec])
     cos = _spark_cosine(F.col("embedding"), qlit)
@@ -852,7 +860,7 @@ _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for", "on", "it")
 
 
 def q_lang_stopword_ratio(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     toks = F.split(F.trim(F.col("text")), r"\s+")
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
@@ -881,7 +889,7 @@ FROM t ORDER BY doc_id
 def q_quality_score(spark, sf_dir):
     """Deterministic quality heuristics: mean word length (scaled),
     punctuation count, unique-word ratio (scaled) — all integer outputs."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n_words = F.size(toks)
     n_unique = F.size(F.array_distinct(toks))
@@ -917,7 +925,7 @@ _TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 def q_token_count(spark, sf_dir):
     """BPE-ish regex pre-tokenization count (letters / digits / single
     punctuation), plus whitespace token count."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     ws = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), F.lit(0)))
     return d.select(
@@ -1164,16 +1172,12 @@ def q_corpus_sample(spark, sf_dir):
     would funnel each language through one partition).  Deterministic
     across runs and engines (md5, not rand()), so resume/replay see the
     same sample."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     rates = spark.createDataFrame(
         list(_SAMPLE_RATES_E4), "lang string, rate_e4 int"
     )
     key = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 14),
-            16, 10,
-        ).cast("bigint"),
-        F.lit(10000),
+        digest56(F.col("doc_id").cast("string")), F.lit(10000)
     )
     return (
         d.join(F.broadcast(rates), "lang", "left")
@@ -1240,67 +1244,18 @@ def q_knn_join(spark, sf_dir):
     vector — a quarter of all pairs; measured 33s).  8-bit bands over a
     32-bit signature cut candidates ~18x; at larger n, bits grows with
     log2(n) per the same rule."""
-    from .similarity import EMB_DIM, signature_stage
-
-    band_bits = knn_band_bits(  # measured rule, 8 at driver scales
-        _t(spark, sf_dir, "embeddings").count()
-    )
-    e = _tf(spark, sf_dir, "embeddings")
-    dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    norm = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, x: acc + x * x))
-    # materialized once: `unit` joins back per side, `sigs` feeds both
-    # sides of the band self-join (see q_dedup_embedding_cosine)
-    unit = e.select("vec_id", dv.alias("v"), norm.alias("nrm")).select(
-        "vec_id", F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("unit")
-    ).localCheckpoint()
-    sigs = signature_stage(
-        e, dim=EMB_DIM, bits=_KNN_BANDS * band_bits
-    ).select("vec_id", "signature").localCheckpoint()
-    mask = (1 << band_bits) - 1
-    bands = sigs.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftright(F.col("signature"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for b in range(_KNN_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("vec_id", "band.band_idx", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    # a.vec_id != b.vec_id (not <): each vector must see every candidate
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("vec_id"), F.col("b.vec_id").alias("nbr_id"))
-        .dropDuplicates(["vec_id", "nbr_id"])
-    )
-    ua = unit.select(F.col("vec_id").alias("vec_id"), F.col("unit").alias("unit_a"))
-    ub = unit.select(F.col("vec_id").alias("nbr_id"), F.col("unit").alias("unit_b"))
-    cos = F.aggregate(
-        F.zip_with(F.col("unit_a"), F.col("unit_b"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     from pyspark.sql.window import Window
 
-    scored = (
-        cand_ids.join(ua, "vec_id")
-        .join(ub, "nbr_id")
-        .select(
-            "vec_id", "nbr_id",
-            F.round(cos * 10000).cast("bigint").alias("cos_e4"),
-        )
+    band_bits = knn_band_bits(  # measured rule, 8 at driver scales
+        scan(spark, sf_dir, "embeddings").count()
+    )
+    e = scan(spark, sf_dir, "embeddings", fan=True)
+    scored = _hyperplane_candidate_pairs(
+        e, _KNN_BANDS, band_bits, symmetric=True
+    ).select(
+        "vec_id",
+        "nbr_id",
+        F.round(F.col("_cos") * 10000).cast("bigint").alias("cos_e4"),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("cos_e4").desc(), F.col("nbr_id")
@@ -1370,7 +1325,7 @@ def q_hourly_gapfill(spark, sf_dir):
     bounds cross-joined with the distinct types — two TINY derived dims
     (the cross join never touches fact-table cardinality) — then one
     left join against the grouped counts, shuffling only the counts."""
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "event_type",
         F.expr(f"unix_timestamp(ts) DIV 3600").alias("h"),
     )
@@ -1418,7 +1373,7 @@ def q_daily_active_users(spark, sf_dir):
     shape (COUNT(DISTINCT user) per day) Spark plans as a two-phase
     expand/aggregate — exact, unlike the approx_count_distinct sketch
     path a 100-TB dashboard would switch to when 2% error is fine."""
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "user_id", F.expr("unix_timestamp(ts) DIV 86400").alias("day")
     )
     return (
@@ -1455,7 +1410,7 @@ def q_user_retention(spark, sf_dir):
     Scale shape: the fact table collapses to distinct (user, day) FIRST
     (one shuffle), so the self-join runs on the small deduplicated
     activity set keyed by (user_id, day) — never on raw events."""
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "user_id", F.expr("unix_timestamp(ts) DIV 86400").alias("day")
     ).distinct()
     nxt = e.select("user_id", (F.col("day") - 1).alias("day"))
@@ -1508,7 +1463,7 @@ def q_asof_last_error(spark, sf_dir):
     a side tag and runs the identical window."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
@@ -1567,7 +1522,7 @@ def q_corpus_percentiles(spark, sf_dir):
     approx_percentile when 1% error is acceptable)."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
+    d = scan(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     ranked = d.select(
         "lang",
@@ -1620,7 +1575,7 @@ def q_embed_quantize(spark, sf_dir):
     Output is integer-exact per the FP-parity rules: the scale at e6 and
     summary statistics of the quantized vector (sum, L1, saturation
     count) instead of a float array crossing the engine boundary."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = scan(spark, sf_dir, "embeddings")
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     scale = F.aggregate(
         dv, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x))
@@ -1687,7 +1642,7 @@ def q_props_extract(spark, sf_dir):
     extraction never leaves the executor; one shuffle for the low-
     cardinality groupBy.  Mean emitted via integer DIV (sum + count ride
     along), per the FP-parity rules."""
-    e = _tf(spark, sf_dir, "events", cols=["event_type", "props"])
+    e = scan(spark, sf_dir, "events", cols=["event_type", "props"], fan=True)
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
     return (
         e.select("event_type", k.alias("k"))
@@ -1745,7 +1700,7 @@ def q_sessionize(spark, sf_dir):
     # events.ts is TIMESTAMP_NTZ; the session tz is pinned to UTC
     # (session.py), so unix_timestamp == DuckDB's date_part('epoch') on
     # the same naive value (ANSI forbids a direct NTZ -> BIGINT cast)
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_timestamp(F.col("ts")).alias("es")
     )
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
@@ -1809,7 +1764,7 @@ def q_quality_perplexity(spark, sf_dir):
     deterministic hash LM, emitted integer-exact (sum + count + DIV mean;
     no float crosses the engine boundary).  Lower mean_nll_e4 = more
     'predictable' text — the Gopher/CCNet-style quality gate signal."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     bigrams = F.zip_with(
@@ -1819,10 +1774,7 @@ def q_quality_perplexity(spark, sf_dir):
     )  # NOT distinct: repeated bigrams re-contribute, like a real LM score
     nll = F.transform(
         bigrams,
-        lambda s: F.pmod(
-            F.conv(F.substring(F.md5(s.cast("binary")), 1, 14), 16, 10).cast("bigint"),
-            F.lit(_PPL_MOD),
-        ),
+        lambda s: F.pmod(digest56(s), F.lit(_PPL_MOD)),
     )
     n_bigrams = F.when(n >= 2, n - 1).otherwise(F.lit(0)).cast("int")
     sum_nll = F.when(
@@ -1884,7 +1836,7 @@ def q_doc_fingerprint(spark, sf_dir):
     document never materializes a 10M-element per-character array — the
     transient arrays are one ~160k-long chunk-start sequence and one
     64-element chunk at a time."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     starts = F.sequence(
         F.lit(1), F.greatest(F.length("text"), F.lit(1)), F.lit(_FP_CHUNK)
     )
@@ -1919,7 +1871,7 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def q_multimodal_meta(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     kind = (
         F.when(F.col("doc_id") % 4 == 0, F.lit("image/png"))
         .when(F.col("doc_id") % 4 == 1, F.lit("image/jpeg"))
@@ -1959,7 +1911,7 @@ def q_corpus_prep(spark, sf_dir):
     stopword-ratio floor (real-language signal); (2) exact dedup keeping
     the lowest doc_id per content hash; (3) per-lang corpus stats.  All
     JVM built-ins; two shuffles total (dedup groupBy, stats groupBy)."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
@@ -2023,7 +1975,7 @@ def q_corpus_build_full(spark, sf_dir):
     bounded propagation loop over PAIRS only (tiny), sampling is a
     broadcast + filter, stats one groupBy.  Each stage drops rows before
     the next pays for them — the ordering a 100-TB corpus build uses."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
@@ -2051,7 +2003,7 @@ def q_corpus_build_full(spark, sf_dir):
     # survivors the bands actually see)
     cands = _minhash_candidate_pairs(
         kept.select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
-        shape_n=_t(spark, sf_dir, "documents").count(),
+        shape_n=scan(spark, sf_dir, "documents").count(),
     )
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
@@ -2062,11 +2014,7 @@ def q_corpus_build_full(spark, sf_dir):
     near_dupes = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
     resolved = kept.join(near_dupes, "doc_id", "left_anti")
     sample_key = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 14),
-            16, 10,
-        ).cast("bigint"),
-        F.lit(10000),
+        digest56(F.col("doc_id").cast("string")), F.lit(10000)
     )
     rates = spark.createDataFrame(list(_SAMPLE_RATES_E4), "lang string, rate_e4 int")
     sampled = (
@@ -2155,7 +2103,7 @@ def q_quality_gopher(spark, sf_dir):
     — no shuffle at all until the presentation orderBy; at 100 TB this
     runs at scan speed and the gate verdict feeds the corpus-build
     filter (`q_corpus_build_full`) without materializing rejects."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n_words = F.size(toks)
     mwl_e2 = F.round(
@@ -2220,7 +2168,7 @@ def q_quality_repetition(spark, sf_dir):
     explode+shuffle bought nothing because the aggregation key is
     doc-local).  Documents with < 2 words have no bigrams and are
     excluded (both engines agree by construction)."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     bigrams = F.zip_with(
@@ -2316,7 +2264,7 @@ def q_line_dedup(spark, sf_dir):
     cross-corpus frequency table has one row per DISTINCT chunk, so its
     size tracks content diversity, not corpus size; no broadcast is
     assumed (at 100 TB it exceeds driver memory)."""
-    paras = _paragraphs(_tf(spark, sf_dir, "documents")).withColumn(
+    paras = _paragraphs(scan(spark, sf_dir, "documents", fan=True)).withColumn(
         "h", F.md5(F.col("para").cast("binary"))
     # the chunk table feeds the corpus-wide frequency AND the join back:
     # materialize it once (C4 pipelines persist the line/chunk table)
@@ -2394,7 +2342,7 @@ def q_pii_redact(spark, sf_dir):
 
     Scale shape: per-row regexp_extract_all / regexp_replace inside
     whole-stage codegen; zero shuffles before the presentation orderBy."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     did = F.col("doc_id")
     email = F.concat(
         F.lit(" contact user"), (did % 7).cast("string"), F.lit("@example.com")
@@ -2476,7 +2424,7 @@ def q_contamination_check(spark, sf_dir):
     # corpus side) consume it, and the size(sh) predicate would
     # otherwise push below the fan-out repartition and re-derive the
     # shingles on the unsplit scan
-    d = _tf(spark, sf_dir, "documents").select(
+    d = scan(spark, sf_dir, "documents", fan=True).select(
         "doc_id", _spark_shingles(F.col("text")).alias("sh")
     ).localCheckpoint()
     bench_sh = (
@@ -2537,7 +2485,7 @@ def q_corpus_mix_weights(spark, sf_dir):
     and group-shuffled the corpus twice.)"""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     grp = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+"))).alias("total_words"),
@@ -2593,7 +2541,7 @@ def q_vocab_topk(spark, sf_dir):
     aggregation (shuffle volume is bounded by DISTINCT tokens per
     partition, not corpus tokens), then TakeOrdered for the top-K — never
     a global sort of the full vocabulary."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     )
@@ -2629,7 +2577,7 @@ def q_lang_confusion(spark, sf_dir):
     shuffle moves only the matrix cells after map-side combine."""
     from .textanalysis import lang_id_expr
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     return (
         d.select("lang", lang_id_expr(F.col("text")).alias("lang_pred"))
         .groupBy("lang", "lang_pred")
@@ -2675,7 +2623,7 @@ def q_corpus_export_shards(spark, sf_dir):
     re-packs existing shards."""
     from pyspark.sql.window import Window
 
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     n_words = F.size(toks)
     mwl_e2 = F.round(
@@ -2854,7 +2802,7 @@ def q_moving_window_stats(spark, sf_dir):
     a hot user would be salted upstream like the conv_id pipeline."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     w = (
         Window.partitionBy("user_id")
@@ -2905,7 +2853,7 @@ def q_fuzzy_search(spark, sf_dir):
     groupBy(doc_id) — the token scan never computes a distance.  This is
     how fuzzy search actually deploys: dictionary-side expansion, not
     per-document string comparison."""
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = d.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     )
@@ -2960,7 +2908,7 @@ def q_event_type_pivot(spark, sf_dir):
     # NOT fanned out: the pivot is one conditional hash aggregate with
     # map-side partials — per-row work is trivial, so a fan-out shuffle
     # of the raw rows costs more than the single-task scan it replaces
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     piv = (
         e.select("user_id", "event_type", cents.alias("c"))
@@ -3001,7 +2949,7 @@ def q_user_value_quartiles(spark, sf_dir):
     trade rather than hiding it."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = scan(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     totals = e.groupBy("user_id").agg(F.sum(cents).alias("total_c"))
     w = Window.orderBy(F.col("total_c").desc(), F.col("user_id"))
@@ -3041,7 +2989,7 @@ def q_doc_length_histogram(spark, sf_dir):
     no floating log2 at power-of-two boundaries), with doc counts and
     char totals per bucket.  Scale shape: per-row integer arithmetic +
     one tiny groupBy (≤ 64 buckets)."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     bucket = F.length(F.bin(F.col("n_chars"))).cast("int")
     return (
         d.groupBy(bucket.alias("log2_bucket"))
@@ -3076,7 +3024,7 @@ def q_funnel_conversion(spark, sf_dir):
     re-aggregates events filtered to purchases with a join on user_id
     against the tiny signup-users side.  Both shuffles key on user_id;
     the final rollup is day-cardinality."""
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_timestamp("ts").alias("es")
     )
     signups = (
@@ -3147,9 +3095,9 @@ def q_dq_checks(spark, sf_dir):
     into ONE aggregate per table (a single scan each — never one scan per
     check); referential checks are anti-join counts on the join keys.
     The result is check-cardinality, unioned driver-side."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    c = _t(spark, sf_dir, "customer")
+    o = scan(spark, sf_dir, "orders")
+    li = scan(spark, sf_dir, "lineitem")
+    c = scan(spark, sf_dir, "customer")
 
     def one(name, cnt):
         return cnt.cast("bigint").alias(name)
@@ -3239,7 +3187,7 @@ def q_topk_docs_per_lang(spark, sf_dir):
     Exchange; row_number + filter, never a global sort."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
     return (
         d.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -3270,7 +3218,7 @@ def q_status_transitions(spark, sf_dir):
     #types^2-cardinality groupBy with map-side combine."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_timestamp("ts").alias("es"), "event_id"
     )
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
@@ -3319,7 +3267,7 @@ def q_tfidf_topk(spark, sf_dir):
     on token; rank window on doc_id."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
     )
@@ -3385,7 +3333,7 @@ def q_range_join_bucketed(spark, sf_dir):
     (user_id, bucket)."""
     from pyspark.sql.window import Window
 
-    e = _t(spark, sf_dir, "events").select(
+    e = scan(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type", F.unix_timestamp("ts").alias("es")
     )
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
@@ -3493,7 +3441,7 @@ def q_semantic_dedup(spark, sf_dir):
 
     from .similarity import _assign_stage
 
-    e = _t(spark, sf_dir, "embeddings")
+    e = scan(spark, sf_dir, "embeddings")
     cent_rows = e.orderBy("vec_id").limit(_SEMDEDUP_K).collect()
     cents = np.asarray([list(r.embedding) for r in cent_rows], dtype=np.float64)
     cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
@@ -3591,7 +3539,7 @@ def q_tokenize_pack(spark, sf_dir):
     Everything after the window is per-row integer arithmetic."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     w = (
         Window.partitionBy("lang")
@@ -3764,10 +3712,7 @@ def _spark_split_key(col):
     the md5/conv idiom q_corpus_sample uses (identical across runs,
     engines, and resumes; never rand())."""
     return F.pmod(
-        F.conv(
-            F.substring(F.md5(col.cast("string").cast("binary")), 1, 14), 16, 10
-        ).cast("bigint"),
-        F.lit(_SPLIT_BUCKETS),
+        digest56(col.cast("string")), F.lit(_SPLIT_BUCKETS)
     )
 
 
@@ -3803,7 +3748,7 @@ def q_stratified_split(spark, sf_dir):
     assignment is one left join of labels onto the corpus plus a narrow
     md5 projection — no shuffle beyond the label join, which at 10^12
     docs co-locates when both sides are bucketed by doc_id."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     pairs = _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(pairs)
     cluster = F.coalesce(F.col("label"), F.col("doc_id"))
@@ -3857,7 +3802,7 @@ def q_split_leakage_check(spark, sf_dir):
     than the dedup that produced the pairs."""
     pairs = _jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     labels = connected_components(pairs)
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     cluster = F.coalesce(F.col("label"), F.col("doc_id"))
     assign = (
         d.select("doc_id")
@@ -3942,7 +3887,7 @@ def q_vocab_drift(spark, sf_dir):
     Scale shape: one explode + one groupBy(token) with map-side partial
     aggregation; the two totals broadcast as a 1-row dim; TakeOrdered
     caps the result driver-side — no full sort."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     cohort_new = F.col("doc_id") % 2 == 1
     toks = d.select(
         cohort_new.alias("is_new"),
@@ -4012,7 +3957,7 @@ def q_bpe_pair_counts(spark, sf_dir):
     the top-K folds driver-side via TakeOrdered.  At 100 TB the
     vocabulary table is millions of rows while the corpus is trillions
     of tokens — this shape is why BPE training is feasible at all."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     d = d.filter(F.col("text").isNotNull())
     words = (
         d.select(
@@ -4235,11 +4180,9 @@ def q_shard_manifest(spark, sf_dir):
     map-side-combinable XOR aggregate — no extra shuffle, no sort."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
-    digest = F.conv(
-        F.substring(F.md5(F.col("text").cast("binary")), 1, 14), 16, 10
-    ).cast("bigint")
+    digest = digest56(F.col("text"))
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -4333,7 +4276,7 @@ def q_exact_substring_dedup(spark, sf_dir):
     pays; grams stay 14-char hashes, never raw text."""
     from pyspark.sql.window import Window
 
-    d = _tf(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.trim(F.col("text")), r"\s+")
     # NULL-text docs produce no token rows in the oracle (UNNEST of a
     # NULL range) and produced none in the explode-based r6 shape; the
@@ -4400,11 +4343,7 @@ def q_exact_substring_dedup(spark, sf_dir):
             F.size(F.filter(covered, lambda c: c)).cast("int").alias(
                 "n_dup_tokens"
             ),
-            F.conv(
-                F.substring(F.md5(kept_str.cast("binary")), 1, 14), 16, 10
-            )
-            .cast("bigint")
-            .alias("kept_digest"),
+            digest56(kept_str).alias("kept_digest"),
         )
         .orderBy("doc_id")
     )
@@ -4469,9 +4408,7 @@ _TB_BUDGET_TOKENS = 4000  # per-lang token budget (scaled to synthetic docs)
 def _shuffle_key(col):
     """56-bit md5 key — the deterministic shuffle order (uniform, content-
     keyed, identical across engines/runs/resumes)."""
-    return F.conv(
-        F.substring(F.md5(col.cast("string").cast("binary")), 1, 14), 16, 10
-    ).cast("bigint")
+    return digest56(col.cast("string"))
 
 
 def q_deterministic_shuffle(spark, sf_dir):
@@ -4487,7 +4424,7 @@ def q_deterministic_shuffle(spark, sf_dir):
     consume positions."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     keyed = d.select(
         "doc_id", _shuffle_key(F.col("doc_id")).alias("shuffle_key")
     )
@@ -4523,7 +4460,7 @@ def q_token_budget_sample(spark, sf_dir):
     second pass."""
     from pyspark.sql.window import Window
 
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     keyed = d.select(
         "doc_id", "lang", n_tokens.alias("n_tokens"),
@@ -4597,7 +4534,7 @@ def q_text_normalize(spark, sf_dir):
 
     Scale shape: pure narrow regexp transforms — zero shuffles before
     the presentation sort; at 100 TB this rides the ingest scan."""
-    d = _t(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents")
     dirty = (
         F.when(
             F.col("doc_id") % 3 == 0,
@@ -4620,9 +4557,7 @@ def q_text_normalize(spark, sf_dir):
         "doc_id",
         n_ctrl.cast("int").alias("n_ctrl_removed"),
         n_ws_runs.cast("int").alias("n_ws_collapsed"),
-        F.conv(
-            F.substring(F.md5(normalized.cast("binary")), 1, 14), 16, 10
-        ).cast("bigint").alias("norm_digest"),
+        digest56(normalized).alias("norm_digest"),
     ).orderBy("doc_id")
 
 
@@ -4860,7 +4795,7 @@ def q_dsir_importance(spark, sf_dir):
     target tokens (ANSI overflow is loud beyond).  Bucket count is the
     standard DSIR knob (the paper uses 10^4 hashed n-gram buckets at
     CommonCrawl scale); B=64 keeps the driver-scale oracle readable."""
-    d = _tf(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     toks = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
         lambda x: (x != "") & (F.length(x) >= 2),
@@ -4976,7 +4911,7 @@ def q_ngram_lm_score(spark, sf_dir):
     bigrams and drop out (both engines)."""
     from pyspark.sql.window import Window
 
-    d = _tf(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     toks_arr = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
     )
@@ -5278,7 +5213,7 @@ def q_domain_mix(spark, sf_dir):
     #domains-sized).  The totals row is a 1-row broadcast.  At 100 TB
     the output stays #domains rows; 1e6 * n_tokens holds BIGINT
     headroom to ~9e12 tokens (ANSI overflow is loud beyond)."""
-    d = _tf(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     per_doc = d.select(
         "source",
         F.size(
@@ -5373,7 +5308,7 @@ def q_curriculum_order(spark, sf_dir):
     difficulty value.  Corpus cost: one scan + one histogram groupBy
     Exchange + one broadcast join; no explode, no global sort of doc
     rows (the final orderBy is presentation-only at driver scale)."""
-    d = _tf(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     per_doc = d.select(
         "doc_id",
         "n_chars",
@@ -5492,7 +5427,7 @@ def q_classifier_trainset(spark, sf_dir):
     first n_pos) needs a global row_number and is the classic
     single-partition funnel; the hash threshold trades exact balance
     for a scan-local decision."""
-    d = _tf(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     toks = F.filter(
         F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
     )
@@ -5628,7 +5563,7 @@ def q_dedup_increment(spark, sf_dir):
     The batch threshold is one bounded 1-row agg; the final LEFT join
     keeps unique new docs (the common case) flowing through without
     matches."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = scan(spark, sf_dir, "documents")
     n_bands, n_rows = minhash_band_shape(docs.count())
     t = int(
         docs.agg(F.expr("CAST((4 * MAX(doc_id)) DIV 5 AS BIGINT)")).collect()[
@@ -5636,7 +5571,7 @@ def q_dedup_increment(spark, sf_dir):
         ][0]
     )
     nz = (
-        _tf(spark, sf_dir, "documents")
+        scan(spark, sf_dir, "documents", fan=True)
         .select("doc_id", _spark_shingles(F.col("text")).alias("sh"))
         .withColumn("hs", _spark_shingle_hashes(F.col("sh")))
         # the signature table is read four ways below (corpus bands,
