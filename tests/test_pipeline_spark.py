@@ -2,6 +2,8 @@
 single-threaded oracle (BASELINE.json input_hint), stable ordering under
 salted repartitioning, resume idempotency, rollup ladder."""
 
+import os
+
 import pandas as pd
 import pytest
 
@@ -328,11 +330,47 @@ class TestTwoPhaseResume:
                                    include_oversize=False)
         sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
         store = DirCheckpointStore(str(tmp_path / "tp2"))
+        # a non-empty store: against an empty one both joins fold away
+        run_extraction(spark, sdf.limit(2), store=store, num_partitions=2)
         buf = io.StringIO()
         with redirect_stdout(buf):
             resume_filter(sdf, store, spark).explain("simple")
         plan = buf.getvalue()
         assert plan.count("LeftAnti") >= 2  # conv-level prune + key-level
+
+
+class TestEmptyStore:
+    def test_fresh_run_plans_no_resume_join(self, spark, tmp_path, monkeypatch):
+        """On an empty store, the frame handed to the extraction stage has
+        no resume join and no Python-RDD scan left in its plan."""
+        from unraveldocs_spark import pipeline
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        pdf = G.transcripts_pandas(3, median_turns=4, hot_factor=2,
+                                   include_oversize=False)
+        path = str(tmp_path / "in")
+        spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA).write.parquet(path)
+        seen = []
+
+        def spy(df, *args, **kwargs):
+            seen.append(df)
+            return extract_stage(df, *args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "extract_stage", spy)
+        store = DirCheckpointStore(str(tmp_path / "store"))
+        out = run_extraction(spark, spark.read.parquet(path), store=store,
+                             num_partitions=2)
+        assert out["new_rows"] == len(pdf)
+        qe = seen[0]._jdf.queryExecution()
+        assert "Join" not in qe.optimizedPlan().toString()
+        assert "ExistingRDD" not in qe.executedPlan().toString()
+
+    def test_empty_reads_keep_declared_schemas(self, spark, tmp_path):
+        store = DirCheckpointStore(str(tmp_path / "empty"))
+        results, lineage = store.results(spark), store.lineage(spark)
+        assert results.schema == store.results_schema
+        assert lineage.schema == store.lineage_schema
+        assert results.count() == 0 and lineage.count() == 0
 
 
 class TestSnapshotAtomicity:
@@ -480,6 +518,44 @@ class TestEditUpsert:
         updated, _ = apply_edits(store.results(spark), edits)
         store.upsert(updated, spark)
         assert resume_filter(sdf, store, spark).count() == 0
+
+    def test_upsert_evaluates_updates_once(self, spark, tmp_path):
+        """Every update row passes through the updates frame's Python
+        function once, and the compacted snapshot holds each key once."""
+        from pyspark.sql import functions as F
+
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        pdf = G.transcripts_pandas(3, median_turns=6, hot_factor=2,
+                                   include_oversize=False)
+        sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+        store = DirCheckpointStore(str(tmp_path / "once"))
+        run_extraction(spark, sdf, store=store, num_partitions=4)
+        n_before = store.results(spark).count()
+        log = str(tmp_path / "seen.tsv")
+
+        def record(batches):
+            for b in batches:
+                with open(log, "a") as f:
+                    f.writelines(f"{c}\t{t}\n" for c, t in zip(b.conv_id, b.turn_idx))
+                yield b
+
+        targets = store.results(spark).filter(F.col("turn_idx") % 2 == 0)
+        n_updates = targets.count()
+        updates = targets.withColumn("edited_by", F.lit("once")).mapInPandas(
+            record, schema=targets.schema
+        )
+        snap = store.upsert(updates, spark)
+
+        with open(log) as f:
+            seen = f.read().splitlines()
+        assert len(seen) == n_updates and len(set(seen)) == n_updates
+        compacted = spark.read.parquet(
+            os.path.join(store.snap_dir, snap, "results")
+        )
+        assert compacted.count() == n_before
+        assert compacted.select("conv_id", "turn_idx").distinct().count() == n_before
+        assert compacted.filter(F.col("edited_by") == "once").count() == n_updates
 
 
 class TestSearchRankedAnalyzer:

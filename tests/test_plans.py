@@ -214,9 +214,12 @@ class TestResumePlan:
     def test_resume_is_anti_join(self, spark, tmp_path):
         from unraveldocs_spark.checkpoint import DirCheckpointStore, resume_filter
         from unraveldocs_spark.generator import transcripts_spark
+        from unraveldocs_spark.pipeline import run_extraction
 
         t = transcripts_spark(spark, 4, hot_factor=2, include_oversize=False)
         store = DirCheckpointStore(str(tmp_path / "ckpt"))
+        # a non-empty store: against an empty one the anti-join folds away
+        run_extraction(spark, t.limit(2), store=store, num_partitions=2)
         plan = plan_of(resume_filter(t, store, spark), "simple")
         assert "LeftAnti" in plan
 

@@ -22,6 +22,12 @@ The package is organised Spark-first:
 - ``queries``    : the operator inventory (SURVEY.md §2) as DataFrame queries.
 - ``dedup`` / ``similarity`` / ``textanalysis`` / ``multimodal`` :
                    training-data pipeline operators.
+- ``zipguard``   : keeps Python workers from re-reading every zip on
+                   ``sys.path`` before each task (installed only in tasks).
 """
 
+from . import zipguard as _zipguard
+
 __version__ = "0.1.0"
+
+_zipguard.install_in_task()

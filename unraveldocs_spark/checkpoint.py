@@ -45,6 +45,16 @@ from .schemas import EXTRACTIONS_SCHEMA, LINEAGE_SCHEMA
 KEYS = ["conv_id", "turn_idx"]
 
 
+def _empty(spark: SparkSession, schema) -> DataFrame:
+    """A 0-row frame of ``schema`` that Catalyst sees is empty (a
+    ``LocalRelation``): joins against it fold away at plan time.  An
+    empty ``createDataFrame([])`` is a Python RDD instead, which runs
+    Python tasks and hides its emptiness from the optimizer."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+
+
 class DirCheckpointStore:
     """Parquet-directory snapshot store with atomic publish-by-rename."""
 
@@ -163,11 +173,17 @@ class DirCheckpointStore:
         see exactly one version of every key.  The rewrite is atomic (same
         staging+rename publish), and a crash mid-upsert leaves the prior
         state untouched."""
-        current = self.results(spark)
-        merged = current.join(
-            updates.select(*self.keys), self.keys, "left_anti"
-        ).unionByName(updates)
-        return self.append(merged, run_id=run_id, compacted=True)
+        # the merge reads ``updates`` twice (its keys and its rows): persist
+        # so the edits scan, sanitizer and join behind it run once
+        updates = updates.persist()
+        try:
+            current = self.results(spark)
+            merged = current.join(
+                updates.select(*self.keys), self.keys, "left_anti"
+            ).unionByName(updates)
+            return self.append(merged, run_id=run_id, compacted=True)
+        finally:
+            updates.unpersist()
 
     # -- delete (retract) -------------------------------------------------
     def delete(self, keys: DataFrame, spark: SparkSession,
@@ -211,7 +227,7 @@ class DirCheckpointStore:
             for s in self._live_snapshots()
         ]
         if not paths:
-            return spark.createDataFrame([], self.results_schema)
+            return _empty(spark, self.results_schema)
         return spark.read.schema(self.results_schema).parquet(*paths)
 
     def lineage(self, spark: SparkSession) -> DataFrame:
@@ -221,7 +237,7 @@ class DirCheckpointStore:
             if os.path.exists(os.path.join(self.snap_dir, s, "lineage"))
         ]
         if not paths:
-            return spark.createDataFrame([], self.lineage_schema)
+            return _empty(spark, self.lineage_schema)
         return spark.read.schema(self.lineage_schema).parquet(*paths)
 
     def completed_keys(self, spark: SparkSession) -> DataFrame:
