@@ -428,6 +428,68 @@ class TestVisionMetrics:
         assert expected, "smoke tier must contain vision payloads"
 
 
+class TestNullPayloads:
+    """NULL ``text``/``tool`` reach the per-row functions as ``None``: an
+    all-NULL batch and a mixed batch through the Spark stages equal the
+    per-row ``extract_turn``/``encrypt_turn`` results."""
+
+    @pytest.fixture(scope="class", params=["all_null", "mixed"])
+    def rows(self, request):
+        import datetime as dt
+
+        ts = dt.datetime(2026, 1, 1)
+        if request.param == "all_null":
+            roles = ("user", "assistant", "tool")
+            return [
+                (f"conv-n{i % 3}", i, roles[i % 3], None, None, ts) for i in range(12)
+            ]
+        out = []
+        for i in range(40):
+            role, text, tool = G.make_turn(i % 7, i, False)
+            if i % 4 == 0:
+                text = None
+            if i % 5 == 0:
+                tool = None
+            out.append((f"conv-m{i % 7}", i, role, text, tool, ts))
+        return out
+
+    @pytest.fixture(scope="class")
+    def sdf(self, spark, rows):
+        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
+
+        # one partition: every row rides in the same Arrow batch
+        return spark.createDataFrame(rows, TRANSCRIPTS_SCHEMA).coalesce(1)
+
+    def test_extract_stage_matches_per_row(self, sdf, rows):
+        got = {(r.conv_id, r.turn_idx): r for r in extract_stage(sdf).collect()}
+        assert len(got) == len(rows)
+        for conv_id, turn_idx, role, text, tool, _ in rows:
+            exp = O.extract_turn(role, tool, text)
+            r = got[(conv_id, turn_idx)]
+            assert (
+                r.extracted_text, [tuple(s) for s in r.spans], r.status,
+                r.error_message, r.content_format, r.rule, r.n_chars, r.n_words,
+                r.edited_content, r.edited_by,
+            ) == (
+                exp.extracted_text, list(exp.spans), exp.status,
+                exp.error_message, exp.content_format, exp.rule, exp.n_chars,
+                exp.n_words, None, None,
+            ), (conv_id, turn_idx)
+
+    def test_encrypt_stage_matches_per_row(self, sdf, rows):
+        from unraveldocs_spark.crypto import encrypt_turn
+        from unraveldocs_spark.extract import encrypt_stage
+
+        got = {(r.conv_id, r.turn_idx): r for r in encrypt_stage(sdf).collect()}
+        assert len(got) == len(rows)
+        for conv_id, turn_idx, role, text, tool, ts in rows:
+            r = got[(conv_id, turn_idx)]
+            assert (r.role, r.tool, r.ts) == (role, tool, ts)
+            assert (r.text, r.is_encrypted, r.iv_b64) == encrypt_turn(
+                conv_id, turn_idx, text
+            ), (conv_id, turn_idx)
+
+
 class TestEditUpsert:
     def test_edit_lifecycle_preserves_extracted_text(self, spark, tmp_path):
         """UpdateOcrContentImpl semantics through the store: only

@@ -190,7 +190,7 @@ class TestExtractionPlan:
         staged = extract_stage(salted_repartition(t, 8))
         plan = plan_of(staged, "simple")
         # one Arrow-batched python stage, partitioned by (conv_id, salt)
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
         assert "hashpartitioning(conv_id" in plan
         assert "pmod(hash(turn_idx" in plan
         # stable order restored within partitions
@@ -856,7 +856,7 @@ class TestEncryptStagePlan:
         # the two repartitions belong to the generator skeleton; the
         # encrypt map itself adds none
         assert plan.count("Exchange") == plan_of(t, "simple").count("Exchange")
-        assert "MapInPandas" in plan or "mapInPandas" in plan
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 class TestDsirImportancePlan:
@@ -898,7 +898,7 @@ class TestBpeEncodePlan:
 
         plan = plan_of(q_bpe_encode(spark, SF), "simple")
         assert "CartesianProduct" not in plan
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan and "MapInPandas" not in plan
         assert plan.count("Exchange hashpartitioning") <= 1
 
 

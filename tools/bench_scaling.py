@@ -155,7 +155,7 @@ Input: cached deterministic synthetic transcripts, {r_n["n_turns"]:,} turns
 (sf={r_n["sf"]}, seed=42, hot conversation = 10x median), identical bytes
 for all runs.  Pipeline: read parquet -> salted repartition on
 (conv_id, pmod(hash(turn_idx), 16)) -> sortWithinPartitions(conv_id,
-turn_idx) -> Arrow-batched mapInPandas extraction -> count.
+turn_idx) -> Arrow-batched mapInArrow extraction -> count.
 
 The sandbox has no multi-node cluster; per BASELINE.md the N -> 4N
 executor criterion is evidenced at two local parallelism levels on the

@@ -13,7 +13,7 @@ The package is organised Spark-first:
                    normalized text + span offsets (+ link/text-density
                    boilerplate heuristics).
 - ``oracle``     : single-threaded row-by-row oracle over transcripts rows.
-- ``extract``    : the vectorized ``mapInPandas`` extraction stage.
+- ``extract``    : the vectorized ``mapInArrow`` extraction stage.
 - ``pipeline``   : end-to-end pipeline (salted repartition, stable ordering,
                    extraction, lineage, rollup).
 - ``checkpoint`` : snapshot/resume protocol (Iceberg when available, atomic

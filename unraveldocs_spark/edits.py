@@ -14,11 +14,9 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
+
+from .schemas import map_rows
 
 EDIT_KEYS = ["conv_id", "turn_idx"]
 
@@ -34,16 +32,16 @@ def _sanitize_html_edits(edits: DataFrame) -> DataFrame:
     passes through untouched (sanitizeContent semantics)."""
     from .sanitizer import clean_html
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            mask = out["content_format"] == "HTML"
-            out.loc[mask, "edited_content"] = [
-                clean_html(v) for v in out.loc[mask, "edited_content"]
-            ]
-            yield out
+    content = edits.columns.index("edited_content")
+    fmt = edits.columns.index("content_format")
 
-    return edits.mapInPandas(run, schema=edits.schema)
+    def run(*row):
+        if row[fmt] == "HTML":
+            row = list(row)
+            row[content] = clean_html(row[content])
+        yield row
+
+    return map_rows(edits, run, edits.schema)
 
 
 def apply_edits(

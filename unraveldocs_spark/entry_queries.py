@@ -3,7 +3,7 @@
 The authoritative extraction correctness gate is pytest (exact per-turn
 equality vs the oracle on synthetic transcripts, FIXTURES.md).  These
 queries additionally push the *driver's* tables through the real
-``mapInPandas`` extraction stage so the DuckDB oracle can verify the full
+Arrow-batched extraction stage so the DuckDB oracle can verify the full
 distributed dispatch end-to-end: a transcripts table is derived
 deterministically from ``documents`` (plain payloads only, so every rule
 the dispatch picks is SQL-expressible)."""
@@ -18,6 +18,7 @@ from .pipeline import salted_repartition
 from .queries import _spark_java_word_count, _sql_java_word_count
 from .rollup import conversation_rollup
 from .scanfan import scan
+from .schemas import map_rows
 from .trainingdata import digest56
 
 
@@ -136,8 +137,8 @@ def q_simhash_near_dupes(spark, sf_dir):
 
 def q_lang_id(spark, sf_dir):
     """Language-ID via pure column expressions (JVM-side, oracle-checked);
-    the pandas-UDF variant (textanalysis.lang_id_stage) is pytest-checked
-    equivalent."""
+    the Arrow-batched Python variant (textanalysis.lang_id_stage) is
+    pytest-checked equivalent."""
     from .textanalysis import lang_id_expr
 
     d = scan(spark, sf_dir, "documents")
@@ -409,8 +410,6 @@ def q_encrypted_roundtrip(spark, sf_dir):
     separately (tests/test_crypto.py, tests/test_plans.py)."""
     import hashlib
 
-    import pandas as pd
-
     from .crypto import encrypt_turn
     from .generator import transcripts_spark
     from .oracle import extract_turn
@@ -427,60 +426,23 @@ def q_encrypted_roundtrip(spark, sf_dir):
             16,
         )
 
-    def run(batches):
-        cols = (
-            "conv_id", "turn_idx", "is_encrypted", "iv_b64", "status",
-            "rule", "error_message", "text_digest", "match_plain",
+    def run(conv_id, turn_idx, role, text, tool):
+        enc_text, is_enc, iv_b64 = encrypt_turn(conv_id, turn_idx, text)
+        r_enc = extract_turn(role, tool, enc_text)
+        dg = _dg(r_enc.extracted_text)
+        match_plain = int(dg == _dg(extract_turn(role, tool, text).extracted_text))
+        yield (
+            conv_id, turn_idx, is_enc, iv_b64, r_enc.status, r_enc.rule,
+            r_enc.error_message, dg, match_plain,
         )
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for conv_id, turn_idx, role, text, tool in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["role"],
-                pdf["text"], pdf["tool"],
-            ):
-                if text is not None and not isinstance(text, str):
-                    text = None if text != text else str(text)
-                if tool is not None and not isinstance(tool, str):
-                    tool = None if tool != tool else str(tool)
-                turn_idx = int(turn_idx)
-                enc_text, is_enc, iv_b64 = encrypt_turn(conv_id, turn_idx, text)
-                r_enc = extract_turn(role, tool, enc_text)
-                r_plain = extract_turn(role, tool, text)
-                dg, dg_plain = _dg(r_enc.extracted_text), _dg(r_plain.extracted_text)
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(turn_idx)
-                out["is_encrypted"].append(is_enc)
-                out["iv_b64"].append(iv_b64)
-                out["status"].append(r_enc.status)
-                out["rule"].append(r_enc.rule)
-                out["error_message"].append(r_enc.error_message)
-                out["text_digest"].append(dg)
-                out["match_plain"].append(int(dg == dg_plain))
-            yield pd.DataFrame(
-                {
-                    **out,
-                    "turn_idx": pd.array(out["turn_idx"], dtype="int32"),
-                    "is_encrypted": pd.array(out["is_encrypted"], dtype="int32"),
-                    # nullable Int64 (not object/float64): a 56-bit digest
-                    # exceeds float64's 53-bit mantissa, so any float
-                    # round-trip silently corrupts the low bits
-                    "text_digest": pd.array(out["text_digest"], dtype="Int64"),
-                    "match_plain": pd.array(out["match_plain"], dtype="int32"),
-                }
-            )
 
-    return (
-        t.select("conv_id", "turn_idx", "role", "text", "tool")
-        .mapInPandas(
-            run,
-            schema=(
-                "conv_id string, turn_idx int, is_encrypted int, "
-                "iv_b64 string, status string, rule string, "
-                "error_message string, text_digest bigint, match_plain int"
-            ),
-        )
-        .orderBy("conv_id", "turn_idx")
-    )
+    return map_rows(
+        t.select("conv_id", "turn_idx", "role", "text", "tool"),
+        run,
+        "conv_id string, turn_idx int, is_encrypted int, iv_b64 string, "
+        "status string, rule string, error_message string, "
+        "text_digest bigint, match_plain int",
+    ).orderBy("conv_id", "turn_idx")
 
 
 def _encrypted_roundtrip_sql() -> str:
@@ -511,8 +473,6 @@ def q_docx_export(spark, sf_dir):
     Scale shape: one zero-shuffle Arrow stage over the transcripts —
     rendering is embarrassingly parallel, exactly how a 100-TB export
     job runs."""
-    import pandas as pd
-
     from .generator import transcripts_spark
     from .wordexport import docx_stats
 
@@ -520,37 +480,16 @@ def q_docx_export(spark, sf_dir):
         spark, 30, hot_factor=10, include_oversize=False, parallelism=8
     )
 
-    def run(batches):
-        for pdf in batches:
-            out = {"conv_id": [], "turn_idx": []}
-            for c in _DOCX_STAT_COLS:
-                out[c] = []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                if text is None or not isinstance(text, str):
-                    continue
-                s = docx_stats(text)
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(int(turn_idx))
-                for c in _DOCX_STAT_COLS:
-                    out[c].append(s[c])
-            # 56-bit digests must never pass through float64 (53-bit
-            # mantissa) — pin the dtype instead of trusting inference
-            out["docx_digest"] = pd.array(out["docx_digest"], dtype="Int64")
-            yield pd.DataFrame(out)
+    def run(conv_id, turn_idx, text):
+        if text is not None:
+            s = docx_stats(text)
+            yield (conv_id, turn_idx, *(s[c] for c in _DOCX_STAT_COLS))
 
-    schema = (
-        "conv_id string, turn_idx int, "
-        + ", ".join(
-            f"{c} {'bigint' if c == 'docx_digest' else 'int'}"
-            for c in _DOCX_STAT_COLS
-        )
+    schema = "conv_id string, turn_idx int, " + ", ".join(
+        f"{c} {'bigint' if c == 'docx_digest' else 'int'}" for c in _DOCX_STAT_COLS
     )
-    return (
-        t.select("conv_id", "turn_idx", "text")
-        .mapInPandas(run, schema=schema)
-        .orderBy("conv_id", "turn_idx")
+    return map_rows(t.select("conv_id", "turn_idx", "text"), run, schema).orderBy(
+        "conv_id", "turn_idx"
     )
 
 
@@ -577,8 +516,6 @@ def q_encrypted_export(spark, sf_dir):
     import base64
     import hashlib
 
-    import pandas as pd
-
     from .crypto import FIXTURE_MASTER_KEY, decrypt_bytes, derive_iv, encrypt_bytes
     from .generator import transcripts_spark
 
@@ -602,40 +539,26 @@ def q_encrypted_export(spark, sf_dir):
         )
     )
 
-    def run(batches):
-        cols = ("conv_id", "n_turns", "pt_bytes", "pt_digest",
-                "iv_b64", "ct_digest", "roundtrip_ok")
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for conv_id, n_turns, payload in zip(
-                pdf["conv_id"], pdf["n_turns"], pdf["payload"]
-            ):
-                pt = payload.encode("utf-8", errors="surrogatepass")
-                iv = derive_iv("shard:" + conv_id, 0)
-                ct = encrypt_bytes(FIXTURE_MASTER_KEY, iv, pt)
-                out["conv_id"].append(conv_id)
-                out["n_turns"].append(int(n_turns))
-                out["pt_bytes"].append(len(pt))
-                out["pt_digest"].append(int(hashlib.md5(pt).hexdigest()[:14], 16))
-                out["iv_b64"].append(base64.b64encode(iv).decode("ascii"))
-                out["ct_digest"].append(int(hashlib.md5(ct).hexdigest()[:14], 16))
-                out["roundtrip_ok"].append(
-                    int(decrypt_bytes(FIXTURE_MASTER_KEY, iv, ct) == pt)
-                )
-            out["pt_digest"] = pd.array(out["pt_digest"], dtype="Int64")
-            out["ct_digest"] = pd.array(out["ct_digest"], dtype="Int64")
-            yield pd.DataFrame(out)
-
-    return (
-        assembled.mapInPandas(
-            run,
-            schema=(
-                "conv_id string, n_turns int, pt_bytes int, pt_digest bigint, "
-                "iv_b64 string, ct_digest bigint, roundtrip_ok int"
-            ),
+    def run(conv_id, n_turns, payload):
+        pt = payload.encode("utf-8", errors="surrogatepass")
+        iv = derive_iv("shard:" + conv_id, 0)
+        ct = encrypt_bytes(FIXTURE_MASTER_KEY, iv, pt)
+        yield (
+            conv_id,
+            n_turns,
+            len(pt),
+            int(hashlib.md5(pt).hexdigest()[:14], 16),
+            base64.b64encode(iv).decode("ascii"),
+            int(hashlib.md5(ct).hexdigest()[:14], 16),
+            int(decrypt_bytes(FIXTURE_MASTER_KEY, iv, ct) == pt),
         )
-        .orderBy("conv_id")
-    )
+
+    return map_rows(
+        assembled,
+        run,
+        "conv_id string, n_turns int, pt_bytes int, pt_digest bigint, "
+        "iv_b64 string, ct_digest bigint, roundtrip_ok int",
+    ).orderBy("conv_id")
 
 
 def _encrypted_export_sql() -> str:

@@ -1,8 +1,9 @@
-"""The vectorized extraction stage — one Arrow-batched ``mapInPandas``
-implementing the payload-kind dispatch (the column-level analog of
-OcrProviderFactory, SRC/ocrprocessing/provider/OcrProviderFactory.java:19-188)
-with row-level error capture (ProcessOcr.java:129-139: a poisoned payload
-becomes a FAILED row, never a failed task).
+"""The vectorized extraction stage — one Arrow-batched Python map
+(``schemas.map_rows`` over ``mapInArrow``) implementing the payload-kind
+dispatch (the column-level analog of OcrProviderFactory,
+SRC/ocrprocessing/provider/OcrProviderFactory.java:19-188) with row-level
+error capture (ProcessOcr.java:129-139: a poisoned payload becomes a
+FAILED row, never a failed task).
 
 Data crosses the JVM<->Python boundary once, in Arrow batches
 (spark.sql.execution.arrow.maxRecordsPerBatch); all row work happens in
@@ -12,72 +13,20 @@ round trips (BASELINE.json input_hint).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from .oracle import extract_turn
-from .schemas import EXTRACTIONS_SCHEMA
+from .schemas import EXTRACTIONS_SCHEMA, map_rows
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        carry_ts = "ts" in pdf.columns
-        conv_ids = pdf["conv_id"].to_numpy()
-        turn_idxs = pdf["turn_idx"].to_numpy()
-        roles = pdf["role"].to_numpy()
-        texts = pdf["text"].to_numpy()
-        tools = pdf["tool"].to_numpy()
-
-        n = len(pdf)
-        extracted = [None] * n
-        spans = [None] * n
-        status = [None] * n
-        error = [None] * n
-        fmt = [None] * n
-        rule = [None] * n
-        n_chars = [0] * n
-        n_words = [0] * n
-
-        for i in range(n):
-            text = texts[i]
-            if text is not None and not isinstance(text, str):
-                # pandas may surface NULL as NaN
-                text = None if text != text else str(text)
-            tool = tools[i]
-            if tool is not None and not isinstance(tool, str):
-                tool = None if tool != tool else str(tool)
-            r = extract_turn(roles[i], tool, text)
-            extracted[i] = r.extracted_text
-            spans[i] = [
-                {"start": s, "end": e, "kind": k} for (s, e, k) in r.spans
-            ]
-            status[i] = r.status
-            error[i] = r.error_message
-            fmt[i] = r.content_format
-            rule[i] = r.rule
-            n_chars[i] = r.n_chars
-            n_words[i] = r.n_words
-
-        out = {
-            "conv_id": conv_ids,
-            "turn_idx": turn_idxs,
-            "extracted_text": extracted,
-            "spans": spans,
-            "status": status,
-            "error_message": error,
-            "content_format": fmt,
-            "rule": rule,
-            "n_chars": pd.array(n_chars, dtype="int32"),
-            "n_words": pd.array(n_words, dtype="int32"),
-            # edit lifecycle fields: always null at extraction time
-            # (populated only by edits.apply_edits + store.upsert)
-            "edited_content": [None] * n,
-            "edited_by": [None] * n,
-        }
-        if carry_ts:
-            out["ts"] = pdf["ts"].to_numpy()
-        yield pd.DataFrame(out)
+def _extract_row(conv_id, turn_idx, role, text, tool, *ts):
+    """One extractions row; ``ts`` (event time) rides through when carried."""
+    r = extract_turn(role, tool, text)
+    # edit lifecycle fields (edited_content, edited_by) are always null at
+    # extraction time (populated only by edits.apply_edits + store.upsert)
+    yield (
+        conv_id, turn_idx, r.extracted_text, r.spans, r.status,
+        r.error_message, r.content_format, r.rule, r.n_chars, r.n_words,
+        None, None, *ts,
+    )
 
 
 def encrypt_stage(transcripts_df):
@@ -101,25 +50,12 @@ def encrypt_stage(transcripts_df):
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts, flags, ivs = [], [], []
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                if text is not None and not isinstance(text, str):
-                    text = None if text != text else str(text)
-                t_out, is_enc, iv_b64 = encrypt_turn(conv_id, int(turn_idx), text)
-                texts.append(t_out)
-                flags.append(is_enc)
-                ivs.append(iv_b64)
-            out = pdf.copy()
-            out["text"] = texts
-            out["is_encrypted"] = pd.array(flags, dtype="int32")
-            out["iv_b64"] = ivs
-            yield out
+    def run(conv_id, turn_idx, role, text, tool, ts):
+        text, is_encrypted, iv_b64 = encrypt_turn(conv_id, turn_idx, text)
+        yield conv_id, turn_idx, role, text, tool, ts, is_encrypted, iv_b64
 
-    return transcripts_df.mapInPandas(run, schema=schema)
+    cols = [f.name for f in TRANSCRIPTS_SCHEMA.fields]
+    return map_rows(transcripts_df.select(*cols), run, schema)
 
 
 def extract_stage(transcripts_df, carry_ts: bool = False):
@@ -133,7 +69,7 @@ def extract_stage(transcripts_df, carry_ts: bool = False):
 
         cols.append("ts")
         schema = StructType(schema.fields + [StructField("ts", TimestampType(), False)])
-    return transcripts_df.select(*cols).mapInPandas(_extract_batches, schema=schema)
+    return map_rows(transcripts_df.select(*cols), _extract_row, schema)
 
 
 def vision_metrics_stage(transcripts_df):
@@ -145,25 +81,14 @@ def vision_metrics_stage(transcripts_df):
 
     from .semantics import extract_vision, try_parse_envelope
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"conv_id": [], "turn_idx": [], "confidence": [], "language_detected": []}
-            for conv_id, turn_idx, text in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-            ):
-                if not isinstance(text, str):
-                    continue
-                env = try_parse_envelope(text)
-                if env is None or env.kind != "vision":
-                    continue
-                _, conf, lang = extract_vision(_json.loads(text))
-                out["conv_id"].append(conv_id)
-                out["turn_idx"].append(turn_idx)
-                out["confidence"].append(conf)
-                out["language_detected"].append(lang)
-            yield pd.DataFrame(out)
+    def run(conv_id, turn_idx, text):
+        env = try_parse_envelope(text) if isinstance(text, str) else None
+        if env is not None and env.kind == "vision":
+            _, conf, lang = extract_vision(_json.loads(text))
+            yield conv_id, turn_idx, conf, lang
 
-    return transcripts_df.select("conv_id", "turn_idx", "text").mapInPandas(
+    return map_rows(
+        transcripts_df.select("conv_id", "turn_idx", "text"),
         run,
-        schema="conv_id string, turn_idx int, confidence double, language_detected string",
+        "conv_id string, turn_idx int, confidence double, language_detected string",
     )

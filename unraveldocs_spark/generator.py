@@ -7,8 +7,9 @@ for the same parameters, and any subset of rows can be regenerated
 independently on any executor.
 
 The Spark path builds the (conv_id, turn_idx) skeleton JVM-side
-(``sequence`` + ``posexplode``) and fills payloads in a vectorized
-``mapInPandas`` over the same pure function the pandas path uses.
+(``sequence`` + ``posexplode``) and fills payloads in an Arrow-batched
+``schemas.map_rows`` stage over the same pure function the pandas path
+uses.
 
 Fixture families (FIXTURES.md §3): plain text (F-plain), HTML with
 sanitizer + boilerplate material (F4/F5), page envelopes with direct /
@@ -319,7 +320,7 @@ def transcripts_spark(
     include_oversize: bool = True,
     parallelism: int | None = None,
 ):
-    """Distributed generator: JVM-side skeleton, payloads via mapInPandas.
+    """Distributed generator: JVM-side skeleton, payloads via map_rows.
 
     At real scale the skeleton would come from the Iceberg transcripts
     table itself; here ``sequence``+``posexplode`` stands in so bench data
@@ -327,7 +328,7 @@ def transcripts_spark(
     """
     from pyspark.sql import functions as F
 
-    from .schemas import TRANSCRIPTS_SCHEMA
+    from .schemas import TRANSCRIPTS_SCHEMA, map_rows
 
     sizes = conv_sizes(n_convs, median_turns, hot_factor)
     parallelism = parallelism or spark.sparkContext.defaultParallelism
@@ -349,26 +350,8 @@ def transcripts_spark(
         .repartition(parallelism)
     )
 
-    def fill(batches):
-        for pdf in batches:
-            out = {
-                "conv_id": [],
-                "turn_idx": [],
-                "role": [],
-                "text": [],
-                "tool": [],
-                "ts": [],
-            }
-            for c, t in zip(pdf["conv_idx"], pdf["turn_idx"]):
-                c = int(c)
-                t = int(t)
-                role, text, tool = make_turn(c, t, include_oversize)
-                out["conv_id"].append(conv_name(c))
-                out["turn_idx"].append(t)
-                out["role"].append(role)
-                out["text"].append(text)
-                out["tool"].append(tool)
-                out["ts"].append(turn_ts(c, t).replace(tzinfo=None))
-            yield pd.DataFrame(out)
+    def fill(c, t):
+        role, text, tool = make_turn(c, t, include_oversize)
+        yield conv_name(c), t, role, text, tool, turn_ts(c, t)
 
-    return skeleton.mapInPandas(fill, schema=TRANSCRIPTS_SCHEMA)
+    return map_rows(skeleton, fill, TRANSCRIPTS_SCHEMA)

@@ -1,5 +1,5 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` payloads
-with typed metadata, processed via Arrow-batched ``mapInPandas``.
+with typed metadata, processed via Arrow-batched ``schemas.map_rows``.
 
 The decode step is STUBBED: the real codec libraries (Pillow, ffmpeg,
 torchaudio, ...) are not in this container.  The Spark-side plumbing —
@@ -11,11 +11,9 @@ NotImplementedError a production deployment would replace.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
+
+from .schemas import map_rows
 
 try:  # real decoders, if ever present
     from PIL import Image  # noqa: F401
@@ -66,44 +64,22 @@ def decode_stage(
     Per-row failures become decode_status='FAILED' rows, mirroring the
     pipeline-wide row-level error policy (ProcessOcr.java:129-139)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "media_type": [],
-                "payload_bytes": [],
-                "width": [],
-                "height": [],
-                "n_frames": [],
-                "decode_status": [],
-            }
-            for doc_id, mt, payload in zip(
-                pdf["doc_id"], pdf["media_type"], pdf["payload"]
-            ):
-                out["doc_id"].append(doc_id)
-                out["media_type"].append(mt)
-                data = bytes(payload) if payload is not None else b""
-                out["payload_bytes"].append(len(data))
-                try:
-                    if require_real_decode:
-                        if mt.startswith("image/") and _HAS_PIL:
-                            raise RuntimeError("real decode path not wired")
-                        raise NotImplementedError(
-                            f"no codec for {mt} in this environment"
-                        )
-                    w, h, nf = _fake_decode(data, mt)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["n_frames"].append(nf)
-                    out["decode_status"].append("COMPLETED")
-                except Exception:
-                    out["width"].append(0)
-                    out["height"].append(0)
-                    out["n_frames"].append(0)
-                    out["decode_status"].append("FAILED")
-            yield pd.DataFrame(out)
+    def run(doc_id, mt, payload):
+        data = payload or b""
+        try:
+            if require_real_decode:
+                if mt.startswith("image/") and _HAS_PIL:
+                    raise RuntimeError("real decode path not wired")
+                raise NotImplementedError(f"no codec for {mt} in this environment")
+            w, h, nf = _fake_decode(data, mt)
+            status = "COMPLETED"
+        except Exception:
+            w, h, nf, status = 0, 0, 0, "FAILED"
+        yield doc_id, mt, len(data), w, h, nf, status
 
-    return payloads.mapInPandas(run, schema=DECODED_SCHEMA)
+    return map_rows(
+        payloads.select("doc_id", "media_type", "payload"), run, DECODED_SCHEMA
+    )
 
 
 RESIZE_TARGET = 224
@@ -144,20 +120,14 @@ def feature_stage(payloads: DataFrame, prefix: int = 64) -> DataFrame:
     Emitted as a joined string so the oracle hash never depends on list
     canonicalization."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "features": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                bins = [0] * FEATURE_BINS
-                for b in data[:prefix]:
-                    bins[b % FEATURE_BINS] += 1
-                out["doc_id"].append(doc_id)
-                out["features"].append("|".join(str(v) for v in bins))
-            yield pd.DataFrame(out)
+    def run(doc_id, payload):
+        bins = [0] * FEATURE_BINS
+        for b in (payload or b"")[:prefix]:
+            bins[b % FEATURE_BINS] += 1
+        yield doc_id, "|".join(str(v) for v in bins)
 
-    return payloads.select("doc_id", "payload").mapInPandas(
-        run, schema="doc_id long, features string"
+    return map_rows(
+        payloads.select("doc_id", "payload"), run, "doc_id long, features string"
     )
 
 

@@ -3,7 +3,7 @@
 This is the fixture oracle of SURVEY.md §7 step 1: it evaluates the
 reference extraction semantics for ONE transcript turn at a time, in pure
 Python, with no Spark.  The Spark stage (``extract.py``) reuses the same
-per-row function inside Arrow-batched ``mapInPandas``; pytest asserts
+per-row function inside Arrow-batched ``mapInArrow``; pytest asserts
 per-turn exact text equality between the distributed pipeline and this
 oracle (BASELINE.json "input_hint").
 

@@ -12,7 +12,7 @@ exercises the distributed pipeline against an independent engine.
 For ``extract_synthetic`` the oracle is the pure-Python fixture oracle
 itself (oracle.extract_turn), evaluated sequentially and emitted as a SQL
 VALUES table: DuckDB then verifies the *distributed* run (salted
-repartition -> Arrow-batched mapInPandas) reproduced the sequential
+repartition -> Arrow-batched mapInArrow) reproduced the sequential
 reference row-for-row — the driver-visible form of the repo's per-turn
 equality contract (BASELINE.json north_rule).
 """
@@ -465,7 +465,7 @@ def extract_synthetic_sql(
     over the same deterministic synthetic transcripts the Spark query
     generates, and emit the expected rows as a VALUES table.  The driver
     then verifies the distributed pipeline (salted repartition +
-    Arrow-batched mapInPandas) reproduced the sequential reference with
+    Arrow-batched mapInArrow) reproduced the sequential reference with
     exact per-turn text equality."""
     from .generator import conv_name, conv_sizes, make_turn
     from .oracle import extract_turn

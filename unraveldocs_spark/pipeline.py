@@ -5,7 +5,7 @@ bulk upload → Kafka → OCR data path, SURVEY.md §3.2):
       -> resume anti-join vs checkpoint (idempotency, ProcessOcr.java:71-74)
       -> salted repartition on (conv_id, salt(turn_idx))   [skew defusal]
       -> sortWithinPartitions(conv_id, turn_idx)           [stable order]
-      -> mapInPandas extraction (Arrow batches)
+      -> mapInArrow extraction (Arrow batches)
       -> append results + per-partition lineage in ONE snapshot
       -> conversation rollup (ProcessOcr.java:185-217)
 

@@ -1,8 +1,15 @@
 """Declared (not inferred) schemas — the reference manages its schema via
 Flyway migrations (db/migration/V11__create_ocr_data_table.sql:1-11 etc.);
-the graft declares Spark schemas the same way (SURVEY.md §1.4)."""
+the graft declares Spark schemas the same way (SURVEY.md §1.4).
+
+Every Python stage crosses the JVM<->Python boundary through
+``map_batches``/``map_rows``: Arrow record batches in, and output columns
+typed from the stage's declared schema (never inferred from values).
+"""
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql.types import (
     ArrayType,
@@ -114,3 +121,38 @@ CORPUS_LINEAGE_SCHEMA = StructType(
         StructField("lang_docs", LongType(), False),
     ]
 )
+
+
+def map_batches(df, fn, schema):
+    """Arrow-batched Python stage: ``fn(batch)`` maps each input
+    ``pyarrow.RecordBatch`` to the output columns in ``schema`` order
+    (lists, tuples, numpy or Arrow arrays).  Each column is built with the
+    Arrow type of its declared field, so a 56-bit digest stays an exact
+    int64 and a NULL stays NULL (schema: StructType or DDL string)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    out = to_arrow_schema(schema)
+
+    def run(batches):
+        for batch in batches:
+            cols = [pa.array(c, f.type) for c, f in zip(fn(batch), out)]
+            yield pa.RecordBatch.from_arrays(cols, schema=out)
+
+    return df.mapInArrow(run, schema)
+
+
+def map_rows(df, fn, schema):
+    """Row-wise Python stage over Arrow batches: ``fn`` takes one input
+    row as plain Python values (positional, in ``df`` column order; NULL
+    is ``None``, bigints are exact ints) and yields 0..n output tuples in
+    ``schema`` order — filtering and pass-through stages alike."""
+
+    def columns(batch):
+        rows = zip(*(c.to_pylist() for c in batch.columns))
+        out = [r for row in rows for r in fn(*row)]
+        return zip(*out) if out else itertools.repeat(())
+
+    return map_batches(df, columns, schema)

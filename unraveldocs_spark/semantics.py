@@ -2,7 +2,7 @@
 
 This module is the single source of truth for the per-payload extraction
 rules.  The fixture oracle (``oracle.py``) calls it row-by-row; the Spark
-stage (``extract.py``) calls it from inside Arrow-batched ``mapInPandas``.
+stage (``extract.py``) calls it from inside Arrow-batched ``mapInArrow``.
 Every function documents the reference file:line it mirrors (paths relative
 to /root/reference, SRC = src/main/java/com/extractor/unraveldocs).
 

@@ -11,14 +11,12 @@
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
 from .generator import mix64
+from .schemas import map_batches
 
 LSH_BITS = 16
 EMB_DIM = 64  # driver embeddings.parquet dimension (constant across SFs)
@@ -37,6 +35,14 @@ def _hyperplanes(dim: int, bits: int = LSH_BITS) -> np.ndarray:
     return vals.reshape(bits, dim)
 
 
+def _matrix(batch, dim: int) -> np.ndarray:
+    """The batch's ``embedding`` list column as a (rows, dim) float64
+    matrix — (0, dim) for an empty batch, so numpy stages need no
+    empty-batch branch."""
+    flat = batch.column("embedding").flatten()
+    return np.asarray(flat, dtype=np.float64).reshape(batch.num_rows, dim)
+
+
 def signature_bits(vec: np.ndarray, planes: np.ndarray) -> int:
     dots = planes @ vec
     sig = 0
@@ -50,21 +56,16 @@ def signature_stage(embeddings: DataFrame, dim: int, bits: int = LSH_BITS) -> Da
     """vec_id -> LSH signature (int) + l2 norm, vectorized via numpy."""
     planes = _hyperplanes(dim, bits)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            if len(mat) == 0:
-                yield pd.DataFrame({"vec_id": [], "signature": [], "norm": []})
-                continue
-            dots = mat @ planes.T  # (n, bits)
-            sigs = ((dots > 0).astype(np.int64) << np.arange(planes.shape[0])).sum(axis=1)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "signature": sigs, "norm": norms}
-            )
+    def run(batch):
+        mat = _matrix(batch, dim)
+        dots = mat @ planes.T  # (n, bits)
+        sigs = ((dots > 0).astype(np.int64) << np.arange(planes.shape[0])).sum(axis=1)
+        return batch.column("vec_id"), sigs, np.sqrt((mat * mat).sum(axis=1))
 
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        run, schema="vec_id long, signature long, norm double"
+    return map_batches(
+        embeddings.select("vec_id", "embedding"),
+        run,
+        "vec_id long, signature long, norm double",
     )
 
 
@@ -159,25 +160,19 @@ def _assign_stage(
     assignment tie can then never flip cluster membership (r4 verdict
     item 4; same discipline as the integer-e6 PQ lookup tables)."""
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "centroid_id": []})
-                continue
-            mat = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ cents_unit.T
-            if quantize_e4:
-                sims = np.copysign(
-                    np.floor(np.abs(sims) * 1e4 + 0.5), sims
-                ).astype(np.int64)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "centroid_id": sims.argmax(axis=1)}
-            )
+    def assign(batch):
+        mat = _matrix(batch, cents_unit.shape[1])
+        norms = np.linalg.norm(mat, axis=1, keepdims=True)
+        norms[norms == 0] = 1.0
+        sims = (mat / norms) @ cents_unit.T
+        if quantize_e4:
+            sims = np.copysign(
+                np.floor(np.abs(sims) * 1e4 + 0.5), sims
+            ).astype(np.int64)
+        return batch.column("vec_id"), sims.argmax(axis=1)
 
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, schema="vec_id long, centroid_id int"
+    return map_batches(
+        embeddings.select("vec_id", "embedding"), assign, "vec_id long, centroid_id int"
     )
 
 
@@ -262,23 +257,19 @@ def pq_encode_stage(embeddings: DataFrame, codebooks: np.ndarray) -> DataFrame:
     id).  numpy over Arrow batches; codebooks is (M, Ksub, dsub)."""
     m_sub, _, dsub = codebooks.shape
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "codes": []})
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            codes = np.empty((len(mat), m_sub), dtype=np.int32)
-            for m in range(m_sub):
-                sub = mat[:, m * dsub : (m + 1) * dsub]
-                d2 = ((sub[:, None, :] - codebooks[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "codes": list(codes)})
+    def encode(batch):
+        mat = _matrix(batch, m_sub * dsub)
+        codes = np.empty((len(mat), m_sub), dtype=np.int32)
+        for m in range(m_sub):
+            sub = mat[:, m * dsub : (m + 1) * dsub]
+            d2 = ((sub[:, None, :] - codebooks[m][None, :, :]) ** 2).sum(axis=2)
+            codes[:, m] = d2.argmin(axis=1)
+        return batch.column("vec_id"), list(codes)
 
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        encode, schema="vec_id long, codes array<int>"
+    return map_batches(
+        embeddings.select("vec_id", "embedding"),
+        encode,
+        "vec_id long, codes array<int>",
     )
 
 
@@ -388,32 +379,23 @@ def pca_fit(embeddings: DataFrame, dim: int, k: int) -> tuple[np.ndarray, np.nda
     Determinism: eigh of a fixed covariance is deterministic; the
     remaining sign ambiguity per component is fixed by making each
     component's largest-|.|-coordinate positive."""
-    from pyspark.sql import types as T
+    import pyarrow as pa
 
-    part_schema = T.StructType([
-        T.StructField("n", T.LongType()),
-        T.StructField("s", T.ArrayType(T.DoubleType())),
-        T.StructField("xtx", T.ArrayType(T.DoubleType())),
-    ])
+    part_schema = "n long, s array<double>, xtx array<double>"
 
     def partials(batches):
-        n = 0
-        s = np.zeros(dim)
-        xtx = np.zeros((dim, dim))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
+        n, s, xtx = 0, np.zeros(dim), np.zeros((dim, dim))
+        for batch in batches:
+            mat = _matrix(batch, dim)
             n += len(mat)
             s += mat.sum(axis=0)
             xtx += mat.T @ mat
-        yield pd.DataFrame(
-            {"n": [n], "s": [s.tolist()], "xtx": [xtx.ravel().tolist()]}
+        yield pa.record_batch(
+            [pa.array([n]), pa.array([s.tolist()]), pa.array([xtx.ravel().tolist()])],
+            names=["n", "s", "xtx"],
         )
 
-    rows = embeddings.select("embedding").mapInPandas(partials, part_schema).collect()
+    rows = embeddings.select("embedding").mapInArrow(partials, part_schema).collect()
     n = sum(r.n for r in rows)
     s = np.sum([np.asarray(r.s) for r in rows], axis=0)
     xtx = np.sum([np.asarray(r.xtx).reshape(dim, dim) for r in rows], axis=0)
@@ -434,26 +416,15 @@ def pca_project_stage(embeddings: DataFrame, mean: np.ndarray,
     """Project every vector onto the fitted components (Arrow-batched;
     mean and the k x dim component matrix ride the closure — broadcast
     once per executor, never per row)."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType([
-        T.StructField("vec_id", T.LongType()),
-        T.StructField("proj", T.ArrayType(T.DoubleType())),
-    ])
     mean = np.asarray(mean, dtype=np.float64)
     comps = np.asarray(components, dtype=np.float64)
 
-    def project(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"vec_id": [], "proj": []})
-                continue
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            proj = (mat - mean) @ comps.T
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "proj": list(map(list, proj))}
-            )
+    def project(batch):
+        proj = (_matrix(batch, len(mean)) - mean) @ comps.T
+        return batch.column("vec_id"), list(proj)
 
-    return embeddings.select("vec_id", "embedding").mapInPandas(project, out_schema)
+    return map_batches(
+        embeddings.select("vec_id", "embedding"),
+        project,
+        "vec_id long, proj array<double>",
+    )

@@ -8,12 +8,12 @@ that applies the core over Arrow batches with numpy where it pays off.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from .schemas import map_rows
 
 # ---------------------------------------------------------------------------
 # SimHash (64-bit, word features, md5-derived feature hashes)
@@ -51,27 +51,15 @@ def simhash_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     """doc_id -> 64-bit simhash (as two signed 32-bit halves to stay in
     Spark-friendly integer ranges, plus the full value as hex)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes = [simhash64(t or "") for t in pdf[text_col]]
-            signed = [h - (1 << 64) if h >= (1 << 63) else h for h in hashes]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "simhash": pd.array(signed, dtype="int64"),
-                    "band0": pd.array([(h >> 48) & 0xFFFF for h in hashes], dtype="int32"),
-                    "band1": pd.array([(h >> 32) & 0xFFFF for h in hashes], dtype="int32"),
-                    "band2": pd.array([(h >> 16) & 0xFFFF for h in hashes], dtype="int32"),
-                    "band3": pd.array([h & 0xFFFF for h in hashes], dtype="int32"),
-                }
-            )
+    def run(doc_id, text):
+        h = simhash64(text or "")
+        signed = h - (1 << 64) if h >= (1 << 63) else h
+        yield (doc_id, signed, *((h >> s) & 0xFFFF for s in (48, 32, 16, 0)))
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return map_rows(
+        docs.select(id_col, text_col),
         run,
-        schema=(
-            "doc_id long, simhash long, "
-            "band0 int, band1 int, band2 int, band3 int"
-        ),
+        "doc_id long, simhash long, band0 int, band1 int, band2 int, band3 int",
     )
 
 
@@ -151,18 +139,10 @@ def lang_id(text: str) -> str:
 
 
 def lang_id_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "lang_pred": [lang_id(t or "") for t in pdf[text_col]],
-                }
-            )
+    def run(doc_id, text):
+        yield doc_id, lang_id(text or "")
 
-    return docs.select(id_col, text_col).mapInPandas(
-        run, schema="doc_id long, lang_pred string"
-    )
+    return map_rows(docs.select(id_col, text_col), run, "doc_id long, lang_pred string")
 
 
 # ---------------------------------------------------------------------------
@@ -211,19 +191,14 @@ def winnow_fingerprints(text: str, k: int = _WIN_K, w: int = _WIN_W) -> list[int
 
 
 def fingerprint_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps = [winnow_fingerprints(t or "") for t in pdf[text_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "fingerprints": fps,
-                    "n_fingerprints": pd.array([len(f) for f in fps], dtype="int32"),
-                }
-            )
+    def run(doc_id, text):
+        fps = winnow_fingerprints(text or "")
+        yield doc_id, fps, len(fps)
 
-    return docs.select(id_col, text_col).mapInPandas(
-        run, schema="doc_id long, fingerprints array<long>, n_fingerprints int"
+    return map_rows(
+        docs.select(id_col, text_col),
+        run,
+        "doc_id long, fingerprints array<long>, n_fingerprints int",
     )
 
 

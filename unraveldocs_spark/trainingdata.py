@@ -5045,32 +5045,18 @@ def bpe_apply(word: str, merges) -> tuple[str, ...]:
     return s
 
 
-def _transcript_bpe_rows(merges, pdf):
-    """Per-turn encode rows (shared by the Spark Arrow stage and the
+def _transcript_bpe_row(pairs, conv_id, turn_idx, text):
+    """One turn's encode row (shared by the Spark Arrow stage and the
     VALUES oracle): tokenize with the Java-``\\s+`` ASCII split (r2
-    whitespace invariant), encode every non-empty token, emit word and
-    symbol counts plus the md5-56 digest of the U+001F-joined symbol
-    stream."""
+    whitespace invariant), encode every non-empty token with the ordered
+    merge ``pairs``, emit word and symbol counts plus the md5-56 digest
+    of the U+001F-joined symbol stream."""
     from .oracle_sql_gen import _md5_56
     from .semantics import _JAVA_RE_WS_SPLIT
 
-    pairs = [(left, right) for left, right, _ in merges]
-    out = []
-    for conv_id, turn_idx, text in zip(
-        pdf["conv_id"], pdf["turn_idx"], pdf["text"]
-    ):
-        toks = [w for w in _JAVA_RE_WS_SPLIT.split(text.lower()) if w]
-        syms = [s for w in toks for s in bpe_apply(w, pairs)]
-        out.append(
-            (
-                conv_id,
-                int(turn_idx),
-                len(toks),
-                len(syms),
-                _md5_56("\x1f".join(syms)),
-            )
-        )
-    return out
+    toks = [w for w in _JAVA_RE_WS_SPLIT.split(text.lower()) if w]
+    syms = [s for w in toks for s in bpe_apply(w, pairs)]
+    return conv_id, turn_idx, len(toks), len(syms), _md5_56("\x1f".join(syms))
 
 
 def q_bpe_encode(spark, sf_dir):
@@ -5079,7 +5065,7 @@ def q_bpe_encode(spark, sf_dir):
     half): learn the merge table exactly as ``q_bpe_learn`` does (one
     distributed word-frequency pass, capped TakeOrdered vocab fold,
     driver merge loop), then broadcast the tiny ordered merge list
-    into an Arrow-batched mapInPandas stage that encodes every turn.
+    into an Arrow-batched Python stage that encodes every turn.
     Output per turn: word count, post-merge symbol count, and the
     md5-56 digest of the symbol stream (wide values ship as digests —
     driver-schema rule).
@@ -5091,9 +5077,8 @@ def q_bpe_encode(spark, sf_dir):
     canonical tokenize-the-corpus stage: corpus cost is one Arrow
     pass, and the learn phase's corpus cost is the one word-count
     Exchange measured under ``bpe_learn``."""
-    import pandas as pd
-
     from .generator import transcripts_spark
+    from .schemas import map_rows
 
     words_df = (
         transcripts_spark(
@@ -5112,34 +5097,20 @@ def q_bpe_encode(spark, sf_dir):
         {r["w"]: int(r["freq"]) for r in top}, _BPE_LEARN_MERGES
     )
 
-    def encode_batches(batches):
-        for pdf in batches:
-            rows = _transcript_bpe_rows(merges, pdf)
-            yield pd.DataFrame(
-                {
-                    "conv_id": [r[0] for r in rows],
-                    "turn_idx": pd.array([r[1] for r in rows], dtype="int32"),
-                    "n_words": pd.array([r[2] for r in rows], dtype="int32"),
-                    "n_symbols": pd.array([r[3] for r in rows], dtype="int32"),
-                    "symbols_digest": pd.array(
-                        [r[4] for r in rows], dtype="Int64"
-                    ),
-                }
-            )
+    pairs = [(left, right) for left, right, _ in merges]
+
+    def encode(conv_id, turn_idx, text):
+        yield _transcript_bpe_row(pairs, conv_id, turn_idx, text)
 
     t = transcripts_spark(
         spark, 30, hot_factor=10, include_oversize=False, parallelism=8
     )
-    return (
-        t.filter(F.col("text").isNotNull())
-        .select("conv_id", "turn_idx", "text")
-        .mapInPandas(
-            encode_batches,
-            "conv_id string, turn_idx int, n_words int, n_symbols int, "
-            "symbols_digest bigint",
-        )
-        .orderBy("conv_id", "turn_idx")
-    )
+    return map_rows(
+        t.filter(F.col("text").isNotNull()).select("conv_id", "turn_idx", "text"),
+        encode,
+        "conv_id string, turn_idx int, n_words int, n_symbols int, "
+        "symbols_digest bigint",
+    ).orderBy("conv_id", "turn_idx")
 
 
 def _bpe_encode_sql() -> str:
@@ -5162,7 +5133,11 @@ def _bpe_encode_sql() -> str:
         sorted(freqs.items(), key=lambda kv: (-kv[1], kv[0]))[:_BPE_VOCAB_CAP]
     )
     merges = bpe_merges(top, _BPE_LEARN_MERGES)
-    rows = _transcript_bpe_rows(merges, pdf)
+    pairs = [(left, right) for left, right, _ in merges]
+    rows = [
+        _transcript_bpe_row(pairs, c, int(t), text)
+        for c, t, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"])
+    ]
 
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
