@@ -26,7 +26,6 @@ def main():
     ap.add_argument("--lineage-table", default=None, help="iceberg lineage table (with --iceberg)")
     ap.add_argument("--iceberg", action="store_true", help="treat --input/--store as iceberg tables")
     ap.add_argument("--partitions", type=int, default=None)
-    ap.add_argument("--salt", type=int, default=16)
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -50,7 +49,6 @@ def main():
         transcripts,
         store=store,
         num_partitions=args.partitions,
-        salt=args.salt,
     )
     rollup_counts = (
         result["rollup"].groupBy("collection_status").count().collect()

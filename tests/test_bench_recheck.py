@@ -190,3 +190,53 @@ class TestCompactContract:
             }
         )
         assert len(line) < 1800, len(line)
+
+
+class TestInlineBudget:
+    """The compact dict spends its budget strictly in priority order,
+    names the baseline it was computed against, and flags a window in
+    which no control could be re-timed."""
+
+    def test_first_drop_ends_the_inline_list(self):
+        detail = {f"q{i}": {"verdict": "regressed"} for i in range(6)}
+        detail["very_long_regressed_query_name_" + "x" * 40] = {
+            "verdict": "regressed"
+        }
+        detail["z"] = {"verdict": "noise"}
+        out = br._compact_verdicts(detail)
+        # the later, shorter 'noise' entry must not displace a dropped
+        # higher-priority 'regressed' one
+        assert "z" not in out
+        assert len(json.dumps(out)) <= br.INLINE_BUDGET_CHARS
+        n_inline = len(out) - 2  # minus _more and _window_inflation
+        assert out["_more"] == f"{len(detail) - n_inline} in BENCH/recheck json"
+
+    def test_prev_name_reaches_side_file(self, monkeypatch, tmp_path):
+        monkeypatch.setattr(br, "_best_of", lambda fn, reps: 1.0)
+        write_detail = br._write_detail
+        seen = {}
+        monkeypatch.setattr(
+            br, "_write_detail",
+            lambda d, prev_name=None, repo=None: seen.update(prev=prev_name),
+        )
+        br.recheck_regressions(
+            spark=None, sf_dir="", qfns=_qfns(["q"]),
+            per_query={"q": 3.0}, prev={"q": 1.0},
+            prev_name="BENCH_r41.json",
+        )
+        assert seen["prev"] == "BENCH_r41.json"
+        write_detail({"q": {"verdict": "noise"}}, "BENCH_r41.json",
+                     repo=str(tmp_path))
+        payload = json.loads((tmp_path / "BENCH" / "recheck_r42.json").read_text())
+        assert payload["recheck_vs"] == "BENCH_r41.json"
+
+    def test_all_flagged_says_no_controls(self, monkeypatch, tmp_path):
+        seq = iter([6.1, 6.2])
+        monkeypatch.setattr(br, "_best_of", lambda fn, reps: next(seq))
+        monkeypatch.setattr(br, "_write_detail", lambda *a, **k: None)
+        out = br.recheck_regressions(
+            spark=None, sf_dir="", qfns=_qfns(["a", "b"]),
+            per_query={"a": 6.0, "b": 6.0}, prev={"a": 1.0, "b": 1.0},
+        )
+        assert out == {"_window_inflation": "no-controls",
+                       "a": "regressed", "b": "regressed"}

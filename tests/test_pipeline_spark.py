@@ -236,6 +236,25 @@ class TestSkewBalance:
         ]
         assert max(u_sizes) > max(counts), "salting should beat conv-only partitioning"
 
+    def test_run_extraction_spreads_hot_conv_past_16_tasks(self, spark):
+        """run_extraction leaves the salt count to salted_repartition's
+        max(16, 4P) rule: at 32 partitions a 200x-hot conversation must
+        reach more than the 16 tasks a fixed 16-way salt could address."""
+        from pyspark.sql import functions as F
+
+        pdf = G.transcripts_pandas(12, median_turns=10, hot_factor=200,
+                                   include_oversize=False)
+        hot = pdf["conv_id"].value_counts().idxmax()
+        out = run_extraction(spark, spark.createDataFrame(pdf), num_partitions=32)
+        n_tasks = (
+            out["extractions"]
+            .filter(F.col("conv_id") == hot)
+            .select(F.spark_partition_id())
+            .distinct()
+            .count()
+        )
+        assert n_tasks > 16, n_tasks
+
 
 class TestTwoPhaseResume:
     def test_complete_convs_pruned_then_keys(self, spark, tmp_path):

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from unraveldocs_spark.scanfan import scan
 from unraveldocs_spark.similarity import (
     _hyperplanes,
     brute_force_topk,
@@ -19,6 +20,11 @@ from unraveldocs_spark.textanalysis import (
     simhash_near_dupes,
     simhash_stage,
     winnow_fingerprints,
+)
+from unraveldocs_spark.trainingdata import (
+    _JACCARD_DEN,
+    _JACCARD_NUM,
+    _spark_shingles,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -243,6 +249,42 @@ class TestIvf:
         assert a == b and len(a) == 10
 
 
+def _dedup_ngram_jaccard_blocked(spark, sf_dir):
+    """FIXED-CARDINALITY blocking — small-scale test oracle.
+
+    Blocks on (lang, len_bucket), whose cardinality is data-independent:
+    at 100x the data every block is 100x bigger and the pair join does
+    10,000x the work, so it stays out of the package; it cross-checks the
+    exact-Jaccard arithmetic of the banded query on the pairs both
+    generate."""
+    d = scan(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        F.floor(F.col("n_chars") / F.lit(16)).cast("long").alias("len_bucket"),
+        _spark_shingles(F.col("text")).alias("sh"),
+    ).filter(F.size("sh") > 0)
+    a = d.alias("a")
+    b = d.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.lang") == F.col("b.lang"))
+        & (F.col("a.len_bucket") == F.col("b.len_bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    )
+    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
+    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
+    return (
+        pairs.select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            inter.alias("jac_num"),
+            union.alias("jac_den"),
+        )
+        .filter(F.col("jac_num") * _JACCARD_DEN >= F.col("jac_den") * _JACCARD_NUM)
+        .orderBy("doc_a", "doc_b")
+    )
+
+
 class TestBandedJaccardVsBlocked:
     def test_banded_pairs_match_blocked_arithmetic(self, spark):
         """The banded query's (jac_num, jac_den) must agree with the
@@ -250,10 +292,7 @@ class TestBandedJaccardVsBlocked:
         banded pair must satisfy the >= 2/10 threshold, and strong
         duplicates (jaccard >= 0.5) found by the blocked oracle must be
         recalled by the bands on this deterministic corpus."""
-        from unraveldocs_spark.trainingdata import (
-            q_dedup_ngram_jaccard,
-            q_dedup_ngram_jaccard_blocked,
-        )
+        from unraveldocs_spark.trainingdata import q_dedup_ngram_jaccard
 
         banded = {
             (r.doc_a, r.doc_b): (r.jac_num, r.jac_den)
@@ -261,7 +300,7 @@ class TestBandedJaccardVsBlocked:
         }
         blocked = {
             (r.doc_a, r.doc_b): (r.jac_num, r.jac_den)
-            for r in q_dedup_ngram_jaccard_blocked(spark, SF).collect()
+            for r in _dedup_ngram_jaccard_blocked(spark, SF).collect()
         }
         assert banded, "banded query found no pairs at all"
         for pair, jac in banded.items():

@@ -99,16 +99,20 @@ def recheck_regressions(
     prev: dict[str, float],
     factor: float = FACTOR,
     reps: int = REPS,
+    prev_name: str | None = None,
 ) -> dict[str, str]:
     """Driver-facing wrapper: compute the full recheck detail, persist it
     to ``BENCH/recheck_r0N.json``, and return only compact
     ``{name: verdict}`` strings for the frozen bench.py to inline — the
     one-line artifact stays parseable under the driver's 2,000-char tail
-    capture regardless of how many queries a loud window flags."""
+    capture regardless of how many queries a loud window flags.
+    ``prev_name`` is the BENCH_r*.json file ``prev`` was read from, so
+    the side file names the baseline the verdicts were computed against;
+    without it the newest one is looked up again."""
     detail = recheck_detail(
         spark, sf_dir, qfns, per_query, prev, factor=factor, reps=reps
     )
-    _write_detail(detail)
+    _write_detail(detail, prev_name)
     return _compact_verdicts(detail)
 
 
@@ -133,28 +137,44 @@ def _compact_verdicts(detail: dict) -> dict[str, str]:
                 return (i, name)
         return (len(_VERDICT_PRIORITY), name)
 
+    def more(n: int) -> dict[str, str]:
+        return {"_more": f"{n} in BENCH/recheck json"} if n else {}
+
+    if "_window_inflation" not in detail and any(
+        r.get("verdict") == "regressed" for r in detail.values()
+    ):
+        # no control could be re-timed (every query flagged, or none in
+        # range): say so, or the line reads like a real suite regression
+        detail = {**detail, "_window_inflation": None}
+    items = sorted(detail.items(), key=rank)
     compact: dict[str, str] = {}
-    dropped = 0
-    for name, r in sorted(detail.items(), key=rank):
-        val = f"x{r['median']}" if name == "_window_inflation" else r["verdict"]
-        if len(json.dumps({**compact, name: val})) > INLINE_BUDGET_CHARS:
-            dropped += 1
-            continue
+    for i, (name, r) in enumerate(items):
+        if name != "_window_inflation":
+            val = r["verdict"]
+        else:
+            val = f"x{r['median']}" if r else "no-controls"
+        # admit in priority order only: the first entry that does not
+        # fit (with room for the _more marker) ends the inline list
+        entry = {**compact, name: val, **more(len(items) - i - 1)}
+        if len(json.dumps(entry)) > INLINE_BUDGET_CHARS:
+            break
         compact[name] = val
-    if dropped:
-        compact["_more"] = f"{dropped} in BENCH/recheck json"
-    return compact
+    return {**compact, **more(len(items) - len(compact))}
 
 
-def _write_detail(detail: dict, repo: str | None = None) -> None:
+def _write_detail(
+    detail: dict, prev_name: str | None = None, repo: str | None = None
+) -> None:
     """Persist the full numeric recheck detail next to the round
-    artifacts.  Best-effort: the bench line must still print if the
+    artifacts, named after the baseline ``prev_name`` (looked up when
+    not given).  Best-effort: the bench line must still print if the
     checkout is read-only."""
     if not detail:
         return
     if repo is None:
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    prev_name, _ = previous_bench(repo)
+    if prev_name is None:
+        prev_name, _ = previous_bench(repo)
     m = re.search(r"BENCH_r(\d+)\.json$", prev_name or "")
     stem = f"recheck_r{int(m.group(1)) + 1:02d}" if m else "recheck_latest"
     try:

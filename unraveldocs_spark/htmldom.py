@@ -15,6 +15,8 @@ import re
 from html import escape, unescape
 from html.parser import HTMLParser
 
+from .semantics import java_trim
+
 VOID_ELEMENTS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
@@ -105,15 +107,6 @@ class Element(Node):
 # (U+00A0, produced by &nbsp; after entity unescape) is NOT collapsible
 # and must survive into extracted text, unlike Python's Unicode-aware \s
 _WS_RUN_RE = re.compile(r"[ \t\n\f\r]+")
-
-# Java String.trim(): strips chars <= U+0020 only (so NBSP and other
-# Unicode spaces are preserved, unlike Python str.strip())
-_JAVA_TRIM_CHARS = "".join(chr(c) for c in range(0x21))
-
-
-def java_trim(text: str) -> str:
-    """Java String.trim(): strip leading/trailing chars <= U+0020."""
-    return text.strip(_JAVA_TRIM_CHARS)
 
 
 def normalize_whitespace(text: str) -> str:

@@ -143,7 +143,6 @@ def run_extraction(
     transcripts: DataFrame,
     store=None,
     num_partitions: int | None = None,
-    salt: int = DEFAULT_SALT,
 ) -> dict:
     """Run the pipeline once.  Returns a dict with the snapshot id, run id,
     rollup DataFrame and basic counters.  With a ``store``, previously
@@ -158,7 +157,7 @@ def run_extraction(
     if store is not None:
         todo = resume_filter(todo, store, spark)
 
-    staged = salted_repartition(todo, num_partitions, salt)
+    staged = salted_repartition(todo, num_partitions)
     extractions = extract_stage(staged)
 
     t0 = time.monotonic()

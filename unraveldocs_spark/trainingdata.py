@@ -83,42 +83,6 @@ _JACCARD_NUM = 2  # keep pairs with jaccard >= 2/10
 _JACCARD_DEN = 10
 
 
-def q_dedup_ngram_jaccard_blocked(spark, sf_dir):
-    """FIXED-CARDINALITY blocking — small-scale test oracle ONLY.
-
-    Blocks on (lang, len_bucket), whose cardinality is data-independent:
-    at 100x the data every block is 100x bigger and the pair join does
-    10,000x the work.  Kept out of the driver registry; pytest uses it to
-    cross-check the exact-Jaccard arithmetic of the banded query below on
-    the pairs both generate."""
-    d = scan(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.floor(F.col("n_chars") / F.lit(16)).cast("long").alias("len_bucket"),
-        _spark_shingles(F.col("text")).alias("sh"),
-    ).filter(F.size("sh") > 0)
-    a = d.alias("a")
-    b = d.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang"))
-        & (F.col("a.len_bucket") == F.col("b.len_bucket"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.col("a.sh")) + F.size(F.col("b.sh")) - inter
-    return (
-        pairs.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            inter.alias("jac_num"),
-            union.alias("jac_den"),
-        )
-        .filter(F.col("jac_num") * _JACCARD_DEN >= F.col("jac_den") * _JACCARD_NUM)
-        .orderBy("doc_a", "doc_b")
-    )
-
-
 def _jaccard_pairs(spark, sf_dir):
     """Thresholded near-dup pairs (unordered): MinHash-band candidates
     confirmed by exact shingle Jaccard >= 2/10.  Shared by the ranked
@@ -274,8 +238,19 @@ def _minhash_candidate_pairs(d, n_bands: int | None = None,
         .filter(F.size("sh") > 0)
     )
     bands = _minhash_bands(d, n_bands, n_rows)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    return _band_pairs(bands, bands, d)
+
+
+def _band_pairs(a_bands, b_bands, d):
+    """Narrow LSH band join -> deduplicated candidate pairs (doc_a,
+    doc_b, sh_a, sh_b): a-side and b-side band rows (doc_id, band_idx,
+    band_key) collide on (band_idx, band_key) with a.doc_id < b.doc_id,
+    the id pairs are deduplicated, and both shingle arrays are joined
+    back from the materialized signature table ``d`` (doc_id, sh).
+    The symmetric pair builder passes one band frame as both sides; the
+    increment screen passes the full corpus against the new batch."""
+    a = a_bands.alias("a")
+    b = b_bands.alias("b")
     cand_ids = (
         a.join(
             b,
@@ -456,41 +431,16 @@ def _duck_band_structs(n_bands: int, n_rows: int) -> str:
     )
 
 
-def _duck_minhash_cands_ctes(src: str) -> str:
+def _duck_minhash_cands_ctes(src: str, ub_src: str | None = None) -> str:
     """CTE chain ``sh -> nz -> sigs -> bands -> cands`` computing the
     MinHash band-collision candidate pairs over any (doc_id, text) source
-    relation — the one generator both the doc-grain and paragraph-grain
-    oracles derive from, so the SQL tracks the shared Python constants."""
-    min_exprs = ",\n         ".join(
-        f"list_min(list_transform(hs, h -> ({_MH_A[j]} * h + {_MH_B[j]}) % {_MH_P})) AS m{j}"
-        for j in range(_MH_K)
-    )
-    band_structs = _duck_band_structs(_MH_BANDS, _MH_ROWS)
-    return f"""sh AS (
-  SELECT doc_id, {_DUCK_SHINGLES.format(c="text")} AS sh FROM {src}
-), nz AS (
-  SELECT doc_id, sh,
-         list_transform(sh, s -> ('0x' || substr(md5(s), 1, 14))::BIGINT % {_MH_P}) AS hs
-  FROM sh WHERE len(sh) > 0
-), sigs AS (
-  SELECT doc_id, sh,
-         {min_exprs}
-  FROM nz
-), bands AS (
-  SELECT doc_id, sh, unnest([{band_structs}], recursive := true)
-  FROM sigs
-), cands AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sh AS sh_a, b.sh AS sh_b
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-)"""
+    relation — the one generator the doc-grain and paragraph-grain
+    oracles derive from, so the SQL tracks the shared Python constants.
 
-
-def _duck_minhash_cands_ctes_sized(src: str, ub_src: str) -> str:
-    """Shape-DYNAMIC variant of :func:`_duck_minhash_cands_ctes` for the
-    paragraph-grain dedup: the ``pub`` CTE computes the same n_chars
-    paragraph upper bound as :func:`paragraph_upper_bound`, and the band
-    CTE carries BOTH possible band layouts (minhash_band_shape is binary
+    With ``ub_src`` the chain is shape-DYNAMIC (paragraph grain): a
+    leading ``pub`` CTE computes the same n_chars paragraph upper bound
+    as :func:`paragraph_upper_bound` over ``ub_src``, and the band CTE
+    carries BOTH possible band layouts (minhash_band_shape is binary
     within the K=16 family: 4x4 for n <= 8000, else 2x8), each arm
     guarded by the bound — so the oracle widens rows exactly when the
     Spark side does, at every corpus scale, from one static SQL string."""
@@ -498,13 +448,22 @@ def _duck_minhash_cands_ctes_sized(src: str, ub_src: str) -> str:
         f"list_min(list_transform(hs, h -> ({_MH_A[j]} * h + {_MH_B[j]}) % {_MH_P})) AS m{j}"
         for j in range(_MH_K)
     )
-    narrow = _duck_band_structs(4, 4)
-    wide = _duck_band_structs(2, 8)
-    return f"""pub AS (
+    if ub_src is None:
+        pub = ""
+        bands = f"""  SELECT doc_id, sh, unnest([{_duck_band_structs(_MH_BANDS, _MH_ROWS)}], recursive := true)
+  FROM sigs"""
+    else:
+        pub = f"""pub AS (
   SELECT CAST(SUM((((n_chars + 1) // 2) + {_PARA_WORDS - 1}) // {_PARA_WORDS})
               AS BIGINT) AS ub
   FROM {ub_src}
-), sh AS (
+), """
+        bands = f"""  SELECT doc_id, sh, unnest([{_duck_band_structs(4, 4)}], recursive := true)
+  FROM sigs WHERE (SELECT ub FROM pub) <= 8000
+  UNION ALL
+  SELECT doc_id, sh, unnest([{_duck_band_structs(2, 8)}], recursive := true)
+  FROM sigs WHERE (SELECT ub FROM pub) > 8000"""
+    return f"""{pub}sh AS (
   SELECT doc_id, {_DUCK_SHINGLES.format(c="text")} AS sh FROM {src}
 ), nz AS (
   SELECT doc_id, sh,
@@ -515,11 +474,7 @@ def _duck_minhash_cands_ctes_sized(src: str, ub_src: str) -> str:
          {min_exprs}
   FROM nz
 ), bands AS (
-  SELECT doc_id, sh, unnest([{narrow}], recursive := true)
-  FROM sigs WHERE (SELECT ub FROM pub) <= 8000
-  UNION ALL
-  SELECT doc_id, sh, unnest([{wide}], recursive := true)
-  FROM sigs WHERE (SELECT ub FROM pub) > 8000
+{bands}
 ), cands AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b, a.sh AS sh_a, b.sh AS sh_b
   FROM bands a JOIN bands b
@@ -699,7 +654,7 @@ WITH wtoks AS (
   FROM paras GROUP BY md5(para)
 ), kdocs AS (
   SELECT para_id AS doc_id, para AS text FROM keepers
-), {_duck_minhash_cands_ctes_sized("kdocs", "documents")}
+), {_duck_minhash_cands_ctes("kdocs", "documents")}
 SELECT doc_a // {_PARA_STRIDE} AS doc_a,
        CAST(doc_a % {_PARA_STRIDE} AS INT) AS para_a,
        ka.n_copies AS copies_a,
@@ -4246,6 +4201,45 @@ _ESUB_K = 8  # span length in tokens (the paper uses 50 BPE tokens; scaled
 #              to the synthetic ~25-word docs the same way the other gates are)
 
 
+def _esub_tokens(d):
+    """documents -> (doc_id, toks): whitespace tokens of the trimmed
+    text.  NULL-text docs produce no token rows in the oracle (UNNEST of
+    a NULL range) and produced none in the explode-based r6 shape; the
+    doc-local form must drop them explicitly or it would emit a row."""
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    return d.filter(F.col("text").isNotNull()).select(
+        "doc_id", toks.alias("toks")
+    )
+
+
+def _esub_grams(base):
+    """(doc_id, toks) -> one (doc_id, pos, gh) row per in-doc k-gram,
+    gh = the 14-hex md5 prefix of the gram's tokens joined by one space."""
+    # guard: Spark sequence(0, -1) counts DOWN; docs shorter than k emit
+    # no grams via an explicit empty array
+    starts = F.when(
+        F.size("toks") >= _ESUB_K,
+        F.sequence(F.lit(0), F.size("toks") - _ESUB_K),
+    ).otherwise(F.array().cast("array<int>"))
+    return base.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                starts,
+                lambda i: F.substring(
+                    F.md5(
+                        F.array_join(
+                            F.slice(F.col("toks"), i + 1, _ESUB_K), " "
+                        ).cast("binary")
+                    ),
+                    1,
+                    14,
+                ),
+            )
+        ).alias("pos", "gh"),
+    )
+
+
 def q_exact_substring_dedup(spark, sf_dir):
     """Per-document exact-substring dedup accounting: number of tokens
     covered by some duplicated k-gram, and the md5-derived digest of the
@@ -4276,38 +4270,8 @@ def q_exact_substring_dedup(spark, sf_dir):
     pays; grams stay 14-char hashes, never raw text."""
     from pyspark.sql.window import Window
 
-    d = scan(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    # NULL-text docs produce no token rows in the oracle (UNNEST of a
-    # NULL range) and produced none in the explode-based r6 shape; the
-    # doc-local form must drop them explicitly or it would emit a row
-    base = d.filter(F.col("text").isNotNull()).select(
-        "doc_id", toks.alias("toks")
-    )
-
-    # guard: Spark sequence(0, -1) counts DOWN; docs shorter than k emit
-    # no grams via an explicit empty array
-    starts = F.when(
-        F.size("toks") >= _ESUB_K,
-        F.sequence(F.lit(0), F.size("toks") - _ESUB_K),
-    ).otherwise(F.array().cast("array<int>"))
-    grams = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                starts,
-                lambda i: F.substring(
-                    F.md5(
-                        F.array_join(
-                            F.slice(F.col("toks"), i + 1, _ESUB_K), " "
-                        ).cast("binary")
-                    ),
-                    1,
-                    14,
-                ),
-            )
-        ).alias("pos", "gh"),
-    )
+    base = _esub_tokens(scan(spark, sf_dir, "documents", fan=True))
+    grams = _esub_grams(base)
     dup_starts = (
         grams.withColumn(
             "n_occ", F.count(F.lit(1)).over(Window.partitionBy("gh"))
@@ -5561,29 +5525,8 @@ def q_dedup_increment(spark, sf_dir):
     )
     bands_all = _minhash_bands(nz, n_bands, n_rows)
     bands_new = _minhash_bands(nz.filter(F.col("doc_id") >= t), n_bands, n_rows)
-    a, b = bands_all.alias("a"), bands_new.alias("b")
-    # narrow candidate ids first, shingles joined back from the
-    # materialized signature table (see _minhash_candidate_pairs)
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("b.doc_id").alias("doc_id"),
-            F.col("a.doc_id").alias("other"),
-        )
-        .dropDuplicates(["doc_id", "other"])
-    )
-    sh_tbl = nz.select("doc_id", "sh")
-    cands = cand_ids.join(
-        sh_tbl.select(F.col("doc_id").alias("other"), F.col("sh").alias("sh_a")),
-        "other",
-    ).join(
-        sh_tbl.select(F.col("doc_id"), F.col("sh").alias("sh_b")),
-        "doc_id",
+    cands = _band_pairs(bands_all, bands_new, nz).withColumnsRenamed(
+        {"doc_b": "doc_id", "doc_a": "other"}
     )
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
