@@ -70,3 +70,30 @@ def test_probe_runs_at_1x(spark, name):
         assert r["planted"] > 0
         assert r["planted_confirmed"] == r["planted"]
         assert r["confirmed"] >= r["planted"]
+
+
+def test_main_rewrites_the_whole_bench_page(tmp_path, monkeypatch):
+    """Two runs of a probe leave one page with one table: main rewrites
+    the BENCH file instead of appending below earlier findings."""
+    rows = [
+        {"growth": "1x", "docs": 10, "paras": 40, "pub": 90, "shape": "4x4",
+         "distinct_paras": 38, "cand_pairs": 3, "cands_per_kpara": 78.95,
+         "confirmed": 3, "wall_s": 0.5},
+    ]
+
+    class _NoSpark:
+        def stop(self):
+            pass
+
+    (tmp_path / "BENCH").mkdir()
+    monkeypatch.setattr(M, "REPO", str(tmp_path))
+    monkeypatch.setattr(M, "session", lambda name: _NoSpark())
+    monkeypatch.setitem(
+        M.PROBES, "paragraph_scale",
+        (lambda spark, sf_dir: rows, M.render_paragraph_scale, "PARAGRAPH_SCALE.md"),
+    )
+    for _ in range(2):
+        assert M.main(["paragraph_scale", SF]) == 0
+    page = (tmp_path / "BENCH" / "PARAGRAPH_SCALE.md").read_text()
+    assert sum(line.startswith("|---|") for line in page.splitlines()) == 1
+    assert page.startswith("# dedup_paragraph")

@@ -1434,3 +1434,39 @@ class TestDedupIncrement:
             for r in q_dedup_increment(spark, str(tmp_path)).collect()
         }
         assert rows[3]["keep"] == 1 and rows[3]["dup_of"] is None
+
+
+class TestSharedStages:
+    """corpus_export_shards composes the sibling operators' stages: the
+    documents it packs are exactly those quality_gopher passes,
+    contamination_check scores under _EXPORT_CONTAM_MAX_E4, and
+    line_dedup leaves at least one chunk."""
+
+    def test_export_docs_are_the_sibling_queries_keep_sets(self, spark):
+        from collections import Counter
+
+        from unraveldocs_spark import trainingdata as td
+
+        passed = {
+            r["doc_id"]
+            for r in td.q_quality_gopher(spark, SF).filter("pass_gate = 1").collect()
+        }
+        clean = {
+            r["doc_id"]
+            for r in td.q_contamination_check(spark, SF)
+            .filter(F.col("contam_e4") < td._EXPORT_CONTAM_MAX_E4)
+            .collect()
+        }
+        chunked = {
+            r["doc_id"]
+            for r in td.q_line_dedup(spark, SF).filter("n_kept > 0").collect()
+        }
+        export = td._export_docs(spark, SF).collect()
+        kept = {r["doc_id"] for r in export}
+        # both the gate and decontamination reject docs the other keeps
+        assert passed - clean and clean - passed
+        assert kept == passed & clean & chunked
+        shards = Counter()
+        for r in td.q_corpus_export_shards(spark, SF).collect():
+            shards[r["lang"]] += r["n_docs"]
+        assert shards == Counter(r["lang"] for r in export)

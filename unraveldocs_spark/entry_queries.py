@@ -19,7 +19,7 @@ from .queries import _spark_java_word_count, _sql_java_word_count
 from .rollup import conversation_rollup
 from .scanfan import scan
 from .schemas import map_rows
-from .trainingdata import digest56
+from .trainingdata import _ws_tokens, digest56
 
 
 def derived_transcripts(spark, sf_dir):
@@ -42,11 +42,20 @@ def derived_transcripts(spark, sf_dir):
     )
 
 
+def _staged_extract(spark, t):
+    """The production extraction path over a transcripts frame: salted
+    conv_id repartition to at least 16 (or core-count) partitions, then
+    the Arrow-batched extraction stage."""
+    return extract_stage(
+        salted_repartition(t, max(16, spark.sparkContext.defaultParallelism))
+    )
+
+
 def q_extract_turns(spark, sf_dir):
     """Full pipeline slice: derive transcripts -> salted repartition ->
     sortWithinPartitions -> Arrow-batched extraction."""
     t = derived_transcripts(spark, sf_dir)
-    out = extract_stage(salted_repartition(t, max(16, spark.sparkContext.defaultParallelism)))
+    out = _staged_extract(spark, t)
     return out.select(
         "conv_id",
         "turn_idx",
@@ -122,7 +131,7 @@ def q_extract_synthetic(spark, sf_dir):
         ),
         "|",
     )
-    return extract_stage(salted_repartition(t, max(16, spark.sparkContext.defaultParallelism))).select(
+    return _staged_extract(spark, t).select(
         "conv_id", "turn_idx", "status", "rule", "extracted_text",
         "error_message", spans_str.alias("spans_str"), "n_chars", "n_words",
     ).orderBy("conv_id", "turn_idx")
@@ -210,7 +219,7 @@ def q_pdf_layout(spark, sf_dir):
     with window functions — two independent implementations of the
     clustering rules (pdflayout.py)."""
     d = scan(spark, sf_dir, "documents")
-    toks = F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 12)
+    toks = F.slice(_ws_tokens(), 1, 12)
     runs = F.reverse(
         F.transform(
             toks,
@@ -240,7 +249,7 @@ def q_pdf_layout(spark, sf_dir):
         F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
     )
     return (
-        extract_stage(salted_repartition(t, max(16, spark.sparkContext.defaultParallelism)))
+        _staged_extract(spark, t)
         .select("conv_id", "turn_idx", "extracted_text", "status", "rule")
         .orderBy("conv_id", "turn_idx")
     )
@@ -650,7 +659,7 @@ def q_conversation_pack(spark, sf_dir):
     one Exchange total; assembly is collect_list of already-ordered
     structs, never a driver-side concat."""
     t = derived_transcripts(spark, sf_dir)
-    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tokens = F.size(_ws_tokens())
     w = (
         Window.partitionBy("conv_id")
         .orderBy("turn_idx")
@@ -739,19 +748,13 @@ ENTRY_REGISTRY["conversation_pack"] = {
 # ---------------------------------------------------------------------------
 
 
-def q_preference_pairs(spark, sf_dir):
-    """(prompt, chosen, rejected) pair assembly over the derived
-    transcripts, digests in place of wide text (driver-schema rule).
-
-    Scale shape: prompt attribution is ONE conv_id-partitioned running
-    window (last user turn so far, ignorenulls); pair selection is two
-    row_number ranks over (conv_id, prompt_idx) — same partitioning,
-    one Exchange — feeding a groupBy on the SAME key (no further
-    shuffle).  Two hash Exchanges total regardless of corpus size; no
-    self-join, no explode.  Hot conversations are bounded by turns-per-
-    conversation, not corpus size, so no salting is needed on the pair
-    key (unlike the extraction stage's conv_id salt, where payload
-    bytes ride the shuffle)."""
+def _attributed_responses(spark, sf_dir):
+    """Assistant turns attributed to their prompt: positional roles over
+    the documents-derived transcripts, the last user turn so far (one
+    conv_id running window, ignorenulls) as ``prompt_idx`` /
+    ``prompt_text``, and the deterministic reward proxy
+    1000*word_count + n_chars.  Columns: conv_id, turn_idx, role, text,
+    prompt_idx, prompt_text, reward."""
     d = scan(spark, sf_dir, "documents")
     w0 = Window.partitionBy("source").orderBy("doc_id")
     turn_idx = (F.row_number().over(w0) - 1).cast("int")
@@ -776,7 +779,7 @@ def q_preference_pairs(spark, sf_dir):
         F.lit(1000).cast("bigint") * _spark_java_word_count(F.col("text"))
         + F.length("text")
     ).cast("bigint")
-    resp = (
+    return (
         t.select("conv_id", "turn_idx", "role", "text")
         .withColumn("prompt_idx", F.last(user_idx, ignorenulls=True).over(w_ctx))
         .withColumn(
@@ -785,6 +788,22 @@ def q_preference_pairs(spark, sf_dir):
         .filter((F.col("role") == "assistant") & F.col("prompt_idx").isNotNull())
         .withColumn("reward", reward)
     )
+
+
+def q_preference_pairs(spark, sf_dir):
+    """(prompt, chosen, rejected) pair assembly over the derived
+    transcripts, digests in place of wide text (driver-schema rule).
+
+    Scale shape: prompt attribution is ONE conv_id-partitioned running
+    window (last user turn so far, ignorenulls); pair selection is two
+    row_number ranks over (conv_id, prompt_idx) — same partitioning,
+    one Exchange — feeding a groupBy on the SAME key (no further
+    shuffle).  Two hash Exchanges total regardless of corpus size; no
+    self-join, no explode.  Hot conversations are bounded by turns-per-
+    conversation, not corpus size, so no salting is needed on the pair
+    key (unlike the extraction stage's conv_id salt, where payload
+    bytes ride the shuffle)."""
+    resp = _attributed_responses(spark, sf_dir)
     w_c = Window.partitionBy("conv_id", "prompt_idx").orderBy(
         F.col("reward").desc(), F.col("turn_idx").asc()
     )
@@ -830,8 +849,7 @@ def q_preference_pairs(spark, sf_dir):
     ).orderBy("conv_id", "prompt_idx")
 
 
-SQL_PREFERENCE_PAIRS = f"""
-WITH idx AS (
+_DUCK_ATTRIBUTION_CTES = """idx AS (
   SELECT source AS conv_id,
          CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1 AS INT) AS turn_idx,
          text
@@ -852,7 +870,11 @@ WITH idx AS (
            OVER (PARTITION BY conv_id ORDER BY turn_idx
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prompt_text
   FROM t
-), resp AS (
+)"""
+
+
+SQL_PREFERENCE_PAIRS = f"""
+WITH {_DUCK_ATTRIBUTION_CTES}, resp AS (
   SELECT conv_id, prompt_idx, prompt_text, turn_idx, text,
          CAST(1000 * CAST({_sql_java_word_count('text')} AS BIGINT)
               + length(text) AS BIGINT) AS reward
@@ -912,39 +934,7 @@ def q_best_of_n(spark, sf_dir):
     attribution window, then one (conv_id, prompt_idx) rank sharing
     its Exchange with the groupBy; two hash Exchanges total, no
     self-join, no explode."""
-    d = scan(spark, sf_dir, "documents")
-    w0 = Window.partitionBy("source").orderBy("doc_id")
-    turn_idx = (F.row_number().over(w0) - 1).cast("int")
-    t = d.select(
-        F.col("source").alias("conv_id"),
-        turn_idx.alias("turn_idx"),
-        F.col("text"),
-    ).withColumn(
-        "role",
-        F.when(F.col("turn_idx") % 3 == 0, F.lit("user"))
-        .when(F.col("turn_idx") % 10 == 7, F.lit("tool"))
-        .otherwise(F.lit("assistant")),
-    )
-    w_ctx = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    user_idx = F.when(F.col("role") == "user", F.col("turn_idx"))
-    user_text = F.when(F.col("role") == "user", F.col("text"))
-    reward = (
-        F.lit(1000).cast("bigint") * _spark_java_word_count(F.col("text"))
-        + F.length("text")
-    ).cast("bigint")
-    resp = (
-        t.select("conv_id", "turn_idx", "role", "text")
-        .withColumn("prompt_idx", F.last(user_idx, ignorenulls=True).over(w_ctx))
-        .withColumn(
-            "prompt_text", F.last(user_text, ignorenulls=True).over(w_ctx)
-        )
-        .filter((F.col("role") == "assistant") & F.col("prompt_idx").isNotNull())
-        .withColumn("reward", reward)
-    )
+    resp = _attributed_responses(spark, sf_dir)
     w_b = Window.partitionBy("conv_id", "prompt_idx").orderBy(
         F.col("reward").desc(), F.col("turn_idx").asc()
     )
@@ -980,28 +970,7 @@ def q_best_of_n(spark, sf_dir):
 
 
 SQL_BEST_OF_N = f"""
-WITH idx AS (
-  SELECT source AS conv_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY source ORDER BY doc_id) - 1 AS INT) AS turn_idx,
-         text
-  FROM documents
-), t AS (
-  SELECT conv_id, turn_idx,
-         CASE WHEN turn_idx % 3 = 0 THEN 'user'
-              WHEN turn_idx % 10 = 7 THEN 'tool'
-              ELSE 'assistant' END AS role,
-         text
-  FROM idx
-), ctx AS (
-  SELECT *,
-         last_value(CASE WHEN role = 'user' THEN turn_idx END IGNORE NULLS)
-           OVER (PARTITION BY conv_id ORDER BY turn_idx
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prompt_idx,
-         last_value(CASE WHEN role = 'user' THEN text END IGNORE NULLS)
-           OVER (PARTITION BY conv_id ORDER BY turn_idx
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prompt_text
-  FROM t
-), resp AS (
+WITH {_DUCK_ATTRIBUTION_CTES}, resp AS (
   SELECT conv_id, prompt_idx, prompt_text, turn_idx, text,
          CAST(1000 * CAST({{wc}} AS BIGINT) + length(text) AS BIGINT) AS reward
   FROM ctx WHERE role = 'assistant' AND prompt_idx IS NOT NULL

@@ -219,6 +219,21 @@ _STARTTAG_NEXT_INCOMPLETE = frozenset(
 )
 
 
+def _emit_incomplete(data: str, lt: int, builder: "_TreeBuilder") -> int:
+    """stdlib's incomplete-construct branch (goahead with end=1): emit
+    the charref-converted data from ``lt`` up to and including the next
+    '>' (else up to the next '<', else one char); returns the new pos."""
+    k = data.find(">", lt + 1)
+    if k < 0:
+        k = data.find("<", lt + 1)
+        if k < 0:
+            k = lt + 1
+    else:
+        k += 1
+    builder.handle_data(unescape(data[lt:k]))
+    return k
+
+
 def _handle_starttag_at(data: str, lt: int, builder: "_TreeBuilder") -> int:
     """CPython html.parser parse_starttag/check_for_whole_start_tag,
     condensed for whole-string input.  Returns the new scan position;
@@ -232,17 +247,8 @@ def _handle_starttag_at(data: str, lt: int, builder: "_TreeBuilder") -> int:
     elif nxt == "/" and data.startswith("/>", j):
         endpos = j + 2
     elif nxt == "" or nxt in _STARTTAG_NEXT_INCOMPLETE:
-        # incomplete start tag at end of input: stdlib goahead(end=1)
-        # emits charref-converted data up to the next '>' or '<'
-        k = data.find(">", lt + 1)
-        if k < 0:
-            k = data.find("<", lt + 1)
-            if k < 0:
-                k = lt + 1
-        else:
-            k += 1
-        builder.handle_data(unescape(data[lt:k]))
-        return k
+        # incomplete start tag at end of input
+        return _emit_incomplete(data, lt, builder)
     else:
         endpos = j if j > lt else lt + 1
     tm = _TAGFIND.match(data, lt + 1)
@@ -325,18 +331,9 @@ def parse_body_fragment(html: str) -> Element:
         m = _NONTAG_RE.match(data, lt)
         if m is None:
             if data[lt + 1 : lt + 2] in ("!", "?"):
-                # unterminated declaration/comment/PI: stdlib's incomplete
-                # branch emits charref-converted data up to the next '>'/'<'
+                # unterminated declaration/comment/PI
                 flush_text()
-                k = data.find(">", lt + 1)
-                if k < 0:
-                    k = data.find("<", lt + 1)
-                    if k < 0:
-                        k = lt + 1
-                else:
-                    k += 1
-                builder.handle_data(unescape(data[lt:k]))
-                pos = k
+                pos = _emit_incomplete(data, lt, builder)
                 continue
             pending_text.append("<")
             pos = lt + 1

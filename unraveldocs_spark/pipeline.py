@@ -35,18 +35,16 @@ from .rollup import conversation_rollup
 DEFAULT_SALT = 16
 
 
-def salted_repartition(
-    transcripts: DataFrame, num_partitions: int, salt: int | None = None
-) -> DataFrame:
+def salted_repartition(transcripts: DataFrame, num_partitions: int) -> DataFrame:
     """repartition on (conv_id, pmod(hash(turn_idx), salt)) then restore
     (conv_id, turn_idx) order within each partition.
 
-    The salt count defaults to 4x the partition count: a hot conversation
-    then spreads over many more keys than there are partitions, so the
-    balls-in-bins collisions of hash partitioning can't stack several
-    whole salt-groups of the hot conversation onto one task."""
-    if salt is None:
-        salt = max(DEFAULT_SALT, 4 * num_partitions)
+    The salt count is 4x the partition count (at least DEFAULT_SALT): a
+    hot conversation then spreads over many more keys than there are
+    partitions, so the balls-in-bins collisions of hash partitioning
+    can't stack several whole salt-groups of the hot conversation onto
+    one task."""
+    salt = max(DEFAULT_SALT, 4 * num_partitions)
     return (
         transcripts.repartition(
             num_partitions,

@@ -1251,6 +1251,24 @@ ORDER BY score_e6 DESC, doc_id
 """
 
 
+_BM25F_BOOSTS = {"t": 2_000_000, "n": 1_500_000}  # e6: text 2.0, name 1.5
+
+
+def _bm25f_contrib(fk: str, i: int, div: str) -> str:
+    """Field ``fk``'s BM25 contribution for term ``i`` as one integer
+    expression over the tf/dl/df/avgdl/n_docs columns; ``div`` is the
+    engine's integer division (Spark ``DIV``, DuckDB ``//``)."""
+    den = (
+        f"((2*df{i}_{fk} + 1) * (10*tf{i}_{fk}*avgdl_{fk}"
+        f" + 3*avgdl_{fk} + 900*dl_{fk}))"
+    )
+    return (
+        f"((2 * ({_BM25F_BOOSTS[fk]} * (2*n_docs - 2*df{i}_{fk} + 1)"
+        f" * (tf{i}_{fk} * 10 * avgdl_{fk})) + {den})"
+        f" {div} (2 * {den}))"
+    )
+
+
 def q_search_bm25f(spark, sf_dir):
     """Multi-field BM25 (BM25F-lite): the should-query scored as the sum
     of per-field BM25 contributions — the analyzed text field at boost
@@ -1305,20 +1323,9 @@ def q_search_bm25f(spark, sf_dir):
             F.expr(f"(200 * sum_dl_{fk} + n_docs) DIV (2 * n_docs)"),
         )
     j = per_doc.join(F.broadcast(stats))
-    boosts = {"t": 2_000_000, "n": 1_500_000}
-    contribs = []
-    for fk in fields:
-        for i in range(len(_BM25_TERMS)):
-            den = (
-                f"((2*df{i}_{fk} + 1) * (10*tf{i}_{fk}*avgdl_{fk}"
-                f" + 3*avgdl_{fk} + 900*dl_{fk}))"
-            )
-            contribs.append(
-                f"((2 * ({boosts[fk]} * (2*n_docs - 2*df{i}_{fk} + 1)"
-                f" * (tf{i}_{fk} * 10 * avgdl_{fk})) + {den})"
-                f" DIV (2 * {den}))"
-            )
-    score = F.expr(" + ".join(contribs))
+    score = F.expr(" + ".join(
+        _bm25f_contrib(fk, i, "DIV") for fk in fields for i in range(len(_BM25_TERMS))
+    ))
     return (
         j.select("doc_id", score.alias("score_e6"))
         .filter(F.col("score_e6") > 0)
@@ -1339,7 +1346,6 @@ def _bm25f_sql() -> str:
             "CAST(doc_id AS VARCHAR)), '-'), x -> x <> '')"
         ),
     }
-    boosts = {"t": 2_000_000, "n": 1_500_000}
     pd_cols, st_cols, av_cols, contribs = [], [], [], []
     for fk, arr in fields.items():
         pd_cols.append(f"CAST(len({arr}) AS BIGINT) AS dl_{fk}")
@@ -1356,15 +1362,7 @@ def _bm25f_sql() -> str:
                 f"CAST(SUM(CASE WHEN tf{i}_{fk} > 0 THEN 1 ELSE 0 END)"
                 f" AS BIGINT) AS df{i}_{fk}"
             )
-            den = (
-                f"((2*df{i}_{fk} + 1) * (10*tf{i}_{fk}*avgdl_{fk}"
-                f" + 3*avgdl_{fk} + 900*dl_{fk}))"
-            )
-            contribs.append(
-                f"((2 * ({boosts[fk]} * (2*n_docs - 2*df{i}_{fk} + 1)"
-                f" * (tf{i}_{fk} * 10 * avgdl_{fk})) + {den})"
-                f" // (2 * {den}))"
-            )
+            contribs.append(_bm25f_contrib(fk, i, "//"))
     sep = ",\n         "
     pd_sql, st_sql, av_sql = sep.join(pd_cols), sep.join(st_cols), sep.join(av_cols)
     score_sql = " + ".join(contribs)

@@ -42,6 +42,20 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "total long, completed long, failed long"
 
 
+def _rollup_row(conv_id, total, completed, failed, is_final) -> pd.DataFrame:
+    """One OUTPUT_SCHEMA row for a conversation's running counts."""
+    return pd.DataFrame(
+        {
+            "conv_id": [conv_id],
+            "total_turns": [total],
+            "completed": [completed],
+            "failed": [failed],
+            "collection_status": [rollup_status(total, completed, failed)],
+            "is_final": [is_final],
+        }
+    )
+
+
 def _make_update(idle_timeout_ms: int | None):
     def _update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -50,16 +64,7 @@ def _make_update(idle_timeout_ms: int | None):
         if state.hasTimedOut:
             total, completed, failed = state.get
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "conv_id": [conv_id],
-                    "total_turns": [total],
-                    "completed": [completed],
-                    "failed": [failed],
-                    "collection_status": [rollup_status(total, completed, failed)],
-                    "is_final": [True],
-                }
-            )
+            yield _rollup_row(conv_id, total, completed, failed, True)
             return
         total, completed, failed = state.get if state.exists else (0, 0, 0)
         for pdf in pdfs:
@@ -69,16 +74,7 @@ def _make_update(idle_timeout_ms: int | None):
         state.update((total, completed, failed))
         if idle_timeout_ms is not None:
             state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "conv_id": [conv_id],
-                "total_turns": [total],
-                "completed": [completed],
-                "failed": [failed],
-                "collection_status": [rollup_status(total, completed, failed)],
-                "is_final": [False],
-            }
-        )
+        yield _rollup_row(conv_id, total, completed, failed, False)
 
     return _update
 

@@ -16,6 +16,24 @@ from .extract import extract_stage
 from .schemas import TRANSCRIPTS_SCHEMA
 
 
+def _read_stream(spark: SparkSession, schema: str, path: str) -> DataFrame:
+    """Parquet file stream over ``path``, at most 8 new files a batch."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 8).parquet(path)
+
+
+def _drain_to_parquet(df: DataFrame, output_path: str, checkpoint_dir: str):
+    """Start an availableNow append of ``df`` into parquet at
+    ``output_path``; returns the query handle (caller awaits)."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", output_path)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def windowed_rollup_stream(
     spark: SparkSession,
     input_path: str,
@@ -24,11 +42,7 @@ def windowed_rollup_stream(
 ) -> DataFrame:
     """readStream(turns) -> extract -> watermark(ts) -> per (conv_id,
     window) status counts with the reference's status ladder."""
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_path)
-    )
+    stream = _read_stream(spark, TRANSCRIPTS_SCHEMA, input_path)
     extracted = extract_stage(stream, carry_ts=True)
     agg = (
         extracted.withWatermark("ts", watermark)
@@ -70,14 +84,7 @@ def run_windowed_rollup(
     finalized windows to parquet (append mode: only watermark-closed
     windows are emitted — exactly-once per window)."""
     agg = windowed_rollup_stream(spark, input_path, window, watermark)
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_to_parquet(agg, output_path, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -107,16 +114,11 @@ def correlate_streams(
     a request buffered in state is dropped once the result-side watermark
     passes req_ts + max_lag, and vice versa.  Without the time-range
     bound the request buffer would grow forever at 10^12 turns."""
-    req = (
-        spark.readStream.schema(REQUEST_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(requests_path)
-        .withWatermark("req_ts", watermark)
+    req = _read_stream(spark, REQUEST_STREAM_SCHEMA, requests_path).withWatermark(
+        "req_ts", watermark
     )
     res = (
-        spark.readStream.schema(RESULT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(results_path)
+        _read_stream(spark, RESULT_STREAM_SCHEMA, results_path)
         .withColumnRenamed("conv_id", "r_conv_id")
         .withColumnRenamed("turn_idx", "r_turn_idx")
         .withWatermark("done_ts", watermark)
@@ -158,14 +160,7 @@ def run_stream_correlation(
     df = correlate_streams(
         spark, requests_path, results_path, watermark, max_lag_minutes
     )
-    return (
-        df.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_to_parquet(df, output_path, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -188,13 +183,9 @@ def session_rollup_stream(
     Spark merges events whose gaps are under ``gap`` into one growing
     session window and finalizes it once the watermark passes session_end
     — state per user is ONE open session, not the event history."""
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_path)
-    )
     return (
-        stream.withWatermark("ts", watermark)
+        _read_stream(spark, EVENT_STREAM_SCHEMA, input_path)
+        .withWatermark("ts", watermark)
         .groupBy(F.session_window(F.col("ts"), gap).alias("win"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -215,11 +206,4 @@ def run_session_rollup(
 ):
     """Drain with availableNow, appending watermark-finalized sessions."""
     df = session_rollup_stream(spark, input_path, gap, watermark)
-    return (
-        df.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_to_parquet(df, output_path, checkpoint_dir)

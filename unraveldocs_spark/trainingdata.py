@@ -55,16 +55,21 @@ FROM documents GROUP BY md5(text) ORDER BY keeper_doc_id
 # Word-bigram shingles (shared by Jaccard + MinHash)
 # ---------------------------------------------------------------------------
 
-def _spark_shingles(col):
-    """distinct word-bigram shingles of a text column."""
-    toks = F.split(col, " ")
+def _word_bigrams(toks):
+    """Adjacent-token bigrams ("w1 w2") of a token array, in order and
+    with repeats (empty below two tokens)."""
     n = F.size(toks)
-    bigrams = F.zip_with(
+    return F.zip_with(
         F.slice(toks, 1, n - 1),
         F.slice(toks, 2, n - 1),
         lambda x, y: F.concat(x, F.lit(" "), y),
     )
-    return F.when(n >= 2, F.array_distinct(bigrams)).otherwise(
+
+
+def _spark_shingles(col):
+    """distinct word-bigram shingles of a text column."""
+    toks = F.split(col, " ")
+    return F.when(F.size(toks) >= 2, F.array_distinct(_word_bigrams(toks))).otherwise(
         F.array().cast("array<string>")
     )
 
@@ -83,22 +88,38 @@ _JACCARD_NUM = 2  # keep pairs with jaccard >= 2/10
 _JACCARD_DEN = 10
 
 
+def _jaccard_counts(cands):
+    """Candidate pairs (doc_a, doc_b, sh_a, sh_b) -> (doc_a, doc_b,
+    jac_num, jac_den): exact shingle intersection and union sizes."""
+    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return cands.select(
+        "doc_a", "doc_b", inter.alias("jac_num"), union.alias("jac_den")
+    )
+
+
+def _jaccard_keep():
+    """The near-dup confirm predicate: jac_num / jac_den >= 2/10."""
+    return F.col("jac_num") * _JACCARD_DEN >= F.col("jac_den") * _JACCARD_NUM
+
+
+def _doc_jaccard_counts(spark, sf_dir):
+    """Doc-grain MinHash-band candidates with their exact Jaccard counts,
+    unthresholded and unordered."""
+    docs = scan(spark, sf_dir, "documents")
+    return _jaccard_counts(_minhash_candidate_pairs(
+        scan(spark, sf_dir, "documents", fan=True)
+        .select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
+        shape_n=docs.count(),  # metadata-cheap parquet count
+    ))
+
+
 def _jaccard_pairs(spark, sf_dir):
     """Thresholded near-dup pairs (unordered): MinHash-band candidates
     confirmed by exact shingle Jaccard >= 2/10.  Shared by the ranked
     pair query below and the cluster-resolution query, which must not
     inherit an ORDER BY it immediately discards."""
-    docs = scan(spark, sf_dir, "documents")
-    cands = _minhash_candidate_pairs(
-        scan(spark, sf_dir, "documents", fan=True)
-        .select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
-        shape_n=docs.count(),  # metadata-cheap parquet count
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return cands.select(
-        "doc_a", "doc_b", inter.alias("jac_num"), union.alias("jac_den")
-    ).filter(F.col("jac_num") * _JACCARD_DEN >= F.col("jac_den") * _JACCARD_NUM)
+    return _doc_jaccard_counts(spark, sf_dir).filter(_jaccard_keep())
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
@@ -405,17 +426,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     Jaccard — the standard shingle->minhash->band->bucket-join pipeline.
     At scale: explode to (band_idx, band_key) rows, shuffle on the band
     key, join within buckets only."""
-    docs = scan(spark, sf_dir, "documents")
-    cands = _minhash_candidate_pairs(
-        scan(spark, sf_dir, "documents", fan=True)
-        .select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
-        shape_n=docs.count(),
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return cands.select(
-        "doc_a", "doc_b", inter.alias("jac_num"), union.alias("jac_den")
-    ).orderBy("doc_a", "doc_b")
+    return _doc_jaccard_counts(spark, sf_dir).orderBy("doc_a", "doc_b")
 
 
 def _duck_band_structs(n_bands: int, n_rows: int) -> str:
@@ -550,6 +561,22 @@ def _paragraphs(d):
     return exploded.select("doc_id", guarded_idx.alias("para_idx"), "para")
 
 
+# DuckDB twin of _paragraphs over ``documents``: CTE ``paras`` (doc_id,
+# para_idx, para)
+_DUCK_PARAS_CTES = f"""wtoks AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+), pidx AS (
+  SELECT doc_id, toks,
+         unnest(range(0, CAST(ceil(len(toks) / {_PARA_WORDS}.0) AS BIGINT))) AS para_idx
+  FROM wtoks
+), paras AS (
+  SELECT doc_id, para_idx,
+         array_to_string(list_slice(toks, para_idx * {_PARA_WORDS} + 1,
+                                    para_idx * {_PARA_WORDS} + {_PARA_WORDS}), ' ') AS para
+  FROM pidx
+)"""
+
+
 def paragraph_upper_bound(docs) -> int:
     """Cheap deterministic upper bound on the paragraph count of a
     documents frame, from the n_chars stats column only: tokens <=
@@ -607,14 +634,9 @@ def q_dedup_paragraph(spark, sf_dir):
         ),
         shape_n=paragraph_upper_bound(scan(spark, sf_dir, "documents")),
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    pairs = cands.select(
-        F.col("doc_a").alias("pa"),
-        F.col("doc_b").alias("pb"),
-        inter.alias("jac_num"),
-        union.alias("jac_den"),
-    ).filter(F.col("jac_num") * _JACCARD_DEN >= F.col("jac_den") * _JACCARD_NUM)
+    pairs = _jaccard_counts(cands).filter(_jaccard_keep()).select(
+        F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb"), "jac_num", "jac_den"
+    )
     copies = keepers.select("para_id", "n_copies")
     return (
         pairs.join(copies.withColumnRenamed("n_copies", "copies_a"),
@@ -637,18 +659,7 @@ def q_dedup_paragraph(spark, sf_dir):
 
 
 SQL_DEDUP_PARAGRAPH = f"""
-WITH wtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), pidx AS (
-  SELECT doc_id, toks,
-         unnest(range(0, CAST(ceil(len(toks) / {_PARA_WORDS}.0) AS BIGINT))) AS para_idx
-  FROM wtoks
-), paras AS (
-  SELECT doc_id, para_idx,
-         array_to_string(list_slice(toks, para_idx * {_PARA_WORDS} + 1,
-                                    para_idx * {_PARA_WORDS} + {_PARA_WORDS}), ' ') AS para
-  FROM pidx
-), keepers AS (
+WITH {_DUCK_PARAS_CTES}, keepers AS (
   SELECT MIN(doc_id * {_PARA_STRIDE} + para_idx) AS para_id,
          COUNT(*) AS n_copies, MIN(para) AS para
   FROM paras GROUP BY md5(para)
@@ -814,11 +825,32 @@ FROM scored ORDER BY c DESC, vec_id LIMIT 10
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for", "on", "it")
 
 
+def _ws_tokens(col=None):
+    """Whitespace tokens of a text column (default ``text``): trim, then
+    split on ``\\s+`` — the Spark side of DuckDB's
+    ``regexp_split_to_array(trim(text), '\\s+')``."""
+    return F.split(F.trim(F.col("text") if col is None else col), r"\s+")
+
+
+def _lower_words():
+    """Non-empty whitespace tokens of the lower-cased ``text`` column."""
+    return F.filter(_ws_tokens(F.lower(F.col("text"))), lambda x: x != "")
+
+
+def _stopword_arr():
+    """``_STOPWORDS`` as an array literal column."""
+    return F.array(*[F.lit(w) for w in _STOPWORDS])
+
+
+def _n_stopwords(toks):
+    """Stopword occurrences (repeats counted) in a token array."""
+    return F.size(F.filter(toks, lambda x: F.array_contains(_stopword_arr(), x)))
+
+
 def q_lang_stopword_ratio(spark, sf_dir):
     d = scan(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
+    toks = _ws_tokens()
+    n_stop = _n_stopwords(toks)
     n_words = F.size(toks)
     return d.select(
         "doc_id",
@@ -845,7 +877,7 @@ def q_quality_score(spark, sf_dir):
     """Deterministic quality heuristics: mean word length (scaled),
     punctuation count, unique-word ratio (scaled) — all integer outputs."""
     d = scan(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = _ws_tokens()
     n_words = F.size(toks)
     n_unique = F.size(F.array_distinct(toks))
     n_punct = F.length("text") - F.length(F.regexp_replace("text", r"[.,!?;:]", ""))
@@ -881,7 +913,7 @@ def q_token_count(spark, sf_dir):
     """BPE-ish regex pre-tokenization count (letters / digits / single
     punctuation), plus whitespace token count."""
     d = scan(spark, sf_dir, "documents", fan=True)
-    ws = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    ws = F.size(_ws_tokens())
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(_TOKEN_RE), F.lit(0)))
     return d.select(
         "doc_id", ws.alias("ws_tokens"), bpe.alias("bpe_tokens")
@@ -901,6 +933,19 @@ FROM documents ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 _CC_MAX_ITERS = 20
+
+
+# DuckDB connected components over a ``pairs`` (doc_a, doc_b) CTE: the
+# recursive ``reach`` (a, b) closure of the undirected pair graph
+_DUCK_REACH_CTES = """und AS (
+  SELECT doc_a AS s, doc_b AS t FROM pairs
+  UNION ALL
+  SELECT doc_b AS s, doc_a AS t FROM pairs
+), reach(a, b) AS (
+  SELECT s, t FROM und
+  UNION
+  SELECT r.a, u.t FROM reach r JOIN und u ON r.b = u.s
+)"""
 
 
 def q_dedup_cluster(spark, sf_dir):
@@ -997,15 +1042,7 @@ SQL_DEDUP_CLUSTER = f"""
 WITH RECURSIVE {_duck_minhash_cands_ctes("documents")}, pairs AS (
   SELECT doc_a, doc_b FROM cands
   {_DUCK_JAC_WHERE}
-), und AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS t FROM pairs
-), reach(a, b) AS (
-  SELECT s, t FROM und
-  UNION
-  SELECT r.a, u.t FROM reach r JOIN und u ON r.b = u.s
-), lbl AS (
+), {_DUCK_REACH_CTES}, lbl AS (
   SELECT a AS doc_id, MIN(LEAST(a, b)) AS cluster_id FROM reach GROUP BY a
 )
 SELECT doc_id, cluster_id,
@@ -1722,11 +1759,8 @@ def q_quality_perplexity(spark, sf_dir):
     d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n - 1),
-        F.slice(toks, 2, n - 1),
-        lambda x, y: F.concat(x, F.lit(" "), y),
-    )  # NOT distinct: repeated bigrams re-contribute, like a real LM score
+    # NOT distinct: repeated bigrams re-contribute, like a real LM score
+    bigrams = _word_bigrams(toks)
     nll = F.transform(
         bigrams,
         lambda s: F.pmod(digest56(s), F.lit(_PPL_MOD)),
@@ -1860,16 +1894,14 @@ FROM documents ORDER BY doc_id
 # Composed corpus-prep pipeline: quality gate -> exact dedup -> per-lang stats
 # ---------------------------------------------------------------------------
 
-def q_corpus_prep(spark, sf_dir):
-    """The end-to-end shape of a training-data prep job, composed from
-    the individual operators: (1) quality gate — length bounds and a
-    stopword-ratio floor (real-language signal); (2) exact dedup keeping
-    the lowest doc_id per content hash; (3) per-lang corpus stats.  All
-    JVM built-ins; two shuffles total (dedup groupBy, stats groupBy)."""
+def _gated_unique_docs(spark, sf_dir):
+    """Corpus-prep stages (1) and (2): documents passing the length
+    bounds and the stopword-ratio floor, then exact dedup keeping the
+    lowest doc_id per content hash.  Columns: doc_id, lang, text,
+    n_chars, n_words, n_stop."""
     d = scan(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
+    toks = _ws_tokens()
+    n_stop = _n_stopwords(toks)
     n_words = F.size(toks)
     gated = d.select(
         "doc_id", "lang", "text", "n_chars", n_words.alias("n_words"),
@@ -1884,7 +1916,16 @@ def q_corpus_prep(spark, sf_dir):
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    kept = gated.join(keepers, "doc_id", "left_semi")
+    return gated.join(keepers, "doc_id", "left_semi")
+
+
+def q_corpus_prep(spark, sf_dir):
+    """The end-to-end shape of a training-data prep job, composed from
+    the individual operators: (1) quality gate — length bounds and a
+    stopword-ratio floor (real-language signal); (2) exact dedup keeping
+    the lowest doc_id per content hash; (3) per-lang corpus stats.  All
+    JVM built-ins; two shuffles total (dedup groupBy, stats groupBy)."""
+    kept = _gated_unique_docs(spark, sf_dir)
     return (
         kept.groupBy("lang")
         .agg(
@@ -1930,25 +1971,7 @@ def q_corpus_build_full(spark, sf_dir):
     bounded propagation loop over PAIRS only (tiny), sampling is a
     broadcast + filter, stats one groupBy.  Each stage drops rows before
     the next pays for them — the ordering a 100-TB corpus build uses."""
-    d = scan(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-    n_words = F.size(toks)
-    gated = d.select(
-        "doc_id", "lang", "text", "n_chars", n_words.alias("n_words"),
-        n_stop.alias("n_stop"),
-    ).filter(
-        (F.col("n_chars") >= 40)
-        & (F.col("n_chars") <= 5000)
-        & (F.col("n_stop") * 100 >= F.col("n_words") * 2)
-    )
-    exact_keepers = (
-        gated.groupBy(F.md5(F.col("text").cast("binary")).alias("h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    kept = gated.join(exact_keepers, "doc_id", "left_semi")
+    kept = _gated_unique_docs(spark, sf_dir)
     # the gate+exact-dedup survivor table is read twice below (near-dup
     # shingles, final resolution); materialize it once — the standard
     # corpus-build shape, each stage's output persisted before the next
@@ -1960,11 +1983,7 @@ def q_corpus_build_full(spark, sf_dir):
         kept.select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
         shape_n=scan(spark, sf_dir, "documents").count(),
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    pairs = cands.select("doc_a", "doc_b", inter.alias("i"), union.alias("u")).filter(
-        F.col("i") * _JACCARD_DEN >= F.col("u") * _JACCARD_NUM
-    ).select("doc_a", "doc_b")
+    pairs = _jaccard_counts(cands).filter(_jaccard_keep()).select("doc_a", "doc_b")
     labels = connected_components(pairs)
     near_dupes = labels.filter(F.col("doc_id") != F.col("label")).select("doc_id")
     resolved = kept.join(near_dupes, "doc_id", "left_anti")
@@ -2008,15 +2027,7 @@ WITH RECURSIVE gated AS (
 ), {_duck_minhash_cands_ctes("kdocs")}, pairs AS (
   SELECT doc_a, doc_b FROM cands
   {_DUCK_JAC_WHERE}
-), und AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS t FROM pairs
-), reach(a, b) AS (
-  SELECT s, t FROM und
-  UNION
-  SELECT r.a, u.t FROM reach r JOIN und u ON r.b = u.s
-), near_dupes AS (
+), {_DUCK_REACH_CTES}, near_dupes AS (
   SELECT a AS doc_id FROM reach GROUP BY a HAVING MIN(LEAST(a, b)) <> a
 ), resolved AS (
   SELECT * FROM kept WHERE doc_id NOT IN (SELECT doc_id FROM near_dupes)
@@ -2048,6 +2059,30 @@ _GOPHER_MIN_ALPHA_E4 = 8000  # >= 80% of words contain an alphabetic char
 _GOPHER_MIN_STOP = 2  # >= 2 distinct stopwords present
 
 
+def _gopher_signals():
+    """The Gopher gate over the ``text`` column: (n_words, mwl_e2,
+    alpha_e4, n_stop, gate) column expressions — word count, mean word
+    length e2, alphabetic-word ratio e4, distinct stopwords present, and
+    the boolean verdict."""
+    toks = _ws_tokens()
+    n_words = F.size(toks)
+    mwl_e2 = F.round(
+        F.lit(100.0) * F.length(F.concat_ws("", toks)) / n_words
+    ).cast("bigint")
+    n_alpha = F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
+    alpha_e4 = F.round(F.lit(10000.0) * n_alpha / n_words).cast("bigint")
+    n_stop = F.size(F.array_intersect(F.array_distinct(toks), _stopword_arr()))
+    gate = (
+        (n_words >= _GOPHER_MIN_WORDS)
+        & (n_words <= _GOPHER_MAX_WORDS)
+        & (mwl_e2 >= _GOPHER_MIN_MWL_E2)
+        & (mwl_e2 <= _GOPHER_MAX_MWL_E2)
+        & (alpha_e4 >= _GOPHER_MIN_ALPHA_E4)
+        & (n_stop >= _GOPHER_MIN_STOP)
+    )
+    return n_words, mwl_e2, alpha_e4, n_stop, gate
+
+
 def q_quality_gopher(spark, sf_dir):
     """Gopher-style document quality gate (Rae et al. 2021 §A1.1 rules,
     re-parameterized for the driver corpus): word-count bounds, mean word
@@ -2059,23 +2094,7 @@ def q_quality_gopher(spark, sf_dir):
     runs at scan speed and the gate verdict feeds the corpus-build
     filter (`q_corpus_build_full`) without materializing rejects."""
     d = scan(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    n_words = F.size(toks)
-    mwl_e2 = F.round(
-        F.lit(100.0) * F.length(F.concat_ws("", toks)) / n_words
-    ).cast("bigint")
-    n_alpha = F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
-    alpha_e4 = F.round(F.lit(10000.0) * n_alpha / n_words).cast("bigint")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop_arr))
-    gate = (
-        (n_words >= _GOPHER_MIN_WORDS)
-        & (n_words <= _GOPHER_MAX_WORDS)
-        & (mwl_e2 >= _GOPHER_MIN_MWL_E2)
-        & (mwl_e2 <= _GOPHER_MAX_MWL_E2)
-        & (alpha_e4 >= _GOPHER_MIN_ALPHA_E4)
-        & (n_stop >= _GOPHER_MIN_STOP)
-    )
+    n_words, mwl_e2, alpha_e4, n_stop, gate = _gopher_signals()
     return d.select(
         "doc_id",
         n_words.alias("n_words"),
@@ -2126,11 +2145,7 @@ def q_quality_repetition(spark, sf_dir):
     d = scan(spark, sf_dir, "documents", fan=True)
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n - 1),
-        F.slice(toks, 2, n - 1),
-        lambda x, y: F.concat(x, F.lit(" "), y),
-    )
+    bigrams = _word_bigrams(toks)
     # longest equal-run over the sorted bigram array == max bigram
     # multiplicity; NULL-seeded prev makes the first element start run=1
     top_c = F.aggregate(
@@ -2203,6 +2218,19 @@ FROM pb GROUP BY doc_id, n_words, n_distinct ORDER BY doc_id
 _CHUNK_DROP_MIN_DOCS = 3  # C4 drops lines occurring in >= 3 documents
 
 
+def _chunk_doc_freq(d):
+    """C4 chunk table of a documents frame: every 16-word chunk
+    (doc_id, para_idx, para, h = md5) with ``n_docs``, the number of
+    distinct documents containing that chunk corpus-wide."""
+    paras = _paragraphs(d).withColumn(
+        "h", F.md5(F.col("para").cast("binary"))
+    # the chunk table feeds the corpus-wide frequency AND the join back:
+    # materialize it once (C4 pipelines persist the line/chunk table)
+    ).localCheckpoint()
+    freq = paras.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs"))
+    return paras.join(freq, "h")
+
+
 def q_line_dedup(spark, sf_dir):
     """C4-style line-grain corpus dedup (Raffel et al. 2020 §2.2: any
     line occurring in >= 3 documents across the corpus is boilerplate and
@@ -2219,13 +2247,7 @@ def q_line_dedup(spark, sf_dir):
     cross-corpus frequency table has one row per DISTINCT chunk, so its
     size tracks content diversity, not corpus size; no broadcast is
     assumed (at 100 TB it exceeds driver memory)."""
-    paras = _paragraphs(scan(spark, sf_dir, "documents", fan=True)).withColumn(
-        "h", F.md5(F.col("para").cast("binary"))
-    # the chunk table feeds the corpus-wide frequency AND the join back:
-    # materialize it once (C4 pipelines persist the line/chunk table)
-    ).localCheckpoint()
-    freq = paras.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs"))
-    flagged = paras.join(freq, "h").withColumn(
+    flagged = _chunk_doc_freq(scan(spark, sf_dir, "documents", fan=True)).withColumn(
         "keep", F.col("n_docs") < _CHUNK_DROP_MIN_DOCS
     )
     return (
@@ -2253,18 +2275,7 @@ def q_line_dedup(spark, sf_dir):
 
 
 SQL_LINE_DEDUP = f"""
-WITH wtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), pidx AS (
-  SELECT doc_id, toks,
-         unnest(range(0, CAST(ceil(len(toks) / {_PARA_WORDS}.0) AS BIGINT))) AS para_idx
-  FROM wtoks
-), paras AS (
-  SELECT doc_id, para_idx,
-         array_to_string(list_slice(toks, para_idx * {_PARA_WORDS} + 1,
-                                    para_idx * {_PARA_WORDS} + {_PARA_WORDS}), ' ') AS para
-  FROM pidx
-), freq AS (
+WITH {_DUCK_PARAS_CTES}, freq AS (
   SELECT md5(para) AS h, COUNT(DISTINCT doc_id) AS n_docs
   FROM paras GROUP BY md5(para)
 ), flagged AS (
@@ -2363,32 +2374,24 @@ FROM env ORDER BY doc_id
 _BENCH_MOD = 97  # docs with doc_id % 97 == 0 stand in for the eval benchmark
 
 
-def q_contamination_check(spark, sf_dir):
-    """Benchmark-contamination screen: for every corpus document, the
-    fraction of its distinct word bigrams that also appear in the eval
-    benchmark set (docs with doc_id % 97 == 0 stand in for the held-out
-    suite).  The standard pre-training decontamination pass (GPT-3
-    App. C / PaLM-style n-gram overlap), at the bigram grain the shared
-    shingle helper already provides.
-
-    Scale shape: the benchmark n-gram set is tiny relative to the corpus
-    (eval suites are MBs, the corpus is TBs), so it is explicitly
-    F.broadcast — the corpus side never shuffles; one groupBy(doc_id)
-    aggregates the hit counts."""
+def _contamination(d):
+    """Per-document benchmark contamination of a documents frame:
+    (doc_id, n_shingles, n_contaminated, contam_e4) for every
+    non-benchmark document with at least one shingle, where a shingle is
+    contaminated when any benchmark document (doc_id % 97 == 0) has it.
+    The benchmark's distinct shingles are the broadcast side."""
     # materialize the shingle table once: both branches (benchmark set,
     # corpus side) consume it, and the size(sh) predicate would
     # otherwise push below the fan-out repartition and re-derive the
     # shingles on the unsplit scan
-    d = scan(spark, sf_dir, "documents", fan=True).select(
-        "doc_id", _spark_shingles(F.col("text")).alias("sh")
-    ).localCheckpoint()
+    sh = d.select("doc_id", _spark_shingles(F.col("text")).alias("sh")).localCheckpoint()
     bench_sh = (
-        d.filter(F.col("doc_id") % _BENCH_MOD == 0)
+        sh.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select(F.explode("sh").alias("sh"))
         .distinct()
         .withColumn("hit", F.lit(1))
     )
-    ex = d.filter((F.col("doc_id") % _BENCH_MOD != 0) & (F.size("sh") > 0)).select(
+    ex = sh.filter((F.col("doc_id") % _BENCH_MOD != 0) & (F.size("sh") > 0)).select(
         "doc_id", F.explode("sh").alias("sh")
     )
     return (
@@ -2403,8 +2406,22 @@ def q_contamination_check(spark, sf_dir):
             F.round(F.lit(10000.0) * F.col("n_contaminated") / F.col("n_shingles"))
             .cast("bigint"),
         )
-        .orderBy("doc_id")
     )
+
+
+def q_contamination_check(spark, sf_dir):
+    """Benchmark-contamination screen: for every corpus document, the
+    fraction of its distinct word bigrams that also appear in the eval
+    benchmark set (docs with doc_id % 97 == 0 stand in for the held-out
+    suite).  The standard pre-training decontamination pass (GPT-3
+    App. C / PaLM-style n-gram overlap), at the bigram grain the shared
+    shingle helper already provides.
+
+    Scale shape: the benchmark n-gram set is tiny relative to the corpus
+    (eval suites are MBs, the corpus is TBs), so it is explicitly
+    F.broadcast — the corpus side never shuffles; one groupBy(doc_id)
+    aggregates the hit counts."""
+    return _contamination(scan(spark, sf_dir, "documents", fan=True)).orderBy("doc_id")
 
 
 SQL_CONTAMINATION_CHECK = f"""
@@ -2443,7 +2460,7 @@ def q_corpus_mix_weights(spark, sf_dir):
     d = scan(spark, sf_dir, "documents")
     grp = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(F.split(F.trim(F.col("text")), r"\s+"))).alias("total_words"),
+        F.sum(F.size(_ws_tokens())).alias("total_words"),
     )
     w = Window.partitionBy()  # bounded: one row per (source, lang)
     corpus_docs = F.sum("n_docs").over(w)
@@ -2498,7 +2515,7 @@ def q_vocab_topk(spark, sf_dir):
     a global sort of the full vocabulary."""
     d = scan(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
+        "doc_id", F.explode(_ws_tokens()).alias("token")
     )
     return (
         toks.groupBy("token")
@@ -2560,6 +2577,32 @@ _SHARD_TOKEN_BUDGET = 2000
 _EXPORT_CONTAM_MAX_E4 = 2500
 
 
+def _export_docs(spark, sf_dir):
+    """The documents corpus_export_shards packs: (doc_id, lang, n_tokens)
+    for every document that passes the Gopher gate, keeps at least one
+    chunk through the C4 chunk drop (n_tokens = the kept chunks' tokens)
+    and scores under _EXPORT_CONTAM_MAX_E4 benchmark contamination."""
+    d = scan(spark, sf_dir, "documents", fan=True)
+    gated = d.filter(_gopher_signals()[-1]).select("doc_id", "lang")
+
+    # C4 chunk drop: frequency over the FULL corpus, drop applied to
+    # gated docs; per-doc surviving token count from the kept chunks
+    kept_tokens = (
+        _chunk_doc_freq(d)
+        .filter(F.col("n_docs") < _CHUNK_DROP_MIN_DOCS)
+        .groupBy("doc_id")
+        .agg(F.sum(F.size(F.split(F.col("para"), " "))).cast("bigint").alias("n_tokens"))
+    )
+
+    # decontamination: original-text bigrams vs the benchmark set
+    contam = (
+        _contamination(d)
+        .filter(F.col("contam_e4") < _EXPORT_CONTAM_MAX_E4)
+        .select("doc_id")
+    )
+    return gated.join(kept_tokens, "doc_id").join(contam, "doc_id")
+
+
 def q_corpus_export_shards(spark, sf_dir):
     """Capstone #2 — the EXPORT side of corpus prep: Gopher quality gate
     -> C4 chunk-grain boilerplate drop (corpus-wide frequency) ->
@@ -2578,71 +2621,7 @@ def q_corpus_export_shards(spark, sf_dir):
     re-packs existing shards."""
     from pyspark.sql.window import Window
 
-    d = scan(spark, sf_dir, "documents", fan=True)
-    toks = F.split(F.trim(F.col("text")), r"\s+")
-    n_words = F.size(toks)
-    mwl_e2 = F.round(
-        F.lit(100.0) * F.length(F.concat_ws("", toks)) / n_words
-    ).cast("bigint")
-    n_alpha = F.size(F.filter(toks, lambda x: x.rlike("[A-Za-z]")))
-    alpha_e4 = F.round(F.lit(10000.0) * n_alpha / n_words).cast("bigint")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
-    n_stop = F.size(F.array_intersect(F.array_distinct(toks), stop_arr))
-    gate = (
-        (n_words >= _GOPHER_MIN_WORDS)
-        & (n_words <= _GOPHER_MAX_WORDS)
-        & (mwl_e2 >= _GOPHER_MIN_MWL_E2)
-        & (mwl_e2 <= _GOPHER_MAX_MWL_E2)
-        & (alpha_e4 >= _GOPHER_MIN_ALPHA_E4)
-        & (n_stop >= _GOPHER_MIN_STOP)
-    )
-    gated = d.filter(gate).select("doc_id", "lang")
-
-    # C4 chunk drop: frequency over the FULL corpus, drop applied to
-    # gated docs; per-doc surviving token count from the kept chunks
-    # chunk table read twice (frequency + kept-token rollup): materialize
-    paras = _paragraphs(d).withColumn(
-        "h", F.md5(F.col("para").cast("binary"))
-    ).localCheckpoint()
-    freq = paras.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs"))
-    kept_tokens = (
-        paras.join(freq, "h")
-        .filter(F.col("n_docs") < _CHUNK_DROP_MIN_DOCS)
-        .groupBy("doc_id")
-        .agg(F.sum(F.size(F.split(F.col("para"), " "))).cast("bigint").alias("n_tokens"))
-    )
-
-    # decontamination: original-text bigrams vs the benchmark set
-    # materialized once: benchmark-set and contamination branches both
-    # read it, and the size(sh) predicate stays above the fan-out
-    sh = d.select(
-        "doc_id", _spark_shingles(F.col("text")).alias("sh")
-    ).localCheckpoint()
-    bench_sh = (
-        sh.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        .select(F.explode("sh").alias("sh"))
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    contam = (
-        sh.filter((F.col("doc_id") % _BENCH_MOD != 0) & (F.size("sh") > 0))
-        .select("doc_id", F.explode("sh").alias("sh"))
-        .join(F.broadcast(bench_sh), "sh", "left")
-        .groupBy("doc_id")
-        .agg(
-            (
-                F.round(
-                    F.lit(10000.0)
-                    * F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-                    / F.count(F.lit(1))
-                ).cast("bigint")
-            ).alias("contam_e4")
-        )
-        .filter(F.col("contam_e4") < _EXPORT_CONTAM_MAX_E4)
-        .select("doc_id")
-    )
-
-    export = gated.join(kept_tokens, "doc_id").join(contam, "doc_id")
+    export = _export_docs(spark, sf_dir)
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -2685,18 +2664,7 @@ WITH t AS (
   WHERE n_words BETWEEN {_GOPHER_MIN_WORDS} AND {_GOPHER_MAX_WORDS}
     AND mwl_e2 BETWEEN {_GOPHER_MIN_MWL_E2} AND {_GOPHER_MAX_MWL_E2}
     AND alpha_e4 >= {_GOPHER_MIN_ALPHA_E4} AND n_stop >= {_GOPHER_MIN_STOP}
-), wtoks AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), pidx AS (
-  SELECT doc_id, toks,
-         unnest(range(0, CAST(ceil(len(toks) / {_PARA_WORDS}.0) AS BIGINT))) AS para_idx
-  FROM wtoks
-), paras AS (
-  SELECT doc_id, para_idx,
-         array_to_string(list_slice(toks, para_idx * {_PARA_WORDS} + 1,
-                                    para_idx * {_PARA_WORDS} + {_PARA_WORDS}), ' ') AS para
-  FROM pidx
-), freq AS (
+), {_DUCK_PARAS_CTES}, freq AS (
   SELECT md5(para) AS h, COUNT(DISTINCT doc_id) AS n_docs
   FROM paras GROUP BY md5(para)
 ), kept_tokens AS (
@@ -2810,7 +2778,7 @@ def q_fuzzy_search(spark, sf_dir):
     per-document string comparison."""
     d = scan(spark, sf_dir, "documents", fan=True)
     toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
+        "doc_id", F.explode(_ws_tokens()).alias("token")
     )
     vocab_hits = (
         toks.select("token")
@@ -3224,7 +3192,7 @@ def q_tfidf_topk(spark, sf_dir):
 
     d = scan(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
+        "doc_id", F.explode(_ws_tokens()).alias("token")
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
@@ -3495,7 +3463,7 @@ def q_tokenize_pack(spark, sf_dir):
     from pyspark.sql.window import Window
 
     d = scan(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tokens = F.size(_ws_tokens())
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
@@ -3724,15 +3692,7 @@ SQL_STRATIFIED_SPLIT = f"""
 WITH RECURSIVE {{ctes}}, pairs AS (
   SELECT doc_a, doc_b FROM cands
   {{jac_where}}
-), und AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS t FROM pairs
-), reach(a, b) AS (
-  SELECT s, t FROM und
-  UNION
-  SELECT r.a, u.t FROM reach r JOIN und u ON r.b = u.s
-), lbl AS (
+), {_DUCK_REACH_CTES}, lbl AS (
   SELECT a AS doc_id, MIN(LEAST(a, b)) AS cluster_id FROM reach GROUP BY a
 ), assigned AS (
   SELECT d.doc_id, COALESCE(l.cluster_id, d.doc_id) AS cluster_id
@@ -3793,15 +3753,7 @@ SQL_SPLIT_LEAKAGE_CHECK = f"""
 WITH RECURSIVE {{ctes}}, pairs AS (
   SELECT doc_a, doc_b FROM cands
   {{jac_where}}
-), und AS (
-  SELECT doc_a AS s, doc_b AS t FROM pairs
-  UNION ALL
-  SELECT doc_b AS s, doc_a AS t FROM pairs
-), reach(a, b) AS (
-  SELECT s, t FROM und
-  UNION
-  SELECT r.a, u.t FROM reach r JOIN und u ON r.b = u.s
-), lbl AS (
+), {_DUCK_REACH_CTES}, lbl AS (
   SELECT a AS doc_id, MIN(LEAST(a, b)) AS cluster_id FROM reach GROUP BY a
 ), assign AS (
   SELECT d.doc_id,
@@ -3846,7 +3798,7 @@ def q_vocab_drift(spark, sf_dir):
     cohort_new = F.col("doc_id") % 2 == 1
     toks = d.select(
         cohort_new.alias("is_new"),
-        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token"),
+        F.explode(_ws_tokens()).alias("token"),
     )
     per_tok = toks.groupBy("token").agg(
         F.sum((~F.col("is_new")).cast("bigint")).alias("c_old"),
@@ -3916,7 +3868,7 @@ def q_bpe_pair_counts(spark, sf_dir):
     d = d.filter(F.col("text").isNotNull())
     words = (
         d.select(
-            F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("w")
+            F.explode(_ws_tokens(F.lower(F.col("text")))).alias("w")
         )
         .filter((F.col("w") != "") & (F.length("w") >= 2))
         .groupBy("w")
@@ -3992,21 +3944,28 @@ def bpe_merges(
         )
         c = -c
         out.append((left, right, c))
-        merged = left + right
         for w, s in seqs.items():
-            if left not in s:
-                continue
-            ns: list[str] = []
-            i = 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == left and s[i + 1] == right:
-                    ns.append(merged)
-                    i += 2
-                else:
-                    ns.append(s[i])
-                    i += 1
-            seqs[w] = tuple(ns)
+            seqs[w] = _bpe_merge(s, left, right)
     return out
+
+
+def _bpe_merge(s: tuple[str, ...], left: str, right: str) -> tuple[str, ...]:
+    """One BPE rewrite: replace each (left, right) adjacent pair of the
+    symbol sequence with left+right, scanning left-to-right
+    non-overlapping."""
+    if left not in s:
+        return s
+    merged = left + right
+    ns: list[str] = []
+    i = 0
+    while i < len(s):
+        if i + 1 < len(s) and s[i] == left and s[i + 1] == right:
+            ns.append(merged)
+            i += 2
+        else:
+            ns.append(s[i])
+            i += 1
+    return tuple(ns)
 
 
 def q_bpe_learn(spark, sf_dir):
@@ -4136,7 +4095,7 @@ def q_shard_manifest(spark, sf_dir):
     from pyspark.sql.window import Window
 
     d = scan(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tokens = F.size(_ws_tokens())
     digest = digest56(F.col("text"))
     w = (
         Window.partitionBy("lang")
@@ -4206,7 +4165,7 @@ def _esub_tokens(d):
     text.  NULL-text docs produce no token rows in the oracle (UNNEST of
     a NULL range) and produced none in the explode-based r6 shape; the
     doc-local form must drop them explicitly or it would emit a row."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = _ws_tokens()
     return d.filter(F.col("text").isNotNull()).select(
         "doc_id", toks.alias("toks")
     )
@@ -4425,7 +4384,7 @@ def q_token_budget_sample(spark, sf_dir):
     from pyspark.sql.window import Window
 
     d = scan(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.trim(F.col("text")), r"\s+"))
+    n_tokens = F.size(_ws_tokens())
     keyed = d.select(
         "doc_id", "lang", n_tokens.alias("n_tokens"),
         _shuffle_key(F.col("doc_id")).alias("k"),
@@ -4761,7 +4720,7 @@ def q_dsir_importance(spark, sf_dir):
     CommonCrawl scale); B=64 keeps the driver-scale oracle readable."""
     d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
+        _ws_tokens(F.lower(F.col("text"))),
         lambda x: (x != "") & (F.length(x) >= 2),
     )
     tb = d.select("doc_id", "lang", F.explode(toks).alias("w")).select(
@@ -4876,9 +4835,7 @@ def q_ngram_lm_score(spark, sf_dir):
     from pyspark.sql.window import Window
 
     d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
-    toks_arr = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
+    toks_arr = _lower_words()
     tok = d.select("doc_id", F.posexplode(toks_arr).alias("pos", "w"))
     wlead = Window.partitionBy("doc_id").orderBy("pos")
     big0 = tok.select(
@@ -4987,25 +4944,14 @@ TRAINING_REGISTRY.update(
 def bpe_apply(word: str, merges) -> tuple[str, ...]:
     """Encode one word with a learned merge table: apply each merge in
     learned ORDER, rewriting the symbol sequence left-to-right
-    non-overlapping — byte-identical to the rewrite step inside
-    ``bpe_merges``, and the exact apply rule of subword-nmt/HF
+    non-overlapping — the same ``_bpe_merge`` step ``bpe_merges``
+    learns with, and the exact apply rule of subword-nmt/HF
     tokenizers for an ordered merge list.  Pure and deterministic: the
     SAME function runs inside the Spark Arrow stage and in the DuckDB
     VALUES-oracle generator."""
     s: tuple[str, ...] = tuple(word)
     for left, right in merges:
-        if left not in s:
-            continue
-        ns: list[str] = []
-        i = 0
-        while i < len(s):
-            if i + 1 < len(s) and s[i] == left and s[i + 1] == right:
-                ns.append(left + right)
-                i += 2
-            else:
-                ns.append(s[i])
-                i += 1
-        s = tuple(ns)
+        s = _bpe_merge(s, left, right)
     return s
 
 
@@ -5155,14 +5101,7 @@ def q_domain_mix(spark, sf_dir):
     d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
     per_doc = d.select(
         "source",
-        F.size(
-            F.filter(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                lambda x: x != "",
-            )
-        )
-        .cast("bigint")
-        .alias("n_tok"),
+        F.size(_lower_words()).cast("bigint").alias("n_tok"),
     )
     dom = per_doc.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -5251,14 +5190,7 @@ def q_curriculum_order(spark, sf_dir):
     per_doc = d.select(
         "doc_id",
         "n_chars",
-        F.size(
-            F.filter(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-                lambda x: x != "",
-            )
-        )
-        .cast("bigint")
-        .alias("n_tok"),
+        F.size(_lower_words()).cast("bigint").alias("n_tok"),
     ).filter(F.col("n_tok") > 0)
     per_doc = per_doc.select(
         "doc_id",
@@ -5367,18 +5299,13 @@ def q_classifier_trainset(spark, sf_dir):
     single-partition funnel; the hash threshold trades exact balance
     for a scan-local decision."""
     d = scan(spark, sf_dir, "documents", fan=True).filter(F.col("text").isNotNull())
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"), lambda x: x != ""
-    )
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
+    toks = _lower_words()
     base = d.select(
         "doc_id",
         "lang",
         "n_chars",
         F.size(toks).cast("bigint").alias("n_tok"),
-        F.size(F.filter(toks, lambda x: F.array_contains(stop_arr, x)))
-        .cast("bigint")
-        .alias("n_stop"),
+        _n_stopwords(toks).cast("bigint").alias("n_stop"),
     ).filter(F.col("n_tok") > 0)
     base = base.withColumn(
         "is_pos",
@@ -5525,12 +5452,11 @@ def q_dedup_increment(spark, sf_dir):
     )
     bands_all = _minhash_bands(nz, n_bands, n_rows)
     bands_new = _minhash_bands(nz.filter(F.col("doc_id") >= t), n_bands, n_rows)
-    cands = _band_pairs(bands_all, bands_new, nz).withColumnsRenamed(
-        {"doc_b": "doc_id", "doc_a": "other"}
+    conf = (
+        _jaccard_counts(_band_pairs(bands_all, bands_new, nz))
+        .filter(F.lit(2) * F.col("jac_num") >= F.col("jac_den"))
+        .select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("other"))
     )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    conf = cands.filter(F.lit(2) * inter >= union).select("doc_id", "other")
     newdocs = nz.filter(F.col("doc_id") >= t).select("doc_id")
     return (
         newdocs.join(conf, "doc_id", "left")
