@@ -16,9 +16,7 @@ def test_stream_matches_batch_oracle(spark, tmp_path):
     sdf.repartition(4).write.parquet(input_dir)
 
     store = DirCheckpointStore(str(tmp_path / "store"))
-    q = stream_extract(
-        spark, input_dir, store, str(tmp_path / "ckpt"), trigger_available_now=True
-    )
+    q = stream_extract(spark, input_dir, store, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     got = {(r.conv_id, r.turn_idx): r for r in store.results(spark).collect()}
@@ -48,7 +46,7 @@ def test_replayed_micro_batch_is_deduped(spark, tmp_path):
 
     store = DirCheckpointStore(str(tmp_path / "replay-store"))
     ckpt = str(tmp_path / "replay-ckpt")
-    q = stream_extract(spark, input_dir, store, ckpt, trigger_available_now=True)
+    q = stream_extract(spark, input_dir, store, ckpt)
     q.awaitTermination(120)
     n_rows = store.results(spark).count()
     n_snaps = len(store.snapshots())
@@ -56,7 +54,7 @@ def test_replayed_micro_batch_is_deduped(spark, tmp_path):
 
     # replay: wipe the source-offset checkpoint, keep the store
     shutil.rmtree(ckpt)
-    q2 = stream_extract(spark, input_dir, store, ckpt, trigger_available_now=True)
+    q2 = stream_extract(spark, input_dir, store, ckpt)
     q2.awaitTermination(120)
 
     assert len(store.snapshots()) == n_snaps  # replayed appends skipped
@@ -502,9 +500,7 @@ def test_stream_extracts_encrypted_payloads(spark, tmp_path):
     ).write.parquet(input_dir)
 
     store = DirCheckpointStore(str(tmp_path / "store"))
-    q = stream_extract(
-        spark, input_dir, store, str(tmp_path / "ckpt"), trigger_available_now=True
-    )
+    q = stream_extract(spark, input_dir, store, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     got = {(r.conv_id, r.turn_idx): r for r in store.results(spark).collect()}

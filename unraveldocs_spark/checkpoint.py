@@ -109,15 +109,11 @@ class DirCheckpointStore:
             key=self._snap_num,
         )
 
-    def committed_run_ids(self) -> set[str]:
-        """run_ids of all committed snapshots (from their manifests)."""
-        return {self._manifest(s).get("run_id") for s in self.snapshots()}
-
     def has_run(self, run_id: str) -> bool:
         """True if a committed snapshot already carries ``run_id`` — the
         idempotent-foreachBatch dedup primitive (a replayed micro-batch
         re-appends under the same run_id and must be skipped)."""
-        return run_id in self.committed_run_ids()
+        return run_id in {self._manifest(s).get("run_id") for s in self.snapshots()}
 
     def _next_snapshot_id(self) -> str:
         # consider every snap-* directory, committed or not: a crashed

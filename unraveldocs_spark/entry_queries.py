@@ -10,16 +10,19 @@ the dispatch picks is SQL-expressible)."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import oracle_sql_gen as osg
 from .extract import extract_stage
 from .pipeline import salted_repartition
 from .queries import _spark_java_word_count, _sql_java_word_count
 from .rollup import conversation_rollup
 from .scanfan import scan
 from .schemas import map_rows
-from .trainingdata import _ws_tokens, digest56
+from .trainingdata import _tokens_before, _ws_tokens, digest56
 
 
 def derived_transcripts(spark, sf_dir):
@@ -390,12 +393,6 @@ def _lang_id_sql() -> str:
     )
 
 
-def _extract_synthetic_sql() -> str:
-    from .oracle_sql_gen import extract_synthetic_sql
-
-    return extract_synthetic_sql(n_convs=30, hot_factor=10, include_oversize=False)
-
-
 def q_encrypted_roundtrip(spark, sf_dir):
     """AES-256-GCM encrypt -> store -> decrypt -> extract roundtrip over
     the synthetic fixture corpus: a deterministic ~60% of turns is
@@ -454,12 +451,6 @@ def q_encrypted_roundtrip(spark, sf_dir):
     ).orderBy("conv_id", "turn_idx")
 
 
-def _encrypted_roundtrip_sql() -> str:
-    from .oracle_sql_gen import encrypted_roundtrip_sql
-
-    return encrypted_roundtrip_sql(n_convs=30, hot_factor=10)
-
-
 _DOCX_STAT_COLS = (
     "n_paragraphs", "n_runs", "n_bold", "n_italic", "n_underline",
     "n_breaks", "n_list_items", "n_headings", "docx_digest", "docx_size",
@@ -500,12 +491,6 @@ def q_docx_export(spark, sf_dir):
     return map_rows(t.select("conv_id", "turn_idx", "text"), run, schema).orderBy(
         "conv_id", "turn_idx"
     )
-
-
-def _docx_export_sql() -> str:
-    from .oracle_sql_gen import docx_export_sql
-
-    return docx_export_sql(n_convs=30, hot_factor=10)
 
 
 def q_encrypted_export(spark, sf_dir):
@@ -570,65 +555,53 @@ def q_encrypted_export(spark, sf_dir):
     ).orderBy("conv_id")
 
 
-def _encrypted_export_sql() -> str:
-    from .oracle_sql_gen import encrypted_export_sql
-
-    return encrypted_export_sql(n_convs=30, hot_factor=10)
-
-
-def _simhash_sql() -> str:
-    from .oracle_sql_gen import simhash_near_dupes_sql
-
-    return simhash_near_dupes_sql(max_hamming=16)
-
-
-def _winnow_sql() -> str:
-    from .oracle_sql_gen import winnow_fingerprints_sql
-
-    return winnow_fingerprints_sql()
-
-
-def _ann_lsh_sql() -> str:
-    from .oracle_sql_gen import ann_lsh_topk_sql
-
-    return ann_lsh_topk_sql(k=10, probe_hamming=5)
-
-
-def _ann_ivf_sql() -> str:
-    from .oracle_sql_gen import ann_ivf_topk_sql
-
-    return ann_ivf_topk_sql(k=10, n_centroids=16, nprobe=6)
-
-
-def _ann_pq_sql() -> str:
-    from .oracle_sql_gen import ann_pq_topk_sql
-
-    return ann_pq_topk_sql(k=10)
-
-
-def _multimodal_sql() -> str:
-    from .oracle_sql_gen import multimodal_decode_sql
-
-    return multimodal_decode_sql()
-
-
 # "sql_fn" entries are generated lazily (extract_synthetic runs the pure
 # oracle over ~800 synthetic turns to build its VALUES table)
+_SYNTH = {"n_convs": 30, "hot_factor": 10}
 ENTRY_REGISTRY: dict[str, dict] = {
     "extract_turns": {"builder": q_extract_turns, "sql": SQL_EXTRACT_TURNS},
     "extract_rollup": {"builder": q_extract_rollup, "sql": SQL_EXTRACT_ROLLUP},
-    "extract_synthetic": {"builder": q_extract_synthetic, "sql_fn": _extract_synthetic_sql},
-    "encrypted_roundtrip": {"builder": q_encrypted_roundtrip, "sql_fn": _encrypted_roundtrip_sql},
-    "docx_export": {"builder": q_docx_export, "sql_fn": _docx_export_sql},
-    "encrypted_export": {"builder": q_encrypted_export, "sql_fn": _encrypted_export_sql},
-    "simhash_near_dupes": {"builder": q_simhash_near_dupes, "sql_fn": _simhash_sql},
+    "extract_synthetic": {
+        "builder": q_extract_synthetic,
+        "sql_fn": partial(
+            osg.extract_synthetic_sql, **_SYNTH, include_oversize=False
+        ),
+    },
+    "encrypted_roundtrip": {
+        "builder": q_encrypted_roundtrip,
+        "sql_fn": partial(osg.encrypted_roundtrip_sql, **_SYNTH),
+    },
+    "docx_export": {
+        "builder": q_docx_export,
+        "sql_fn": partial(osg.docx_export_sql, **_SYNTH),
+    },
+    "encrypted_export": {
+        "builder": q_encrypted_export,
+        "sql_fn": partial(osg.encrypted_export_sql, **_SYNTH),
+    },
+    "simhash_near_dupes": {
+        "builder": q_simhash_near_dupes,
+        "sql_fn": partial(osg.simhash_near_dupes_sql, max_hamming=16),
+    },
     "lang_id": {"builder": q_lang_id, "sql": _lang_id_sql()},
     "pdf_layout": {"builder": q_pdf_layout, "sql": SQL_PDF_LAYOUT},
-    "winnow_fingerprints": {"builder": q_winnow_fingerprints, "sql_fn": _winnow_sql},
-    "ann_lsh_topk": {"builder": q_ann_lsh, "sql_fn": _ann_lsh_sql},
-    "ann_ivf_topk": {"builder": q_ann_ivf, "sql_fn": _ann_ivf_sql},
-    "ann_pq_topk": {"builder": q_ann_pq, "sql_fn": _ann_pq_sql},
-    "multimodal_decode": {"builder": q_multimodal_decode, "sql_fn": _multimodal_sql},
+    "winnow_fingerprints": {
+        "builder": q_winnow_fingerprints,
+        "sql_fn": osg.winnow_fingerprints_sql,
+    },
+    "ann_lsh_topk": {
+        "builder": q_ann_lsh,
+        "sql_fn": partial(osg.ann_lsh_topk_sql, k=10, probe_hamming=5),
+    },
+    "ann_ivf_topk": {
+        "builder": q_ann_ivf,
+        "sql_fn": partial(osg.ann_ivf_topk_sql, k=10, n_centroids=16, nprobe=6),
+    },
+    "ann_pq_topk": {"builder": q_ann_pq, "sql_fn": partial(osg.ann_pq_topk_sql, k=10)},
+    "multimodal_decode": {
+        "builder": q_multimodal_decode,
+        "sql_fn": osg.multimodal_decode_sql,
+    },
     "frame_sample": {"builder": q_frame_sample, "sql": SQL_FRAME_SAMPLE},
     "multimodal_resize": {"builder": q_multimodal_resize, "sql": SQL_MULTIMODAL_RESIZE},
     "multimodal_features": {"builder": q_multimodal_features, "sql_fn": _features_sql},
@@ -660,12 +633,7 @@ def q_conversation_pack(spark, sf_dir):
     structs, never a driver-side concat."""
     t = derived_transcripts(spark, sf_dir)
     n_tokens = F.size(_ws_tokens())
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy("turn_idx")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    cum_before = _tokens_before("conv_id", "turn_idx")
     kept = (
         t.select("conv_id", "turn_idx", "role", "text", n_tokens.alias("n_tokens"))
         .withColumn("cum_before", cum_before)

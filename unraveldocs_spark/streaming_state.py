@@ -34,6 +34,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from .extract import extract_stage
 from .schemas import TRANSCRIPTS_SCHEMA
 from .semantics import rollup_status
+from .streaming import drain_each_batch, read_stream
 
 OUTPUT_SCHEMA = (
     "conv_id string, total_turns long, completed long, failed long, "
@@ -79,6 +80,17 @@ def _make_update(idle_timeout_ms: int | None):
     return _update
 
 
+def _drain_updates(df, out_path: str, checkpoint_dir: str, trigger=None):
+    """Append each micro-batch's update rows to parquet at ``out_path``
+    (parquet sinks don't accept update mode, so this goes through
+    foreachBatch); the latest row per key is its current state."""
+
+    def sink(batch_df, _batch_id: int):
+        batch_df.write.mode("append").parquet(out_path)
+
+    return drain_each_batch(df, sink, checkpoint_dir, "update", trigger)
+
+
 def stateful_rollup_stream(
     spark: Any,
     input_path: str,
@@ -98,21 +110,14 @@ def stateful_rollup_stream(
     (e.g. ``{"processingTime": "1 second"}``): an availableNow query with
     processing-time timers schedules empty batches forever and never
     terminates, so that combination raises instead of hanging."""
-    if trigger is None:
-        trigger = {"availableNow": True}
-    if idle_timeout_ms is not None and trigger.get("availableNow"):
+    if idle_timeout_ms is not None and (trigger is None or trigger.get("availableNow")):
         raise ValueError(
             "idle_timeout_ms uses ProcessingTimeTimeout, which never lets an "
             "availableNow query terminate; use trigger="
             '{"processingTime": "..."} for eviction, or idle_timeout_ms=None '
             "for drain runs"
         )
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(input_path)
-    )
-    extracted = extract_stage(stream)
+    extracted = extract_stage(read_stream(spark, TRANSCRIPTS_SCHEMA, input_path, 4))
     rolled = (
         extracted.groupBy("conv_id")
         .applyInPandasWithState(
@@ -127,19 +132,7 @@ def stateful_rollup_stream(
             ),
         )
     )
-    # parquet sinks don't accept update mode; append each micro-batch's
-    # update rows via foreachBatch — the latest row per conv_id is the
-    # current ladder state
-    def sink(batch_df, _batch_id: int):
-        batch_df.write.mode("append").parquet(out_path)
-
-    return (
-        rolled.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(**trigger)
-        .start()
-    )
+    return _drain_updates(rolled, out_path, checkpoint_dir, trigger)
 
 
 # ---------------------------------------------------------------------------
@@ -210,11 +203,7 @@ def quota_enforcer_stream(
     row_number-over-(user, day) ranking."""
     import pyspark.sql.functions as F
 
-    stream = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(input_path)
-    )
+    stream = read_stream(spark, EVENTS_STREAM_SCHEMA, input_path, 1)
     keyed = stream.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
     decided = keyed.groupBy("user_id", "day").applyInPandasWithState(
         _make_quota_update(daily_limit),
@@ -223,14 +212,4 @@ def quota_enforcer_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-    def sink(batch_df, _batch_id: int):
-        batch_df.write.mode("append").parquet(out_path)
-
-    return (
-        decided.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_updates(decided, out_path, checkpoint_dir)

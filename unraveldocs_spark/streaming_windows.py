@@ -10,39 +10,32 @@ window_end + delay (the property that matters at 10^12 turns).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F
 
 from .extract import extract_stage
 from .schemas import TRANSCRIPTS_SCHEMA
+from .streaming import drain_to_parquet, read_stream
+from .streaming_state import EVENTS_STREAM_SCHEMA
+
+# new files per micro-batch for every operator here; window, join and
+# session results do not depend on batch boundaries
+_MAX_FILES = 8
 
 
-def _read_stream(spark: SparkSession, schema: str, path: str) -> DataFrame:
-    """Parquet file stream over ``path``, at most 8 new files a batch."""
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 8).parquet(path)
-
-
-def _drain_to_parquet(df: DataFrame, output_path: str, checkpoint_dir: str):
-    """Start an availableNow append of ``df`` into parquet at
-    ``output_path``; returns the query handle (caller awaits)."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def windowed_rollup_stream(
+def run_windowed_rollup(
     spark: SparkSession,
     input_path: str,
+    output_path: str,
+    checkpoint_dir: str,
     window: str = "1 hour",
     watermark: str = "30 minutes",
-) -> DataFrame:
+):
     """readStream(turns) -> extract -> watermark(ts) -> per (conv_id,
-    window) status counts with the reference's status ladder."""
-    stream = _read_stream(spark, TRANSCRIPTS_SCHEMA, input_path)
+    window) status counts with the reference's status ladder, drained
+    with an availableNow trigger and appended to parquet (append mode:
+    only watermark-closed windows are emitted — exactly-once per
+    window).  Returns the query handle (caller awaits)."""
+    stream = read_stream(spark, TRANSCRIPTS_SCHEMA, input_path, _MAX_FILES)
     extracted = extract_stage(stream, carry_ts=True)
     agg = (
         extracted.withWatermark("ts", watermark)
@@ -55,7 +48,7 @@ def windowed_rollup_stream(
             F.sum(F.when(F.col("status") == "FAILED", 1).otherwise(0)).alias("failed"),
         )
     )
-    return agg.select(
+    rollup = agg.select(
         F.col("win.start").alias("window_start"),
         F.col("win.end").alias("window_end"),
         "conv_id",
@@ -70,21 +63,7 @@ def windowed_rollup_stream(
         .otherwise(F.lit("PROCESSING"))
         .alias("collection_status"),
     )
-
-
-def run_windowed_rollup(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-):
-    """Run the windowed rollup with an availableNow trigger, appending
-    finalized windows to parquet (append mode: only watermark-closed
-    windows are emitted — exactly-once per window)."""
-    agg = windowed_rollup_stream(spark, input_path, window, watermark)
-    return _drain_to_parquet(agg, output_path, checkpoint_dir)
+    return drain_to_parquet(rollup, output_path, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -95,13 +74,15 @@ REQUEST_STREAM_SCHEMA = "conv_id string, turn_idx int, req_ts timestamp"
 RESULT_STREAM_SCHEMA = "conv_id string, turn_idx int, status string, done_ts timestamp"
 
 
-def correlate_streams(
+def run_stream_correlation(
     spark: SparkSession,
     requests_path: str,
     results_path: str,
+    output_path: str,
+    checkpoint_dir: str,
     watermark: str = "30 minutes",
     max_lag_minutes: int = 60,
-) -> DataFrame:
+):
     """Watermarked stream-stream INNER join: upload/request events
     correlated with their OCR completion events on (conv_id, turn_idx),
     emitting per-turn processing latency — the reference's async
@@ -113,12 +94,15 @@ def correlate_streams(
     the join condition bounds done_ts to [req_ts, req_ts + max_lag] — so
     a request buffered in state is dropped once the result-side watermark
     passes req_ts + max_lag, and vice versa.  Without the time-range
-    bound the request buffer would grow forever at 10^12 turns."""
-    req = _read_stream(spark, REQUEST_STREAM_SCHEMA, requests_path).withWatermark(
-        "req_ts", watermark
-    )
+    bound the request buffer would grow forever at 10^12 turns.
+
+    Both streams drain with an availableNow trigger, appending matched
+    pairs to parquet.  Returns the query handle (caller awaits)."""
+    req = read_stream(
+        spark, REQUEST_STREAM_SCHEMA, requests_path, _MAX_FILES
+    ).withWatermark("req_ts", watermark)
     res = (
-        _read_stream(spark, RESULT_STREAM_SCHEMA, results_path)
+        read_stream(spark, RESULT_STREAM_SCHEMA, results_path, _MAX_FILES)
         .withColumnRenamed("conv_id", "r_conv_id")
         .withColumnRenamed("turn_idx", "r_turn_idx")
         .withWatermark("done_ts", watermark)
@@ -134,7 +118,7 @@ def correlate_streams(
         ),
         "inner",
     )
-    return joined.select(
+    pairs = joined.select(
         "conv_id",
         "turn_idx",
         "status",
@@ -144,56 +128,12 @@ def correlate_streams(
         .cast("bigint")
         .alias("latency_s"),
     )
-
-
-def run_stream_correlation(
-    spark: SparkSession,
-    requests_path: str,
-    results_path: str,
-    output_path: str,
-    checkpoint_dir: str,
-    watermark: str = "30 minutes",
-    max_lag_minutes: int = 60,
-):
-    """Drain both streams with an availableNow trigger, appending matched
-    pairs to parquet.  Returns the query handle (caller awaits)."""
-    df = correlate_streams(
-        spark, requests_path, results_path, watermark, max_lag_minutes
-    )
-    return _drain_to_parquet(df, output_path, checkpoint_dir)
+    return drain_to_parquet(pairs, output_path, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
 # Streaming session windows: the gap-sessionization operator as a stream
 # ---------------------------------------------------------------------------
-
-EVENT_STREAM_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
-)
-
-
-def session_rollup_stream(
-    spark: SparkSession,
-    input_path: str,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """readStream(events) -> watermark(ts) -> F.session_window(gap) per
-    user: the streaming restatement of the batch `sessionize` query.
-    Spark merges events whose gaps are under ``gap`` into one growing
-    session window and finalizes it once the watermark passes session_end
-    — state per user is ONE open session, not the event history."""
-    return (
-        _read_stream(spark, EVENT_STREAM_SCHEMA, input_path)
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window(F.col("ts"), gap).alias("win"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("win.start")).alias("start_epoch"),
-            "n_events",
-        )
-    )
 
 
 def run_session_rollup(
@@ -204,6 +144,22 @@ def run_session_rollup(
     gap: str = "30 minutes",
     watermark: str = "30 minutes",
 ):
-    """Drain with availableNow, appending watermark-finalized sessions."""
-    df = session_rollup_stream(spark, input_path, gap, watermark)
-    return _drain_to_parquet(df, output_path, checkpoint_dir)
+    """readStream(events) -> watermark(ts) -> F.session_window(gap) per
+    user: the streaming restatement of the batch `sessionize` query.
+    Spark merges events whose gaps are under ``gap`` into one growing
+    session window and finalizes it once the watermark passes session_end
+    — state per user is ONE open session, not the event history.  Drains
+    with availableNow, appending watermark-finalized sessions; returns
+    the query handle (caller awaits)."""
+    sessions = (
+        read_stream(spark, EVENTS_STREAM_SCHEMA, input_path, _MAX_FILES)
+        .withWatermark("ts", watermark)
+        .groupBy(F.session_window(F.col("ts"), gap).alias("win"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.unix_timestamp(F.col("win.start")).alias("start_epoch"),
+            "n_events",
+        )
+    )
+    return drain_to_parquet(sessions, output_path, checkpoint_dir)

@@ -832,6 +832,20 @@ def _ws_tokens(col=None):
     return F.split(F.trim(F.col("text") if col is None else col), r"\s+")
 
 
+def _tokens_before(partition_col, *order_cols):
+    """Sum of ``n_tokens`` over the rows before this one in its
+    ``partition_col`` partition, ordered by ``order_cols``; 0 on the
+    partition's first row (the running offset token packers cut on)."""
+    from pyspark.sql.window import Window
+
+    w = (
+        Window.partitionBy(partition_col)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+
+
 def _lower_words():
     """Non-empty whitespace tokens of the lower-cased ``text`` column."""
     return F.filter(_ws_tokens(F.lower(F.col("text"))), lambda x: x != "")
@@ -2619,15 +2633,8 @@ def q_corpus_export_shards(spark, sf_dir):
     shingle branch).  At 10^12 docs the doc_id packing order is the
     ingest order, so shards are append-stable: adding documents never
     re-packs existing shards."""
-    from pyspark.sql.window import Window
-
     export = _export_docs(spark, sf_dir)
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0).cast("bigint"))
+    cum_before = _tokens_before("lang", "doc_id")
     packed = export.select(
         "lang",
         "n_tokens",
@@ -3460,17 +3467,10 @@ def q_tokenize_pack(spark, sf_dir):
     broadcast prefix-offset table) — the declarative window here is the
     same arithmetic with the partitioning visible to Catalyst.
     Everything after the window is per-row integer arithmetic."""
-    from pyspark.sql.window import Window
-
     d = scan(spark, sf_dir, "documents")
     n_tokens = F.size(_ws_tokens())
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     base = d.select("lang", "doc_id", n_tokens.alias("n_tokens"))
-    start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("bigint")
+    start = _tokens_before("lang", "doc_id").cast("bigint")
     P = _PACK_SEQ_TOKENS
     out = base.select(
         "lang",
@@ -4092,17 +4092,10 @@ def q_shard_manifest(spark, sf_dir):
     Scale shape: ONE lang-partitioned window feeds the packing and the
     groupBy(lang, shard) shares its partitioning; the digest is a
     map-side-combinable XOR aggregate — no extra shuffle, no sort."""
-    from pyspark.sql.window import Window
-
     d = scan(spark, sf_dir, "documents")
     n_tokens = F.size(_ws_tokens())
     digest = digest56(F.col("text"))
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    cum_before = _tokens_before("lang", "doc_id")
     packed = d.select(
         "lang", "doc_id", n_tokens.alias("n_tokens"), digest.alias("digest")
     ).withColumn(
@@ -4381,20 +4374,13 @@ def q_token_budget_sample(spark, sf_dir):
     Scale shape: one lang-partitioned window (running sum in key order);
     per-lang state is a single counter — no driver involvement, no
     second pass."""
-    from pyspark.sql.window import Window
-
     d = scan(spark, sf_dir, "documents")
     n_tokens = F.size(_ws_tokens())
     keyed = d.select(
         "doc_id", "lang", n_tokens.alias("n_tokens"),
         _shuffle_key(F.col("doc_id")).alias("k"),
     )
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("k", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
+    cum_before = _tokens_before("lang", "k", "doc_id")
     return (
         keyed.withColumn("cum_before", cum_before.cast("bigint"))
         .filter(F.col("cum_before") < _TB_BUDGET_TOKENS)

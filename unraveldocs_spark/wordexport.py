@@ -37,13 +37,11 @@ boilerplate XML; the document BODY carries the same paragraphs/runs.
 from __future__ import annotations
 
 import io
-import re
 import zipfile
 from dataclasses import dataclass, field
 
+from .domwalk import _PLAIN_SPLIT_RE, is_html
 from .htmldom import Element, TextNode, parse_body_fragment
-
-_PLAIN_SPLIT_RE = re.compile(r"\r?\n")
 
 HEADING_SIZES = {"h1": 20, "h2": 18}  # everything else: 16
 HEADING_SIZE_DEFAULT = 16
@@ -68,13 +66,6 @@ class Paragraph:
     num_id: int | None = None
     indent_left: int | None = None
     runs: list[Run] = field(default_factory=list)
-
-
-def is_html(text: str | None) -> bool:
-    """DocxExportServiceImpl.isHtml (lines 41-44)."""
-    return text is not None and (
-        "<p>" in text or "<h3>" in text or "<ul>" in text or "<li>" in text
-    )
 
 
 def _render_children(para: Paragraph, parent: Element) -> None:
