@@ -1,8 +1,11 @@
 """Every probe of tools/measure.py runs on the smallest testdata at
 growth 1x and returns the keys its BENCH table is rendered from, so a
 package change that breaks a regenerator fails here, not at the next
-measurement."""
+measurement.  The registry modes (time, noop, plans) run on two queries,
+and tools/ keeps one session builder."""
 
+import glob
+import json
 import os
 import sys
 
@@ -97,3 +100,36 @@ def test_main_rewrites_the_whole_bench_page(tmp_path, monkeypatch):
     page = (tmp_path / "BENCH" / "PARAGRAPH_SCALE.md").read_text()
     assert sum(line.startswith("|---|") for line in page.splitlines()) == 1
     assert page.startswith("# dedup_paragraph")
+
+
+QUERIES = ["regional_revenue", "sessionize"]
+
+
+@pytest.mark.parametrize("mode", ["time", "noop", "plans"])
+def test_query_modes(spark, mode, tmp_path, monkeypatch, capsys):
+    monkeypatch.setattr(M, "REPO", str(tmp_path))
+    monkeypatch.setattr(M, "session", lambda name: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    assert M.main([mode, "-n", "1", "--sf", SF, *QUERIES]) == 0
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    if mode == "plans":
+        assert line == {"mode": "plans", "n": 2}
+        plans = sorted(os.listdir(tmp_path / "plans" / "r07"))
+        assert plans == [f"{q}_before.txt" for q in QUERIES]
+        for name in plans:
+            assert "== Physical Plan ==" in (tmp_path / "plans" / "r07" / name).read_text()
+    else:
+        assert set(line) == {"mode", "sf", "n", "queries"}
+        assert (line["mode"], line["sf"], line["n"]) == (mode, SF, 1)
+        assert sorted(line["queries"]) == QUERIES
+        assert all(sec > 0 for sec in line["queries"].values())
+
+
+def test_tools_build_one_session():
+    """Every local measurement shares measure.session: one
+    build_session call across tools/*.py."""
+    calls = sum(
+        open(p).read().count("build_session(")
+        for p in glob.glob(os.path.join(os.path.dirname(M.__file__), "*.py"))
+    )
+    assert calls == 1

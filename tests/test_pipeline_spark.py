@@ -287,15 +287,6 @@ class TestTwoPhaseResume:
         }
         assert got == expected
 
-        # both resume variants agree
-        got1 = {
-            (r.conv_id, r.turn_idx)
-            for r in resume_filter(sdf, store, spark, two_phase=False)
-            .select("conv_id", "turn_idx")
-            .collect()
-        }
-        assert got1 == expected
-
     def test_net_zero_drift_not_skipped(self, spark, tmp_path):
         """Input drift with equal counts (one turn added, one removed since
         the snapshot) must NOT pass the conversation-complete check: the
@@ -324,19 +315,18 @@ class TestTwoPhaseResume:
             sdf.filter((F.col("conv_id") == conv) & (F.col("turn_idx") == 1))
             .withColumn("turn_idx", F.lit(n_turns))
         )
-        for two_phase in (True, False):
-            got = {
-                (r.conv_id, r.turn_idx)
-                for r in resume_filter(drifted, store, spark, two_phase=two_phase)
-                .select("conv_id", "turn_idx")
-                .collect()
-            }
-            # the appended turn must be processed; conversations 0/2 were
-            # never extracted so every one of their turns remains
-            expected = {
-                (c, t) for c, t in zip(pdf.conv_id, pdf.turn_idx) if c != conv
-            } | {(conv, n_turns)}
-            assert got == expected, f"two_phase={two_phase}"
+        got = {
+            (r.conv_id, r.turn_idx)
+            for r in resume_filter(drifted, store, spark)
+            .select("conv_id", "turn_idx")
+            .collect()
+        }
+        # the appended turn must be processed; conversations 0/2 were
+        # never extracted so every one of their turns remains
+        expected = {
+            (c, t) for c, t in zip(pdf.conv_id, pdf.turn_idx) if c != conv
+        } | {(conv, n_turns)}
+        assert got == expected
 
     def test_plan_has_conv_prune_before_key_anti(self, spark, tmp_path):
         import io

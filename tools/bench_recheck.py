@@ -20,9 +20,10 @@ the tail) and writes the full numeric detail to
 ``BENCH/recheck_r0N.json`` instead.  The detail computation itself is
 unchanged (``recheck_detail``).
 
-Standalone use (re-times explicit names at the bench sf):
+Re-timing explicit names by hand goes through the same session and
+best-of loop (``tools/measure.py``):
 
-    python tools/bench_recheck.py props_extract sessionize
+    python tools/measure.py time props_extract sessionize
 """
 
 from __future__ import annotations
@@ -31,7 +32,8 @@ import glob
 import json
 import os
 import re
-import time
+
+from tools.measure import best_of as _best_of  # module-level: tests patch it
 
 FACTOR = 1.5
 REPS = 3
@@ -80,15 +82,6 @@ def previous_bench(repo: str) -> tuple[str | None, dict[str, float]]:
     except (OSError, ValueError):
         pass
     return os.path.basename(best[1]), {}
-
-
-def _best_of(fn, reps: int) -> float:
-    sec = float("inf")
-    for _ in range(reps):
-        t0 = time.monotonic()
-        fn()
-        sec = min(sec, time.monotonic() - t0)
-    return sec
 
 
 def recheck_regressions(
@@ -259,35 +252,3 @@ def _apply_window_control(
             continue
         if r["best_isolated"] / r["prev"] <= window * CONTROL_SLACK:
             r["verdict"] = f"window-inflation(x{window:.2f})"
-
-
-def main() -> None:
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
-    import __spark_entry__ as entry_mod
-    from unraveldocs_spark.session import build_session
-
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    names = sys.argv[1:]
-    spark = build_session(
-        "bench-recheck", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 16)
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qfns = entry_mod.queries()
-    _, prev = previous_bench(repo)
-    report = {}
-    for name in names:
-        best = _best_of(lambda: qfns[name](spark, sf_dir).collect(), REPS)
-        report[name] = {
-            "best_isolated": round(best, 3),
-            "prev": prev.get(name),
-        }
-    print(json.dumps(report))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    main()

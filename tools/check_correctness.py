@@ -64,9 +64,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    sys.path.insert(0, ".")
     import __spark_entry__ as entry_mod
-    from unraveldocs_spark.session import build_session
+    from tools.measure import session
 
     sqls = entry_mod.oracle_sql()
     registry = {
@@ -74,7 +73,7 @@ def main():
         for name, fn in entry_mod.queries().items()
     }
 
-    spark = build_session("correctness-check", master="local[8]", shuffle_partitions=8)
+    spark = session("correctness")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

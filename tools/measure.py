@@ -1,6 +1,9 @@
-"""The scale probes behind BENCH/*.md, on one harness.
+"""The one local measurement harness: one session, one timing loop.
 
-    python tools/measure.py <name> [sf_dir]
+    python tools/measure.py <probe> [sf_dir]
+    python tools/measure.py time  [-n 3] [--sf DIR] name [name ...]
+    python tools/measure.py noop  [-n 3] [--sf DIR] name [name ...]
+    python tools/measure.py plans [--sf DIR] [--suffix _before] [name ...]
 
 Each probe measures a package builder at growing scale and rewrites its
 whole BENCH file, prose included:
@@ -17,34 +20,51 @@ Every probe is ``probe(spark, sf_dir, <scale>=...) -> list[dict]``; the
 scale keywords (growth multipliers, vector counts, query stride) default
 to the published legs.  Growth corpora are cached under GROWTH_ROOT,
 keyed by the input directory and the multiplier.  ``band_bits``
-synthesizes its vectors and ignores sf_dir.  Cores come from
-SPARK_GRAFT_CPUS, as in bench_extra.py.
+synthesizes its vectors and ignores sf_dir.
+
+``time`` and ``noop`` re-time registry queries in isolation, best-of-n
+(query build included; ``time`` ends in ``.collect()`` like a bench.py leaf,
+``noop`` in the noop sink), and print one JSON line
+``{"mode", "sf", "n", "queries": {name: best_sec}}``.  ``plans`` writes
+each query's ``.explain("formatted")`` to plans/r07/<name><suffix>.txt
+and prints ``{"mode", "n"}``.  No names means every registry query.
+
+Cores come from SPARK_GRAFT_CPUS and the default sf dir from
+SPARK_GRAFT_SF_DIR, as in bench.py.
 """
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import math
 import os
 import sys
 import time
+from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 GROWTH_ROOT = "/tmp/unraveldocs-growth"
 
 
 # ---------------------------------------------------------------------------
-# Harness: session, growth corpus, markdown table
+# Harness: session, timing loop, growth corpus, markdown table
 # ---------------------------------------------------------------------------
 
 
 def session(name: str):
+    """bench.py's session, so an isolated time is comparable to a bench
+    leaf: local[CPUS], max(CPUS, 16) shuffle partitions, shuffle on
+    /dev/shm and 4m scan splits unless SPARK_GRAFT_MAX_PARTITION_BYTES
+    says otherwise."""
     from unraveldocs_spark.session import build_session
 
+    os.environ.setdefault("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m")
     spark = build_session(
         f"measure-{name}",
         master=f"local[{CPUS}]",
@@ -53,6 +73,16 @@ def session(name: str):
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def best_of(fn, reps: int) -> float:
+    """Best wall seconds of ``reps`` calls of ``fn``."""
+    sec = float("inf")
+    for _ in range(reps):
+        t0 = time.monotonic()
+        fn()
+        sec = min(sec, time.monotonic() - t0)
+    return sec
 
 
 def _permuted_text(key: int):
@@ -815,13 +845,75 @@ PROBES = {
 }
 
 
+# ---------------------------------------------------------------------------
+# Registry queries in isolation: time, noop, plans
+# ---------------------------------------------------------------------------
+
+
+SINKS = {
+    "time": lambda df: df.collect(),
+    "noop": lambda df: df.write.format("noop").mode("overwrite").save(),
+}
+MODES = (*SINKS, "plans")
+
+
+def time_queries(spark, sf_dir: str, qfns: dict, sink, reps: int) -> dict:
+    """{name: best-of-``reps`` seconds} for each query in ``qfns``."""
+    per = {}
+    for name, build in qfns.items():
+        spark.sparkContext.setJobDescription(f"measure:{name}")
+        per[name] = round(best_of(lambda: sink(build(spark, sf_dir)), reps), 3)
+        print(f"[measure] {name}: {per[name]:.2f}s", file=sys.stderr)
+    spark.sparkContext.setJobDescription(None)
+    return per
+
+
+def write_plans(spark, sf_dir: str, qfns: dict, suffix: str) -> None:
+    out_dir = os.path.join(REPO, "plans", "r07")
+    os.makedirs(out_dir, exist_ok=True)
+    for name, build in qfns.items():
+        path = os.path.join(out_dir, f"{name}{suffix}.txt")
+        with open(path, "w") as fh, redirect_stdout(fh):
+            build(spark, sf_dir).explain("formatted")
+        print(f"[plans] wrote {path}", file=sys.stderr)
+
+
+def run_queries(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(prog="tools/measure.py")
+    ap.add_argument("mode", choices=MODES)
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("-n", type=int, default=3)
+    ap.add_argument("--sf", default=SF_DIR)
+    ap.add_argument("--suffix", default="_before")
+    args = ap.parse_intermixed_args(argv)
+
+    import __spark_entry__ as entry_mod
+
+    registry = entry_mod.queries()
+    qfns = {n: registry[n] for n in args.names or registry}
+    spark = session(args.mode)
+    try:
+        if args.mode == "plans":
+            write_plans(spark, args.sf, qfns, args.suffix)
+            line = {"mode": "plans", "n": len(qfns)}
+        else:
+            per = time_queries(spark, args.sf, qfns, SINKS[args.mode], args.n)
+            line = {"mode": args.mode, "sf": args.sf, "n": args.n, "queries": per}
+    finally:
+        spark.stop()
+    print(json.dumps(line))
+    return 0
+
+
 def main(argv: list[str]) -> int:
+    if argv and argv[0] in MODES:
+        return run_queries(argv)
     if not 1 <= len(argv) <= 2 or argv[0] not in PROBES:
-        print(f"usage: tools/measure.py {{{'|'.join(PROBES)}}} [sf_dir]",
+        print(f"usage: tools/measure.py {{{'|'.join([*PROBES, *MODES])}}} ...",
               file=sys.stderr)
         return 2
     name = argv[0]
-    sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.1"
+    sf_dir = argv[1] if len(argv) > 1 else SF_DIR
     probe, render, out = PROBES[name]
     spark = session(name)
     try:

@@ -475,9 +475,7 @@ def write_bucketed(df: DataFrame, table: str, buckets: int = 16,
     )
 
 
-def resume_filter(
-    transcripts: DataFrame, store, spark: SparkSession, two_phase: bool = True
-) -> DataFrame:
+def resume_filter(transcripts: DataFrame, store, spark: SparkSession) -> DataFrame:
     """Drop already-extracted turns: the left-anti resume join
     (SURVEY.md §2.2 'idempotency predicate').
 
@@ -498,9 +496,6 @@ def resume_filter(
     from pyspark.sql import functions as F
 
     done = store.completed_keys(spark)
-    if not two_phase:
-        return transcripts.join(done, KEYS, "left_anti")
-
     input_keys = transcripts.select(*KEYS)
     done_counts = (
         done.join(input_keys, KEYS, "left_semi")

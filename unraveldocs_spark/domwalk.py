@@ -62,7 +62,6 @@ _PLAIN_SPLIT_RE = re.compile(r"\r?\n")
 KIND_HEADING = "heading"
 KIND_PARAGRAPH = "paragraph"
 KIND_LIST_ITEM = "list_item"
-KIND_PAGE = "page"
 KIND_CODE = "code"
 KIND_OTHER = "other"
 

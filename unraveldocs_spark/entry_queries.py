@@ -177,40 +177,27 @@ def q_winnow_fingerprints(spark, sf_dir):
     )
 
 
-def _cos_e4(df):
-    return df.select(
-        "vec_id", F.round(F.col("cosine") * 10000).cast("bigint").alias("cos_e4")
-    )
-
-
 def q_ann_lsh(spark, sf_dir):
-    from .similarity import lsh_topk
+    from .similarity import cos_e4, lsh_topk, split_query
 
-    e = scan(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    return _cos_e4(
-        lsh_topk(e.filter(F.col("vec_id") != 0), qvec, k=10, probe_hamming=5)
-    )
+    qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
+    return cos_e4(lsh_topk(rest, qvec, k=10, probe_hamming=5))
 
 
 def q_ann_ivf(spark, sf_dir):
-    from .similarity import ivf_topk
+    from .similarity import cos_e4, ivf_topk, split_query
 
-    e = scan(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    return _cos_e4(
-        ivf_topk(e.filter(F.col("vec_id") != 0), qvec, k=10, n_centroids=16, nprobe=6)
-    )
+    qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
+    return cos_e4(ivf_topk(rest, qvec, k=10, n_centroids=16, nprobe=6))
 
 
 def q_ann_pq(spark, sf_dir):
     """PQ-compressed ANN: 8x16 product codebook, integer ADC scan over
     the 8-byte code column (similarity.pq_topk)."""
-    from .similarity import pq_topk
+    from .similarity import pq_topk, split_query
 
-    e = scan(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    return pq_topk(e.filter(F.col("vec_id") != 0), qvec, k=10)
+    qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
+    return pq_topk(rest, qvec, k=10)
 
 
 def q_pdf_layout(spark, sf_dir):

@@ -89,17 +89,6 @@ LINEAGE_SCHEMA = StructType(
     ]
 )
 
-# Conversation rollup — ProcessOcr.updateCollectionStatus (ProcessOcr.java:185-217)
-ROLLUP_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("total_turns", LongType(), False),
-        StructField("completed", LongType(), False),
-        StructField("failed", LongType(), False),
-        StructField("collection_status", StringType(), False),
-    ]
-)
-
 # Corpus-build export shards (jobs/run_corpus_build.py over
 # trainingdata.q_corpus_export_shards): one row per (lang, shard)
 CORPUS_SHARDS_SCHEMA = StructType(

@@ -307,7 +307,6 @@ def truncate_text(text: str, max_length: int = MAX_INPUT_LENGTH) -> str:
 # ---------------------------------------------------------------------------
 
 SINGLE_FILE_BYTE_CAP = 10 * 1024 * 1024  # FileSize.java:7 (10 MB single file)
-BATCH_BYTE_CAP = 50 * 1024 * 1024  # FileSize.java:8 (50 MB per batch)
 
 # error messages (F7) — analogs of the reference's exception texts
 ERR_NO_DATA = "Invalid OCR request: no image data provided"  # TesseractOcrProvider.java:64-69

@@ -69,24 +69,48 @@ def signature_stage(embeddings: DataFrame, dim: int, bits: int = LSH_BITS) -> Da
     )
 
 
+def cosine(a, b):
+    """Cosine similarity of two array columns, in double, computed
+    JVM-side with higher-order functions (no Python in the scan)."""
+    av = F.transform(a, lambda x: x.cast("double"))
+    bv = F.transform(b, lambda x: x.cast("double"))
+    dot = F.aggregate(F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+    na = F.aggregate(av, F.lit(0.0), lambda s, x: s + x * x)
+    nb = F.aggregate(bv, F.lit(0.0), lambda s, x: s + x * x)
+    return dot / (F.sqrt(na) * F.sqrt(nb))
+
+
 def brute_force_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
-    """Exact cosine top-k against a broadcast literal query vector —
-    computed JVM-side with higher-order functions (no Python in the scan)."""
+    """Exact cosine top-k against a broadcast literal query vector."""
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-
-    def cosine(a, b):
-        av = F.transform(a, lambda x: x.cast("double"))
-        bv = F.transform(b, lambda x: x.cast("double"))
-        dot = F.aggregate(F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
-        na = F.aggregate(av, F.lit(0.0), lambda s, x: s + x * x)
-        nb = F.aggregate(bv, F.lit(0.0), lambda s, x: s + x * x)
-        return dot / (F.sqrt(na) * F.sqrt(nb))
-
     return (
         embeddings.select("vec_id", cosine(F.col("embedding"), qlit).alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col("vec_id"))
         .limit(k)
     )
+
+
+def cos_e4(topk: DataFrame) -> DataFrame:
+    """(vec_id, cosine) -> (vec_id, cos_e4): the cosine as a ROUND(x*10^4)
+    BIGINT, the form every ANN query's oracle compares."""
+    return topk.select(
+        "vec_id", F.round(F.col("cosine") * 10000).cast("bigint").alias("cos_e4")
+    )
+
+
+def split_query(embeddings: DataFrame) -> tuple[list[float], DataFrame]:
+    """The registry's ANN convention: vec_id 0 is the query vector and
+    every other vector is the corpus it searches."""
+    row = embeddings.filter(F.col("vec_id") == 0).first()
+    return [float(x) for x in row.embedding], embeddings.filter(F.col("vec_id") != 0)
+
+
+def seed_vectors(embeddings: DataFrame, n: int) -> np.ndarray:
+    """The ``n`` lowest-vec_id vectors as an (n, dim) float64 matrix: the
+    deterministic seed codebook that IVF, PQ and SemDeDup share and their
+    SQL oracles re-derive exactly."""
+    rows = embeddings.orderBy("vec_id").limit(n).collect()
+    return np.asarray([list(r.embedding) for r in rows], dtype=np.float64)
 
 
 def probe_signatures(qsig: int, bits: int, radius: int) -> list[int]:
@@ -226,8 +250,7 @@ def ivf_topk(
 
     At scale the assignment is computed once and stored as a partition
     column, so a query scans only nprobe partitions of the table."""
-    cent_rows = embeddings.orderBy("vec_id").limit(n_centroids).collect()
-    cents = np.asarray([list(r.embedding) for r in cent_rows], dtype=np.float64)
+    cents = seed_vectors(embeddings, n_centroids)
     cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     if kmeans_iters > 0:
         cents_unit = kmeans_refine(embeddings, cents, kmeans_iters)
@@ -313,8 +336,7 @@ def pq_topk(
     reads, no Python."""
     dim = len(query_vec)
     dsub = dim // m_sub
-    cent_rows = embeddings.orderBy("vec_id").limit(ksub).collect()
-    cb = np.asarray([list(r.embedding) for r in cent_rows], dtype=np.float64)
+    cb = seed_vectors(embeddings, ksub)
     codebooks = np.stack([cb[:, m * dsub : (m + 1) * dsub] for m in range(m_sub)])
 
     q = [float(x) for x in query_vec]
@@ -351,14 +373,12 @@ def pq_topk(
     # shortlist 100 / 250 / 500; the residual gap is the deliberately
     # tiny 16-seed codebook (production trains Ksub=256 per subspace with
     # k-means, which shrinks the shortlist needed for a given recall).
-    exact = brute_force_topk(
-        embeddings.join(adc.select("vec_id"), "vec_id", "left_semi"),
-        query_vec,
-        k,
-    )
-    return exact.select(
-        "vec_id",
-        F.round(F.col("cosine") * 10000).cast("bigint").alias("cos_e4"),
+    return cos_e4(
+        brute_force_topk(
+            embeddings.join(adc.select("vec_id"), "vec_id", "left_semi"),
+            query_vec,
+            k,
+        )
     )
 
 

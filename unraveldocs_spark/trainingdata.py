@@ -686,17 +686,6 @@ JOIN keepers kb ON kb.para_id = doc_b
 # Embedding-cosine near-dup — candidates from random-hyperplane LSH bands
 # ---------------------------------------------------------------------------
 
-def _spark_cosine(a, b):
-    av = F.transform(a, lambda x: x.cast("double"))
-    bv = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    na = F.aggregate(av, F.lit(0.0), lambda acc, x: acc + x * x)
-    nb = F.aggregate(bv, F.lit(0.0), lambda acc, x: acc + x * x)
-    return dot / (F.sqrt(na) * F.sqrt(nb))
-
-
 _COS_THRESHOLD = 0.35
 
 
@@ -788,19 +777,10 @@ SQL_DEDUP_EMBEDDING_COSINE = _duck_embedding_cosine_sql()
 # ---------------------------------------------------------------------------
 
 def q_ann_topk(spark, sf_dir):
-    e = scan(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-    qlit = F.array(*[F.lit(x) for x in qvec])
-    cos = _spark_cosine(F.col("embedding"), qlit)
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", cos.alias("_cos"))
-        .orderBy(F.col("_cos").desc(), F.col("vec_id"))
-        .limit(10)
-        .select(
-            "vec_id", F.round(F.col("_cos") * 10000).cast("bigint").alias("cos_e4")
-        )
-    )
+    from .similarity import brute_force_topk, cos_e4, split_query
+
+    qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
+    return cos_e4(brute_force_topk(rest, qvec, 10))
 
 
 SQL_ANN_TOPK = """
@@ -3369,18 +3349,17 @@ def q_semantic_dedup(spark, sf_dir):
     integer-e6 PQ lookup tables."""
     import numpy as np
 
-    from .similarity import _assign_stage
+    from .similarity import _assign_stage, cosine, seed_vectors
 
     e = scan(spark, sf_dir, "embeddings")
-    cent_rows = e.orderBy("vec_id").limit(_SEMDEDUP_K).collect()
-    cents = np.asarray([list(r.embedding) for r in cent_rows], dtype=np.float64)
+    cents = seed_vectors(e, _SEMDEDUP_K)
     cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     assigned = _assign_stage(e, cents_unit, quantize_e4=True)
     v = e.join(assigned, "vec_id").select("vec_id", "centroid_id", "embedding")
     a = v.alias("a")
     b = v.alias("b")
     cos_e4 = F.round(
-        _spark_cosine(F.col("a.embedding"), F.col("b.embedding")) * 10000
+        cosine(F.col("a.embedding"), F.col("b.embedding")) * 10000
     )
     pairs = (
         a.join(
