@@ -2,7 +2,8 @@
 growth 1x and returns the keys its BENCH table is rendered from, so a
 package change that breaks a regenerator fails here, not at the next
 measurement.  The registry modes (time, noop, plans) run on two queries,
-and tools/ keeps one session builder."""
+plans refuses to run without an output directory, and tools/ keeps one
+session builder."""
 
 import glob
 import json
@@ -110,19 +111,33 @@ def test_query_modes(spark, mode, tmp_path, monkeypatch, capsys):
     monkeypatch.setattr(M, "REPO", str(tmp_path))
     monkeypatch.setattr(M, "session", lambda name: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
-    assert M.main([mode, "-n", "1", "--sf", SF, *QUERIES]) == 0
+    out = tmp_path / "plans"
+    assert M.main([mode, "-n", "1", "--sf", SF, "--out", str(out), *QUERIES]) == 0
     line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     if mode == "plans":
         assert line == {"mode": "plans", "n": 2}
-        plans = sorted(os.listdir(tmp_path / "plans" / "r07"))
-        assert plans == [f"{q}_before.txt" for q in QUERIES]
+        plans = sorted(os.listdir(out))
+        assert plans == [f"{q}.txt" for q in QUERIES]
         for name in plans:
-            assert "== Physical Plan ==" in (tmp_path / "plans" / "r07" / name).read_text()
+            assert "== Physical Plan ==" in (out / name).read_text()
     else:
         assert set(line) == {"mode", "sf", "n", "queries"}
         assert (line["mode"], line["sf"], line["n"]) == (mode, SF, 1)
         assert sorted(line["queries"]) == QUERIES
         assert all(sec > 0 for sec in line["queries"].values())
+
+
+def test_plans_needs_out(tmp_path, monkeypatch):
+    """``plans`` without ``--out`` exits non-zero before it builds a
+    session, and writes nothing: no default directory can land on
+    committed plan files."""
+    monkeypatch.setattr(M, "REPO", str(tmp_path))
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(M, "session", lambda name: pytest.fail("session built"))
+    with pytest.raises(SystemExit) as exc:
+        M.main(["plans", "--sf", SF, *QUERIES])
+    assert exc.value.code != 0
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_tools_build_one_session():

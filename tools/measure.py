@@ -3,7 +3,7 @@
     python tools/measure.py <probe> [sf_dir]
     python tools/measure.py time  [-n 3] [--sf DIR] name [name ...]
     python tools/measure.py noop  [-n 3] [--sf DIR] name [name ...]
-    python tools/measure.py plans [--sf DIR] [--suffix _before] [name ...]
+    python tools/measure.py plans --out DIR [--sf DIR] [name ...]
 
 Each probe measures a package builder at growing scale and rewrites its
 whole BENCH file, prose included:
@@ -26,8 +26,8 @@ synthesizes its vectors and ignores sf_dir.
 (query build included; ``time`` ends in ``.collect()`` like a bench.py leaf,
 ``noop`` in the noop sink), and print one JSON line
 ``{"mode", "sf", "n", "queries": {name: best_sec}}``.  ``plans`` writes
-each query's ``.explain("formatted")`` to plans/r07/<name><suffix>.txt
-and prints ``{"mode", "n"}``.  No names means every registry query.
+each query's ``.explain("formatted")`` to <--out DIR>/<name>.txt (no
+default) and prints ``{"mode", "n"}``.  No names means every registry query.
 
 Cores come from SPARK_GRAFT_CPUS and the default sf dir from
 SPARK_GRAFT_SF_DIR, as in bench.py.
@@ -868,11 +868,10 @@ def time_queries(spark, sf_dir: str, qfns: dict, sink, reps: int) -> dict:
     return per
 
 
-def write_plans(spark, sf_dir: str, qfns: dict, suffix: str) -> None:
-    out_dir = os.path.join(REPO, "plans", "r07")
+def write_plans(spark, sf_dir: str, qfns: dict, out_dir: str) -> None:
     os.makedirs(out_dir, exist_ok=True)
     for name, build in qfns.items():
-        path = os.path.join(out_dir, f"{name}{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         with open(path, "w") as fh, redirect_stdout(fh):
             build(spark, sf_dir).explain("formatted")
         print(f"[plans] wrote {path}", file=sys.stderr)
@@ -884,7 +883,7 @@ def run_queries(argv: list[str]) -> int:
     ap.add_argument("names", nargs="*")
     ap.add_argument("-n", type=int, default=3)
     ap.add_argument("--sf", default=SF_DIR)
-    ap.add_argument("--suffix", default="_before")
+    ap.add_argument("--out", metavar="DIR", required=argv[0] == "plans")
     args = ap.parse_intermixed_args(argv)
 
     import __spark_entry__ as entry_mod
@@ -894,7 +893,7 @@ def run_queries(argv: list[str]) -> int:
     spark = session(args.mode)
     try:
         if args.mode == "plans":
-            write_plans(spark, args.sf, qfns, args.suffix)
+            write_plans(spark, args.sf, qfns, args.out)
             line = {"mode": "plans", "n": len(qfns)}
         else:
             per = time_queries(spark, args.sf, qfns, SINKS[args.mode], args.n)

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 
 from . import oracle_sql_gen as osg
 from .extract import extract_stage
+from .generator import FIXTURE, transcripts_spark
 from .pipeline import salted_repartition
 from .queries import _spark_java_word_count, _sql_java_word_count
 from .rollup import conversation_rollup
@@ -45,20 +46,11 @@ def derived_transcripts(spark, sf_dir):
     )
 
 
-def _staged_extract(spark, t):
-    """The production extraction path over a transcripts frame: salted
-    conv_id repartition to at least 16 (or core-count) partitions, then
-    the Arrow-batched extraction stage."""
-    return extract_stage(
-        salted_repartition(t, max(16, spark.sparkContext.defaultParallelism))
-    )
-
-
 def q_extract_turns(spark, sf_dir):
     """Full pipeline slice: derive transcripts -> salted repartition ->
     sortWithinPartitions -> Arrow-batched extraction."""
     t = derived_transcripts(spark, sf_dir)
-    out = _staged_extract(spark, t)
+    out = extract_stage(salted_repartition(t))
     return out.select(
         "conv_id",
         "turn_idx",
@@ -118,11 +110,7 @@ def q_extract_synthetic(spark, sf_dir):
     path; the DuckDB oracle is the sequential pure-Python fixture oracle
     emitted as a VALUES table (oracle_sql_gen.extract_synthetic_sql) —
     per-turn text equality, driver-visible."""
-    from .generator import transcripts_spark
-
-    t = transcripts_spark(
-        spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-    )
+    t = transcripts_spark(spark, **FIXTURE)
     spans_str = F.array_join(
         F.transform(
             F.col("spans"),
@@ -134,7 +122,7 @@ def q_extract_synthetic(spark, sf_dir):
         ),
         "|",
     )
-    return _staged_extract(spark, t).select(
+    return extract_stage(salted_repartition(t)).select(
         "conv_id", "turn_idx", "status", "rule", "extracted_text",
         "error_message", spans_str.alias("spans_str"), "n_chars", "n_words",
     ).orderBy("conv_id", "turn_idx")
@@ -239,7 +227,7 @@ def q_pdf_layout(spark, sf_dir):
         F.to_timestamp(F.lit("2026-01-01 00:00:00")).alias("ts"),
     )
     return (
-        _staged_extract(spark, t)
+        extract_stage(salted_repartition(t))
         .select("conv_id", "turn_idx", "extracted_text", "status", "rule")
         .orderBy("conv_id", "turn_idx")
     )
@@ -404,12 +392,9 @@ def q_encrypted_roundtrip(spark, sf_dir):
     import hashlib
 
     from .crypto import encrypt_turn
-    from .generator import transcripts_spark
     from .oracle import extract_turn
 
-    t = transcripts_spark(
-        spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-    )
+    t = transcripts_spark(spark, **FIXTURE)
 
     def _dg(s):
         if s is None:
@@ -460,12 +445,9 @@ def q_docx_export(spark, sf_dir):
     Scale shape: one zero-shuffle Arrow stage over the transcripts —
     rendering is embarrassingly parallel, exactly how a 100-TB export
     job runs."""
-    from .generator import transcripts_spark
     from .wordexport import docx_stats
 
-    t = transcripts_spark(
-        spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-    )
+    t = transcripts_spark(spark, **FIXTURE)
 
     def run(conv_id, turn_idx, text):
         if text is not None:
@@ -498,11 +480,8 @@ def q_encrypted_export(spark, sf_dir):
     import hashlib
 
     from .crypto import FIXTURE_MASTER_KEY, decrypt_bytes, derive_iv, encrypt_bytes
-    from .generator import transcripts_spark
 
-    t = transcripts_spark(
-        spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-    )
+    t = transcripts_spark(spark, **FIXTURE)
     line = F.concat_ws(": ", "role", "text")
     assembled = (
         t.filter(F.col("text").isNotNull())
@@ -544,27 +523,24 @@ def q_encrypted_export(spark, sf_dir):
 
 # "sql_fn" entries are generated lazily (extract_synthetic runs the pure
 # oracle over ~800 synthetic turns to build its VALUES table)
-_SYNTH = {"n_convs": 30, "hot_factor": 10}
 ENTRY_REGISTRY: dict[str, dict] = {
     "extract_turns": {"builder": q_extract_turns, "sql": SQL_EXTRACT_TURNS},
     "extract_rollup": {"builder": q_extract_rollup, "sql": SQL_EXTRACT_ROLLUP},
     "extract_synthetic": {
         "builder": q_extract_synthetic,
-        "sql_fn": partial(
-            osg.extract_synthetic_sql, **_SYNTH, include_oversize=False
-        ),
+        "sql_fn": osg.extract_synthetic_sql,
     },
     "encrypted_roundtrip": {
         "builder": q_encrypted_roundtrip,
-        "sql_fn": partial(osg.encrypted_roundtrip_sql, **_SYNTH),
+        "sql_fn": osg.encrypted_roundtrip_sql,
     },
     "docx_export": {
         "builder": q_docx_export,
-        "sql_fn": partial(osg.docx_export_sql, **_SYNTH),
+        "sql_fn": osg.docx_export_sql,
     },
     "encrypted_export": {
         "builder": q_encrypted_export,
-        "sql_fn": partial(osg.encrypted_export_sql, **_SYNTH),
+        "sql_fn": osg.encrypted_export_sql,
     },
     "simhash_near_dupes": {
         "builder": q_simhash_near_dupes,

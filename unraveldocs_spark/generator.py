@@ -294,6 +294,28 @@ def turn_ts(conv_idx: int, turn_idx: int) -> dt.datetime:
     return BASE_TS + dt.timedelta(seconds=conv_idx * 10_000 + turn_idx * 7)
 
 
+# The registry's synthetic fixture (extract_synthetic, encrypted_roundtrip,
+# docx_export, encrypted_export, bpe_learn, bpe_encode): 30 conversations,
+# the hot one 10x the median, no oversize turn.  The Spark builders pass it
+# to transcripts_spark and the sequential oracles to transcript_rows, so
+# the two sides cannot drift.
+FIXTURE = {"n_convs": 30, "hot_factor": 10, "include_oversize": False}
+
+
+def transcript_rows(
+    n_convs: int,
+    median_turns: int = 18,
+    hot_factor: int = 100,
+    include_oversize: bool = True,
+):
+    """(conv_id, turn_idx, role, text, tool) in (conv_id, turn_idx) order:
+    row for row what transcripts_spark generates for the same arguments,
+    without the timestamp."""
+    for c, size in enumerate(conv_sizes(n_convs, median_turns, hot_factor)):
+        for t in range(size):
+            yield (conv_name(c), t, *make_turn(c, t, include_oversize))
+
+
 def transcripts_pandas(
     n_convs: int,
     median_turns: int = 18,
@@ -328,10 +350,12 @@ def transcripts_spark(
     """
     from pyspark.sql import functions as F
 
+    from .scanfan import tasks
     from .schemas import TRANSCRIPTS_SCHEMA, map_rows
 
     sizes = conv_sizes(n_convs, median_turns, hot_factor)
-    parallelism = parallelism or spark.sparkContext.defaultParallelism
+    # the payload fill is a Python stage
+    parallelism = parallelism or tasks(spark, python=True)
     skeleton = (
         spark.createDataFrame(
             [(c, s) for c, s in enumerate(sizes)], "conv_idx INT, size INT"

@@ -309,7 +309,7 @@ def _md5_56(text: str | None) -> int | None:
     return int(h[:14], 16)
 
 
-def encrypted_roundtrip_sql(n_convs: int = 30, hot_factor: int = 10) -> str:
+def encrypted_roundtrip_sql() -> str:
     """Sequential pure-Python oracle for the AES-GCM roundtrip query
     (entry_queries.q_encrypted_roundtrip), emitted as a VALUES table:
     encrypt the same deterministic subset of turns with the same fixture
@@ -322,34 +322,31 @@ def encrypted_roundtrip_sql(n_convs: int = 30, hot_factor: int = 10) -> str:
     Regenerates at oracle_sql() call time, so it tracks crypto/dispatch
     semantics automatically (same contract as extract_synthetic_sql)."""
     from .crypto import encrypt_turn
-    from .generator import conv_name, conv_sizes, make_turn
+    from .generator import FIXTURE, transcript_rows
     from .oracle import extract_turn
 
     rows = []
-    for c, size in enumerate(conv_sizes(n_convs, 18, hot_factor)):
-        cid = conv_name(c)
-        for t in range(size):
-            role, text, tool = make_turn(c, t, include_oversize=False)
-            enc_text, is_enc, iv_b64 = encrypt_turn(cid, t, text)
-            r_enc = extract_turn(role, tool, enc_text)
-            r_plain = extract_turn(role, tool, text)
-            dg = _md5_56(r_enc.extracted_text)
-            dg_plain = _md5_56(r_plain.extracted_text)
-            rows.append(
-                "(" + ", ".join(
-                    (
-                        _sql_str(cid),
-                        str(t),
-                        str(is_enc),
-                        _sql_str(iv_b64),
-                        _sql_str(r_enc.status),
-                        _sql_str(r_enc.rule),
-                        _sql_str(r_enc.error_message),
-                        "NULL" if dg is None else str(dg),
-                        str(int(dg == dg_plain)),
-                    )
-                ) + ")"
-            )
+    for cid, t, role, text, tool in transcript_rows(**FIXTURE):
+        enc_text, is_enc, iv_b64 = encrypt_turn(cid, t, text)
+        r_enc = extract_turn(role, tool, enc_text)
+        r_plain = extract_turn(role, tool, text)
+        dg = _md5_56(r_enc.extracted_text)
+        dg_plain = _md5_56(r_plain.extracted_text)
+        rows.append(
+            "(" + ", ".join(
+                (
+                    _sql_str(cid),
+                    str(t),
+                    str(is_enc),
+                    _sql_str(iv_b64),
+                    _sql_str(r_enc.status),
+                    _sql_str(r_enc.rule),
+                    _sql_str(r_enc.error_message),
+                    "NULL" if dg is None else str(dg),
+                    str(int(dg == dg_plain)),
+                )
+            ) + ")"
+        )
     values = ",\n".join(rows)
     return f"""
 SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx,
@@ -364,26 +361,21 @@ ORDER BY conv_id, turn_idx
 """
 
 
-def encrypted_export_sql(n_convs: int = 30, hot_factor: int = 10) -> str:
+def encrypted_export_sql() -> str:
     """Sequential oracle for the encrypted export sink
     (entry_queries.q_encrypted_export): assemble each conversation's
     turn-ordered "role: text" payload, encrypt with the same fixture
     key + shard-derived IV, and emit the manifest as a VALUES table."""
     import base64
     import hashlib
+    import itertools
 
     from .crypto import FIXTURE_MASTER_KEY, decrypt_bytes, derive_iv, encrypt_bytes
-    from .generator import conv_name, conv_sizes, make_turn
+    from .generator import FIXTURE, transcript_rows
 
     rows = []
-    for c, size in enumerate(conv_sizes(n_convs, 18, hot_factor)):
-        cid = conv_name(c)
-        lines = []
-        for t in range(size):
-            role, text, _tool = make_turn(c, t, include_oversize=False)
-            if text is None:
-                continue
-            lines.append(f"{role}: {text}")
+    for cid, turns in itertools.groupby(transcript_rows(**FIXTURE), lambda r: r[0]):
+        lines = [f"{role}: {text}" for _, _, role, text, _ in turns if text is not None]
         if not lines:
             continue
         pt = "\n".join(lines).encode("utf-8", errors="surrogatepass")
@@ -417,13 +409,13 @@ ORDER BY conv_id
 """
 
 
-def docx_export_sql(n_convs: int = 30, hot_factor: int = 10) -> str:
+def docx_export_sql() -> str:
     """Sequential pure-Python oracle for the DOCX export query
     (entry_queries.q_docx_export): run the faithful writer mirror
     (wordexport.docx_stats) over every non-null turn payload of the same
     deterministic corpus and emit the per-turn counts + binary digest as
     a VALUES table."""
-    from .generator import conv_name, conv_sizes, make_turn
+    from .generator import FIXTURE, transcript_rows
     from .wordexport import docx_stats
 
     cols = (
@@ -431,18 +423,13 @@ def docx_export_sql(n_convs: int = 30, hot_factor: int = 10) -> str:
         "n_breaks", "n_list_items", "n_headings", "docx_digest", "docx_size",
     )
     rows = []
-    for c, size in enumerate(conv_sizes(n_convs, 18, hot_factor)):
-        cid = conv_name(c)
-        for t in range(size):
-            _role, text, _tool = make_turn(c, t, include_oversize=False)
-            if text is None:
-                continue
-            s = docx_stats(text)
-            rows.append(
-                "(" + ", ".join(
-                    [_sql_str(cid), str(t)] + [str(s[k]) for k in cols]
-                ) + ")"
-            )
+    for cid, t, _role, text, _tool in transcript_rows(**FIXTURE):
+        if text is None:
+            continue
+        s = docx_stats(text)
+        rows.append(
+            "(" + ", ".join([_sql_str(cid), str(t)] + [str(s[k]) for k in cols]) + ")"
+        )
     values = ",\n".join(rows)
     int_casts = ",\n       ".join(
         f"CAST({k} AS {'BIGINT' if k == 'docx_digest' else 'INT'}) AS {k}"
@@ -458,39 +445,35 @@ ORDER BY conv_id, turn_idx
 """
 
 
-def extract_synthetic_sql(
-    n_convs: int = 30, hot_factor: int = 10, include_oversize: bool = False
-) -> str:
+def extract_synthetic_sql() -> str:
     """Evaluate the pure-Python oracle (oracle.extract_turn) sequentially
     over the same deterministic synthetic transcripts the Spark query
     generates, and emit the expected rows as a VALUES table.  The driver
     then verifies the distributed pipeline (salted repartition +
     Arrow-batched mapInArrow) reproduced the sequential reference with
     exact per-turn text equality."""
-    from .generator import conv_name, conv_sizes, make_turn
+    from .generator import FIXTURE, transcript_rows
     from .oracle import extract_turn
 
     rows = []
-    for c, size in enumerate(conv_sizes(n_convs, 18, hot_factor)):
-        for t in range(size):
-            role, text, tool = make_turn(c, t, include_oversize)
-            r = extract_turn(role, tool, text)
-            spans_str = "|".join(f"{s}-{e}:{k}" for (s, e, k) in r.spans)
-            rows.append(
-                "(" + ", ".join(
-                    (
-                        _sql_str(conv_name(c)),
-                        str(t),
-                        _sql_str(r.status),
-                        _sql_str(r.rule),
-                        _sql_str(r.extracted_text),
-                        _sql_str(r.error_message),
-                        _sql_str(spans_str),
-                        str(r.n_chars),
-                        str(r.n_words),
-                    )
-                ) + ")"
-            )
+    for cid, t, role, text, tool in transcript_rows(**FIXTURE):
+        r = extract_turn(role, tool, text)
+        spans_str = "|".join(f"{s}-{e}:{k}" for (s, e, k) in r.spans)
+        rows.append(
+            "(" + ", ".join(
+                (
+                    _sql_str(cid),
+                    str(t),
+                    _sql_str(r.status),
+                    _sql_str(r.rule),
+                    _sql_str(r.extracted_text),
+                    _sql_str(r.error_message),
+                    _sql_str(spans_str),
+                    str(r.n_chars),
+                    str(r.n_words),
+                )
+            ) + ")"
+        )
     values = ",\n".join(rows)
     return f"""
 SELECT conv_id, CAST(turn_idx AS INT) AS turn_idx, status, rule,

@@ -31,19 +31,25 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extract import extract_stage
 from .rollup import conversation_rollup
+from .scanfan import tasks
 
 DEFAULT_SALT = 16
 
 
-def salted_repartition(transcripts: DataFrame, num_partitions: int) -> DataFrame:
+def salted_repartition(
+    transcripts: DataFrame, num_partitions: int | None = None
+) -> DataFrame:
     """repartition on (conv_id, pmod(hash(turn_idx), salt)) then restore
-    (conv_id, turn_idx) order within each partition.
+    (conv_id, turn_idx) order within each partition.  ``num_partitions``
+    defaults to the Python-stage width of :func:`scanfan.tasks`: the
+    staged frame feeds the extraction stage.
 
     The salt count is 4x the partition count (at least DEFAULT_SALT): a
     hot conversation then spreads over many more keys than there are
     partitions, so the balls-in-bins collisions of hash partitioning
     can't stack several whole salt-groups of the hot conversation onto
     one task."""
+    num_partitions = num_partitions or tasks(transcripts.sparkSession, python=True)
     salt = max(DEFAULT_SALT, 4 * num_partitions)
     return (
         transcripts.repartition(
@@ -149,7 +155,6 @@ def run_extraction(
     from .checkpoint import resume_filter
 
     run_id = uuid.uuid4().hex[:12]
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism * 2
 
     todo = transcripts
     if store is not None:

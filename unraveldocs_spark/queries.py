@@ -2070,7 +2070,7 @@ def q_storage_admission(spark, sf_dir):
     Exchange is the per-owner admission window, keyed by owner pool —
     team pools are the natural hot keys and would be salted upstream
     exactly like the conv_id extraction pipeline."""
-    e = scan(spark, sf_dir, "events", cols=["event_id", "user_id", "ts", "value"], fan=True)
+    e = scan(spark, sf_dir, "events", cols=["event_id", "user_id", "ts", "value"])
     c = scan(spark, sf_dir, "customer")
     ck = F.col("c_custkey")
     team_id = (ck % 40).cast("bigint")

@@ -69,8 +69,21 @@ def _row_groups(path: str) -> int:
     return total
 
 
+def tasks(spark, python: bool = False) -> int:
+    """The package's one task-count rule: one task per core
+    (``defaultParallelism``), doubled for stages that run Python through
+    ``map_rows``/``map_batches``.  Python rows vary in cost by orders of
+    magnitude (a plain turn vs a page envelope), so a second wave lets
+    the scheduler even out a slow task for ~50 ms of per-wave overhead.
+    Every partition count the package picks comes from here; AQE applies
+    the same one-task-per-core width to every other shuffle (session.py,
+    the ``minPartitionSize`` floor)."""
+    cores = spark.sparkContext.defaultParallelism
+    return 2 * cores if python else cores
+
+
 def fan_out(spark, df, path: str):
-    """Repartition ``df`` to the session's default parallelism iff the
+    """Repartition ``df`` to one task per core (:func:`tasks`) iff the
     parquet input at ``path`` has fewer row groups than cores (the scan
     cannot reach core-count parallelism on its own).  Identity at scale.
 
@@ -84,7 +97,7 @@ def fan_out(spark, df, path: str):
     materialized input instead of re-scanning.  At production scale the
     branch is not taken, so parquet filter/column pushdown is untouched
     where it actually matters."""
-    cores = spark.sparkContext.defaultParallelism
+    cores = tasks(spark)
     if _row_groups(path) >= cores:
         return df
     return df.repartition(cores).localCheckpoint()

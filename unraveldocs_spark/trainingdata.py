@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .generator import mix64
+from .generator import FIXTURE, mix64, transcript_rows, transcripts_spark
 # fan_out stays bound here although every scan goes through scan():
 # perfbench/workloads.py times the fan-out by patching
 # trainingdata.fan_out and scanfan.fan_out by name
@@ -3947,6 +3947,21 @@ def _bpe_merge(s: tuple[str, ...], left: str, right: str) -> tuple[str, ...]:
     return tuple(ns)
 
 
+def _learn_merges(t) -> list:
+    """Learn the merge table from transcripts ``t``: one distributed
+    word-frequency pass, a TakeOrdered fold of the top _BPE_VOCAB_CAP
+    words by (freq desc, word), then the merge loop on the driver."""
+    words = (
+        t.filter(F.col("text").isNotNull())
+        .select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w"))
+        .filter((F.col("w") != "") & (F.length("w") >= 2))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
+    )
+    top = words.orderBy(F.col("freq").desc(), "w").limit(_BPE_VOCAB_CAP).collect()
+    return bpe_merges({r["w"]: int(r["freq"]) for r in top}, _BPE_LEARN_MERGES)
+
+
 def q_bpe_learn(spark, sf_dir):
     """Full iterated BPE tokenizer training over the synthetic corpus —
     the production shape: ONE distributed pass builds the
@@ -3962,20 +3977,7 @@ def q_bpe_learn(spark, sf_dir):
     a TakeOrdered, not an unbounded collect.  At 100 TB the vocab cap is
     the standard trainer knob (HF ``vocab_size``/``limit_alphabet``
     analog)."""
-    from .generator import transcripts_spark
-
-    t = transcripts_spark(
-        spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-    )
-    words = (
-        t.filter(F.col("text").isNotNull())
-        .select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w"))
-        .filter((F.col("w") != "") & (F.length("w") >= 2))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-    )
-    top = words.orderBy(F.col("freq").desc(), "w").limit(_BPE_VOCAB_CAP).collect()
-    merges = bpe_merges({r["w"]: int(r["freq"]) for r in top}, _BPE_LEARN_MERGES)
+    merges = _learn_merges(transcripts_spark(spark, **FIXTURE))
     rows = [
         (i, l, r, l + r, c) for i, (l, r, c) in enumerate(merges)
     ]
@@ -3986,21 +3988,19 @@ def q_bpe_learn(spark, sf_dir):
 
 
 def _bpe_learn_sql() -> str:
-    """VALUES oracle: the same merge loop over the same corpus counted
-    sequentially in pure Python (pandas generator path — no Spark).
+    """VALUES oracle: the same merge loop over the same FIXTURE corpus
+    counted sequentially in pure Python (no Spark).
 
     Tokenization MUST match the Spark side's Java-regex ``\\s+`` (ASCII
     only: no NBSP/NEL/ideographic space) — Python re ``\\s`` is
     Unicode-aware and would silently diverge the word-frequency table on
     the first non-ASCII whitespace (the r2 whitespace invariant), so both
     sides split on ``semantics._JAVA_RE_WS_SPLIT``."""
-    from .generator import transcripts_pandas
     from .semantics import _JAVA_RE_WS_SPLIT
 
-    pdf = transcripts_pandas(30, hot_factor=10, include_oversize=False)
     freqs: dict[str, int] = {}
     split = _JAVA_RE_WS_SPLIT
-    for text in pdf["text"]:
+    for *_, text, _tool in transcript_rows(**FIXTURE):
         if text is None:
             continue
         for w in split.split(text.lower()):
@@ -4952,34 +4952,14 @@ def q_bpe_encode(spark, sf_dir):
     canonical tokenize-the-corpus stage: corpus cost is one Arrow
     pass, and the learn phase's corpus cost is the one word-count
     Exchange measured under ``bpe_learn``."""
-    from .generator import transcripts_spark
     from .schemas import map_rows
 
-    words_df = (
-        transcripts_spark(
-            spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-        )
-        .filter(F.col("text").isNotNull())
-        .select(F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("w"))
-        .filter((F.col("w") != "") & (F.length("w") >= 2))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-    )
-    top = (
-        words_df.orderBy(F.col("freq").desc(), "w").limit(_BPE_VOCAB_CAP).collect()
-    )
-    merges = bpe_merges(
-        {r["w"]: int(r["freq"]) for r in top}, _BPE_LEARN_MERGES
-    )
-
-    pairs = [(left, right) for left, right, _ in merges]
+    t = transcripts_spark(spark, **FIXTURE)
+    pairs = [(left, right) for left, right, _ in _learn_merges(t)]
 
     def encode(conv_id, turn_idx, text):
         yield _transcript_bpe_row(pairs, conv_id, turn_idx, text)
 
-    t = transcripts_spark(
-        spark, 30, hot_factor=10, include_oversize=False, parallelism=8
-    )
     return map_rows(
         t.filter(F.col("text").isNotNull()).select("conv_id", "turn_idx", "text"),
         encode,
@@ -4990,17 +4970,16 @@ def q_bpe_encode(spark, sf_dir):
 
 def _bpe_encode_sql() -> str:
     """VALUES oracle: learn the merge table and encode every turn in
-    pure sequential Python over the pandas generator path (same
+    pure sequential Python over the FIXTURE rows (same
     tokenization, same ``bpe_merges``, same ``bpe_apply``, same md5-56
     digest helper), regenerated at call time so it tracks semantics
     automatically."""
-    from .generator import transcripts_pandas
     from .semantics import _JAVA_RE_WS_SPLIT
 
-    pdf = transcripts_pandas(30, hot_factor=10, include_oversize=False)
-    pdf = pdf[pdf["text"].notna()]
+    turns = [(c, t, text) for c, t, _role, text, _tool in transcript_rows(**FIXTURE)
+             if text is not None]
     freqs: dict[str, int] = {}
-    for text in pdf["text"]:
+    for _c, _t, text in turns:
         for w in _JAVA_RE_WS_SPLIT.split(text.lower()):
             if w and len(w) >= 2:
                 freqs[w] = freqs.get(w, 0) + 1
@@ -5009,10 +4988,7 @@ def _bpe_encode_sql() -> str:
     )
     merges = bpe_merges(top, _BPE_LEARN_MERGES)
     pairs = [(left, right) for left, right, _ in merges]
-    rows = [
-        _transcript_bpe_row(pairs, c, int(t), text)
-        for c, t, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"])
-    ]
+    rows = [_transcript_bpe_row(pairs, c, t, text) for c, t, text in turns]
 
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
