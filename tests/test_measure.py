@@ -112,7 +112,8 @@ def test_query_modes(spark, mode, tmp_path, monkeypatch, capsys):
     monkeypatch.setattr(M, "session", lambda name: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
     out = tmp_path / "plans"
-    assert M.main([mode, "-n", "1", "--sf", SF, "--out", str(out), *QUERIES]) == 0
+    opts = ["--out", str(out)] if mode == "plans" else ["-n", "1"]
+    assert M.main([mode, "--sf", SF, *opts, *QUERIES]) == 0
     line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     if mode == "plans":
         assert line == {"mode": "plans", "n": 2}
@@ -128,15 +129,16 @@ def test_query_modes(spark, mode, tmp_path, monkeypatch, capsys):
 
 
 def test_plans_needs_out(tmp_path, monkeypatch):
-    """``plans`` without ``--out`` exits non-zero before it builds a
-    session, and writes nothing: no default directory can land on
-    committed plan files."""
+    """``plans`` without ``--out``, or another mode with it, exits
+    non-zero before it builds a session, and writes nothing: no default
+    directory can land on committed plan files."""
     monkeypatch.setattr(M, "REPO", str(tmp_path))
     monkeypatch.chdir(tmp_path)
     monkeypatch.setattr(M, "session", lambda name: pytest.fail("session built"))
-    with pytest.raises(SystemExit) as exc:
-        M.main(["plans", "--sf", SF, *QUERIES])
-    assert exc.value.code != 0
+    for argv in (["plans"], ["time", "--out", str(tmp_path / "plans")]):
+        with pytest.raises(SystemExit) as exc:
+            M.main([*argv, "--sf", SF, *QUERIES])
+        assert exc.value.code != 0
     assert list(tmp_path.iterdir()) == []
 
 

@@ -1,5 +1,7 @@
-"""Every partition count the package picks comes from one rule,
+"""Every stage width the package sets explicitly comes from one rule,
 ``scanfan.tasks``: a task per core, doubled for Python stages.
+(``session.build_session``'s shuffle-partition default is the one width
+still chosen elsewhere.)
 
 The structural tests pin that nothing else reads the core count and no
 call passes a literal partition count.  The plan tests build three

@@ -868,23 +868,16 @@ def time_queries(spark, sf_dir: str, qfns: dict, sink, reps: int) -> dict:
     return per
 
 
-def write_plans(spark, sf_dir: str, qfns: dict, out_dir: str) -> None:
-    os.makedirs(out_dir, exist_ok=True)
-    for name, build in qfns.items():
-        path = os.path.join(out_dir, f"{name}.txt")
-        with open(path, "w") as fh, redirect_stdout(fh):
-            build(spark, sf_dir).explain("formatted")
-        print(f"[plans] wrote {path}", file=sys.stderr)
-
-
 def run_queries(argv: list[str]) -> int:
     ap = argparse.ArgumentParser(prog="tools/measure.py")
     ap.add_argument("mode", choices=MODES)
     ap.add_argument("names", nargs="*")
     ap.add_argument("-n", type=int, default=3)
     ap.add_argument("--sf", default=SF_DIR)
-    ap.add_argument("--out", metavar="DIR", required=argv[0] == "plans")
+    ap.add_argument("--out", metavar="DIR")
     args = ap.parse_intermixed_args(argv)
+    if (args.mode == "plans") != (args.out is not None):
+        ap.error("--out DIR is required by plans and taken by no other mode")
 
     import __spark_entry__ as entry_mod
 
@@ -893,7 +886,12 @@ def run_queries(argv: list[str]) -> int:
     spark = session(args.mode)
     try:
         if args.mode == "plans":
-            write_plans(spark, args.sf, qfns, args.out)
+            os.makedirs(args.out, exist_ok=True)
+            for name, build in qfns.items():
+                path = os.path.join(args.out, f"{name}.txt")
+                with open(path, "w") as fh, redirect_stdout(fh):
+                    build(spark, args.sf).explain("formatted")
+                print(f"[plans] wrote {path}", file=sys.stderr)
             line = {"mode": "plans", "n": len(qfns)}
         else:
             per = time_queries(spark, args.sf, qfns, SINKS[args.mode], args.n)

@@ -301,36 +301,26 @@ def turn_ts(conv_idx: int, turn_idx: int) -> dt.datetime:
 # the two sides cannot drift.
 FIXTURE = {"n_convs": 30, "hot_factor": 10, "include_oversize": False}
 
-
 def transcript_rows(
     n_convs: int,
     median_turns: int = 18,
     hot_factor: int = 100,
     include_oversize: bool = True,
 ):
-    """(conv_id, turn_idx, role, text, tool) in (conv_id, turn_idx) order:
-    row for row what transcripts_spark generates for the same arguments,
-    without the timestamp."""
-    for c, size in enumerate(conv_sizes(n_convs, median_turns, hot_factor)):
-        for t in range(size):
-            yield (conv_name(c), t, *make_turn(c, t, include_oversize))
-
-
-def transcripts_pandas(
-    n_convs: int,
-    median_turns: int = 18,
-    hot_factor: int = 100,
-    include_oversize: bool = True,
-) -> pd.DataFrame:
-    rows = []
+    """The sequential generator: (conv_id, turn_idx, role, text, tool, ts)
+    in (conv_id, turn_idx) order, row for row what transcripts_spark
+    generates for the same arguments."""
     for c, size in enumerate(conv_sizes(n_convs, median_turns, hot_factor)):
         for t in range(size):
             role, text, tool = make_turn(c, t, include_oversize)
-            rows.append(
-                (conv_name(c), t, role, text, tool, turn_ts(c, t).replace(tzinfo=None))
-            )
+            yield (conv_name(c), t, role, text, tool, turn_ts(c, t).replace(tzinfo=None))
+
+
+def transcripts_pandas(*args, **kwargs) -> pd.DataFrame:
+    """transcript_rows as a pandas frame."""
     return pd.DataFrame(
-        rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+        list(transcript_rows(*args, **kwargs)),
+        columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
     )
 
 

@@ -326,7 +326,7 @@ def encrypted_roundtrip_sql() -> str:
     from .oracle import extract_turn
 
     rows = []
-    for cid, t, role, text, tool in transcript_rows(**FIXTURE):
+    for cid, t, role, text, tool, _ts in transcript_rows(**FIXTURE):
         enc_text, is_enc, iv_b64 = encrypt_turn(cid, t, text)
         r_enc = extract_turn(role, tool, enc_text)
         r_plain = extract_turn(role, tool, text)
@@ -375,7 +375,7 @@ def encrypted_export_sql() -> str:
 
     rows = []
     for cid, turns in itertools.groupby(transcript_rows(**FIXTURE), lambda r: r[0]):
-        lines = [f"{role}: {text}" for _, _, role, text, _ in turns if text is not None]
+        lines = [f"{role}: {text}" for _, _, role, text, *_ in turns if text is not None]
         if not lines:
             continue
         pt = "\n".join(lines).encode("utf-8", errors="surrogatepass")
@@ -423,7 +423,7 @@ def docx_export_sql() -> str:
         "n_breaks", "n_list_items", "n_headings", "docx_digest", "docx_size",
     )
     rows = []
-    for cid, t, _role, text, _tool in transcript_rows(**FIXTURE):
+    for cid, t, _role, text, *_ in transcript_rows(**FIXTURE):
         if text is None:
             continue
         s = docx_stats(text)
@@ -456,7 +456,7 @@ def extract_synthetic_sql() -> str:
     from .oracle import extract_turn
 
     rows = []
-    for cid, t, role, text, tool in transcript_rows(**FIXTURE):
+    for cid, t, role, text, tool, _ts in transcript_rows(**FIXTURE):
         r = extract_turn(role, tool, text)
         spans_str = "|".join(f"{s}-{e}:{k}" for (s, e, k) in r.spans)
         rows.append(

@@ -75,9 +75,11 @@ def tasks(spark, python: bool = False) -> int:
     ``map_rows``/``map_batches``.  Python rows vary in cost by orders of
     magnitude (a plain turn vs a page envelope), so a second wave lets
     the scheduler even out a slow task for ~50 ms of per-wave overhead.
-    Every partition count the package picks comes from here; AQE applies
-    the same one-task-per-core width to every other shuffle (session.py,
-    the ``minPartitionSize`` floor)."""
+    Every stage width the package sets explicitly comes from here; AQE
+    coalesces other shuffles to the same one-task-per-core width
+    (session.py, the ``minPartitionSize`` floor).  Their starting width,
+    ``build_session``'s ``spark.sql.shuffle.partitions`` default, is still
+    chosen in session.py."""
     cores = spark.sparkContext.defaultParallelism
     return 2 * cores if python else cores
 

@@ -36,15 +36,17 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # scanfan.tasks' one-task-per-core rule, applied by AQE to every
-        # other shuffle: with parallelismFirst (the default) coalescing
-        # targets totalBytes/cores per partition, but never below this
-        # floor.  The 1m default collapses BYTE-small shuffles (narrow
-        # band/candidate rows) to 1-2 partitions and serializes the
-        # compute-heavy stage that reads them; without the floor, at
-        # sf0.1 on 4 cores, dedup_embedding_cosine went 5.4 -> 7.5 s,
-        # dedup_paragraph 4.2 -> 4.9 s and semantic_dedup 11.3 -> 12.8 s.
-        # At production volumes totalBytes/cores >> 64k: inert.
+        # scanfan.tasks' one-task-per-core rule, applied by AQE when it
+        # coalesces every other shuffle (shuffle_partitions above is
+        # still the starting width): with parallelismFirst (the default)
+        # coalescing targets totalBytes/cores per partition, but never
+        # below this floor.  The 1m default collapses BYTE-small
+        # shuffles (narrow band/candidate rows) to 1-2 partitions and
+        # serializes the compute-heavy stage that reads them; without
+        # the floor, at sf0.1 on 4 cores, dedup_embedding_cosine went
+        # 5.4 -> 7.5 s, dedup_paragraph 4.2 -> 4.9 s and semantic_dedup
+        # 11.3 -> 12.8 s.  At production volumes totalBytes/cores >> 64k:
+        # inert.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))

@@ -4000,7 +4000,7 @@ def _bpe_learn_sql() -> str:
 
     freqs: dict[str, int] = {}
     split = _JAVA_RE_WS_SPLIT
-    for *_, text, _tool in transcript_rows(**FIXTURE):
+    for _c, _t, _role, text, *_ in transcript_rows(**FIXTURE):
         if text is None:
             continue
         for w in split.split(text.lower()):
@@ -4976,7 +4976,7 @@ def _bpe_encode_sql() -> str:
     automatically."""
     from .semantics import _JAVA_RE_WS_SPLIT
 
-    turns = [(c, t, text) for c, t, _role, text, _tool in transcript_rows(**FIXTURE)
+    turns = [(c, t, text) for c, t, _role, text, *_ in transcript_rows(**FIXTURE)
              if text is not None]
     freqs: dict[str, int] = {}
     for _c, _t, text in turns:
