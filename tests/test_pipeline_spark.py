@@ -592,7 +592,8 @@ class TestEditUpsert:
 
     def test_upsert_evaluates_updates_once(self, spark, tmp_path):
         """Every update row passes through the updates frame's Python
-        function once, and the compacted snapshot holds each key once."""
+        function once, the upsert snapshot holds just the updates, and
+        the merged state holds each key once."""
         from pyspark.sql import functions as F
 
         from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
@@ -621,12 +622,14 @@ class TestEditUpsert:
         with open(log) as f:
             seen = f.read().splitlines()
         assert len(seen) == n_updates and len(set(seen)) == n_updates
-        compacted = spark.read.parquet(
+        written = spark.read.parquet(
             os.path.join(store.snap_dir, snap, "results")
         )
-        assert compacted.count() == n_before
-        assert compacted.select("conv_id", "turn_idx").distinct().count() == n_before
-        assert compacted.filter(F.col("edited_by") == "once").count() == n_updates
+        assert written.count() == n_updates
+        state = store.results(spark)
+        assert state.count() == n_before
+        assert state.select("conv_id", "turn_idx").distinct().count() == n_before
+        assert state.filter(F.col("edited_by") == "once").count() == n_updates
 
 
 class TestSearchRankedAnalyzer:
@@ -848,7 +851,7 @@ class TestStoreMaintenance:
         state_before = {
             (r.conv_id, r.turn_idx) for r in store.completed_keys(spark).collect()
         }
-        store.upsert(store.results(spark).limit(1), spark)  # compaction
+        assert store.maybe_compact(spark, threshold=0, expire=False)
 
         expired = store.expire_snapshots()
         assert len(expired) == n_snaps_before

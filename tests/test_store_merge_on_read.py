@@ -1,0 +1,291 @@
+"""Merge-on-read DirCheckpointStore: an upsert publishes only its rows, a
+delete only its keys, and readers fold them in.  Every test here checks
+the fold against the copy-on-write semantics it replaces — each
+operation rewriting the whole state — computed in pure Python."""
+
+import io
+import os
+import random
+from contextlib import redirect_stdout
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from unraveldocs_spark import generator as G
+from unraveldocs_spark import oracle as O
+from unraveldocs_spark.checkpoint import DirCheckpointStore
+from unraveldocs_spark.pipeline import run_extraction
+from unraveldocs_spark.schemas import EXTRACTIONS_SCHEMA, TRANSCRIPTS_SCHEMA
+
+DOC_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType(), False),
+    T.StructField("summary", T.StringType(), True),
+    T.StructField("version", T.IntegerType(), True),
+])
+
+
+def _canon(row) -> tuple:
+    """A row as plain tuples (nested structs included), for comparing a
+    collected Row with a model row."""
+    return tuple(
+        [tuple(s) for s in v] if isinstance(v, list) else v for v in row
+    )
+
+
+class Fold:
+    """The copy-on-write reference: the state is a list of rows and every
+    operation rewrites it whole.  ``at`` keeps the state as of each
+    snapshot, for ``snapshot_diff``."""
+
+    def __init__(self, n_keys: int):
+        self.n_keys, self.rows, self.at = n_keys, [], {}
+
+    def key(self, row) -> tuple:
+        return tuple(row[: self.n_keys])
+
+    def keys(self, rows=None) -> set:
+        return {self.key(r) for r in (self.rows if rows is None else rows)}
+
+    def append(self, rows):
+        self.rows = self.rows + [_canon(r) for r in rows]
+
+    def upsert(self, rows):
+        rows = [_canon(r) for r in rows]
+        gone = self.keys(rows)
+        self.rows = [r for r in self.rows if self.key(r) not in gone] + rows
+
+    def delete(self, keys):
+        gone = set(map(tuple, keys))
+        self.rows = [r for r in self.rows if self.key(r) not in gone]
+
+    def diff(self, a: str, b: str) -> list:
+        ka, kb = self.keys(self.at[a]), self.keys(self.at[b])
+        return sorted(
+            [self.key(r) + ("added",) for r in self.at[b] if self.key(r) not in ka]
+            + [self.key(r) + ("removed",) for r in self.at[a] if self.key(r) not in kb]
+        )
+
+    def check(self, spark, store: DirCheckpointStore, snap: str | None):
+        """results() equals the fold; with a new ``snap``, snapshot_diff
+        from the previous snapshot equals the fold's key diff."""
+        got = sorted((_canon(r) for r in store.results(spark).collect()), key=repr)
+        assert got == sorted(self.rows, key=repr)
+        if snap is None:
+            return
+        prev = list(self.at)[-1] if self.at else None
+        self.at[snap] = list(self.rows)
+        if prev is not None:
+            diff = store.snapshot_diff(spark, prev, snap).collect()
+            assert sorted(tuple(r) for r in diff) == self.diff(prev, snap)
+
+
+def _extracted(rows) -> list:
+    """What extraction writes for transcript ``rows``, from the oracle."""
+    out = []
+    for conv_id, turn_idx, role, text, tool, _ts in rows:
+        e = O.extract_turn(role, tool, text)
+        out.append((
+            conv_id, turn_idx, e.extracted_text, [tuple(s) for s in e.spans],
+            e.status, e.error_message, e.content_format, e.rule, e.n_chars,
+            e.n_words, None, None,
+        ))
+    return out
+
+
+def _edited(row, tag: str) -> tuple:
+    return row[:10] + (f"<p>{tag}</p>", tag)
+
+
+def test_extraction_store_matches_copy_on_write_fold(spark, tmp_path):
+    """A scripted then seeded-random run of append, upsert, delete,
+    compaction and resume-run_extraction on an extraction store; after
+    every operation results() and snapshot_diff equal the fold."""
+    inputs = list(G.transcript_rows(4, median_turns=4, hot_factor=2,
+                                    include_oversize=False))
+    full = spark.createDataFrame(inputs, TRANSCRIPTS_SCHEMA)
+    by_key = {r[:2]: r for r in inputs}
+    base = inputs[: len(inputs) // 2]
+    store = DirCheckpointStore(str(tmp_path / "x"))
+    fold = Fold(2)
+
+    def upsert(rows):
+        snap = store.upsert(spark.createDataFrame(rows, EXTRACTIONS_SCHEMA), spark)
+        fold.upsert(rows)
+        fold.check(spark, store, snap)
+
+    def delete(keys):
+        snap = store.delete(
+            spark.createDataFrame(keys, "conv_id string, turn_idx int"), spark
+        )
+        fold.delete(keys)
+        fold.check(spark, store, snap)
+
+    def resume(transcripts, rows):
+        missing = [r for r in rows if r[:2] not in fold.keys()]
+        out = run_extraction(spark, transcripts, store=store, num_partitions=2)
+        assert out["new_rows"] == len(missing)
+        fold.append(_extracted(missing))
+        fold.check(spark, store, out["snapshot_id"])
+
+    resume(spark.createDataFrame(base, TRANSCRIPTS_SCHEMA), base)
+    k1 = min(fold.keys())
+    row = {fold.key(r): r for r in fold.rows}
+    new = ("conv-new", 0, "x", [], "COMPLETED", None, "MARKDOWN", "plain", 1, 1,
+           None, None)
+    upsert([_edited(new, "insert"), _edited(row[k1], "edit")])  # insert + edit
+    delete([("conv-new", 0), k1])  # upsert, then delete, of the same keys
+    delete([("conv-new", 0), k1, ("conv-ghost", 9)])  # repeated + unknown
+    resume(full, inputs)  # delete, then re-extraction, of k1
+    assert k1 in fold.keys() and ("conv-new", 0) not in fold.keys()
+
+    # updates read lazily from the store itself
+    before = {fold.key(r): r for r in fold.rows}
+    lazy = store.results(spark).limit(3).withColumn("edited_by", F.lit("lazy"))
+    snap = store.upsert(lazy, spark)
+    written = spark.read.schema(EXTRACTIONS_SCHEMA).parquet(
+        os.path.join(store.snap_dir, snap, "results")).collect()
+    assert len(written) == 3
+    assert all(_canon(r)[:11] == before[_canon(r)[:2]][:11]
+               and r.edited_by == "lazy" for r in written)
+    fold.upsert(written)
+    fold.check(spark, store, snap)
+
+    rng = random.Random(14)
+    for step in range(8):
+        op = rng.choice(["append", "upsert", "delete", "resume", "compact"])
+        present = sorted(fold.keys())
+        if op == "append":
+            absent = [by_key[k] for k in sorted(by_key) if k not in fold.keys()]
+            if not absent:
+                continue
+            rows = _extracted(rng.sample(absent, min(2, len(absent))))
+            snap = store.append(spark.createDataFrame(rows, EXTRACTIONS_SCHEMA))
+            fold.append(rows)
+            fold.check(spark, store, snap)
+        elif op == "upsert":
+            cur = {fold.key(r): r for r in fold.rows}
+            upsert([_edited(cur[k], f"s{step}")
+                    for k in rng.sample(present, min(3, len(present)))])
+        elif op == "delete":
+            delete(rng.sample(present, min(2, len(present))) + [("conv-ghost", step)])
+        elif op == "resume":
+            resume(full, inputs)
+        else:
+            snap = store.maybe_compact(spark, threshold=0, expire=False)
+            fold.check(spark, store, snap)
+
+
+def test_doc_keyed_store_matches_copy_on_write_fold(spark, tmp_path):
+    """The same fold on a doc_id-keyed store with its own results_schema:
+    a seeded random run of append, upsert (edit and insert), delete and
+    compaction."""
+    store = DirCheckpointStore(str(tmp_path / "d"), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    fold = Fold(1)
+    rng = random.Random(7)
+    next_id = 0
+    for step in range(14):
+        op = "append" if step == 0 else rng.choice(
+            ["append", "upsert", "upsert", "delete", "compact"])
+        present = sorted(fold.keys())
+        if op == "append":
+            rows = [(next_id + i, f"a{step}", step) for i in range(4)]
+            next_id += 4
+            snap = store.append(spark.createDataFrame(rows, DOC_SCHEMA))
+            fold.append(rows)
+        elif op == "upsert":
+            ids = [k[0] for k in rng.sample(present, min(2, len(present)))]
+            rows = [(i, f"u{step}", step) for i in ids + [next_id]]  # + an insert
+            next_id += 1
+            snap = store.upsert(spark.createDataFrame(rows, DOC_SCHEMA), spark)
+            fold.upsert(rows)
+        elif op == "delete":
+            keys = rng.sample(present, min(2, len(present))) + [(10**6,)]
+            snap = store.delete(spark.createDataFrame(keys, "doc_id long"), spark)
+            fold.delete(keys)
+        else:
+            snap = store.maybe_compact(spark, threshold=0, expire=False)
+        fold.check(spark, store, snap)
+
+
+def _plan(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def test_results_plan_is_one_scan_and_one_broadcast_anti_join(spark, tmp_path):
+    """Appends alone read as one scan, no join.  After an upsert and a
+    delete, one scan reads the rows and one broadcast left-anti join
+    drops the retracted ones — no Union of per-snapshot scans."""
+    store = DirCheckpointStore(str(tmp_path / "p"), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    for lo in (0, 10):
+        store.append(spark.createDataFrame(
+            [(i, "a", 0) for i in range(lo, lo + 10)], DOC_SCHEMA))
+    plan = _plan(store.results(spark))
+    assert plan.count("FileScan") == 1 and "Join" not in plan
+
+    store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
+    store.delete(spark.createDataFrame([(2,)], "doc_id long"), spark)
+    plan = _plan(store.results(spark))
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    row_scans = [s for s in scans if "summary" in s.split("ReadSchema")[1]]
+    assert len(row_scans) == 1 and len(scans) == 2
+    joins = [line for line in plan.splitlines() if "Join" in line]
+    assert len(joins) == 1
+    assert "BroadcastHashJoin" in joins[0] and "LeftAnti" in joins[0]
+    assert "Union" not in plan
+
+
+def test_compaction_reclaims_deleted_rows(spark, tmp_path):
+    """Deleted rows stay in older files until compaction; after
+    maybe_compact and expire_snapshots no parquet file under snapshots/
+    holds a deleted key, the state is unchanged, and the expired
+    lineage sits under expired-lineage/."""
+    pdf = G.transcripts_pandas(3, median_turns=4, hot_factor=2,
+                               include_oversize=False)
+    sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+    store = DirCheckpointStore(str(tmp_path / "r"))
+    run_extraction(spark, sdf, store=store, num_partitions=2)
+    first = store.snapshots()[0]
+    victims = sorted(
+        (r.conv_id, r.turn_idx) for r in store.completed_keys(spark).collect()
+    )[:3]
+    store.upsert(store.results(spark).filter(
+        (F.col("conv_id") == victims[0][0]) & (F.col("turn_idx") == victims[0][1])
+    ).withColumn("edited_by", F.lit("e")), spark)
+    store.delete(spark.createDataFrame(victims, "conv_id string, turn_idx int"), spark)
+    state = sorted(_canon(r) for r in store.results(spark).collect())
+
+    def keys_on_disk():
+        held = set()
+        for d, _, fs in os.walk(store.snap_dir):
+            for f in fs:
+                if f.endswith(".parquet") and not d.endswith("lineage"):
+                    t = pq.read_table(os.path.join(d, f), columns=["conv_id", "turn_idx"])
+                    held |= set(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+        return held
+
+    assert set(victims) <= keys_on_disk()
+    assert store.maybe_compact(spark, threshold=0)
+    store.expire_snapshots()
+    assert not keys_on_disk() & set(victims)
+    assert sorted(_canon(r) for r in store.results(spark).collect()) == state
+    assert first in os.listdir(os.path.join(store.root, "expired-lineage"))
+
+
+@pytest.mark.parametrize("op", ["upsert", "delete"])
+def test_retraction_on_an_empty_store(spark, tmp_path, op):
+    """An upsert on an empty store is an insert; a delete leaves it empty."""
+    store = DirCheckpointStore(str(tmp_path / op), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    if op == "upsert":
+        store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
+        assert [tuple(r) for r in store.results(spark).collect()] == [(1, "u", 1)]
+    else:
+        store.delete(spark.createDataFrame([(1,)], "doc_id long"), spark)
+        assert store.results(spark).count() == 0

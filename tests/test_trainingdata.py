@@ -1098,25 +1098,27 @@ class TestBpeMerges:
         assert m[1] == ("z", "w", 2)
         assert len(m) == 2  # loop stops when no pairs remain
 
-    def test_oracle_tokenizer_uses_java_ascii_whitespace(self):
-        """The bpe_learn oracle splits with the Java-regex ASCII class
+    def test_oracle_tokenizer_uses_java_ascii_whitespace(self, monkeypatch):
+        """The bpe oracles split with the Java-regex ASCII class
         [ \\t\\n\\x0B\\f\\r]+ — NOT Python's Unicode-aware \\s — so a
         word containing NBSP stays ONE token on both engines (Spark's
         Java \\s+ does not split on NBSP either).  Pins the r2
-        whitespace invariant on the bpe_learn parity path."""
+        whitespace invariant on the bpe_learn/bpe_encode parity path."""
+        from unraveldocs_spark import trainingdata as TD
         from unraveldocs_spark.semantics import _JAVA_RE_WS_SPLIT
 
         text = "foo bar bazqux\x0bend"
         toks = [t for t in _JAVA_RE_WS_SPLIT.split(text) if t]
         # NBSP (U+00A0) and NEL (U+0085) do NOT split; \x0B does
         assert toks == ["foo bar", "bazqux", "end"]
-        # and the oracle module actually uses that splitter
-        import inspect
-
-        from unraveldocs_spark.trainingdata import _bpe_learn_sql
-
-        src = inspect.getsource(_bpe_learn_sql)
-        assert "_JAVA_RE_WS_SPLIT" in src and 're.compile(r"\\s' not in src
+        # and both FIXTURE oracles count an NBSP-joined word as one word
+        word = "ab\u00a0cd"
+        rows = [("c", i, "user", f"{word} {word}", None, None) for i in range(3)]
+        monkeypatch.setattr(TD, "transcript_rows", lambda **kw: iter(rows))
+        assert any(left + right == word for left, right, _ in TD._fixture_merges())
+        assert f"'{word}'" in TD._bpe_learn_sql()
+        # each turn: 2 words, each merged to 1 symbol (a \\s split: 4 words)
+        assert "('c', 0, 2, 2, " in TD._bpe_encode_sql()
 
 
 class TestBpeApply:

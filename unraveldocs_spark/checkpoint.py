@@ -15,7 +15,11 @@ protocol here has two interchangeable stores:
   and published by a single atomic directory rename — a snapshot either
   fully exists or doesn't.  (No Iceberg runtime jar ships in this
   environment; the interface is identical so swapping stores is a config
-  change, not a code change.)
+  change, not a code change.)  Edits and deletes are merge-on-read, the
+  analog of Iceberg's ``write.update.mode`` / ``write.delete.mode =
+  merge-on-read``: an upsert publishes only its rows and a delete only
+  its keys, and readers fold them into the state; only
+  ``maybe_compact`` rewrites the full state.
 
 Resume (the idempotency primitive — ProcessOcr.java:71-74,
 ExtractTextFromDocumentImpl.java:50-54) is a LEFT ANTI join of the input
@@ -39,6 +43,8 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .schemas import EXTRACTIONS_SCHEMA, LINEAGE_SCHEMA
 
@@ -55,8 +61,25 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
     return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
+def _snap_of_file():
+    """The snapshot number of the file a row was read from: the
+    ``snap-NNNNNN`` segment of its path (the last one, so a store root
+    whose own path holds ``snap-`` still tags right)."""
+    return F.regexp_extract(
+        F.col("_metadata.file_path"), r".*/snap-(\d+)/", 1
+    ).cast("long")
+
+
 class DirCheckpointStore:
-    """Parquet-directory snapshot store with atomic publish-by-rename."""
+    """Parquet-directory snapshot store with atomic publish-by-rename.
+
+    A snapshot directory holds a ``_manifest.json`` and some of:
+    ``results/`` (rows), ``lineage/`` (per-partition lineage) and
+    ``removed/`` (deleted keys).  The manifest flags ``compacted`` (the
+    results are the full state; readers start here), ``replacing`` (an
+    upsert: its rows' keys retract earlier rows) and ``removed`` (a
+    delete).  Stores that predate the last two flags wrote upserts and
+    deletes as compacted snapshots, which read the same."""
 
     def __init__(self, root: str, results_schema=None, keys=None,
                  lineage_schema=None):
@@ -127,27 +150,16 @@ class DirCheckpointStore:
         return f"snap-{(max(existing) + 1 if existing else 1):06d}"
 
     # -- write ------------------------------------------------------------
-    def append(
-        self,
-        results: DataFrame,
-        lineage: DataFrame | None = None,
-        run_id: str | None = None,
-        compacted: bool = False,
-    ) -> str:
-        """Write one snapshot atomically: stage results (+lineage) under a
-        _tmp dir, fsync a manifest, then rename into place.  A snapshot
-        marked ``compacted`` carries the FULL current state (see
-        :meth:`upsert`); readers start from the latest compacted one."""
+    def _publish(self, tables: dict, run_id: str | None = None,
+                 **flags) -> str:
+        """Write one snapshot atomically: stage each table under a _tmp
+        dir, fsync a manifest, then rename into place — a snapshot
+        either fully exists or doesn't."""
         run_id = run_id or uuid.uuid4().hex[:12]
         staging = os.path.join(self.root, f"_tmp-{uuid.uuid4().hex}")
-        results.write.mode("overwrite").parquet(os.path.join(staging, "results"))
-        if lineage is not None:
-            lineage.write.mode("overwrite").parquet(os.path.join(staging, "lineage"))
-        manifest = {
-            "run_id": run_id,
-            "has_lineage": lineage is not None,
-            "compacted": compacted,
-        }
+        for name, df in tables.items():
+            df.write.mode("overwrite").parquet(os.path.join(staging, name))
+        manifest = {"run_id": run_id, "has_lineage": "lineage" in tables, **flags}
         with open(os.path.join(staging, "_manifest.json"), "w") as f:
             json.dump(manifest, f)
             f.flush()
@@ -157,29 +169,39 @@ class DirCheckpointStore:
         os.rename(staging, final)  # atomic publish
         return snap_id
 
+    def append(
+        self,
+        results: DataFrame,
+        lineage: DataFrame | None = None,
+        run_id: str | None = None,
+        compacted: bool = False,
+    ) -> str:
+        """Publish results (+lineage) as one snapshot.  A snapshot marked
+        ``compacted`` carries the FULL current state (see
+        :meth:`maybe_compact`); readers start from the latest compacted
+        one."""
+        tables = {"results": results}
+        if lineage is not None:
+            tables["lineage"] = lineage
+        return self._publish(tables, run_id, compacted=compacted)
+
     # -- upsert (MERGE equivalent) ---------------------------------------
     def upsert(self, updates: DataFrame, spark: SparkSession,
                run_id: str | None = None) -> str:
-        """Replace rows by (conv_id, turn_idx) — the batch analog of the
-        reference's edited-content save (UpdateOcrContentImpl.java:72-78)
-        and of ``MERGE INTO`` on the Iceberg path.
+        """Replace rows by key — the batch analog of the reference's
+        edited-content save (UpdateOcrContentImpl.java:72-78) and of
+        ``MERGE INTO`` on the Iceberg path.
 
-        Copy-on-write: the new snapshot holds (current results ANTI-JOIN
-        update keys) UNION updates and is marked ``compacted``, so readers
-        see exactly one version of every key.  The rewrite is atomic (same
-        staging+rename publish), and a crash mid-upsert leaves the prior
-        state untouched."""
-        # the merge reads ``updates`` twice (its keys and its rows): persist
-        # so the edits scan, sanitizer and join behind it run once
-        updates = updates.persist()
-        try:
-            current = self.results(spark)
-            merged = current.join(
-                updates.select(*self.keys), self.keys, "left_anti"
-            ).unionByName(updates)
-            return self.append(merged, run_id=run_id, compacted=True)
-        finally:
-            updates.unpersist()
+        Merge-on-read (Iceberg's ``write.update.mode = merge-on-read``):
+        the new snapshot holds ONLY ``updates``, flagged ``replacing`` in
+        its manifest.  Readers fold it in (:meth:`_state`): the keys of
+        its rows retract every earlier row with the same key, so readers
+        see exactly one version of every replaced key, and an update of
+        an unknown key is an insert.  ``updates`` is evaluated once, by
+        the one write; the publish is atomic, so a crash mid-upsert
+        leaves the prior state untouched.  Only :meth:`maybe_compact`
+        rewrites full state."""
+        return self._publish({"results": updates}, run_id, replacing=True)
 
     # -- delete (retract) -------------------------------------------------
     def delete(self, keys: DataFrame, spark: SparkSession,
@@ -190,22 +212,30 @@ class DirCheckpointStore:
         storage, drop the search-index row) and of ``MERGE ... WHEN
         MATCHED THEN DELETE`` on the Iceberg path.
 
-        Copy-on-write like :meth:`upsert`: the new snapshot is (current
-        results ANTI-JOIN delete keys), marked ``compacted``, published
-        atomically.  Deleted keys vanish from :meth:`results` and
-        :meth:`completed_keys` — so on resume they re-extract, which is
-        exactly the retract-then-reprocess semantics a training-corpus
-        store needs.  A crash mid-delete leaves the prior state
-        untouched."""
-        current = self.results(spark)
-        remaining = current.join(keys.select(*self.keys), self.keys, "left_anti")
-        return self.append(remaining, run_id=run_id, compacted=True)
+        Merge-on-read (Iceberg's ``write.delete.mode = merge-on-read``,
+        a position-free equality delete): the new snapshot holds ONLY a
+        ``removed/`` table of the keys, published atomically.  Readers
+        drop every earlier row with one of those keys, so deleted keys
+        vanish from :meth:`results` and :meth:`completed_keys` — on
+        resume they re-extract, which is exactly the
+        retract-then-reprocess semantics a training-corpus store needs.
+        Deleting an unknown or already-deleted key is a no-op.
+
+        Storage is reclaimed at compaction: the deleted rows stay in the
+        older snapshots' files until :meth:`maybe_compact` rewrites the
+        state without them and :meth:`expire_snapshots` removes the
+        superseded snapshots (lineage is kept under
+        ``expired-lineage/``)."""
+        removed = keys.select(
+            *(F.col(k).cast(self.results_schema[k].dataType) for k in self.keys)
+        )
+        return self._publish({"removed": removed}, run_id, removed=True)
 
     # -- read -------------------------------------------------------------
     def _live_snapshots(self, upto: str | None = None) -> list[str]:
         """Snapshots a reader must scan for the state AS OF ``upto``
         (default: the latest): the most recent compacted snapshot <=
-        ``upto`` (which holds full state) plus every append after it."""
+        ``upto`` (which holds full state) plus every snapshot after it."""
         snaps = self.snapshots()
         if upto is not None:
             snaps = [s for s in snaps if self._snap_num(s) <= self._snap_num(upto)]
@@ -217,14 +247,46 @@ class DirCheckpointStore:
         cutoff = self._snap_num(compacted[-1])
         return [s for s in snaps if self._snap_num(s) >= cutoff]
 
-    def results(self, spark: SparkSession) -> DataFrame:
-        paths = [
-            os.path.join(self.snap_dir, s, "results")
-            for s in self._live_snapshots()
-        ]
-        if not paths:
+    def _state(self, spark: SparkSession, upto: str | None = None) -> DataFrame:
+        """The merge-on-read fold: the results AS OF ``upto`` (default:
+        the latest snapshot).
+
+        Without a retraction in the live chain this is one multi-path
+        scan of its ``results/`` directories.  Otherwise that scan is
+        tagged with each row's snapshot number (from
+        ``_metadata.file_path``, so it stays ONE scan) and left-anti
+        joined, by broadcast, against one scan of the retraction keys —
+        the ``results/`` keys of ``replacing`` snapshots and the
+        ``removed/`` keys of deletes, tagged the same way — on keys equal
+        and retraction newer than row.  The retraction side is as large
+        as the edits and deletes since the last compaction;
+        :meth:`maybe_compact` folds it away."""
+        rows, retract = [], []
+        for s in self._live_snapshots(upto):
+            m, d = self._manifest(s), os.path.join(self.snap_dir, s)
+            if m.get("replacing"):
+                retract.append(os.path.join(d, "results"))
+            if m.get("removed"):
+                retract.append(os.path.join(d, "removed"))
+            else:
+                rows.append(os.path.join(d, "results"))
+        if not rows:
             return _empty(spark, self.results_schema)
-        return spark.read.schema(self.results_schema).parquet(*paths)
+        scan = spark.read.schema(self.results_schema).parquet(*rows)
+        if not retract:
+            return scan
+        key_schema = StructType([self.results_schema[k] for k in self.keys])
+        gone = spark.read.schema(key_schema).parquet(*retract).select(
+            *(F.col(k).alias(f"_retract_{k}") for k in self.keys),
+            _snap_of_file().alias("_retract_snap"),
+        )
+        tagged = scan.withColumn("_row_snap", _snap_of_file())
+        cond = [tagged[k] == gone[f"_retract_{k}"] for k in self.keys]
+        cond.append(gone["_retract_snap"] > tagged["_row_snap"])
+        return tagged.join(F.broadcast(gone), cond, "left_anti").drop("_row_snap")
+
+    def results(self, spark: SparkSession) -> DataFrame:
+        return self._state(spark)
 
     def lineage(self, spark: SparkSession) -> DataFrame:
         paths = [
@@ -271,7 +333,10 @@ class DirCheckpointStore:
                       expire: bool = True) -> str | None:
         """Auto-compaction policy: when the live snapshot list exceeds
         ``threshold``, rewrite full current state as one compacted
-        snapshot (and optionally expire the superseded ones).  The
+        snapshot (and optionally expire the superseded ones).  This is
+        the only full-state rewrite: it folds in every upsert and delete,
+        so the retraction join goes away and, once the superseded
+        snapshots expire, deleted rows leave the disk.  The
         operational loop a long-lived micro-batch ingest runs every N
         commits so ``results()`` never unions an unbounded directory —
         the DirCheckpointStore analog of Iceberg's rewrite_data_files +
@@ -288,24 +353,13 @@ class DirCheckpointStore:
                       snap_b: str) -> DataFrame:
         """Key-level audit of what changed between two snapshots of this
         store: rows keyed ``added`` (in b, not a) or ``removed`` (in a,
-        not b) — the inspection surface for upsert/delete compactions
-        (which keys did that retract actually remove?).  Mirrors the
+        not b) — the inspection surface for upserts and deletes (which
+        keys did that retract actually remove?).  Mirrors the
         Iceberg changelog read (``table_changes``) the production path
         gets for free.  Both snapshots must still exist (run before
         expire_snapshots)."""
-        from pyspark.sql import functions as F
-
-        def keys_at(s):
-            paths = [
-                os.path.join(self.snap_dir, x, "results")
-                for x in self._live_snapshots(upto=s)
-            ]
-            return (
-                spark.read.schema(self.results_schema).parquet(*paths)
-                .select(*self.keys)
-            )
-
-        a, b = keys_at(snap_a), keys_at(snap_b)
+        a, b = (self._state(spark, upto=s).select(*self.keys)
+                for s in (snap_a, snap_b))
         added = b.join(a, self.keys, "left_anti").withColumn(
             "change", F.lit("added")
         )
@@ -493,8 +547,6 @@ def resume_filter(transcripts: DataFrame, store, spark: SparkSession) -> DataFra
     removed — pass the equality and silently skip the new turn forever.
     With the semi-join, any unprocessed input key makes matched < total
     and the conversation falls through to the key-level anti-join."""
-    from pyspark.sql import functions as F
-
     done = store.completed_keys(spark)
     input_keys = transcripts.select(*KEYS)
     done_counts = (

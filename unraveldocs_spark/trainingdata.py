@@ -3987,9 +3987,10 @@ def q_bpe_learn(spark, sf_dir):
     ).orderBy("step")
 
 
-def _bpe_learn_sql() -> str:
-    """VALUES oracle: the same merge loop over the same FIXTURE corpus
-    counted sequentially in pure Python (no Spark).
+def _fixture_merges() -> list:
+    """The merge table learned from the FIXTURE corpus, counted
+    sequentially in pure Python (no Spark): the one word-frequency
+    count both VALUES oracles (``bpe_learn``, ``bpe_encode``) share.
 
     Tokenization MUST match the Spark side's Java-regex ``\\s+`` (ASCII
     only: no NBSP/NEL/ideographic space) — Python re ``\\s`` is
@@ -3999,17 +4000,22 @@ def _bpe_learn_sql() -> str:
     from .semantics import _JAVA_RE_WS_SPLIT
 
     freqs: dict[str, int] = {}
-    split = _JAVA_RE_WS_SPLIT
     for _c, _t, _role, text, *_ in transcript_rows(**FIXTURE):
         if text is None:
             continue
-        for w in split.split(text.lower()):
+        for w in _JAVA_RE_WS_SPLIT.split(text.lower()):
             if w and len(w) >= 2:
                 freqs[w] = freqs.get(w, 0) + 1
     top = dict(
         sorted(freqs.items(), key=lambda kv: (-kv[1], kv[0]))[:_BPE_VOCAB_CAP]
     )
-    merges = bpe_merges(top, _BPE_LEARN_MERGES)
+    return bpe_merges(top, _BPE_LEARN_MERGES)
+
+
+def _bpe_learn_sql() -> str:
+    """VALUES oracle: the same merge loop over the same FIXTURE corpus,
+    learned by :func:`_fixture_merges`."""
+    merges = _fixture_merges()
 
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
@@ -4974,21 +4980,12 @@ def _bpe_encode_sql() -> str:
     tokenization, same ``bpe_merges``, same ``bpe_apply``, same md5-56
     digest helper), regenerated at call time so it tracks semantics
     automatically."""
-    from .semantics import _JAVA_RE_WS_SPLIT
-
-    turns = [(c, t, text) for c, t, _role, text, *_ in transcript_rows(**FIXTURE)
-             if text is not None]
-    freqs: dict[str, int] = {}
-    for _c, _t, text in turns:
-        for w in _JAVA_RE_WS_SPLIT.split(text.lower()):
-            if w and len(w) >= 2:
-                freqs[w] = freqs.get(w, 0) + 1
-    top = dict(
-        sorted(freqs.items(), key=lambda kv: (-kv[1], kv[0]))[:_BPE_VOCAB_CAP]
-    )
-    merges = bpe_merges(top, _BPE_LEARN_MERGES)
-    pairs = [(left, right) for left, right, _ in merges]
-    rows = [_transcript_bpe_row(pairs, c, t, text) for c, t, text in turns]
+    pairs = [(left, right) for left, right, _ in _fixture_merges()]
+    rows = [
+        _transcript_bpe_row(pairs, c, t, text)
+        for c, t, _role, text, *_ in transcript_rows(**FIXTURE)
+        if text is not None
+    ]
 
     def q(s: str) -> str:
         return "'" + s.replace("'", "''") + "'"
