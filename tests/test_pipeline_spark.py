@@ -328,25 +328,6 @@ class TestTwoPhaseResume:
         } | {(conv, n_turns)}
         assert got == expected
 
-    def test_plan_has_conv_prune_before_key_anti(self, spark, tmp_path):
-        import io
-        from contextlib import redirect_stdout
-
-        from unraveldocs_spark.checkpoint import resume_filter
-        from unraveldocs_spark.schemas import TRANSCRIPTS_SCHEMA
-
-        pdf = G.transcripts_pandas(3, median_turns=4, hot_factor=2,
-                                   include_oversize=False)
-        sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
-        store = DirCheckpointStore(str(tmp_path / "tp2"))
-        # a non-empty store: against an empty one both joins fold away
-        run_extraction(spark, sdf.limit(2), store=store, num_partitions=2)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            resume_filter(sdf, store, spark).explain("simple")
-        plan = buf.getvalue()
-        assert plan.count("LeftAnti") >= 2  # conv-level prune + key-level
-
 
 class TestEmptyStore:
     def test_fresh_run_plans_no_resume_join(self, spark, tmp_path, monkeypatch):

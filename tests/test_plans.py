@@ -221,7 +221,9 @@ class TestResumePlan:
         # a non-empty store: against an empty one the anti-join folds away
         run_extraction(spark, t.limit(2), store=store, num_partitions=2)
         plan = plan_of(resume_filter(t, store, spark), "simple")
-        assert "LeftAnti" in plan
+        # one key-level anti-join, no conversation-grain prune in front
+        assert plan.count("LeftAnti") == 1, plan
+        assert "LeftSemi" not in plan, plan
 
 
 class TestRound2Plans:
@@ -256,27 +258,6 @@ class TestRound2Plans:
             "simple",
         )
         assert "BroadcastHashJoin" in plan and "signature" in plan
-
-    def test_bucketed_resume_join_is_shuffle_free(self, spark):
-        """When input and completed keys are both bucketed by conv_id
-        (Iceberg: PARTITIONED BY bucket(N, conv_id) + storage-partitioned
-        joins), the conversation-grain resume join needs NO Exchange —
-        the property that makes phase-1 resume cheap at 10^12 turns."""
-        from unraveldocs_spark.checkpoint import write_bucketed
-        from unraveldocs_spark.generator import transcripts_spark
-
-        t = transcripts_spark(spark, 6, hot_factor=2, include_oversize=False)
-        write_bucketed(t, "bt_input", buckets=8)
-        write_bucketed(
-            t.select("conv_id", "turn_idx").limit(50), "bt_done", buckets=8
-        )
-        a = spark.table("bt_input")
-        b = spark.table("bt_done").select("conv_id").distinct()
-        # distinct() over a bucketed scan is bucket-local too; the join
-        # must not introduce any shuffle
-        joined = a.join(b.hint("merge"), "conv_id", "left_anti")
-        plan = plan_of(joined, "simple")
-        assert "Exchange" not in plan, plan
 
 
 class TestCorpusFilterPlans:

@@ -289,3 +289,47 @@ def test_retraction_on_an_empty_store(spark, tmp_path, op):
     else:
         store.delete(spark.createDataFrame([(1,)], "doc_id long"), spark)
         assert store.results(spark).count() == 0
+
+
+@pytest.mark.parametrize("change", ["missing", "extra", "retyped"])
+def test_upsert_rejects_columns_off_the_schema(spark, tmp_path, change):
+    """A frame whose columns differ from results_schema by name or type
+    would read back with all-NULL columns; upsert raises naming the
+    column and publishes nothing."""
+    store = DirCheckpointStore(str(tmp_path / change), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    rows = spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA)
+    bad, column = {
+        "missing": (rows.drop("version"), "version"),
+        "extra": (rows.withColumn("note", F.lit("x")), "note"),
+        "retyped": (rows.withColumn("version", F.col("version").cast("string")),
+                    "version"),
+    }[change]
+    with pytest.raises(ValueError, match=f"'{column}'"):
+        store.upsert(bad, spark)
+    assert store.snapshots() == []
+
+
+def test_upsert_accepts_apply_edits_output(spark, tmp_path):
+    """The edit step's frame (nullable where EXTRACTIONS_SCHEMA nests a
+    NOT NULL struct field) passes the column check and publishes."""
+    from unraveldocs_spark.edits import apply_edits
+
+    pdf = G.transcripts_pandas(2, median_turns=4, hot_factor=2,
+                               include_oversize=False)
+    store = DirCheckpointStore(str(tmp_path / "e"))
+    run_extraction(spark, spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA),
+                   store=store, num_partitions=2)
+    done = store.results(spark).filter(F.col("status") == "COMPLETED").first()
+    edits = spark.createDataFrame(
+        [(done.conv_id, done.turn_idx, "<p>edit</p>", "HTML", "t")],
+        "conv_id string, turn_idx int, edited_content string, "
+        "content_format string, edited_by string",
+    )
+    updated, _ = apply_edits(store.results(spark), edits)
+    assert updated.schema != EXTRACTIONS_SCHEMA  # only nullability differs
+    store.upsert(updated, spark)
+    got = store.results(spark).filter(
+        (F.col("conv_id") == done.conv_id) & (F.col("turn_idx") == done.turn_idx)
+    ).collect()
+    assert [(r.edited_by, r.extracted_text) for r in got] == [("t", done.extracted_text)]

@@ -856,6 +856,8 @@ class TestAdviceGuards:
         )
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iters=3)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components_star(chain, max_iters=1)
         # star variant: one component, min label 0
         labels = connected_components_star(chain).collect()
         assert {r.label for r in labels} == {0}

@@ -28,12 +28,13 @@ against the committed keys:
     input.join(done, ["conv_id", "turn_idx"], "left_anti")
 
 Scale note (100 TB / 10^12 turns): the anti-join shuffles both sides on
-(conv_id, turn_idx).  Both the input table and the checkpoint output
-should be written bucketed/partitioned by conv_id so the join co-locates;
-additionally the lineage table records which conversations are fully
-complete, letting a resume first drop whole conversations via a broadcast
-anti-join on conv_id (cheap) before the key-level anti-join handles the
-partially-complete remainder.
+(conv_id, turn_idx) once, so a hot conversation spreads over its turns.
+A conversation-grain prune in front of it (drop whole completed
+conversations by an anti-join on conv_id) does not pay: to stay correct
+under input drift it must first semi-join the completed keys against the
+input keys, which is the same key-level join, and it adds two
+aggregations, a conv_id join and two conv_id anti-joins that shuffle the
+payload on conv_id alone, the skewed key.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from .schemas import EXTRACTIONS_SCHEMA, LINEAGE_SCHEMA
 
@@ -59,6 +60,18 @@ def _empty(spark: SparkSession, schema) -> DataFrame:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+
+
+def _loose(t):
+    """``t`` with every nullability flag and field metadata set to the
+    default, at every nesting level: the type a column compares by."""
+    if isinstance(t, StructType):
+        return StructType([StructField(f.name, _loose(f.dataType)) for f in t])
+    if isinstance(t, ArrayType):
+        return ArrayType(_loose(t.elementType))
+    if isinstance(t, MapType):
+        return MapType(_loose(t.keyType), _loose(t.valueType))
+    return t
 
 
 def _snap_of_file():
@@ -200,7 +213,22 @@ class DirCheckpointStore:
         an unknown key is an insert.  ``updates`` is evaluated once, by
         the one write; the publish is atomic, so a crash mid-upsert
         leaves the prior state untouched.  Only :meth:`maybe_compact`
-        rewrites full state."""
+        rewrites full state.
+
+        ``updates`` must have the columns of ``results_schema``, by name
+        and type (nullability aside): readers apply the declared schema,
+        so a missing or misnamed column would read back as all NULL.  A
+        mismatch raises ``ValueError`` naming the column."""
+        want, got = (
+            {f.name: _loose(f.dataType) for f in schema}
+            for schema in (self.results_schema, updates.schema)
+        )
+        for name in sorted(want.keys() | got.keys()):
+            if want.get(name) != got.get(name):
+                raise ValueError(
+                    f"upsert column {name!r} is {got.get(name)}, "
+                    f"results_schema declares {want.get(name)}"
+                )
         return self._publish({"results": updates}, run_id, replacing=True)
 
     # -- delete (retract) -------------------------------------------------
@@ -508,60 +536,10 @@ class IcebergCheckpointStore:
         return self.results(spark).select(*KEYS)
 
 
-def write_bucketed(df: DataFrame, table: str, buckets: int = 16,
-                   by: str = "conv_id") -> None:
-    """Write a table bucketed by ``by`` so resume joins co-locate.
-
-    At 10^12 turns the conv-grain prune (phase 1 of resume_filter) joins
-    input and completed keys on conv_id; when both sides are bucketed by
-    conv_id with matching bucket counts, that join runs shuffle-FREE
-    (bucket-local sort-merge) — the plan-tested property.  The Iceberg
-    production path is the same idea as a partition transform:
-    ``PARTITIONED BY (bucket(N, conv_id))`` with storage-partitioned
-    joins; this helper is the builtin-catalog equivalent for the
-    sandbox."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, by)
-        .sortBy(by)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def resume_filter(transcripts: DataFrame, store, spark: SparkSession) -> DataFrame:
     """Drop already-extracted turns: the left-anti resume join
-    (SURVEY.md §2.2 'idempotency predicate').
-
-    Two-phase at scale: first drop whole conversations whose completed
-    count matches the input count (an anti-join on conv_id — small keys,
-    broadcastable when few convs remain incomplete), then key-level
-    anti-join only against the partially-complete remainder.  At 10^12
-    turns this shrinks the right side of the expensive (conv_id, turn_idx)
-    anti-join from every completed key to only the keys of interrupted
-    conversations.
-
-    A conversation counts as complete only when every INPUT key has a
-    matching done key (semi-join before the count, not a raw done count):
-    raw counts would let net-zero input drift — one turn added, another
-    removed — pass the equality and silently skip the new turn forever.
-    With the semi-join, any unprocessed input key makes matched < total
-    and the conversation falls through to the key-level anti-join."""
-    done = store.completed_keys(spark)
-    input_keys = transcripts.select(*KEYS)
-    done_counts = (
-        done.join(input_keys, KEYS, "left_semi")
-        .groupBy("conv_id")
-        .agg(F.count(F.lit(1)).alias("_done_n"))
-    )
-    input_counts = transcripts.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("_total_n")
-    )
-    complete_convs = (
-        done_counts.join(input_counts, "conv_id")
-        .filter(F.col("_done_n") == F.col("_total_n"))
-        .select("conv_id")
-    )
-    remaining = transcripts.join(complete_convs, "conv_id", "left_anti")
-    partial_done = done.join(complete_convs, "conv_id", "left_anti")
-    return remaining.join(partial_done, KEYS, "left_anti")
+    (SURVEY.md §2.2 'idempotency predicate', ProcessOcr.java:71-74), one
+    join of the input against the completed keys on ``KEYS``.  No
+    conversation-grain prune runs first; the module's scale note says
+    why."""
+    return transcripts.join(store.completed_keys(spark), KEYS, "left_anti")

@@ -1128,6 +1128,11 @@ def connected_components_star(pairs, max_iters: int = _CC_MAX_ITERS):
         edges = new_edges
         if changed == 0:
             break
+    else:
+        # not yet a star forest: the labels read below would be wrong
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iters} rounds"
+        )
     # star forest: every non-root points at its component min; roots are
     # nodes never appearing on the u side
     labels = edges.select(F.col("u").alias("doc_id"), F.col("v").alias("label"))
