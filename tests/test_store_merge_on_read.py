@@ -3,6 +3,7 @@ delete only its keys, and readers fold them in.  Every test here checks
 the fold against the copy-on-write semantics it replaces — each
 operation rewriting the whole state — computed in pure Python."""
 
+import hashlib
 import io
 import os
 import random
@@ -17,7 +18,12 @@ from unraveldocs_spark import generator as G
 from unraveldocs_spark import oracle as O
 from unraveldocs_spark.checkpoint import DirCheckpointStore
 from unraveldocs_spark.pipeline import run_extraction
-from unraveldocs_spark.schemas import EXTRACTIONS_SCHEMA, TRANSCRIPTS_SCHEMA
+from unraveldocs_spark.schemas import (
+    EXTRACTIONS_SCHEMA,
+    LINEAGE_SCHEMA,
+    TRANSCRIPTS_SCHEMA,
+    map_rows,
+)
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -333,3 +339,129 @@ def test_upsert_accepts_apply_edits_output(spark, tmp_path):
         (F.col("conv_id") == done.conv_id) & (F.col("turn_idx") == done.turn_idx)
     ).collect()
     assert [(r.edited_by, r.extracted_text) for r in got] == [("t", done.extracted_text)]
+
+
+def _parquet_files(root: str) -> list:
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(root)
+        for f in fs if f.endswith(".parquet")
+    )
+
+
+def _codecs(path: str) -> set:
+    """The codec of every column chunk of one parquet file."""
+    meta = pq.ParquetFile(path).metadata
+    return {
+        meta.row_group(g).column(c).compression
+        for g in range(meta.num_row_groups) for c in range(meta.num_columns)
+    }
+
+
+def _edit_run(spark, store) -> list:
+    """An extraction run, then an upsert, a delete and a second append on
+    ``store``; returns the snapshot names."""
+    pdf = G.transcripts_pandas(3, median_turns=4, hot_factor=2,
+                               include_oversize=False)
+    run_extraction(spark, spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA),
+                   store=store, num_partitions=2)
+    keys = sorted(
+        (r.conv_id, r.turn_idx) for r in store.completed_keys(spark).collect()
+    )
+    store.upsert(store.results(spark).filter(
+        (F.col("conv_id") == keys[0][0]) & (F.col("turn_idx") == keys[0][1])
+    ).withColumn("edited_by", F.lit("e")), spark)
+    store.delete(spark.createDataFrame(keys[1:3], "conv_id string, turn_idx int"),
+                 spark)
+    new = ("conv-new", 0, "x", [], "COMPLETED", None, "MARKDOWN", "plain", 1, 1,
+           None, None)
+    store.append(spark.createDataFrame([new], EXTRACTIONS_SCHEMA))
+    return store.snapshots()
+
+
+def test_every_published_table_is_zstd(spark, tmp_path):
+    """Fresh results and lineage, an upsert's rows, a delete's removed/
+    keys and a compaction's rewrite: every column chunk of every parquet
+    file under snapshots/ is zstd, and each table has some."""
+    store = DirCheckpointStore(str(tmp_path / "z"))
+    _edit_run(spark, store)
+    assert store.maybe_compact(spark, threshold=0, expire=False)
+    by_table = {}
+    for f in _parquet_files(store.snap_dir):  # empty part files add no chunks
+        by_table.setdefault(os.path.basename(os.path.dirname(f)), set()).update(
+            _codecs(f))
+    assert by_table == {t: {"ZSTD"} for t in ("results", "lineage", "removed")}
+
+
+def test_snappy_snapshots_fold_with_zstd_ones(spark, tmp_path):
+    """A store whose first snapshot was written snappy (as before the
+    codec was set) reads the same: results(), completed_keys() and a
+    snapshot_diff equal those of the all-zstd store."""
+    store = DirCheckpointStore(str(tmp_path / "m"))
+    snaps = _edit_run(spark, store)
+
+    def reads():
+        return (
+            sorted((_canon(r) for r in store.results(spark).collect()), key=repr),
+            sorted(tuple(r) for r in store.completed_keys(spark).collect()),
+            sorted(tuple(r) for r in
+                   store.snapshot_diff(spark, snaps[0], snaps[-1]).collect()),
+        )
+
+    want = reads()
+    first = _parquet_files(os.path.join(store.snap_dir, snaps[0], "results"))
+    for f in first:
+        pq.write_table(pq.read_table(f), f, compression="snappy")
+        # Hadoop's local filesystem checks a file against its .crc sibling
+        d, name = os.path.split(f)
+        os.remove(os.path.join(d, f".{name}.crc"))
+    assert {c for f in first for c in _codecs(f)} == {"SNAPPY"}
+    assert reads() == want
+
+
+def test_failed_publish_removes_its_staging_dir(spark, tmp_path):
+    """An append whose lineage frame fails in its Python stage publishes
+    nothing and leaves no _tmp-* dir; the prior state still reads."""
+    store = DirCheckpointStore(str(tmp_path / "f"), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    rows = spark.createDataFrame([(1, "a", 0), (2, "b", 0)], DOC_SCHEMA)
+    store.append(rows)
+    before = store.snapshots()
+
+    def boom(*row):
+        raise RuntimeError("lineage stage failed")
+
+    with pytest.raises(Exception, match="lineage stage failed"):
+        store.append(rows, lineage=map_rows(rows, boom, LINEAGE_SCHEMA))
+    assert not [e for e in os.listdir(store.root) if e.startswith("_tmp-")]
+    assert store.snapshots() == before
+    assert sorted(tuple(r) for r in store.results(spark).collect()) == [
+        (1, "a", 0), (2, "b", 0)]
+
+
+def test_large_retraction_side_compacts(spark, tmp_path):
+    """Under a snapshot-count threshold it never reaches, a store
+    compacts once its retraction files outgrow
+    spark.sql.autoBroadcastJoinThreshold: a small upsert does not, a
+    large one does, and a non-positive limit never does."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    store = DirCheckpointStore(str(tmp_path / "s"), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    store.append(spark.createDataFrame([(i, "a", 0) for i in range(10)], DOC_SCHEMA))
+    store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
+    big = [(i, hashlib.sha256(str(i).encode()).hexdigest() * 4, 2)
+           for i in range(4000)]
+    saved = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "32k")
+        assert store.maybe_compact(spark, threshold=32) is None
+        store.upsert(spark.createDataFrame(big, DOC_SCHEMA), spark)
+        spark.conf.set(conf, "-1")
+        assert store.maybe_compact(spark, threshold=32) is None
+        spark.conf.set(conf, "32k")
+        state = sorted(tuple(r) for r in store.results(spark).collect())
+        snap = store.maybe_compact(spark, threshold=32)
+        assert snap is not None and store.snapshots() == [snap]
+        assert sorted(tuple(r) for r in store.results(spark).collect()) == state
+        assert "Join" not in _plan(store.results(spark))
+    finally:
+        spark.conf.set(conf, saved)

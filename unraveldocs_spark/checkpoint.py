@@ -19,7 +19,10 @@ protocol here has two interchangeable stores:
   analog of Iceberg's ``write.update.mode`` / ``write.delete.mode =
   merge-on-read``: an upsert publishes only its rows and a delete only
   its keys, and readers fold them into the state; only
-  ``maybe_compact`` rewrites the full state.
+  ``maybe_compact`` rewrites the full state, when the live snapshot count
+  passes its threshold or the retraction files the fold broadcasts pass
+  ``spark.sql.autoBroadcastJoinThreshold``.  Every table is written as
+  zstd parquet (Iceberg's default codec), set per write in ``_publish``.
 
 Resume (the idempotency primitive — ProcessOcr.java:71-74,
 ExtractTextFromDocumentImpl.java:50-54) is a LEFT ANTI join of the input
@@ -41,6 +44,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -167,19 +171,32 @@ class DirCheckpointStore:
                  **flags) -> str:
         """Write one snapshot atomically: stage each table under a _tmp
         dir, fsync a manifest, then rename into place — a snapshot
-        either fully exists or doesn't."""
+        either fully exists or doesn't.  A failed write removes its
+        staging dir before re-raising.
+
+        Every table is zstd parquet at the codec's default level, the
+        default of the store this stands in for (Iceberg's
+        ``write.parquet.compression-codec``).  It is a per-write option,
+        not a session conf, so other parquet writes keep Spark's
+        default; readers need nothing, since parquet records the codec
+        per column chunk and older snappy snapshots fold unchanged."""
         run_id = run_id or uuid.uuid4().hex[:12]
         staging = os.path.join(self.root, f"_tmp-{uuid.uuid4().hex}")
-        for name, df in tables.items():
-            df.write.mode("overwrite").parquet(os.path.join(staging, name))
-        manifest = {"run_id": run_id, "has_lineage": "lineage" in tables, **flags}
-        with open(os.path.join(staging, "_manifest.json"), "w") as f:
-            json.dump(manifest, f)
-            f.flush()
-            os.fsync(f.fileno())
-        snap_id = self._next_snapshot_id()
-        final = os.path.join(self.snap_dir, snap_id)
-        os.rename(staging, final)  # atomic publish
+        try:
+            for name, df in tables.items():
+                df.write.mode("overwrite").option("compression", "zstd").parquet(
+                    os.path.join(staging, name))
+            manifest = {"run_id": run_id, "has_lineage": "lineage" in tables,
+                        **flags}
+            with open(os.path.join(staging, "_manifest.json"), "w") as f:
+                json.dump(manifest, f)
+                f.flush()
+                os.fsync(f.fileno())
+            snap_id = self._next_snapshot_id()
+            os.rename(staging, os.path.join(self.snap_dir, snap_id))  # atomic publish
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
         return snap_id
 
     def append(
@@ -275,6 +292,22 @@ class DirCheckpointStore:
         cutoff = self._snap_num(compacted[-1])
         return [s for s in snaps if self._snap_num(s) >= cutoff]
 
+    def _chain(self, upto: str | None = None) -> tuple[list[str], list[str]]:
+        """The live chain AS OF ``upto`` as two lists of table dirs: the
+        ``results/`` dirs that hold rows, and the retraction dirs — the
+        ``results/`` of ``replacing`` snapshots and the ``removed/`` of
+        deletes."""
+        rows, retract = [], []
+        for s in self._live_snapshots(upto):
+            m, d = self._manifest(s), os.path.join(self.snap_dir, s)
+            if m.get("replacing"):
+                retract.append(os.path.join(d, "results"))
+            if m.get("removed"):
+                retract.append(os.path.join(d, "removed"))
+            else:
+                rows.append(os.path.join(d, "results"))
+        return rows, retract
+
     def _state(self, spark: SparkSession, upto: str | None = None) -> DataFrame:
         """The merge-on-read fold: the results AS OF ``upto`` (default:
         the latest snapshot).
@@ -289,15 +322,7 @@ class DirCheckpointStore:
         and retraction newer than row.  The retraction side is as large
         as the edits and deletes since the last compaction;
         :meth:`maybe_compact` folds it away."""
-        rows, retract = [], []
-        for s in self._live_snapshots(upto):
-            m, d = self._manifest(s), os.path.join(self.snap_dir, s)
-            if m.get("replacing"):
-                retract.append(os.path.join(d, "results"))
-            if m.get("removed"):
-                retract.append(os.path.join(d, "removed"))
-            else:
-                rows.append(os.path.join(d, "results"))
+        rows, retract = self._chain(upto)
         if not rows:
             return _empty(spark, self.results_schema)
         scan = spark.read.schema(self.results_schema).parquet(*rows)
@@ -343,8 +368,6 @@ class DirCheckpointStore:
         of expired snapshots are preserved under ``expired-lineage/``
         first — lineage is the audit record and must outlive the data
         compaction.  Returns the expired snapshot names."""
-        import shutil
-
         live = set(self._live_snapshots())
         expired = [s for s in self.snapshots() if s not in live]
         keep_dir = os.path.join(self.root, "expired-lineage")
@@ -360,17 +383,33 @@ class DirCheckpointStore:
     def maybe_compact(self, spark: SparkSession, threshold: int = 32,
                       expire: bool = True) -> str | None:
         """Auto-compaction policy: when the live snapshot list exceeds
-        ``threshold``, rewrite full current state as one compacted
-        snapshot (and optionally expire the superseded ones).  This is
-        the only full-state rewrite: it folds in every upsert and delete,
-        so the retraction join goes away and, once the superseded
-        snapshots expire, deleted rows leave the disk.  The
-        operational loop a long-lived micro-batch ingest runs every N
-        commits so ``results()`` never unions an unbounded directory —
-        the DirCheckpointStore analog of Iceberg's rewrite_data_files +
+        ``threshold``, or the retraction side :meth:`_state` broadcasts
+        outgrows Spark's own limit for a broadcast side, rewrite full
+        current state as one compacted snapshot (and optionally expire
+        the superseded ones).  The retraction side is measured as the
+        on-disk bytes of the live ``replacing`` ``results/`` and
+        ``removed/`` files — the bytes Spark estimates a parquet scan's
+        size from — against ``spark.sql.autoBroadcastJoinThreshold`` when
+        that is positive; one large upsert then compacts at once instead
+        of being broadcast by every later read.
+
+        This is the only full-state rewrite: it folds in every upsert and
+        delete, so the retraction join goes away and, once the superseded
+        snapshots expire, deleted rows leave the disk.  The operational
+        loop a long-lived micro-batch ingest runs every N commits so
+        ``results()`` never unions an unbounded directory — the
+        DirCheckpointStore analog of Iceberg's rewrite_data_files +
         expire_snapshots maintenance pair.  Returns the new snapshot id
-        or None if under threshold."""
-        if len(self._live_snapshots()) <= threshold:
+        or None if under both limits."""
+        # Spark's own parse of the byte-string conf ("10485760b", "32k", -1)
+        limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        retract_bytes = sum(
+            os.path.getsize(os.path.join(d, f))
+            for d in self._chain()[1]
+            for f in os.listdir(d)
+            if not f.startswith(("_", "."))  # Spark's data-file filter
+        )
+        if len(self._live_snapshots()) <= threshold and not 0 < limit < retract_bytes:
             return None
         snap = self.append(self.results(spark), compacted=True)
         if expire:
