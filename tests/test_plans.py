@@ -149,7 +149,7 @@ class TestJoinStrategies:
         from unraveldocs_spark.trainingdata import q_knn_join
 
         plan = plan_of(q_knn_join(spark, SF), "simple")
-        assert "band_val" in plan
+        assert "band_key" in plan and "shiftright(signature" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
@@ -159,7 +159,7 @@ class TestJoinStrategies:
         from unraveldocs_spark.trainingdata import q_dedup_embedding_cosine
 
         plan = plan_of(q_dedup_embedding_cosine(spark, SF), "simple")
-        assert "band_val" in plan
+        assert "band_key" in plan and "shiftright(signature" in plan
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
@@ -962,6 +962,47 @@ class TestDedupIncrementPlan:
             if "doc_id" in l and ">=" in l and "Condition" in l
         ]
         assert len(cond_lines) >= 2, fmt  # bands_new branch AND newdocs spine
+
+
+class TestSimhashNearDupesPlan:
+    def test_python_stage_runs_once_and_band_join_carries_ids(
+        self, spark, monkeypatch
+    ):
+        """SimHash candidates come from the shared band builder: the
+        signature table is materialized once, so across the query and
+        every table it checkpoints exactly one MapInArrow runs (the
+        pre-builder plan ran the Python stage once per self-join side),
+        and the band self-join's rows hold only ids and band keys — the
+        simhash joins back after the id-pair dedup."""
+        import re
+
+        from unraveldocs_spark.entry_queries import q_simhash_near_dupes
+
+        cls = type(spark.range(1))
+        real = cls.localCheckpoint
+        materialized = []
+
+        def spy(df, *args, **kwargs):
+            materialized.append(plan_of(df))
+            return real(df, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "localCheckpoint", spy)
+        plan = plan_of(q_simhash_near_dupes(spark, SF))
+        arrow = [
+            len(re.findall(r"^\(\d+\) MapInArrow", p, re.M))
+            for p in [*materialized, plan]
+        ]
+        assert sum(arrow) == 1 and arrow[-1] == 0, arrow
+        blocks = plan.split("\n\n")
+        band_join = [
+            i for i, b in enumerate(blocks)
+            if re.search(r"Left keys \[2\]: \[band_idx#\d+, band_key#", b)
+        ]
+        assert len(band_join) == 1
+        carried = re.search(r"Input \[\d+\]: \[(.*)\]", blocks[band_join[0] + 1])
+        names = set(re.findall(r"(\w+)#\d+", carried.group(1)))
+        assert names == {"id", "band_idx", "band_key"}
+        assert "CartesianProduct" not in plan
 
 
 class TestScanFanOut:

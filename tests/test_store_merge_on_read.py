@@ -247,6 +247,52 @@ def test_results_plan_is_one_scan_and_one_broadcast_anti_join(spark, tmp_path):
     assert "Union" not in plan
 
 
+def test_results_plan_shuffles_when_broadcast_is_off(spark, tmp_path):
+    """The retraction join is the planner's choice: with
+    spark.sql.autoBroadcastJoinThreshold at -1 nothing is broadcast and
+    results() is the same fold."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    store = DirCheckpointStore(str(tmp_path / "nb"), results_schema=DOC_SCHEMA,
+                               keys=["doc_id"])
+    store.append(spark.createDataFrame([(i, "a", 0) for i in range(10)], DOC_SCHEMA))
+    store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
+    store.delete(spark.createDataFrame([(2,)], "doc_id long"), spark)
+    state = sorted(tuple(r) for r in store.results(spark).collect())
+    saved = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "-1")
+        df = store.results(spark)
+        assert sorted(tuple(r) for r in df.collect()) == state
+        plan = _plan(df)
+        assert "LeftAnti" in plan and "BroadcastHashJoin" not in plan
+    finally:
+        spark.conf.set(conf, saved)
+
+
+def test_lineage_outlives_compaction(spark, tmp_path):
+    """expire_snapshots moves the expired runs' lineage to
+    expired-lineage/; lineage() and lineage_metrics still read it."""
+    from unraveldocs_spark.pipeline import lineage_metrics
+
+    pdf = G.transcripts_pandas(3, median_turns=4, hot_factor=2,
+                               include_oversize=False)
+    sdf = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+    store = DirCheckpointStore(str(tmp_path / "l"))
+    run_extraction(spark, sdf, store=store, num_partitions=2)
+
+    def audit():
+        lin = store.lineage(spark)
+        turns = lineage_metrics(store, spark).agg(F.sum("turns_processed"))
+        return lin.count(), lin.agg(F.sum("turns_processed")).first()[0], \
+            turns.first()[0]
+
+    before = audit()
+    assert before[0] > 0 and before[1] == before[2] == len(pdf)
+    assert store.maybe_compact(spark, threshold=0)
+    assert os.listdir(os.path.join(store.root, "expired-lineage"))
+    assert audit() == before
+
+
 def test_compaction_reclaims_deleted_rows(spark, tmp_path):
     """Deleted rows stay in older files until compaction; after
     maybe_compact and expire_snapshots no parquet file under snapshots/

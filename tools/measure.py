@@ -737,13 +737,13 @@ def _increment_batch(spark, sf_dir: str):
 def increment_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
     """The asymmetric band join dedup_increment runs — bands of
     (existing + batch) x bands of the batch, through the package's
-    ``_band_pairs`` — per corpus growth: band shape, batch-side
+    ``band_pairs`` — per corpus growth: band shape, batch-side
     candidate pairs, confirmed matches (Jaccard >= 0.5), and how many
     planted duplicates with non-empty shingles were confirmed."""
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark.similarity import band_pairs
     from unraveldocs_spark.trainingdata import (
-        _band_pairs,
         _jaccard_counts,
         _minhash_bands,
         _spark_shingle_hashes,
@@ -769,10 +769,11 @@ def increment_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
         n_existing = existing.count()
         n_bands, n_rows = minhash_band_shape(n_existing + n_batch)
         all_side = nz(existing.select("doc_id", "text").unionByName(batch))
-        cands = _jaccard_counts(_band_pairs(
+        cands = _jaccard_counts(band_pairs(
             _minhash_bands(all_side, n_bands, n_rows),
             _minhash_bands(nz(batch), n_bands, n_rows),
-            all_side,
+            all_side.select("doc_id", "sh"),
+            ("doc_a", "doc_b"),
         )).withColumnsRenamed({"doc_b": "doc_id", "doc_a": "other"})
         ok = F.lit(2) * F.col("jac_num") >= F.col("jac_den")
         t0 = time.monotonic()

@@ -316,12 +316,15 @@ class DirCheckpointStore:
         scan of its ``results/`` directories.  Otherwise that scan is
         tagged with each row's snapshot number (from
         ``_metadata.file_path``, so it stays ONE scan) and left-anti
-        joined, by broadcast, against one scan of the retraction keys —
-        the ``results/`` keys of ``replacing`` snapshots and the
-        ``removed/`` keys of deletes, tagged the same way — on keys equal
-        and retraction newer than row.  The retraction side is as large
-        as the edits and deletes since the last compaction;
-        :meth:`maybe_compact` folds it away."""
+        joined against one scan of the retraction keys — the
+        ``results/`` keys of ``replacing`` snapshots and the ``removed/``
+        keys of deletes, tagged the same way — on keys equal and
+        retraction newer than row.  The planner broadcasts the retraction
+        side from its file-size estimate, under
+        ``spark.sql.autoBroadcastJoinThreshold`` like any other join, and
+        shuffles both sides when that conf rules a broadcast out.  The
+        retraction side is as large as the edits and deletes since the
+        last compaction; :meth:`maybe_compact` folds it away."""
         rows, retract = self._chain(upto)
         if not rows:
             return _empty(spark, self.results_schema)
@@ -336,13 +339,21 @@ class DirCheckpointStore:
         tagged = scan.withColumn("_row_snap", _snap_of_file())
         cond = [tagged[k] == gone[f"_retract_{k}"] for k in self.keys]
         cond.append(gone["_retract_snap"] > tagged["_row_snap"])
-        return tagged.join(F.broadcast(gone), cond, "left_anti").drop("_row_snap")
+        return tagged.join(gone, cond, "left_anti").drop("_row_snap")
 
     def results(self, spark: SparkSession) -> DataFrame:
         return self._state(spark)
 
     def lineage(self, spark: SparkSession) -> DataFrame:
+        """Every run's lineage rows: the live snapshots' ``lineage/``
+        dirs and those :meth:`expire_snapshots` moved to
+        ``expired-lineage/``, so compaction never drops an audit row."""
+        kept = os.path.join(self.root, "expired-lineage")
         paths = [
+            os.path.join(kept, s)
+            for s in sorted(os.listdir(kept), key=self._snap_num)
+        ] if os.path.isdir(kept) else []
+        paths += [
             os.path.join(self.snap_dir, s, "lineage")
             for s in self.snapshots()
             if os.path.exists(os.path.join(self.snap_dir, s, "lineage"))

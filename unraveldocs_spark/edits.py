@@ -29,23 +29,22 @@ ERR_NOT_COMPLETED = (
 
 def _sanitize_html_edits(edits: DataFrame) -> DataFrame:
     """Safelist-sanitize HTML-format edits in one Arrow pass; MARKDOWN
-    passes through untouched (sanitizeContent semantics)."""
-    from .sanitizer import clean_html
+    passes through untouched (sanitizer.sanitize_content)."""
+    from .sanitizer import sanitize_content
 
     content = edits.columns.index("edited_content")
     fmt = edits.columns.index("content_format")
 
     def run(*row):
-        if row[fmt] == "HTML":
-            row = list(row)
-            row[content] = clean_html(row[content])
+        row = list(row)
+        row[content] = sanitize_content(row[content], row[fmt])
         yield row
 
     return map_rows(edits, run, edits.schema)
 
 
 def apply_edits(
-    results: DataFrame, edits: DataFrame, sanitize: bool = True
+    results: DataFrame, edits: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """MERGE the edits into the extraction results.
 
@@ -59,8 +58,7 @@ def apply_edits(
     - rejected_edits: edits whose target row is missing or not COMPLETED,
       with the reference's error message in ``edit_error``.
     """
-    if sanitize:
-        edits = _sanitize_html_edits(edits)
+    edits = _sanitize_html_edits(edits)
     e = edits.select(
         *EDIT_KEYS,
         F.col("edited_content").alias("_new_content"),

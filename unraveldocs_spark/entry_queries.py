@@ -131,7 +131,7 @@ def q_extract_synthetic(spark, sf_dir):
 def q_simhash_near_dupes(spark, sf_dir):
     from .textanalysis import simhash_near_dupes
 
-    d = scan(spark, sf_dir, "documents")
+    d = scan(spark, sf_dir, "documents", fan=True)
     return simhash_near_dupes(d, max_hamming=16)
 
 

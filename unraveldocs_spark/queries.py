@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .rollup import status_rollup
 from .scanfan import scan
 
 
@@ -129,21 +130,7 @@ def q_collection_rollup(spark, sf_dir):
         .otherwise(F.lit("PENDING"))
     )
     per_doc = docs.select(F.col("source").alias("conv_id"), status.alias("status"))
-    agg = per_doc.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.when(F.col("status") == "COMPLETED", 1).otherwise(0)).alias("completed"),
-        F.sum(F.when(F.col("status") == "FAILED", 1).otherwise(0)).alias("failed"),
-    )
-    return agg.select(
-        "conv_id",
-        "total",
-        "completed",
-        "failed",
-        F.when(F.col("completed") == F.col("total"), F.lit("PROCESSED"))
-        .when(F.col("completed") + F.col("failed") == F.col("total"), F.lit("FAILED_OCR"))
-        .otherwise(F.lit("PROCESSING"))
-        .alias("collection_status"),
-    ).orderBy("conv_id")
+    return status_rollup(per_doc.groupBy("conv_id"), total="total").orderBy("conv_id")
 
 
 SQL_COLLECTION_ROLLUP = """

@@ -69,6 +69,68 @@ def signature_stage(embeddings: DataFrame, dim: int, bits: int = LSH_BITS) -> Da
     )
 
 
+def band_rows(sigs: DataFrame, id_col: str, keys: list) -> DataFrame:
+    """The NARROW LSH band rows (id, band_idx, band_key) of a signature
+    table: one row per band of each ``sigs`` row, ``keys`` holding one
+    band-key expression over ``sigs`` per band.  The key is data-
+    dependent (MinHash band values, hyperplane or SimHash signature
+    bits), so bucket sizes follow the corpus's similarity structure,
+    never a fixed-cardinality block.  Payloads stay behind."""
+    band = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(b).alias("band_idx"), key.alias("band_key"))
+                for b, key in enumerate(keys)
+            ]
+        )
+    ).alias("band")
+    return sigs.select(F.col(id_col).alias("id"), band).select(
+        "id", "band.band_idx", "band.band_key"
+    )
+
+
+def band_pairs(a_bands: DataFrame, b_bands: DataFrame, payload: DataFrame,
+               pair: tuple[str, str], symmetric: bool = False) -> DataFrame:
+    """Banded candidate pairs (left, right, <val>_a, <val>_b): a- and
+    b-side :func:`band_rows` collide on (band_idx, band_key) with a.id <
+    b.id (``symmetric``: a.id != b.id, so each id sees every candidate),
+    the id pairs are deduplicated, and the one payload column ``val`` is
+    joined back per side from ``payload`` (id, val), a materialized
+    table.  Candidates never carry the payload through the self-join or
+    the dedup shuffle; and because Catalyst broadcasts one self-join
+    side rather than reuse the exchange, an un-materialized signature
+    table would compute twice.  A self-join passes one band frame as
+    both sides; an increment screen passes the corpus against the new
+    batch."""
+    left, right = pair
+    id_col, val = payload.columns
+    a, b = a_bands.alias("a"), b_bands.alias("b")
+    ids = (
+        F.col("a.id") != F.col("b.id") if symmetric
+        else F.col("a.id") < F.col("b.id")
+    )
+    cand_ids = (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_key") == F.col("b.band_key"))
+            & ids,
+        )
+        .select(F.col("a.id").alias(left), F.col("b.id").alias(right))
+        .dropDuplicates([left, right])
+    )
+
+    def side(name, suffix):
+        return payload.select(
+            F.col(id_col).alias(name), F.col(val).alias(f"{val}_{suffix}")
+        )
+
+    return (
+        cand_ids.join(side(left, "a"), left).join(side(right, "b"), right)
+        .select(left, right, f"{val}_a", f"{val}_b")
+    )
+
+
 def cosine(a, b):
     """Cosine similarity of two array columns, in double, computed
     JVM-side with higher-order functions (no Python in the scan)."""

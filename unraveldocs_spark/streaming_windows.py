@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from .extract import extract_stage
+from .rollup import status_rollup
 from .schemas import TRANSCRIPTS_SCHEMA
 from .streaming import drain_to_parquet, read_stream
 from .streaming_state import EVENTS_STREAM_SCHEMA
@@ -37,31 +38,19 @@ def run_windowed_rollup(
     window).  Returns the query handle (caller awaits)."""
     stream = read_stream(spark, TRANSCRIPTS_SCHEMA, input_path, _MAX_FILES)
     extracted = extract_stage(stream, carry_ts=True)
-    agg = (
-        extracted.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("win"), F.col("conv_id"))
-        .agg(
-            F.count(F.lit(1)).alias("total_turns"),
-            F.sum(F.when(F.col("status") == "COMPLETED", 1).otherwise(0)).alias(
-                "completed"
-            ),
-            F.sum(F.when(F.col("status") == "FAILED", 1).otherwise(0)).alias("failed"),
+    counts = status_rollup(
+        extracted.withWatermark("ts", watermark).groupBy(
+            F.window("ts", window).alias("win"), F.col("conv_id")
         )
     )
-    rollup = agg.select(
+    rollup = counts.select(
         F.col("win.start").alias("window_start"),
         F.col("win.end").alias("window_end"),
         "conv_id",
         "total_turns",
         "completed",
         "failed",
-        F.when(F.col("completed") == F.col("total_turns"), F.lit("PROCESSED"))
-        .when(
-            F.col("completed") + F.col("failed") == F.col("total_turns"),
-            F.lit("FAILED_OCR"),
-        )
-        .otherwise(F.lit("PROCESSING"))
-        .alias("collection_status"),
+        "collection_status",
     )
     return drain_to_parquet(rollup, output_path, checkpoint_dir)
 

@@ -14,6 +14,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from .schemas import map_rows
+from .similarity import band_pairs, band_rows
 
 # ---------------------------------------------------------------------------
 # SimHash (64-bit, word features, md5-derived feature hashes)
@@ -66,44 +67,21 @@ def simhash_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
 def simhash_near_dupes(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Candidate pairs sharing at least one 16-bit band (any pair with
     hamming <= 3 must collide in >=1 of 4 bands; wider radii trade recall),
-    confirmed by exact hamming distance.  Scale path: explode to
-    (band_idx, band_val) rows and shuffle on the band value — never a
-    cross join."""
+    confirmed by exact hamming distance.  Scale path: the banded
+    candidate builder (similarity.band_rows/band_pairs) — narrow
+    (id, band_idx, band_key) rows shuffle on the band value, never a
+    cross join, and the 64-bit simhash joins back per side.  The
+    signature table is materialized once, so the Python stage runs once
+    although both sides of the self-join and both join-backs read it."""
     from pyspark.sql import functions as F
 
-    sigs = simhash_stage(docs)
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"), F.col(f"band{i}").alias("band_val")
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.band_idx", "b.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    sigs = simhash_stage(docs).localCheckpoint()
+    bands = band_rows(sigs, "doc_id", [F.col(f"band{i}") for i in range(4)])
+    cands = band_pairs(
+        bands, bands, sigs.select("doc_id", "simhash"), ("doc_a", "doc_b")
     )
     # exact hamming via bit_count on the xor of the two 64-bit values
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cands.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)

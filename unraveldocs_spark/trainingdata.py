@@ -27,6 +27,7 @@ from .generator import FIXTURE, mix64, transcript_rows, transcripts_spark
 # perfbench/workloads.py times the fan-out by patching
 # trainingdata.fan_out and scanfan.fan_out by name
 from .scanfan import fan_out, scan  # noqa: F401
+from .similarity import EMB_DIM, band_pairs, band_rows, signature_stage
 
 
 # ---------------------------------------------------------------------------
@@ -259,53 +260,12 @@ def _minhash_candidate_pairs(d, n_bands: int | None = None,
         .filter(F.size("sh") > 0)
     )
     bands = _minhash_bands(d, n_bands, n_rows)
-    return _band_pairs(bands, bands, d)
-
-
-def _band_pairs(a_bands, b_bands, d):
-    """Narrow LSH band join -> deduplicated candidate pairs (doc_a,
-    doc_b, sh_a, sh_b): a-side and b-side band rows (doc_id, band_idx,
-    band_key) collide on (band_idx, band_key) with a.doc_id < b.doc_id,
-    the id pairs are deduplicated, and both shingle arrays are joined
-    back from the materialized signature table ``d`` (doc_id, sh).
-    The symmetric pair builder passes one band frame as both sides; the
-    increment screen passes the full corpus against the new batch."""
-    a = a_bands.alias("a")
-    b = b_bands.alias("b")
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    sh_tbl = d.select("doc_id", "sh")
-    return (
-        cand_ids.join(
-            sh_tbl.select(
-                F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
-            ),
-            "doc_a",
-        ).join(
-            sh_tbl.select(
-                F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-            ),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", "sh_a", "sh_b")
-    )
+    return band_pairs(bands, bands, d.select("doc_id", "sh"), ("doc_a", "doc_b"))
 
 
 def _minhash_bands(d, n_bands: int, n_rows: int):
-    """(doc_id, sh, hs) -> exploded NARROW LSH band rows (doc_id,
-    band_idx, band_key) — the shingle payload stays behind; pair
-    builders join it back from the materialized signature table.
+    """(doc_id, sh, hs) -> the MinHash :func:`band_rows` (id, band_idx,
+    band_key), a band key being the band's n_rows minima joined by '-'.
     Shared by the symmetric pair builder above and the asymmetric
     new-batch join in q_dedup_increment."""
 
@@ -320,35 +280,21 @@ def _minhash_bands(d, n_bands: int, n_rows: int):
         ).alias(f"m{j}")
 
     mins = [_min_hash(j) for j in range(n_bands * n_rows)]
-    sigs = d.select("doc_id", *mins)
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.concat_ws(
-                            "-",
-                            *[
-                                F.col(f"m{b * n_rows + r}").cast("string")
-                                for r in range(n_rows)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_key")
+    keys = [
+        F.concat_ws(
+            "-", *[F.col(f"m{b * n_rows + r}").cast("string") for r in range(n_rows)]
+        )
+        for b in range(n_bands)
+    ]
+    return band_rows(d.select("doc_id", *mins), "doc_id", keys)
 
 
 def _hyperplane_candidate_pairs(e, n_bands: int, band_bits: int,
                                 symmetric: bool):
     """embedding DataFrame (vec_id, embedding) -> deduplicated candidate
     pairs colliding in at least one random-hyperplane LSH band, with the
-    cosine ``_cos`` of each pair.  The band key (band_idx, band_val) is
-    data-dependent, like the MinHash bands above.  Shared by
+    cosine ``_cos`` of each pair.  The band key (a band's signature
+    bits) is data-dependent, like the MinHash bands above.  Shared by
     q_dedup_embedding_cosine (``symmetric=False``: pairs (vec_a, vec_b)
     with vec_a < vec_b) and q_knn_join (``symmetric=True``: pairs
     (vec_id, nbr_id) both ways, so each vector sees every candidate).
@@ -357,8 +303,6 @@ def _hyperplane_candidate_pairs(e, n_bands: int, band_bits: int,
     b-side join-backs, and ``sigs`` feeds both sides of the band
     self-join (Catalyst broadcast one side and re-ran the PYTHON
     signature stage for it — the worst thing to compute twice)."""
-    from .similarity import EMB_DIM, signature_stage
-
     left, right = ("vec_id", "nbr_id") if symmetric else ("vec_a", "vec_b")
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, x: acc + x * x))
@@ -374,50 +318,17 @@ def _hyperplane_candidate_pairs(e, n_bands: int, band_bits: int,
         "vec_id", "signature"
     ).localCheckpoint()
     mask = (1 << band_bits) - 1
-    # candidate generation stays NARROW (ids + band key only): the 64-dim
-    # vectors never ride through the explode or the pair dedup shuffle —
-    # they join back per side after the candidate set is deduplicated
-    bands = sigs.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.shiftright(F.col("signature"), b * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("vec_id", "band.band_idx", "band.band_val")
-    a, b = bands.alias("a"), bands.alias("b")
-    ids = (
-        F.col("a.vec_id") != F.col("b.vec_id") if symmetric
-        else F.col("a.vec_id") < F.col("b.vec_id")
-    )
-    cand_ids = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & ids,
-        )
-        .select(F.col("a.vec_id").alias(left), F.col("b.vec_id").alias(right))
-        .dropDuplicates([left, right])
-    )
-    ua = unit.select(F.col("vec_id").alias(left), F.col("unit").alias("unit_a"))
-    ub = unit.select(F.col("vec_id").alias(right), F.col("unit").alias("unit_b"))
+    bands = band_rows(sigs, "vec_id", [
+        F.shiftright(F.col("signature"), b * band_bits).bitwiseAND(F.lit(mask))
+        for b in range(n_bands)
+    ])
     cos = F.aggregate(
         F.zip_with(F.col("unit_a"), F.col("unit_b"), lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    return (
-        cand_ids.join(ua, left).join(ub, right)
-        .select(left, right, cos.alias("_cos"))
+    return band_pairs(bands, bands, unit, (left, right), symmetric).select(
+        left, right, cos.alias("_cos")
     )
 
 
@@ -5396,7 +5307,9 @@ def q_dedup_increment(spark, sf_dir):
     bands_all = _minhash_bands(nz, n_bands, n_rows)
     bands_new = _minhash_bands(nz.filter(F.col("doc_id") >= t), n_bands, n_rows)
     conf = (
-        _jaccard_counts(_band_pairs(bands_all, bands_new, nz))
+        _jaccard_counts(band_pairs(
+            bands_all, bands_new, nz.select("doc_id", "sh"), ("doc_a", "doc_b")
+        ))
         .filter(F.lit(2) * F.col("jac_num") >= F.col("jac_den"))
         .select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("other"))
     )
