@@ -134,3 +134,16 @@ class TestVisionFamily:
     def test_vision_empty_response_completed_empty(self):
         r = O.extract_turn("user", None, '{"kind":"vision"}')
         assert r.status == "COMPLETED" and r.extracted_text == "" and r.spans == []
+
+    def test_vision_turn_parses_its_json_once(self, monkeypatch):
+        """The envelope parse hands its object to the vision shaping;
+        the payload is not decoded a second time."""
+        parsed = []
+        loads = json.loads
+        monkeypatch.setattr(
+            json, "loads", lambda s, *a, **k: parsed.append(s) or loads(s, *a, **k)
+        )
+        payload = '{"kind":"vision","annotations":[{"description":"one parse"}]}'
+        r = O.extract_turn("user", None, payload)
+        assert r.rule == O.RULE_VISION and r.extracted_text == "one parse"
+        assert parsed == [payload]

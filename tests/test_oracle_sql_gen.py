@@ -6,6 +6,7 @@ driver's sf0.01 gate."""
 import duckdb
 import pytest
 
+from unraveldocs_spark import textanalysis
 from unraveldocs_spark.oracle_sql_gen import (
     simhash_near_dupes_sql,
     winnow_fingerprints_sql,
@@ -49,8 +50,9 @@ def test_winnow_sql_matches_python(con):
         assert fp_sum == sum(fps) % 1_000_000_007, doc_id
 
 
-def test_simhash_sql_matches_python(con):
-    rows = con.execute(simhash_near_dupes_sql(64)).fetchall()
+def test_simhash_sql_matches_python(con, monkeypatch):
+    monkeypatch.setattr(textanalysis, "SIMHASH_MAX_HAMMING", 64)
+    rows = con.execute(simhash_near_dupes_sql()).fetchall()
     sh = {i: simhash64(t) for i, t in enumerate(TEXTS)}
     # reproduce banding in python
     from collections import defaultdict

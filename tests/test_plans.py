@@ -243,22 +243,6 @@ class TestRound2Plans:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
-    def test_multiprobe_lsh_joins_on_signature(self, spark):
-        """Multiprobe candidates equi-join broadcast probe keys on the
-        signature column (bucket pruning shape), not a full-table scan
-        predicate."""
-        from pyspark.sql import functions as F
-
-        from unraveldocs_spark.similarity import lsh_topk
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-        plan = plan_of(
-            lsh_topk(e.filter(F.col("vec_id") != 0), qvec, k=5, multiprobe=True),
-            "simple",
-        )
-        assert "BroadcastHashJoin" in plan and "signature" in plan
-
 
 class TestCorpusFilterPlans:
     """Plan shapes for the web-corpus filter battery (Gopher/C4/CCNet)."""

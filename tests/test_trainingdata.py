@@ -6,8 +6,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from unraveldocs_spark import similarity, textanalysis
 from unraveldocs_spark.scanfan import scan
 from unraveldocs_spark.similarity import (
+    LSH_BITS,
     _hyperplanes,
     brute_force_topk,
     lsh_topk,
@@ -60,10 +62,11 @@ class TestSimhashSpark:
             assert row.band0 == (h >> 48) & 0xFFFF
             assert row.band3 == h & 0xFFFF
 
-    def test_near_dupes_hamming_correct(self, spark):
+    def test_near_dupes_hamming_correct(self, spark, monkeypatch):
+        monkeypatch.setattr(textanalysis, "SIMHASH_MAX_HAMMING", 20)
         d = spark.read.parquet(f"{SF}/documents.parquet").limit(100)
         texts = {r.doc_id: r.text for r in d.collect()}
-        got = simhash_near_dupes(d, max_hamming=20).collect()
+        got = simhash_near_dupes(d).collect()
         assert got, "expected some candidate pairs on word-soup docs"
         for row in got:
             expect = hamming64(simhash64(texts[row.doc_a]), simhash64(texts[row.doc_b]))
@@ -130,25 +133,45 @@ class TestSimilarity:
         got = [r.vec_id for r in brute_force_topk(emb.filter(F.col("vec_id") != 0), qvec, 10).collect()]
         assert got == expect
 
-    def test_lsh_recall(self, emb, qvec):
+    def test_lsh_recall(self, emb, qvec, monkeypatch):
+        monkeypatch.setattr(similarity, "LSH_PROBE_HAMMING", 6)
         exact = {
             r.vec_id
             for r in brute_force_topk(emb.filter(F.col("vec_id") != 0), qvec, 10).collect()
         }
         approx = {
             r.vec_id
-            for r in lsh_topk(
-                emb.filter(F.col("vec_id") != 0), qvec, 10, probe_hamming=6
-            ).collect()
+            for r in lsh_topk(emb.filter(F.col("vec_id") != 0), qvec).collect()
         }
         recall = len(exact & approx) / 10
         assert recall >= 0.5, f"LSH recall too low: {recall}"
 
     def test_signature_deterministic(self, qvec):
-        planes = _hyperplanes(len(qvec))
+        planes = _hyperplanes(len(qvec), LSH_BITS)
         s1 = signature_bits(np.asarray(qvec), planes)
         s2 = signature_bits(np.asarray(qvec), planes)
         assert s1 == s2 and 0 <= s1 < (1 << 16)
+
+
+class TestAnnConstants:
+    def test_top_k_constant_moves_spark_and_oracle(self, spark, monkeypatch):
+        """ANN_K is the one home of the ANN top-k: the registry's Spark
+        builders and the SQL that oracle_sql() renders both follow it."""
+        import duckdb
+
+        import __spark_entry__ as entry
+
+        monkeypatch.setattr(similarity, "ANN_K", 4)
+        sql = entry.oracle_sql()
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW embeddings AS "
+            f"SELECT * FROM read_parquet('{SF}/embeddings.parquet')"
+        )
+        for name in ("ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk"):
+            got = sorted(tuple(r) for r in entry.queries()[name](spark, SF).collect())
+            assert len(got) == 4, name
+            assert got == sorted(con.execute(sql[name]).fetchall()), name
 
 
 class TestMultimodal:
@@ -165,15 +188,9 @@ class TestMultimodal:
         out2 = decode_stage(attach_binary_payload(d)).collect()
         assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
 
-    def test_real_decode_stub_fails_rows(self, spark):
-        from unraveldocs_spark.multimodal import attach_binary_payload, decode_stage
-
-        d = spark.read.parquet(f"{SF}/documents.parquet").limit(8)
-        out = decode_stage(attach_binary_payload(d), require_real_decode=True).collect()
-        assert all(r.decode_status == "FAILED" for r in out)
-
     def test_frame_sampling(self, spark):
         from unraveldocs_spark.multimodal import (
+            FRAME_STRIDE,
             attach_binary_payload,
             decode_stage,
             frame_sample_stage,
@@ -181,9 +198,9 @@ class TestMultimodal:
 
         d = spark.read.parquet(f"{SF}/documents.parquet").limit(40)
         decoded = decode_stage(attach_binary_payload(d))
-        frames = frame_sample_stage(decoded, every_n=30).collect()
+        frames = frame_sample_stage(decoded).collect()
         assert frames
-        assert all(r.frame_no % 30 == 0 for r in frames)
+        assert all(r.frame_no % FRAME_STRIDE == 0 for r in frames)
 
 
 class TestLangIdExpr:
@@ -225,17 +242,15 @@ class TestLangIdExpr:
 
 
 class TestIvf:
-    def test_ivf_recall(self, spark):
+    def test_ivf_recall(self, spark, monkeypatch):
         from unraveldocs_spark.similarity import brute_force_topk, ivf_topk
 
+        monkeypatch.setattr(similarity, "IVF_NPROBE", 8)
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
         rest = emb.filter(F.col("vec_id") != 0)
         exact = {r.vec_id for r in brute_force_topk(rest, qvec, 10).collect()}
-        approx = {
-            r.vec_id
-            for r in ivf_topk(rest, qvec, 10, n_centroids=16, nprobe=8).collect()
-        }
+        approx = {r.vec_id for r in ivf_topk(rest, qvec).collect()}
         assert len(exact & approx) / 10 >= 0.5
 
     def test_ivf_deterministic(self, spark):
@@ -244,8 +259,8 @@ class TestIvf:
         emb = spark.read.parquet(f"{SF}/embeddings.parquet")
         qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first().embedding]
         rest = emb.filter(F.col("vec_id") != 0)
-        a = [r.vec_id for r in ivf_topk(rest, qvec, 10).collect()]
-        b = [r.vec_id for r in ivf_topk(rest, qvec, 10).collect()]
+        a = [r.vec_id for r in ivf_topk(rest, qvec).collect()]
+        b = [r.vec_id for r in ivf_topk(rest, qvec).collect()]
         assert a == b and len(a) == 10
 
 
@@ -309,75 +324,6 @@ class TestBandedJaccardVsBlocked:
                 assert blocked[pair] == jac
         strong = {p for p, (n, d) in blocked.items() if n * 2 >= d}
         assert strong <= set(banded), strong - set(banded)
-
-
-class TestKMeansRefine:
-    def test_objective_non_decreasing_and_deterministic(self, spark):
-        """One distributed Lloyd step must not decrease the spherical
-        k-means objective (mean max cosine to a centroid), and the
-        refined codebook is run-to-run deterministic."""
-        from unraveldocs_spark.similarity import kmeans_refine
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        rows = e.orderBy("vec_id").collect()
-        mat = np.asarray([list(r.embedding) for r in rows], dtype=np.float64)
-        unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        seed = mat[:8]
-
-        def objective(cents_unit):
-            return (unit @ cents_unit.T).max(axis=1).mean()
-
-        seed_unit = seed / np.linalg.norm(seed, axis=1, keepdims=True)
-        c1 = kmeans_refine(e, seed, 1)
-        c1b = kmeans_refine(e, seed, 1)
-        assert np.array_equal(c1, c1b)
-        assert objective(c1) >= objective(seed_unit) - 1e-12
-        c2 = kmeans_refine(e, seed, 2)
-        assert objective(c2) >= objective(c1) - 1e-12
-
-    def test_ivf_with_refined_codebook_valid(self, spark):
-        from unraveldocs_spark.similarity import brute_force_topk, ivf_topk
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-        base = e.filter(F.col("vec_id") != 0)
-        got = ivf_topk(base, qvec, k=10, n_centroids=16, nprobe=6, kmeans_iters=1)
-        rows = got.collect()
-        assert len(rows) == 10
-        exact = {
-            r.vec_id: r.cosine for r in brute_force_topk(base, qvec, k=500).collect()
-        }
-        for r in rows:
-            assert abs(exact[r.vec_id] - r.cosine) < 1e-9
-
-
-class TestMultiprobeLsh:
-    def test_multiprobe_equals_scan(self, spark):
-        """Enumerated probe buckets must produce the identical top-k as
-        the linear bit_count scan (same candidate set by construction)."""
-        from unraveldocs_spark.similarity import lsh_topk, probe_signatures
-
-        e = spark.read.parquet(f"{SF}/embeddings.parquet")
-        qvec = [float(x) for x in e.filter(F.col("vec_id") == 0).first().embedding]
-        base = e.filter(F.col("vec_id") != 0)
-        scan = [(r.vec_id, round(r.cosine, 9))
-                for r in lsh_topk(base, qvec, k=10, probe_hamming=3).collect()]
-        multi = [(r.vec_id, round(r.cosine, 9))
-                 for r in lsh_topk(base, qvec, k=10, probe_hamming=3,
-                                   multiprobe=True).collect()]
-        assert scan == multi and len(scan) > 0
-
-    def test_probe_key_count(self):
-        from math import comb
-
-        from unraveldocs_spark.similarity import probe_signatures
-
-        keys = probe_signatures(0b1010, bits=16, radius=3)
-        assert len(keys) == sum(comb(16, r) for r in range(4))
-        assert len(set(keys)) == len(keys)
-        from unraveldocs_spark.textanalysis import hamming64
-
-        assert all(hamming64(k, 0b1010) <= 3 for k in keys)
 
 
 class TestMultimodalResizeFeatures:

@@ -375,7 +375,15 @@ def ann_recall(spark, sf_dir: str, query_stride: int = 40) -> list[dict]:
     ``pq_topk`` operator per query."""
     import numpy as np
 
-    from unraveldocs_spark.similarity import EMB_DIM, _hyperplanes, pq_topk
+    from unraveldocs_spark.similarity import (
+        EMB_DIM,
+        IVF_CENTROIDS,
+        IVF_NPROBE,
+        LSH_BITS,
+        LSH_PROBE_HAMMING,
+        _hyperplanes,
+        pq_topk,
+    )
 
     e, ids, mat, unit = _unit_vectors(spark, sf_dir)
     pos = {v: i for i, v in enumerate(ids)}
@@ -391,21 +399,21 @@ def ann_recall(spark, sf_dir: str, query_stride: int = 40) -> list[dict]:
         q = unit[pos[qid]]
         return set(sorted(cand, key=lambda v: (-(unit[pos[v]] @ q), v))[:K])
 
-    planes16 = _hyperplanes(EMB_DIM, 16)
-    sig16 = ((mat @ planes16.T) > 0).astype(np.int64) @ (
-        1 << np.arange(16, dtype=np.int64)
+    planes = _hyperplanes(EMB_DIM, LSH_BITS)
+    sigs = ((mat @ planes.T) > 0).astype(np.int64) @ (
+        1 << np.arange(LSH_BITS, dtype=np.int64)
     )
 
-    def lsh_candidates(qid, probe_hamming=5):
-        ham = [bin(int(sig16[pos[qid]] ^ s)).count("1") for s in sig16]
-        return {ids[j] for j, h in enumerate(ham) if h <= probe_hamming} - {qid}
+    def lsh_candidates(qid):
+        ham = [bin(int(sigs[pos[qid]] ^ s)).count("1") for s in sigs]
+        return {ids[j] for j, h in enumerate(ham) if h <= LSH_PROBE_HAMMING} - {qid}
 
-    cents = mat[:16]  # seed codebook: the first 16 vectors
+    cents = mat[:IVF_CENTROIDS]  # seed codebook: the lowest vec_ids
     cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
     assign = (unit @ cents_unit.T).argmax(axis=1)
 
-    def ivf_candidates(qid, nprobe=6):
-        probe = np.argsort(-(cents_unit @ unit[pos[qid]]))[:nprobe]
+    def ivf_candidates(qid):
+        probe = np.argsort(-(cents_unit @ unit[pos[qid]]))[:IVF_NPROBE]
         return {ids[j] for j in range(len(ids)) if assign[j] in probe} - {qid}
 
     def pq_ids(qid, **kw):
@@ -429,6 +437,15 @@ def ann_recall(spark, sf_dir: str, query_stride: int = 40) -> list[dict]:
 
 
 def render_ann_recall(rows: list[dict], sf_dir: str) -> str:
+    from unraveldocs_spark.similarity import (
+        IVF_CENTROIDS,
+        IVF_NPROBE,
+        LSH_BITS,
+        LSH_PROBE_HAMMING,
+        PQ_KSUB,
+        PQ_M,
+    )
+
     r = rows[0]
 
     def pct(x):
@@ -437,11 +454,11 @@ def render_ann_recall(rows: list[dict], sf_dir: str) -> str:
     table = md_table(
         ["variant", "mean recall@10", "notes"],
         [
-            ["LSH (16-bit signature, hamming<=5 probe)", pct(r["lsh_pct"]),
-             "signature scan / multiprobe bucket join"],
-            ["IVF (16 lists, nprobe=6)", pct(r["ivf_pct"]),
-             "seed codebook, no refinement"],
-            ["PQ ADC only (8x16 codebook, integer-e6 luts)", pct(r["pq_pct"]),
+            [f"LSH ({LSH_BITS}-bit signature, hamming<={LSH_PROBE_HAMMING} probe)",
+             pct(r["lsh_pct"]), "signature scan"],
+            [f"IVF ({IVF_CENTROIDS} lists, nprobe={IVF_NPROBE})", pct(r["ivf_pct"]),
+             "seed codebook"],
+            [f"PQ ADC only ({PQ_M}x{PQ_KSUB} codebook, integer-e6 luts)", pct(r["pq_pct"]),
              "ranks by COMPRESSED distance — recall bounded by quantization error"],
             ["PQ ADC + exact re-rank (shortlist 100)", pct(r["pq_rerank_pct"]),
              "the production path: 8-byte-code scan shortlists, only 100 "
@@ -736,8 +753,9 @@ def _increment_batch(spark, sf_dir: str):
 
 def increment_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
     """The asymmetric band join dedup_increment runs — bands of
-    (existing + batch) x bands of the batch, through the package's
-    ``band_pairs`` — per corpus growth: band shape, batch-side
+    (existing + batch) x bands of the batch, both read from one
+    materialized signature table (``_minhash_signatures``) through the
+    package's ``band_pairs`` — per corpus growth: band shape, batch-side
     candidate pairs, confirmed matches (Jaccard >= 0.5), and how many
     planted duplicates with non-empty shingles were confirmed."""
     from pyspark.sql import functions as F
@@ -746,16 +764,14 @@ def increment_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
     from unraveldocs_spark.trainingdata import (
         _jaccard_counts,
         _minhash_bands,
-        _spark_shingle_hashes,
+        _minhash_signatures,
         _spark_shingles,
         minhash_band_shape,
     )
 
     def nz(df):
-        return (
+        return _minhash_signatures(
             df.select("doc_id", _spark_shingles(F.col("text")).alias("sh"))
-            .filter(F.size("sh") > 0)
-            .withColumn("hs", _spark_shingle_hashes(F.col("sh")))
         )
 
     batch = _increment_batch(spark, sf_dir).cache()
@@ -769,9 +785,10 @@ def increment_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
         n_existing = existing.count()
         n_bands, n_rows = minhash_band_shape(n_existing + n_batch)
         all_side = nz(existing.select("doc_id", "text").unionByName(batch))
+        batch_side = all_side.filter(F.col("doc_id") >= BATCH_BASE_ID)
         cands = _jaccard_counts(band_pairs(
             _minhash_bands(all_side, n_bands, n_rows),
-            _minhash_bands(nz(batch), n_bands, n_rows),
+            _minhash_bands(batch_side, n_bands, n_rows),
             all_side.select("doc_id", "sh"),
             ("doc_a", "doc_b"),
         )).withColumnsRenamed({"doc_b": "doc_id", "doc_a": "other"})
@@ -826,10 +843,10 @@ with non-empty shingles that the join confirmed.
 Reading: the planted exact duplicates dominate the confirmed count
 at every scale; `minhash_band_shape` widens rows-per-band past 8k docs
 (the same measured rule as BENCH/DEDUP_SCALE.md), which is what keeps
-batch-side candidates from curving up with corpus size.  Wall time
-grows with the corpus-side signature build (in production that side is
-PERSISTED — only the join and the batch's own signatures are paid per
-increment), not with pair volume.
+batch-side candidates from curving up with corpus size.  Both sides
+read one materialized signature table, as in the query (in production
+that table is PERSISTED between increments), so "join wall" times the
+band join and the Jaccard confirm only, not the signature build.
 """
 
 

@@ -481,10 +481,10 @@ def iceberg_delete_sql(results_table: str, keys_view: str = "_delete_keys",
 def iceberg_maintenance_sql(results_table: str,
                             older_than: str = "current_timestamp() - INTERVAL 7 DAYS",
                             retain_last: int = 10) -> tuple[str, str]:
-    """The maintenance pair the Iceberg production path runs on the same
-    cadence as DirCheckpointStore.maybe_compact (rendered pure so the
-    SQL is unit-pinned without an Iceberg jar): small-file compaction
-    plus snapshot expiry with a retained-history floor.  ``catalog`` is
+    """The Iceberg analog of DirCheckpointStore.maybe_compact: small-file
+    compaction plus snapshot expiry with a retained-history floor.  No
+    job runs it; it is rendered pure for a deployment's maintenance
+    scheduler and unit-pinned without an Iceberg jar.  ``catalog`` is
     the first identifier segment of ``results_table``."""
     catalog = results_table.split(".", 1)[0]
     rewrite = (

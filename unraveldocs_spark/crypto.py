@@ -39,6 +39,8 @@ import base64
 import hashlib
 import json
 
+from .semantics import md5_56
+
 try:  # not in the documented baked-in set, though present in practice
     from cryptography.hazmat.primitives.ciphers.aead import AESGCM
 
@@ -66,6 +68,10 @@ def _require_aesgcm():
         )
 
 
+def _utf8(text: str) -> bytes:
+    return text.encode("utf-8", errors="surrogatepass")
+
+
 def derive_iv(conv_id: str, turn_idx: int) -> bytes:
     """Deterministic 12-byte IV for fixture corpora (see module doc)."""
     return hashlib.sha256(f"{conv_id}:{turn_idx}:iv".encode()).digest()[:IV_LEN]
@@ -85,9 +91,7 @@ def decrypt_bytes(key: bytes, iv: bytes, ct_and_tag: bytes) -> bytes:
 def encrypted_envelope(conv_id: str, turn_idx: int, text: str) -> str:
     """Wrap a turn's plaintext payload as the encrypted JSON envelope."""
     iv = derive_iv(conv_id, turn_idx)
-    ct = encrypt_bytes(
-        FIXTURE_MASTER_KEY, iv, text.encode("utf-8", errors="surrogatepass")
-    )
+    ct = encrypt_bytes(FIXTURE_MASTER_KEY, iv, _utf8(text))
     return json.dumps(
         {
             "kind": "encrypted",
@@ -139,3 +143,42 @@ def decrypt_envelope_fields(iv_b64: str | None, data_b64: str | None) -> str:
         raise
     except Exception as e:
         raise ValueError(f"{ERR_DECRYPT}: {e.__class__.__name__}") from e
+
+
+def roundtrip_row(conv_id: str, turn_idx: int, role: str, text: str | None,
+                  tool: str | None) -> tuple:
+    """One turn of the encrypt -> decrypt -> extract roundtrip check,
+    shared by the Spark Arrow stage (entry_queries.q_encrypted_roundtrip)
+    and its sequential VALUES oracle: (conv_id, turn_idx, is_encrypted,
+    iv_b64, status, rule, error_message, text_digest, match_plain), the
+    digest being the md5-56 of the extracted text and ``match_plain``
+    comparing it with the plaintext turn's extraction."""
+    from .oracle import extract_turn
+
+    def digest(r):
+        return None if r.extracted_text is None else md5_56(_utf8(r.extracted_text))
+
+    enc_text, is_enc, iv_b64 = encrypt_turn(conv_id, turn_idx, text)
+    r_enc = extract_turn(role, tool, enc_text)
+    dg = digest(r_enc)
+    match_plain = int(dg == digest(extract_turn(role, tool, text)))
+    return (
+        conv_id, turn_idx, is_enc, iv_b64, r_enc.status, r_enc.rule,
+        r_enc.error_message, dg, match_plain,
+    )
+
+
+def export_shard_row(conv_id: str, n_turns: int, payload: str) -> tuple:
+    """One conversation's encrypted-export manifest row, shared by the
+    Spark Arrow stage (entry_queries.q_encrypted_export) and its VALUES
+    oracle: the payload encrypted under a conversation-derived IV, as
+    (conv_id, n_turns, pt_bytes, pt_digest, iv_b64, ct_digest,
+    roundtrip_ok) with md5-56 digests."""
+    pt = _utf8(payload)
+    iv = derive_iv("shard:" + conv_id, 0)
+    ct = encrypt_bytes(FIXTURE_MASTER_KEY, iv, pt)
+    return (
+        conv_id, n_turns, len(pt), md5_56(pt),
+        base64.b64encode(iv).decode("ascii"), md5_56(ct),
+        int(decrypt_bytes(FIXTURE_MASTER_KEY, iv, ct) == pt),
+    )

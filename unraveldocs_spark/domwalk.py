@@ -213,6 +213,7 @@ def join_blocks(blocks: list[tuple[str, str]]) -> tuple[str, list[tuple[int, int
 
 def extract_main_content(text: str) -> tuple[str, list[tuple[int, int, str]]]:
     """Full main-content extraction for an HTML-or-plain payload:
-    detection heuristic -> block walk -> joined text + spans."""
+    detection heuristic -> block walk -> joined text + spans.  Test
+    oracle: the unsanitized walk (extract_turn sanitizes before walking)."""
     blocks = html_blocks(text) if is_html(text) else plain_blocks(text)
     return join_blocks(blocks)

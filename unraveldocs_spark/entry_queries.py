@@ -10,12 +10,10 @@ the dispatch picks is SQL-expressible)."""
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import oracle_sql_gen as osg
+from . import multimodal as mm, oracle_sql_gen as osg
 from .extract import extract_stage
 from .generator import FIXTURE, transcripts_spark
 from .pipeline import salted_repartition
@@ -132,13 +130,12 @@ def q_simhash_near_dupes(spark, sf_dir):
     from .textanalysis import simhash_near_dupes
 
     d = scan(spark, sf_dir, "documents", fan=True)
-    return simhash_near_dupes(d, max_hamming=16)
+    return simhash_near_dupes(d)
 
 
 def q_lang_id(spark, sf_dir):
     """Language-ID via pure column expressions (JVM-side, oracle-checked);
-    the Arrow-batched Python variant (textanalysis.lang_id_stage) is
-    pytest-checked equivalent."""
+    the pure-Python textanalysis.lang_id is pytest-checked equivalent."""
     from .textanalysis import lang_id_expr
 
     d = scan(spark, sf_dir, "documents")
@@ -169,23 +166,23 @@ def q_ann_lsh(spark, sf_dir):
     from .similarity import cos_e4, lsh_topk, split_query
 
     qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
-    return cos_e4(lsh_topk(rest, qvec, k=10, probe_hamming=5))
+    return cos_e4(lsh_topk(rest, qvec))
 
 
 def q_ann_ivf(spark, sf_dir):
     from .similarity import cos_e4, ivf_topk, split_query
 
     qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
-    return cos_e4(ivf_topk(rest, qvec, k=10, n_centroids=16, nprobe=6))
+    return cos_e4(ivf_topk(rest, qvec))
 
 
 def q_ann_pq(spark, sf_dir):
-    """PQ-compressed ANN: 8x16 product codebook, integer ADC scan over
-    the 8-byte code column (similarity.pq_topk)."""
-    from .similarity import pq_topk, split_query
+    """PQ-compressed ANN: PQ_M x PQ_KSUB product codebook, integer ADC
+    scan over the 8-byte code column (similarity.pq_topk)."""
+    from .similarity import ANN_K, pq_topk, split_query
 
     qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
-    return pq_topk(rest, qvec, k=10)
+    return pq_topk(rest, qvec, ANN_K)
 
 
 def q_pdf_layout(spark, sf_dir):
@@ -274,7 +271,8 @@ def q_multimodal_decode(spark, sf_dir):
 
 def q_multimodal_resize(spark, sf_dir):
     """Aspect-preserving resize plan for image payloads (integer
-    arithmetic fit into 224x224) downstream of the decode stage."""
+    arithmetic fit into the RESIZE_TARGET square) downstream of the
+    decode stage."""
     from .multimodal import attach_binary_payload, decode_stage, resize_plan_stage
 
     d = scan(spark, sf_dir, "documents")
@@ -283,24 +281,24 @@ def q_multimodal_resize(spark, sf_dir):
     )
 
 
-SQL_MULTIMODAL_RESIZE = """
+SQL_MULTIMODAL_RESIZE = f"""
 WITH src AS (
   SELECT doc_id,
          CASE WHEN doc_id % 4 = 0 THEN 'image/png' ELSE 'image/jpeg' END AS media_type,
          CAST(octet_length(encode(text)) AS INT) AS n,
          COALESCE(list_aggregate(list_transform(
-             range(1, CAST(least(length(text), 64) + 1 AS INT)),
+             range(1, CAST(least(length(text), {mm.DECODE_PREFIX}) + 1 AS INT)),
              i -> ascii(substr(text, CAST(i AS INT), 1))), 'sum'), 0) AS checksum
   FROM documents WHERE doc_id % 4 IN (0, 1)
 ), dims AS (
   SELECT doc_id, media_type,
-         CAST(64 + (checksum % 16) * 32 AS INT) AS width,
-         CAST(64 + (n % 12) * 32 AS INT) AS height
+         CAST({mm.DECODE_BASE_PX} + (checksum % {mm.DECODE_WIDTH_STEPS}) * {mm.DECODE_STEP_PX} AS INT) AS width,
+         CAST({mm.DECODE_BASE_PX} + (n % {mm.DECODE_HEIGHT_STEPS}) * {mm.DECODE_STEP_PX} AS INT) AS height
   FROM src
 )
 SELECT doc_id, media_type, width, height,
-       CAST(greatest(1, (width * 224) // greatest(width, height)) AS INT) AS out_width,
-       CAST(greatest(1, (height * 224) // greatest(width, height)) AS INT) AS out_height
+       CAST(greatest(1, (width * {mm.RESIZE_TARGET}) // greatest(width, height)) AS INT) AS out_width,
+       CAST(greatest(1, (height * {mm.RESIZE_TARGET}) // greatest(width, height)) AS INT) AS out_height
 FROM dims ORDER BY doc_id
 """
 
@@ -316,16 +314,14 @@ def q_multimodal_features(spark, sf_dir):
 
 
 def _features_sql() -> str:
-    from .multimodal import FEATURE_BINS
-
     bins = " || '|' || ".join(
-        f"CAST(len(list_filter(pfx, a -> a % {FEATURE_BINS} = {c})) AS VARCHAR)"
-        for c in range(FEATURE_BINS)
+        f"CAST(len(list_filter(pfx, a -> a % {mm.FEATURE_BINS} = {c})) AS VARCHAR)"
+        for c in range(mm.FEATURE_BINS)
     )
     return f"""
 WITH src AS (
   SELECT doc_id,
-         list_transform(range(1, CAST(least(length(text), 64) + 1 AS INT)),
+         list_transform(range(1, CAST(least(length(text), {mm.FEATURE_PREFIX}) + 1 AS INT)),
                         i -> ascii(substr(text, CAST(i AS INT), 1))) AS pfx
   FROM documents
 )
@@ -336,25 +332,26 @@ FROM src ORDER BY doc_id
 
 def q_frame_sample(spark, sf_dir):
     """Video frame-sampling plan over decoded multimodal payloads: every
-    30th frame as (doc_id, frame_no) rows — pure JVM sequence+explode
-    downstream of the Arrow decode stage (multimodal.frame_sample_stage)."""
+    FRAME_STRIDE-th frame as (doc_id, frame_no) rows — pure JVM
+    sequence+explode downstream of the Arrow decode stage
+    (multimodal.frame_sample_stage)."""
     from .multimodal import attach_binary_payload, decode_stage, frame_sample_stage
 
     d = scan(spark, sf_dir, "documents")
-    return frame_sample_stage(
-        decode_stage(attach_binary_payload(d)), every_n=30
-    ).orderBy("doc_id", "frame_no")
+    return frame_sample_stage(decode_stage(attach_binary_payload(d))).orderBy(
+        "doc_id", "frame_no"
+    )
 
 
-SQL_FRAME_SAMPLE = """
+SQL_FRAME_SAMPLE = f"""
 WITH src AS (
   SELECT doc_id, CAST(octet_length(encode(text)) AS INT) AS n
   FROM documents WHERE doc_id % 4 = 3
 ), decoded AS (
-  SELECT doc_id, 1 + n % 240 AS n_frames FROM src
+  SELECT doc_id, 1 + n % {mm.DECODE_MAX_FRAMES} AS n_frames FROM src
 )
 SELECT doc_id, CAST(u.f AS INT) AS frame_no
-FROM decoded, UNNEST(range(0, n_frames, 30)) AS u(f)
+FROM decoded, UNNEST(range(0, n_frames, {mm.FRAME_STRIDE})) AS u(f)
 ORDER BY doc_id, frame_no
 """
 
@@ -389,30 +386,12 @@ def q_encrypted_roundtrip(spark, sf_dir):
     for verification).  The composable ``encrypt_stage``/
     ``extract_stage`` production stages are plan- and parity-tested
     separately (tests/test_crypto.py, tests/test_plans.py)."""
-    import hashlib
-
-    from .crypto import encrypt_turn
-    from .oracle import extract_turn
+    from .crypto import roundtrip_row
 
     t = transcripts_spark(spark, **FIXTURE)
 
-    def _dg(s):
-        if s is None:
-            return None
-        return int(
-            hashlib.md5(s.encode("utf-8", errors="surrogatepass")).hexdigest()[:14],
-            16,
-        )
-
     def run(conv_id, turn_idx, role, text, tool):
-        enc_text, is_enc, iv_b64 = encrypt_turn(conv_id, turn_idx, text)
-        r_enc = extract_turn(role, tool, enc_text)
-        dg = _dg(r_enc.extracted_text)
-        match_plain = int(dg == _dg(extract_turn(role, tool, text).extracted_text))
-        yield (
-            conv_id, turn_idx, is_enc, iv_b64, r_enc.status, r_enc.rule,
-            r_enc.error_message, dg, match_plain,
-        )
+        yield roundtrip_row(conv_id, turn_idx, role, text, tool)
 
     return map_rows(
         t.select("conv_id", "turn_idx", "role", "text", "tool"),
@@ -476,10 +455,7 @@ def q_encrypted_export(spark, sf_dir):
     Scale shape: one conv_id Exchange for the assembly groupBy, then a
     zero-shuffle Arrow stage for the cipher work — per-shard crypto is
     embarrassingly parallel."""
-    import base64
-    import hashlib
-
-    from .crypto import FIXTURE_MASTER_KEY, decrypt_bytes, derive_iv, encrypt_bytes
+    from .crypto import export_shard_row
 
     t = transcripts_spark(spark, **FIXTURE)
     line = F.concat_ws(": ", "role", "text")
@@ -500,18 +476,7 @@ def q_encrypted_export(spark, sf_dir):
     )
 
     def run(conv_id, n_turns, payload):
-        pt = payload.encode("utf-8", errors="surrogatepass")
-        iv = derive_iv("shard:" + conv_id, 0)
-        ct = encrypt_bytes(FIXTURE_MASTER_KEY, iv, pt)
-        yield (
-            conv_id,
-            n_turns,
-            len(pt),
-            int(hashlib.md5(pt).hexdigest()[:14], 16),
-            base64.b64encode(iv).decode("ascii"),
-            int(hashlib.md5(ct).hexdigest()[:14], 16),
-            int(decrypt_bytes(FIXTURE_MASTER_KEY, iv, ct) == pt),
-        )
+        yield export_shard_row(conv_id, n_turns, payload)
 
     return map_rows(
         assembled,
@@ -544,7 +509,7 @@ ENTRY_REGISTRY: dict[str, dict] = {
     },
     "simhash_near_dupes": {
         "builder": q_simhash_near_dupes,
-        "sql_fn": partial(osg.simhash_near_dupes_sql, max_hamming=16),
+        "sql_fn": osg.simhash_near_dupes_sql,
     },
     "lang_id": {"builder": q_lang_id, "sql": _lang_id_sql()},
     "pdf_layout": {"builder": q_pdf_layout, "sql": SQL_PDF_LAYOUT},
@@ -554,13 +519,13 @@ ENTRY_REGISTRY: dict[str, dict] = {
     },
     "ann_lsh_topk": {
         "builder": q_ann_lsh,
-        "sql_fn": partial(osg.ann_lsh_topk_sql, k=10, probe_hamming=5),
+        "sql_fn": osg.ann_lsh_topk_sql,
     },
     "ann_ivf_topk": {
         "builder": q_ann_ivf,
-        "sql_fn": partial(osg.ann_ivf_topk_sql, k=10, n_centroids=16, nprobe=6),
+        "sql_fn": osg.ann_ivf_topk_sql,
     },
-    "ann_pq_topk": {"builder": q_ann_pq, "sql_fn": partial(osg.ann_pq_topk_sql, k=10)},
+    "ann_pq_topk": {"builder": q_ann_pq, "sql_fn": osg.ann_pq_topk_sql},
     "multimodal_decode": {
         "builder": q_multimodal_decode,
         "sql_fn": osg.multimodal_decode_sql,

@@ -77,14 +77,12 @@ def vision_metrics_stage(transcripts_df):
     OcrResult.confidence / languageDetected fields (OcrResult.java:16-127)
     shaped per GoogleVisionOcrProvider.java:272-332.  Emits one row per
     vision turn; other payload kinds produce no row."""
-    import json as _json
-
     from .semantics import extract_vision, try_parse_envelope
 
     def run(conv_id, turn_idx, text):
         env = try_parse_envelope(text) if isinstance(text, str) else None
         if env is not None and env.kind == "vision":
-            _, conf, lang = extract_vision(_json.loads(text))
+            _, conf, lang = extract_vision(env.obj)
             yield conv_id, turn_idx, conf, lang
 
     return map_rows(

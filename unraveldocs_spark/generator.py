@@ -317,7 +317,8 @@ def transcript_rows(
 
 
 def transcripts_pandas(*args, **kwargs) -> pd.DataFrame:
-    """transcript_rows as a pandas frame."""
+    """transcript_rows as a pandas frame — the small local input the
+    tests build Spark frames from; jobs use :func:`transcripts_spark`."""
     return pd.DataFrame(
         list(transcript_rows(*args, **kwargs)),
         columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],

@@ -5,8 +5,9 @@ The decode step is STUBBED: the real codec libraries (Pillow, ffmpeg,
 torchaudio, ...) are not in this container.  The Spark-side plumbing —
 schema, dispatch, batch shape, partitioning — is real and tested; the stub
 produces a deterministic fake decode so the pipeline is end-to-end
-exercisable.  Set ``require_real_decode=True`` to get the
-NotImplementedError a production deployment would replace.
+exercisable.  The fake codec's arithmetic, the resize target, the feature
+histogram and the frame stride are the module constants below; the
+DuckDB oracles of the multimodal queries render the same constants.
 """
 
 from __future__ import annotations
@@ -15,12 +16,19 @@ from pyspark.sql import DataFrame, functions as F
 
 from .schemas import map_rows
 
-try:  # real decoders, if ever present
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
+# fake codec: width from a checksum of the first DECODE_PREFIX payload
+# bytes, height from the byte length, each DECODE_BASE_PX plus whole
+# DECODE_STEP_PX steps; audio/video carry 1..DECODE_MAX_FRAMES frames
+DECODE_PREFIX = 64
+DECODE_BASE_PX = 64
+DECODE_STEP_PX = 32
+DECODE_WIDTH_STEPS = 16
+DECODE_HEIGHT_STEPS = 12
+DECODE_MAX_FRAMES = 240
+RESIZE_TARGET = 224  # resize box side (px)
+FEATURE_BINS = 8  # byte-class histogram bins
+FEATURE_PREFIX = 64  # payload bytes the histogram reads
+FRAME_STRIDE = 30  # sample every FRAME_STRIDE-th video frame
 
 DECODED_SCHEMA = (
     "doc_id long, media_type string, payload_bytes int, "
@@ -49,16 +57,14 @@ def _fake_decode(payload: bytes, media_type: str) -> tuple[int, int, int]:
     """Deterministic stand-in for a codec: dimensions derive from payload
     length and a byte checksum, so results are stable across runs."""
     n = len(payload)
-    checksum = sum(payload[:64]) if n else 0
-    width = 64 + (checksum % 16) * 32
-    height = 64 + (n % 12) * 32
-    n_frames = 1 if media_type.startswith("image/") else 1 + (n % 240)
+    checksum = sum(payload[:DECODE_PREFIX]) if n else 0
+    width = DECODE_BASE_PX + (checksum % DECODE_WIDTH_STEPS) * DECODE_STEP_PX
+    height = DECODE_BASE_PX + (n % DECODE_HEIGHT_STEPS) * DECODE_STEP_PX
+    n_frames = 1 if media_type.startswith("image/") else 1 + (n % DECODE_MAX_FRAMES)
     return width, height, n_frames
 
 
-def decode_stage(
-    payloads: DataFrame, require_real_decode: bool = False
-) -> DataFrame:
+def decode_stage(payloads: DataFrame) -> DataFrame:
     """Vectorized decode / feature-extract over binary payloads.
 
     Per-row failures become decode_status='FAILED' rows, mirroring the
@@ -67,10 +73,6 @@ def decode_stage(
     def run(doc_id, mt, payload):
         data = payload or b""
         try:
-            if require_real_decode:
-                if mt.startswith("image/") and _HAS_PIL:
-                    raise RuntimeError("real decode path not wired")
-                raise NotImplementedError(f"no codec for {mt} in this environment")
             w, h, nf = _fake_decode(data, mt)
             status = "COMPLETED"
         except Exception:
@@ -82,18 +84,15 @@ def decode_stage(
     )
 
 
-RESIZE_TARGET = 224
-
-
-def resize_plan_stage(decoded: DataFrame, target: int = RESIZE_TARGET) -> DataFrame:
+def resize_plan_stage(decoded: DataFrame) -> DataFrame:
     """Aspect-preserving resize plan: fit (width, height) into a
-    target x target box with integer arithmetic (exact on any engine).
+    RESIZE_TARGET-square box with integer arithmetic (exact on any engine).
     The pixel resample itself is the stubbed codec step; the scale
     arithmetic, schema and dispatch are the real Spark-side plumbing —
     all JVM built-ins, no Python."""
     long_side = F.greatest(F.col("width"), F.col("height"))
-    out_w = F.greatest(F.lit(1), (F.col("width") * target) / long_side).cast("int")
-    out_h = F.greatest(F.lit(1), (F.col("height") * target) / long_side).cast("int")
+    out_w = F.greatest(F.lit(1), (F.col("width") * RESIZE_TARGET) / long_side).cast("int")
+    out_h = F.greatest(F.lit(1), (F.col("height") * RESIZE_TARGET) / long_side).cast("int")
     return (
         decoded.filter(F.col("decode_status") == "COMPLETED")
         .filter(F.col("media_type").startswith("image/"))
@@ -108,21 +107,18 @@ def resize_plan_stage(decoded: DataFrame, target: int = RESIZE_TARGET) -> DataFr
     )
 
 
-FEATURE_BINS = 8
-
-
-def feature_stage(payloads: DataFrame, prefix: int = 64) -> DataFrame:
+def feature_stage(payloads: DataFrame) -> DataFrame:
     """Deterministic fake feature extraction over binary payloads: an
-    ``FEATURE_BINS``-bin byte-class histogram of the payload prefix
-    (byte % bins), Arrow-batched.  Stands in for a real encoder the same
-    way _fake_decode stands in for a codec: batch shape, schema and
-    partitioning are real; the features are reproducible arithmetic.
-    Emitted as a joined string so the oracle hash never depends on list
-    canonicalization."""
+    ``FEATURE_BINS``-bin byte-class histogram of the first
+    ``FEATURE_PREFIX`` payload bytes (byte % bins), Arrow-batched.
+    Stands in for a real encoder the same way _fake_decode stands in for
+    a codec: batch shape, schema and partitioning are real; the features
+    are reproducible arithmetic.  Emitted as a joined string so the
+    oracle hash never depends on list canonicalization."""
 
     def run(doc_id, payload):
         bins = [0] * FEATURE_BINS
-        for b in (payload or b"")[:prefix]:
+        for b in (payload or b"")[:FEATURE_PREFIX]:
             bins[b % FEATURE_BINS] += 1
         yield doc_id, "|".join(str(v) for v in bins)
 
@@ -131,9 +127,10 @@ def feature_stage(payloads: DataFrame, prefix: int = 64) -> DataFrame:
     )
 
 
-def frame_sample_stage(decoded: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame sampling plan for video payloads: emits (doc_id, frame_no)
-    rows via sequence+explode — pure JVM, no Python."""
+def frame_sample_stage(decoded: DataFrame) -> DataFrame:
+    """Frame sampling plan for video payloads: every ``FRAME_STRIDE``-th
+    frame as (doc_id, frame_no) rows via sequence+explode — pure JVM, no
+    Python."""
     return (
         decoded.filter(F.col("media_type") == "video/mp4")
         .filter(F.col("n_frames") > 0)
@@ -141,7 +138,7 @@ def frame_sample_stage(decoded: DataFrame, every_n: int = 30) -> DataFrame:
             "doc_id",
             F.explode(
                 F.sequence(
-                    F.lit(0), F.col("n_frames") - 1, F.lit(every_n)
+                    F.lit(0), F.col("n_frames") - 1, F.lit(FRAME_STRIDE)
                 )
             ).alias("frame_no"),
         )

@@ -36,7 +36,6 @@ exception message (ProcessOcr.java:129-139).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass, field
 
 from . import semantics as S
@@ -158,8 +157,7 @@ def extract_turn(role: str | None, tool: str | None, text: str | None) -> Extrac
         if env is not None:
             if env.kind == "vision":
                 # vision response shaping (GoogleVisionOcrProvider.java:250-332)
-                obj = json.loads(text)
-                extracted, _conf, _lang = S.extract_vision(obj)
+                extracted, _conf, _lang = S.extract_vision(env.obj)
                 return ExtractionResult(
                     extracted_text=extracted,
                     spans=[(0, len(extracted), "other")] if extracted else [],
@@ -231,7 +229,8 @@ def extract_turn(role: str | None, tool: str | None, text: str | None) -> Extrac
 def oracle_rows(rows) -> list[dict]:
     """Evaluate the oracle over an iterable of (conv_id, turn_idx, role,
     text, tool) tuples; returns plain dicts (the expected_extractions
-    fixture table, FIXTURES.md §2)."""
+    fixture table, FIXTURES.md §2).  Test oracle the Spark stage's rows
+    are compared against."""
     out = []
     for conv_id, turn_idx, role, text, tool in rows:
         r = extract_turn(role, tool, text)

@@ -4,7 +4,8 @@ by Python constants/functions rather than by hand-written SQL.
 The driver's correctness gate runs each Spark query AND an equivalent
 DuckDB SQL string side-by-side.  For operators like SimHash, winnowing or
 LSH the SQL is *generated from the same Python constants* the Spark path
-uses (hash moduli, hyperplane coefficients, window sizes), following the
+uses (hash moduli, hyperplane coefficients, window sizes, top-k and probe
+widths), read from their home module at render time, following the
 ``lang_id`` pattern (textanalysis.lang_id_sql_expr): the two sides share
 the constants but not the execution path, so the comparison still
 exercises the distributed pipeline against an independent engine.
@@ -19,8 +20,7 @@ equality contract (BASELINE.json north_rule).
 
 from __future__ import annotations
 
-from .similarity import EMB_DIM, LSH_BITS, _hyperplanes
-from .textanalysis import _WIN_BASE, _WIN_K, _WIN_MOD, _WIN_W
+from . import multimodal as mm, similarity as sim, textanalysis as ta
 
 # ---------------------------------------------------------------------------
 # Winnowing fingerprints (textanalysis.winnow_fingerprints)
@@ -37,7 +37,7 @@ def winnow_fingerprints_sql() -> str:
     ``winnow_fingerprints`` output.  Rolling k-gram hashes are recomputed
     positionally with HUGEINT arithmetic (the modulus is 2^61-1, so the
     multiply needs >64 bits)."""
-    k, w, mod, base = _WIN_K, _WIN_W, _WIN_MOD, _WIN_BASE
+    k, w, mod, base = ta._WIN_K, ta._WIN_W, ta._WIN_MOD, ta._WIN_BASE
     return f"""
 WITH d AS (
   SELECT doc_id, text, length(text) AS n FROM documents
@@ -78,11 +78,22 @@ ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 
-def simhash_near_dupes_sql(max_hamming: int = 16) -> str:
+def simhash_near_dupes_sql() -> str:
     """Recompute the 64-bit SimHash per doc (md5-derived feature hashes,
-    per-occurrence votes, bit set iff votes > 0), band-join on the four
-    16-bit bands, confirm with exact hamming — mirroring
+    per-occurrence votes, bit set iff votes > 0), band-join on its
+    SIMHASH_BAND_BITS-bit bands, confirm with exact hamming — mirroring
     textanalysis.simhash_stage + simhash_near_dupes."""
+    mask = (1 << ta.SIMHASH_BAND_BITS) - 1
+
+    def band(i, shift):
+        v = f"(s.uh >> CAST({shift} AS HUGEINT))" if shift else "s.uh"
+        return f"CAST(COALESCE({v} & CAST({mask} AS HUGEINT), 0) AS INT) AS band{i}"
+
+    shifts = ta.simhash_band_shifts()
+    band_cols = ",\n         ".join(band(i, s) for i, s in enumerate(shifts))
+    band_structs = ",\n                 ".join(
+        f"{{'band_idx': {i}, 'band_val': band{i}}}" for i in range(len(shifts))
+    )
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(regexp_extract_all(text, '\\S+')) AS tok FROM documents
@@ -107,17 +118,11 @@ WITH toks AS (
               WHEN s.uh >= CAST('9223372036854775808' AS HUGEINT)
                 THEN s.uh - CAST('18446744073709551616' AS HUGEINT)
               ELSE s.uh END AS BIGINT) AS simhash,
-         CAST(COALESCE((s.uh >> CAST(48 AS HUGEINT)) & CAST(65535 AS HUGEINT), 0) AS INT) AS band0,
-         CAST(COALESCE((s.uh >> CAST(32 AS HUGEINT)) & CAST(65535 AS HUGEINT), 0) AS INT) AS band1,
-         CAST(COALESCE((s.uh >> CAST(16 AS HUGEINT)) & CAST(65535 AS HUGEINT), 0) AS INT) AS band2,
-         CAST(COALESCE(s.uh & CAST(65535 AS HUGEINT), 0) AS INT) AS band3
+         {band_cols}
   FROM documents d LEFT JOIN sh0 s USING (doc_id)
 ), bands AS (
   SELECT doc_id, simhash,
-         unnest([{{'band_idx': 0, 'band_val': band0}},
-                 {{'band_idx': 1, 'band_val': band1}},
-                 {{'band_idx': 2, 'band_val': band2}},
-                 {{'band_idx': 3, 'band_val': band3}}], recursive := true)
+         unnest([{band_structs}], recursive := true)
   FROM sh
 ), cands AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -127,7 +132,7 @@ WITH toks AS (
    AND a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
-FROM cands WHERE bit_count(xor(sim_a, sim_b)) <= {max_hamming}
+FROM cands WHERE bit_count(xor(sim_a, sim_b)) <= {ta.SIMHASH_MAX_HAMMING}
 ORDER BY doc_a, doc_b
 """
 
@@ -140,10 +145,10 @@ def _dv(expr: str) -> str:
     return f"list_transform({expr}, x -> CAST(x AS DOUBLE))"
 
 
-def lsh_signature_sql_expr(vec_expr: str, dim: int = EMB_DIM, bits: int = LSH_BITS) -> str:
+def lsh_signature_sql_expr(vec_expr: str, bits: int) -> str:
     """Signature bits from the SAME mix64-derived hyperplanes the Spark
     path uses (similarity._hyperplanes) — sign of plane·vec sets bit i."""
-    planes = _hyperplanes(dim, bits)
+    planes = sim._hyperplanes(sim.EMB_DIM, bits)
     terms = []
     for i in range(bits):
         lit = "[" + ", ".join(repr(float(v)) for v in planes[i]) + "]"
@@ -155,8 +160,8 @@ def lsh_signature_sql_expr(vec_expr: str, dim: int = EMB_DIM, bits: int = LSH_BI
     return "(" + "\n + ".join(terms) + ")"
 
 
-def ann_lsh_topk_sql(k: int = 10, probe_hamming: int = 5) -> str:
-    sig = lsh_signature_sql_expr("v")
+def ann_lsh_topk_sql() -> str:
+    sig = lsh_signature_sql_expr("v", sim.LSH_BITS)
     return f"""
 WITH base AS (
   SELECT vec_id, {_dv('embedding')} AS v FROM embeddings WHERE vec_id <> 0
@@ -165,19 +170,19 @@ WITH base AS (
 ), sigs AS (
   SELECT vec_id, v, {sig} AS sig FROM base
 ), qsig AS (
-  SELECT {lsh_signature_sql_expr('qv')} AS qs FROM q
+  SELECT {lsh_signature_sql_expr('qv', sim.LSH_BITS)} AS qs FROM q
 ), cand AS (
   SELECT s.vec_id, s.v FROM sigs s, qsig
-  WHERE bit_count(xor(CAST(s.sig AS BIGINT), CAST(qsig.qs AS BIGINT))) <= {probe_hamming}
+  WHERE bit_count(xor(CAST(s.sig AS BIGINT), CAST(qsig.qs AS BIGINT))) <= {sim.LSH_PROBE_HAMMING}
 ), scored AS (
   SELECT vec_id, list_cosine_similarity(v, (SELECT qv FROM q)) AS c FROM cand
 )
 SELECT vec_id, CAST(ROUND(c * 10000) AS BIGINT) AS cos_e4
-FROM scored ORDER BY c DESC, vec_id LIMIT {k}
+FROM scored ORDER BY c DESC, vec_id LIMIT {sim.ANN_K}
 """
 
 
-def ann_ivf_topk_sql(k: int = 10, n_centroids: int = 16, nprobe: int = 6) -> str:
+def ann_ivf_topk_sql() -> str:
     return f"""
 WITH base AS (
   SELECT vec_id, {_dv('embedding')} AS v FROM embeddings WHERE vec_id <> 0
@@ -185,7 +190,7 @@ WITH base AS (
   SELECT {_dv('embedding')} AS qv FROM embeddings WHERE vec_id = 0
 ), cents AS (
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-  FROM (SELECT vec_id, v FROM base ORDER BY vec_id LIMIT {n_centroids})
+  FROM (SELECT vec_id, v FROM base ORDER BY vec_id LIMIT {sim.IVF_CENTROIDS})
 ), assigned AS (
   SELECT vec_id, v, cid FROM (
     SELECT b.vec_id, b.v, c.cid,
@@ -197,23 +202,24 @@ WITH base AS (
   ) WHERE rk = 1
 ), probe AS (
   SELECT cid FROM cents, q
-  ORDER BY list_cosine_similarity(cv, qv) DESC, cid LIMIT {nprobe}
+  ORDER BY list_cosine_similarity(cv, qv) DESC, cid LIMIT {sim.IVF_NPROBE}
 ), cand AS (
   SELECT vec_id, v FROM assigned WHERE cid IN (SELECT cid FROM probe)
 ), scored AS (
   SELECT vec_id, list_cosine_similarity(v, (SELECT qv FROM q)) AS c FROM cand
 )
 SELECT vec_id, CAST(ROUND(c * 10000) AS BIGINT) AS cos_e4
-FROM scored ORDER BY c DESC, vec_id LIMIT {k}
+FROM scored ORDER BY c DESC, vec_id LIMIT {sim.ANN_K}
 """
 
 
-def ann_pq_topk_sql(k: int = 10, m_sub: int = 8, ksub: int = 16, dim: int = EMB_DIM) -> str:
+def ann_pq_topk_sql() -> str:
     """Mirror of similarity.pq_topk: same lowest-vec_id codebook seeding,
     same argmin/tie rule (ORDER BY dist ASC, cid), and the same integer-e6
     lookup-table contributions (ROUND half-away of a sequential dot), so
     the final SUM is order-free integer arithmetic."""
-    dsub = dim // m_sub
+    m_sub, ksub = sim.PQ_M, sim.PQ_KSUB
+    dsub = sim.EMB_DIM // m_sub
     return f"""
 WITH base AS (
   SELECT vec_id, {_dv('embedding')} AS v FROM embeddings WHERE vec_id <> 0
@@ -246,7 +252,7 @@ WITH base AS (
   SELECT vec_id, CAST(SUM(icontrib) AS BIGINT) AS ip_e6
   FROM codes JOIN lut USING (m, cid) GROUP BY vec_id
 )
-SELECT vec_id, ip_e6 FROM scored ORDER BY ip_e6 DESC, vec_id LIMIT {k}
+SELECT vec_id, ip_e6 FROM scored ORDER BY ip_e6 DESC, vec_id LIMIT {sim.ANN_K}
 """
 
 
@@ -263,9 +269,10 @@ def multimodal_decode_sql() -> str:
     octet_length == length equality used for payload_bytes)."""
     checksum = (
         "COALESCE(list_aggregate(list_transform("
-        "range(1, CAST(least(length(text), 64) + 1 AS INT)),"
+        f"range(1, CAST(least(length(text), {mm.DECODE_PREFIX}) + 1 AS INT)),"
         " i -> ascii(substr(text, CAST(i AS INT), 1))), 'sum'), 0)"
     )
+    base, step = mm.DECODE_BASE_PX, mm.DECODE_STEP_PX
     return f"""
 WITH src AS (
   SELECT doc_id, text,
@@ -278,9 +285,9 @@ WITH src AS (
   FROM documents
 )
 SELECT doc_id, media_type, n AS payload_bytes,
-       CAST(64 + (checksum % 16) * 32 AS INT) AS width,
-       CAST(64 + (n % 12) * 32 AS INT) AS height,
-       CAST(CASE WHEN media_type LIKE 'image/%' THEN 1 ELSE 1 + n % 240 END AS INT)
+       CAST({base} + (checksum % {mm.DECODE_WIDTH_STEPS}) * {step} AS INT) AS width,
+       CAST({base} + (n % {mm.DECODE_HEIGHT_STEPS}) * {step} AS INT) AS height,
+       CAST(CASE WHEN media_type LIKE 'image/%' THEN 1 ELSE 1 + n % {mm.DECODE_MAX_FRAMES} END AS INT)
          AS n_frames,
        'COMPLETED' AS decode_status
 FROM src ORDER BY doc_id
@@ -298,17 +305,6 @@ def _sql_str(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-def _md5_56(text: str | None) -> int | None:
-    """Python twin of the Spark md5-56 digest expression
-    (conv(substr(md5(text),1,14),16,10): 56-bit prefix fits BIGINT)."""
-    import hashlib
-
-    if text is None:
-        return None
-    h = hashlib.md5(text.encode("utf-8", errors="surrogatepass")).hexdigest()
-    return int(h[:14], 16)
-
-
 def encrypted_roundtrip_sql() -> str:
     """Sequential pure-Python oracle for the AES-GCM roundtrip query
     (entry_queries.q_encrypted_roundtrip), emitted as a VALUES table:
@@ -321,17 +317,14 @@ def encrypted_roundtrip_sql() -> str:
 
     Regenerates at oracle_sql() call time, so it tracks crypto/dispatch
     semantics automatically (same contract as extract_synthetic_sql)."""
-    from .crypto import encrypt_turn
+    from .crypto import roundtrip_row
     from .generator import FIXTURE, transcript_rows
-    from .oracle import extract_turn
 
     rows = []
     for cid, t, role, text, tool, _ts in transcript_rows(**FIXTURE):
-        enc_text, is_enc, iv_b64 = encrypt_turn(cid, t, text)
-        r_enc = extract_turn(role, tool, enc_text)
-        r_plain = extract_turn(role, tool, text)
-        dg = _md5_56(r_enc.extracted_text)
-        dg_plain = _md5_56(r_plain.extracted_text)
+        _, _, is_enc, iv_b64, status, rule, err, dg, match = roundtrip_row(
+            cid, t, role, text, tool
+        )
         rows.append(
             "(" + ", ".join(
                 (
@@ -339,11 +332,11 @@ def encrypted_roundtrip_sql() -> str:
                     str(t),
                     str(is_enc),
                     _sql_str(iv_b64),
-                    _sql_str(r_enc.status),
-                    _sql_str(r_enc.rule),
-                    _sql_str(r_enc.error_message),
+                    _sql_str(status),
+                    _sql_str(rule),
+                    _sql_str(err),
                     "NULL" if dg is None else str(dg),
-                    str(int(dg == dg_plain)),
+                    str(match),
                 )
             ) + ")"
         )
@@ -366,11 +359,9 @@ def encrypted_export_sql() -> str:
     (entry_queries.q_encrypted_export): assemble each conversation's
     turn-ordered "role: text" payload, encrypt with the same fixture
     key + shard-derived IV, and emit the manifest as a VALUES table."""
-    import base64
-    import hashlib
     import itertools
 
-    from .crypto import FIXTURE_MASTER_KEY, decrypt_bytes, derive_iv, encrypt_bytes
+    from .crypto import export_shard_row
     from .generator import FIXTURE, transcript_rows
 
     rows = []
@@ -378,19 +369,18 @@ def encrypted_export_sql() -> str:
         lines = [f"{role}: {text}" for _, _, role, text, *_ in turns if text is not None]
         if not lines:
             continue
-        pt = "\n".join(lines).encode("utf-8", errors="surrogatepass")
-        iv = derive_iv("shard:" + cid, 0)
-        ct = encrypt_bytes(FIXTURE_MASTER_KEY, iv, pt)
-        ok = int(decrypt_bytes(FIXTURE_MASTER_KEY, iv, ct) == pt)
+        _, n, pt_bytes, pt_dg, iv_b64, ct_dg, ok = export_shard_row(
+            cid, len(lines), "\n".join(lines)
+        )
         rows.append(
             "(" + ", ".join(
                 (
                     _sql_str(cid),
-                    str(len(lines)),
-                    str(len(pt)),
-                    str(int(hashlib.md5(pt).hexdigest()[:14], 16)),
-                    _sql_str(base64.b64encode(iv).decode("ascii")),
-                    str(int(hashlib.md5(ct).hexdigest()[:14], 16)),
+                    str(n),
+                    str(pt_bytes),
+                    str(pt_dg),
+                    _sql_str(iv_b64),
+                    str(ct_dg),
                     str(ok),
                 )
             ) + ")"

@@ -12,9 +12,18 @@ plain CPython for the oracle/tests.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 from dataclasses import dataclass, field
+
+
+def md5_56(data: bytes) -> int:
+    """md5-56 of ``data``: the first 14 hex digits of its md5 as an int
+    (fits a BIGINT) — the Python twin of ``trainingdata.digest56`` and
+    of the oracles' ``('0x' || substr(md5(x), 1, 14))::BIGINT``."""
+    return int(hashlib.md5(data).hexdigest()[:14], 16)
+
 
 # ---------------------------------------------------------------------------
 # Java whitespace semantics (Character.isWhitespace / String.strip / trim)
@@ -187,12 +196,14 @@ def ocr_page_segments(ocr_page_texts: list, pages_to_process: list[int]) -> list
 
 
 def assemble_direct_text(page_texts: list, pages_to_process: list[int]) -> str:
-    """Text-only view of :func:`direct_page_segments`."""
+    """Text-only view of :func:`direct_page_segments`; the test oracle
+    for the text extract_pdf_like assembles with spans."""
     return _join_page_segments(direct_page_segments(page_texts, pages_to_process))[0]
 
 
 def assemble_ocr_text(ocr_page_texts: list, pages_to_process: list[int]) -> str:
-    """Text-only view of :func:`ocr_page_segments`."""
+    """Text-only view of :func:`ocr_page_segments`; the test oracle
+    for the text extract_pdf_like assembles with spans."""
     return _join_page_segments(ocr_page_segments(ocr_page_texts, pages_to_process))[0]
 
 
@@ -256,7 +267,8 @@ def parse_classification(text: str) -> tuple[str, list[str], float]:
     """parseClassificationResponse (AiClassificationService.java:152-186):
     fence-strip, JSON-parse; fields with per-field defaults
     (document_type -> "other", tags -> [], confidence -> 0.5); any parse
-    failure -> ("other", ["unclassified"], 0.0)."""
+    failure -> ("other", ["unclassified"], 0.0).  The reference rule,
+    pinned by tests, that the ``classify_parse`` column query implements."""
     try:
         cleaned = strip_code_fences(text)
         root = json.loads(cleaned)
@@ -317,7 +329,8 @@ ERR_UNSUPPORTED = "Unsupported payload kind"  # FileType.java allowlist analog
 def split_tags(tags: str | None) -> list[str]:
     """aiTags comma-join inverse (GetOcrDataImpl.java:65-71 /
     UpdateOcrContentImpl.buildFileResultData:137-143):
-    isBlank guard -> split(',') -> String::trim -> drop empties."""
+    isBlank guard -> split(',') -> String::trim -> drop empties.  The reference
+    rule, pinned by tests, that the ``tag_split`` column query implements."""
     if tags is None or java_is_blank(tags):
         return []
     return [t for t in (java_trim(p) for p in tags.split(",")) if t != ""]
@@ -332,7 +345,8 @@ def text_preview(text: str | None, limit: int = 200) -> str | None:
 
 
 def sanitize_logging(value: str | None) -> str | None:
-    """SRC/documents/utils/SanitizeLogging.java: strip CR/LF."""
+    """SRC/documents/utils/SanitizeLogging.java: strip CR/LF.  The reference
+    rule, pinned by tests, that the ``log_sanitize`` column query implements."""
     if value is None:
         return None
     return value.replace("\r", "").replace("\n", "")
@@ -340,7 +354,9 @@ def sanitize_logging(value: str | None) -> str | None:
 
 def sanitize_error_type(error: str | None, cap: int = 50) -> str:
     """OcrMetrics.sanitizeErrorType (OcrMetrics.java:162-170): lowercase,
-    non-[a-z0-9_] -> '_', truncate to 50 chars."""
+    non-[a-z0-9_] -> '_', truncate to 50 chars.  The reference rule,
+    pinned by tests, that the ``error_type_sanitize`` column query
+    implements."""
     if error is None or error == "":
         return "unknown"
     out = re.sub(r"[^a-z0-9_]", "_", error.lower())
@@ -414,6 +430,9 @@ class Envelope:
     runs: list | None = None  # F10 positioned text runs (pdflayout.py)
     iv: str | None = None  # encrypted family (crypto.py): base64 IV
     data: str | None = None  # encrypted family: base64 ct||tag
+    # the whole parsed payload (the vision family shapes it directly), so
+    # no consumer parses the JSON a second time
+    obj: dict = field(default_factory=dict, repr=False, compare=False)
 
 
 def try_parse_envelope(text: str):
@@ -441,6 +460,7 @@ def try_parse_envelope(text: str):
             runs=obj.get("runs"),
             iv=obj.get("iv"),
             data=obj.get("data"),
+            obj=obj,
         )
     except (ValueError, TypeError):
         return None

@@ -4,9 +4,16 @@
   scale this is one pass over the table with a broadcast query vector —
   no shuffle until the final top-k fold).
 - ``lsh_topk``: random-hyperplane LSH — deterministic hyperplanes, sign
-  signatures, candidates restricted to buckets within ``probe_hamming``
-  of the query signature.  The scale path: signatures are computed once
-  and stored; queries touch only matching buckets.
+  signatures, candidates restricted to buckets within
+  ``LSH_PROBE_HAMMING`` of the query signature.  The scale path:
+  signatures are computed once and stored; queries touch only matching
+  buckets.
+- ``ivf_topk`` / ``pq_topk``: seed-codebook inverted lists and product
+  quantization.
+
+Each ANN query's parameters are the module constants below; the Spark
+operators and their generated DuckDB oracles (oracle_sql_gen) both read
+them at call time.
 """
 
 from __future__ import annotations
@@ -20,9 +27,13 @@ from .schemas import map_batches
 
 LSH_BITS = 16
 EMB_DIM = 64  # driver embeddings.parquet dimension (constant across SFs)
+ANN_K = 10  # top-k of every ANN query
+LSH_PROBE_HAMMING = 5  # LSH candidates: signature within this many bits
+IVF_CENTROIDS = 16  # IVF coarse codebook size (lowest-vec_id seeds)
+IVF_NPROBE = 6  # IVF inverted lists probed per query
 
 
-def _hyperplanes(dim: int, bits: int = LSH_BITS) -> np.ndarray:
+def _hyperplanes(dim: int, bits: int) -> np.ndarray:
     """Deterministic pseudo-random hyperplanes from the repo-wide mix64."""
     vals = np.array(
         [
@@ -52,7 +63,7 @@ def signature_bits(vec: np.ndarray, planes: np.ndarray) -> int:
     return sig
 
 
-def signature_stage(embeddings: DataFrame, dim: int, bits: int = LSH_BITS) -> DataFrame:
+def signature_stage(embeddings: DataFrame, dim: int, bits: int) -> DataFrame:
     """vec_id -> LSH signature (int) + l2 norm, vectorized via numpy."""
     planes = _hyperplanes(dim, bits)
 
@@ -142,7 +153,7 @@ def cosine(a, b):
     return dot / (F.sqrt(na) * F.sqrt(nb))
 
 
-def brute_force_topk(embeddings: DataFrame, query_vec: list[float], k: int = 10) -> DataFrame:
+def brute_force_topk(embeddings: DataFrame, query_vec: list[float], k: int) -> DataFrame:
     """Exact cosine top-k against a broadcast literal query vector."""
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
@@ -175,62 +186,20 @@ def seed_vectors(embeddings: DataFrame, n: int) -> np.ndarray:
     return np.asarray([list(r.embedding) for r in rows], dtype=np.float64)
 
 
-def probe_signatures(qsig: int, bits: int, radius: int) -> list[int]:
-    """Enumerate every signature within hamming distance ``radius`` of
-    ``qsig`` — the multiprobe key set.  Size = sum_{r<=radius} C(bits, r)
-    (e.g. 697 keys for 16 bits, radius 3)."""
-    from itertools import combinations
-
-    out = [qsig]
-    for r in range(1, radius + 1):
-        for flip in combinations(range(bits), r):
-            s = qsig
-            for b in flip:
-                s ^= 1 << b
-            out.append(s)
-    return out
-
-
-def lsh_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    bits: int = LSH_BITS,
-    probe_hamming: int = 3,
-    multiprobe: bool = False,
-) -> DataFrame:
-    """LSH-bucketed ANN: score only vectors whose signature is within
-    ``probe_hamming`` bits of the query signature.
-
-    Two candidate strategies with IDENTICAL results:
-    - default: one pass over the signature table filtering on
-      bit_count(xor) — linear in table size, no precomputation beyond the
-      signatures;
-    - ``multiprobe=True``: enumerate the probe bucket KEYS up front and
-      equi-join the signature table against them.  At scale, with the
-      signature table written partitioned/bucketed by signature, the
-      equi-join prunes to the probed buckets and never scans the rest —
-      the query cost is per-bucket, not per-table."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    planes = _hyperplanes(len(query_vec), bits)
-    qsig = signature_bits(q, planes)
-
-    sigs = signature_stage(embeddings, dim=len(query_vec), bits=bits)
-    if multiprobe:
-        spark = embeddings.sparkSession
-        keys = spark.createDataFrame(
-            [(int(s),) for s in probe_signatures(qsig, bits, probe_hamming)],
-            "signature long",
-        )
-        candidates = sigs.join(F.broadcast(keys), "signature", "left_semi").select(
-            "vec_id"
-        )
-    else:
-        candidates = sigs.filter(
-            F.bit_count(F.col("signature").bitwiseXOR(F.lit(qsig))) <= probe_hamming
-        ).select("vec_id")
+def lsh_topk(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
+    """LSH-bucketed ANN: the ``ANN_K`` nearest of the vectors whose
+    ``LSH_BITS``-bit signature is within ``LSH_PROBE_HAMMING`` bits of
+    the query signature — one pass over the signature table filtering
+    on bit_count(xor), no precomputation beyond the signatures."""
+    qsig = signature_bits(
+        np.asarray(query_vec, dtype=np.float64),
+        _hyperplanes(len(query_vec), LSH_BITS),
+    )
+    candidates = signature_stage(embeddings, len(query_vec), LSH_BITS).filter(
+        F.bit_count(F.col("signature").bitwiseXOR(F.lit(qsig))) <= LSH_PROBE_HAMMING
+    ).select("vec_id")
     pruned = embeddings.join(candidates, "vec_id", "left_semi")
-    return brute_force_topk(pruned, query_vec, k)
+    return brute_force_topk(pruned, query_vec, ANN_K)
 
 
 def _assign_stage(
@@ -262,70 +231,26 @@ def _assign_stage(
     )
 
 
-def kmeans_refine(
-    embeddings: DataFrame, cents: np.ndarray, iters: int
-) -> np.ndarray:
-    """Distributed spherical k-means (Lloyd) refinement of a seed
-    codebook: assign via the Arrow stage, average each cluster JVM-side
-    (posexplode + groupBy(centroid, dim) — never collecting vectors),
-    renormalize, repeat.  Deterministic: seed order, argmax ties and the
-    empty-cluster rule (keep the previous centroid) are all fixed.  Only
-    ``n_centroids x dim`` averages ever reach the driver."""
-    from pyspark.sql import functions as F
-
-    cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    for _ in range(iters):
-        assigned = _assign_stage(embeddings, cents_unit)
-        means = (
-            embeddings.join(assigned, "vec_id")
-            .select("centroid_id", F.posexplode("embedding").alias("dim", "val"))
-            .groupBy("centroid_id", "dim")
-            .agg(F.avg("val").alias("mean_val"))
-            .collect()
-        )
-        new = cents_unit.copy()
-        acc: dict[int, np.ndarray] = {}
-        for r in means:
-            acc.setdefault(r.centroid_id, np.zeros(cents.shape[1]))[r.dim] = r.mean_val
-        for cid, vec in acc.items():
-            n = np.linalg.norm(vec)
-            if n > 0:
-                new[cid] = vec / n
-        cents_unit = new
-    return cents_unit
-
-
-def ivf_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    kmeans_iters: int = 0,
-):
-    """IVF-style ANN: deterministic coarse centroids (the ``n_centroids``
-    lowest vec_ids seed the codebook; ``kmeans_iters`` distributed Lloyd
-    steps refine it — the seed-only default keeps the driver query's SQL
-    oracle exact), vectors assigned to their nearest centroid once
-    (numpy, Arrow-batched), queries probe only the ``nprobe`` nearest
-    inverted lists.
+def ivf_topk(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
+    """IVF-style ANN: a deterministic coarse codebook (the
+    ``IVF_CENTROIDS`` lowest vec_ids, so the SQL oracle re-derives it
+    exactly), vectors assigned to their nearest centroid once (numpy,
+    Arrow-batched), and the query probes only its ``IVF_NPROBE`` nearest
+    inverted lists for the ``ANN_K`` nearest vectors.
 
     At scale the assignment is computed once and stored as a partition
     column, so a query scans only nprobe partitions of the table."""
-    cents = seed_vectors(embeddings, n_centroids)
+    cents = seed_vectors(embeddings, IVF_CENTROIDS)
     cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    if kmeans_iters > 0:
-        cents_unit = kmeans_refine(embeddings, cents, kmeans_iters)
-
     assigned = _assign_stage(embeddings, cents_unit)
 
     q = np.asarray(query_vec, dtype=np.float64)
     qsims = (q / np.linalg.norm(q)) @ cents_unit.T
-    probe = [int(i) for i in np.argsort(-qsims)[:nprobe]]
+    probe = [int(i) for i in np.argsort(-qsims)[:IVF_NPROBE]]
 
     candidates = assigned.filter(F.col("centroid_id").isin(probe)).select("vec_id")
     pruned = embeddings.join(candidates, "vec_id", "left_semi")
-    return brute_force_topk(pruned, query_vec, k)
+    return brute_force_topk(pruned, query_vec, ANN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -369,12 +294,7 @@ def _round_half_away_e6(y: float) -> int:
 
 
 def pq_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    m_sub: int = PQ_M,
-    ksub: int = PQ_KSUB,
-    rerank: int = 0,
+    embeddings: DataFrame, query_vec: list[float], k: int, rerank: int = 0
 ) -> DataFrame:
     """PQ ANN with asymmetric-distance computation: vectors are encoded
     once into M small codes (here 8 codes x 16 centroids = 8 bytes per
@@ -382,10 +302,9 @@ def pq_topk(
     column, scoring each vector as the sum of M precomputed lookup-table
     entries (dot(q_m, centroid) per subquantizer).
 
-    Deterministic codebook: the ksub lowest-vec_id vectors seed each
-    subquantizer (the same seeding rule ivf_topk uses), so the DuckDB
-    oracle re-derives it exactly; kmeans_refine-style training plugs in
-    where exactness is not required.
+    Deterministic codebook: the ``PQ_KSUB`` lowest-vec_id vectors seed
+    each of the ``PQ_M`` subquantizers (the same seeding rule ivf_topk
+    uses), so the DuckDB oracle re-derives it exactly.
 
     FP parity: lookup tables are integer e6 values (ROUND half-away of a
     SEQUENTIAL left-to-right dot product — the same association order
@@ -396,6 +315,7 @@ def pq_topk(
     of the vector table); the ADC scan is JVM-side integer lookups inside
     whole-stage codegen ending in a TakeOrdered — no shuffle, no vector
     reads, no Python."""
+    m_sub, ksub = PQ_M, PQ_KSUB
     dim = len(query_vec)
     dsub = dim // m_sub
     cb = seed_vectors(embeddings, ksub)
@@ -455,8 +375,8 @@ def pca_fit(embeddings: DataFrame, dim: int, k: int) -> tuple[np.ndarray, np.nda
     """Fit PCA distributively: each Arrow batch contributes its partial
     (sum, X^T X, count); the driver reduces to the dim x dim covariance
     and eigendecomposes THAT — so the driver sees O(dim^2) numbers, never
-    rows, regardless of corpus size (the same k x dim driver contract as
-    kmeans_refine).  Returns (mean[dim], components[k, dim]).
+    rows, regardless of corpus size.  Returns (mean[dim],
+    components[k, dim]).
 
     Determinism: eigh of a fixed covariance is deterministic; the
     remaining sign ambiguity per component is fixed by making each

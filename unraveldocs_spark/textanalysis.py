@@ -1,8 +1,9 @@
 """Vectorized text-analysis operators that aren't SQL-expressible:
 SimHash, char-n-gram language ID, winnowing fingerprints.
 
-Each has a pure-Python core (the pytest oracle) and a Spark entry point
-that applies the core over Arrow batches with numpy where it pays off.
+Each has a pure-Python core (the pytest oracle) and a Spark entry point:
+the core over Arrow batches (numpy where it pays off), or for language ID
+the same profile scoring as column expressions.
 """
 
 from __future__ import annotations
@@ -19,6 +20,14 @@ from .similarity import band_pairs, band_rows
 # ---------------------------------------------------------------------------
 # SimHash (64-bit, word features, md5-derived feature hashes)
 # ---------------------------------------------------------------------------
+
+SIMHASH_BAND_BITS = 16  # candidate bands: the 64 bits cut high to low
+SIMHASH_MAX_HAMMING = 16  # near-dupe confirm: hamming distance at most this
+
+
+def simhash_band_shifts() -> range:
+    """Right shifts of the SimHash bands, band0 (the high bits) first."""
+    return range(64 - SIMHASH_BAND_BITS, -1, -SIMHASH_BAND_BITS)
 
 
 def _feature_hash64(token: str) -> int:
@@ -45,38 +54,42 @@ def simhash64(text: str) -> int:
 
 
 def hamming64(a: int, b: int) -> int:
+    """Test oracle: pure-Python twin of the bit_count(xor) confirm step."""
     return bin(a ^ b).count("1")
 
 
-def simhash_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """doc_id -> 64-bit simhash (as two signed 32-bit halves to stay in
-    Spark-friendly integer ranges, plus the full value as hex)."""
+def simhash_stage(docs: DataFrame) -> DataFrame:
+    """doc_id -> 64-bit simhash (as a signed long) plus its
+    ``SIMHASH_BAND_BITS``-bit bands band0, band1, ... (high bits first)."""
+    shifts = simhash_band_shifts()
+    mask = (1 << SIMHASH_BAND_BITS) - 1
 
     def run(doc_id, text):
         h = simhash64(text or "")
         signed = h - (1 << 64) if h >= (1 << 63) else h
-        yield (doc_id, signed, *((h >> s) & 0xFFFF for s in (48, 32, 16, 0)))
+        yield (doc_id, signed, *((h >> s) & mask for s in shifts))
 
+    bands = ", ".join(f"band{i} int" for i in range(len(shifts)))
     return map_rows(
-        docs.select(id_col, text_col),
-        run,
-        "doc_id long, simhash long, band0 int, band1 int, band2 int, band3 int",
+        docs.select("doc_id", "text"), run, f"doc_id long, simhash long, {bands}"
     )
 
 
-def simhash_near_dupes(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Candidate pairs sharing at least one 16-bit band (any pair with
-    hamming <= 3 must collide in >=1 of 4 bands; wider radii trade recall),
-    confirmed by exact hamming distance.  Scale path: the banded
-    candidate builder (similarity.band_rows/band_pairs) — narrow
-    (id, band_idx, band_key) rows shuffle on the band value, never a
-    cross join, and the 64-bit simhash joins back per side.  The
-    signature table is materialized once, so the Python stage runs once
-    although both sides of the self-join and both join-backs read it."""
+def simhash_near_dupes(docs: DataFrame) -> DataFrame:
+    """Candidate pairs sharing at least one band (with four 16-bit bands,
+    any pair with hamming <= 3 must collide in >=1 band; wider radii
+    trade recall), confirmed by exact hamming distance <=
+    ``SIMHASH_MAX_HAMMING``.  Scale path: the banded candidate builder
+    (similarity.band_rows/band_pairs) — narrow (id, band_idx, band_key)
+    rows shuffle on the band value, never a cross join, and the 64-bit
+    simhash joins back per side.  The signature table is materialized
+    once, so the Python stage runs once although both sides of the
+    self-join and both join-backs read it."""
     from pyspark.sql import functions as F
 
     sigs = simhash_stage(docs).localCheckpoint()
-    bands = band_rows(sigs, "doc_id", [F.col(f"band{i}") for i in range(4)])
+    n_bands = len(simhash_band_shifts())
+    bands = band_rows(sigs, "doc_id", [F.col(f"band{i}") for i in range(n_bands)])
     cands = band_pairs(
         bands, bands, sigs.select("doc_id", "simhash"), ("doc_a", "doc_b")
     )
@@ -84,7 +97,7 @@ def simhash_near_dupes(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (
         cands.withColumn("hamming", ham)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
         .orderBy("doc_a", "doc_b")
     )
@@ -116,13 +129,6 @@ def lang_id(text: str) -> str:
     return best_lang
 
 
-def lang_id_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    def run(doc_id, text):
-        yield doc_id, lang_id(text or "")
-
-    return map_rows(docs.select(id_col, text_col), run, "doc_id long, lang_pred string")
-
-
 # ---------------------------------------------------------------------------
 # Winnowing fingerprints (local-minimum sampling of rolling hashes)
 # ---------------------------------------------------------------------------
@@ -133,10 +139,11 @@ _WIN_MOD = (1 << 61) - 1
 _WIN_BASE = 257
 
 
-def winnow_fingerprints(text: str, k: int = _WIN_K, w: int = _WIN_W) -> list[int]:
-    """Winnowing (Schleimer et al., SIGMOD'03): rolling hash of k-grams,
-    keep the minimum of each window of w hashes (rightmost-min rule),
-    deduplicated preserving order."""
+def winnow_fingerprints(text: str) -> list[int]:
+    """Winnowing (Schleimer et al., SIGMOD'03): rolling hash of
+    ``_WIN_K``-grams, keep the minimum of each window of ``_WIN_W``
+    hashes (rightmost-min rule), deduplicated preserving order."""
+    k, w = _WIN_K, _WIN_W
     n = len(text)
     if n < k:
         return []
@@ -168,13 +175,13 @@ def winnow_fingerprints(text: str, k: int = _WIN_K, w: int = _WIN_W) -> list[int
     return uniq
 
 
-def fingerprint_stage(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint_stage(docs: DataFrame) -> DataFrame:
     def run(doc_id, text):
         fps = winnow_fingerprints(text or "")
         yield doc_id, fps, len(fps)
 
     return map_rows(
-        docs.select(id_col, text_col),
+        docs.select("doc_id", "text"),
         run,
         "doc_id long, fingerprints array<long>, n_fingerprints int",
     )

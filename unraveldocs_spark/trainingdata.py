@@ -27,7 +27,7 @@ from .generator import FIXTURE, mix64, transcript_rows, transcripts_spark
 # perfbench/workloads.py times the fan-out by patching
 # trainingdata.fan_out and scanfan.fan_out by name
 from .scanfan import fan_out, scan  # noqa: F401
-from .similarity import EMB_DIM, band_pairs, band_rows, signature_stage
+from .similarity import ANN_K, EMB_DIM, band_pairs, band_rows, signature_stage
 
 
 # ---------------------------------------------------------------------------
@@ -239,28 +239,34 @@ def _minhash_candidate_pairs(d, n_bands: int | None = None,
         n_bands = n_bands if n_bands is not None else auto_bands
         n_rows = n_rows if n_rows is not None else auto_rows
     assert n_bands * n_rows <= _MH_K, (n_bands, n_rows, _MH_K)
-    # r7 shape: MATERIALIZE the (doc_id, sh, hs) signature-input table
-    # once (the table a production pipeline persists between runs), then
-    # run NARROW band rows (ids + band key only) through the self-join
-    # and dedupe on the id pair alone, joining the shingle arrays back
-    # from the materialized table.  The r6 shape carried sh through the
-    # explode instead, which was right when re-deriving shingles meant
-    # re-running the corpus scan (measured 13x slower then) — but it
-    # made the self-join compute the whole signature pipeline TWICE
-    # (Catalyst broadcast one side rather than reuse the exchange) and
-    # forced dropDuplicates into a SortAggregate over array-carrying
-    # rows.  With the checkpoint, the join-back is a cheap read of the
-    # materialized table and both penalties disappear.  The empty-
-    # shingle filter runs AFTER the checkpoint so its predicate cannot
-    # be pushed below the fan-out repartition (where it re-derived the
-    # shingles on the unsplit scan).
-    d = (
-        d.withColumn("hs", _spark_shingle_hashes(F.col("sh")))
+    # r7 shape: run NARROW band rows (ids + band key only) through the
+    # self-join and dedupe on the id pair alone, joining the shingle
+    # arrays back from the materialized signature table.  The r6 shape
+    # carried sh through the explode instead, which was right when
+    # re-deriving shingles meant re-running the corpus scan (measured
+    # 13x slower then) — but it made the self-join compute the whole
+    # signature pipeline TWICE (Catalyst broadcast one side rather than
+    # reuse the exchange) and forced dropDuplicates into a SortAggregate
+    # over array-carrying rows.
+    d = _minhash_signatures(d)
+    bands = _minhash_bands(d, n_bands, n_rows)
+    return band_pairs(bands, bands, d.select("doc_id", "sh"), ("doc_a", "doc_b"))
+
+
+def _minhash_signatures(sh):
+    """(doc_id, sh) -> the MATERIALIZED MinHash signature-input table
+    (doc_id, sh, hs) of the docs with at least one shingle — the table a
+    production pipeline persists between runs.  Every MinHash band join
+    reads it several ways (bands, join-backs, spines), so it is
+    localCheckpoint()ed once and each read is a cheap RDD scan.  The
+    empty-shingle filter runs AFTER the checkpoint so its predicate
+    cannot be pushed below a fan-out repartition (where it re-derived
+    the shingles on the unsplit scan)."""
+    return (
+        sh.withColumn("hs", _spark_shingle_hashes(F.col("sh")))
         .localCheckpoint()
         .filter(F.size("sh") > 0)
     )
-    bands = _minhash_bands(d, n_bands, n_rows)
-    return band_pairs(bands, bands, d.select("doc_id", "sh"), ("doc_a", "doc_b"))
 
 
 def _minhash_bands(d, n_bands: int, n_rows: int):
@@ -659,7 +665,7 @@ WITH dv AS (
 ), u AS (
   SELECT vec_id,
          list_transform(v, x -> x / sqrt(list_aggregate(list_transform(v, y -> y * y), 'sum'))) AS unit,
-         {lsh_signature_sql_expr('v')} AS sig
+         {lsh_signature_sql_expr('v', _EC_BANDS * _EC_BAND_BITS)} AS sig
   FROM dv
 ), bands AS (
   SELECT vec_id, unit, unnest([{band_structs}], recursive := true) FROM u
@@ -691,10 +697,10 @@ def q_ann_topk(spark, sf_dir):
     from .similarity import brute_force_topk, cos_e4, split_query
 
     qvec, rest = split_query(scan(spark, sf_dir, "embeddings"))
-    return cos_e4(brute_force_topk(rest, qvec, 10))
+    return cos_e4(brute_force_topk(rest, qvec, ANN_K))
 
 
-SQL_ANN_TOPK = """
+SQL_ANN_TOPK = f"""
 WITH q AS (
   SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
   FROM embeddings WHERE vec_id = 0
@@ -705,7 +711,7 @@ WITH q AS (
   FROM embeddings WHERE vec_id <> 0
 )
 SELECT vec_id, CAST(ROUND(c * 10000) AS BIGINT) AS cos_e4
-FROM scored ORDER BY c DESC, vec_id LIMIT 10
+FROM scored ORDER BY c DESC, vec_id LIMIT {ANN_K}
 """
 
 
@@ -1184,7 +1190,7 @@ WITH dv AS (
 ), u AS (
   SELECT vec_id,
          list_transform(v, x -> x / sqrt(list_aggregate(list_transform(v, y -> y * y), 'sum'))) AS unit,
-         {lsh_signature_sql_expr('v', bits=_KNN_BANDS * _KNN_BAND_BITS)} AS sig
+         {lsh_signature_sql_expr('v', _KNN_BANDS * _KNN_BAND_BITS)} AS sig
   FROM dv
 ), bands AS (
   SELECT vec_id, unit, unnest([{band_structs}], recursive := true) FROM u
@@ -3251,8 +3257,7 @@ def q_semantic_dedup(spark, sf_dir):
     k — SemDeDup grows k with n to hold cluster_size constant (the same
     scaling lever as band bits).  Group resolution reuses the bounded
     min-label propagation over PAIRS only.  Deterministic codebook (16
-    lowest vec_ids seed, same rule as IVF) keeps the DuckDB oracle exact;
-    kmeans_refine plugs in where exactness is not required.
+    lowest vec_ids seed, same rule as IVF) keeps the DuckDB oracle exact.
 
     FP parity (r5): every engine-decisive comparison is integer-exact —
     the cluster assignment quantizes cosines to e4 integers before the
@@ -4848,12 +4853,12 @@ def _transcript_bpe_row(pairs, conv_id, turn_idx, text):
     whitespace invariant), encode every non-empty token with the ordered
     merge ``pairs``, emit word and symbol counts plus the md5-56 digest
     of the U+001F-joined symbol stream."""
-    from .oracle_sql_gen import _md5_56
-    from .semantics import _JAVA_RE_WS_SPLIT
+    from .semantics import _JAVA_RE_WS_SPLIT, md5_56
 
     toks = [w for w in _JAVA_RE_WS_SPLIT.split(text.lower()) if w]
     syms = [s for w in toks for s in bpe_apply(w, pairs)]
-    return conv_id, turn_idx, len(toks), len(syms), _md5_56("\x1f".join(syms))
+    digest = md5_56("\x1f".join(syms).encode("utf-8", errors="surrogatepass"))
+    return conv_id, turn_idx, len(toks), len(syms), digest
 
 
 def q_bpe_encode(spark, sf_dir):
@@ -5290,19 +5295,11 @@ def q_dedup_increment(spark, sf_dir):
             0
         ][0]
     )
-    nz = (
+    # read four ways below: corpus bands, batch bands, new-doc spine
+    # and shingle join-back
+    nz = _minhash_signatures(
         scan(spark, sf_dir, "documents", fan=True)
         .select("doc_id", _spark_shingles(F.col("text")).alias("sh"))
-        .withColumn("hs", _spark_shingle_hashes(F.col("sh")))
-        # the signature table is read four ways below (corpus bands,
-        # batch bands, new-doc spine, shingle join-back): materialize it
-        # once — exactly the table a production increment pipeline
-        # PERSISTS between runs.  The empty-shingle filter runs AFTER
-        # the checkpoint so its predicate cannot be pushed below the
-        # fan-out repartition (where it re-derived shingles on the
-        # unsplit scan).
-        .localCheckpoint()
-        .filter(F.size("sh") > 0)
     )
     bands_all = _minhash_bands(nz, n_bands, n_rows)
     bands_new = _minhash_bands(nz.filter(F.col("doc_id") >= t), n_bands, n_rows)

@@ -42,6 +42,7 @@ from dataclasses import dataclass, field
 
 from .domwalk import _PLAIN_SPLIT_RE, is_html
 from .htmldom import Element, TextNode, parse_body_fragment
+from .semantics import md5_56
 
 HEADING_SIZES = {"h1": 20, "h2": 18}  # everything else: 16
 HEADING_SIZE_DEFAULT = 16
@@ -274,8 +275,6 @@ def docx_stats(text: str) -> dict:
     """Narrow-row accounting of a rendered document — the driver-safe
     projection the parity query emits: paragraph/run/attribute counts
     plus the md5-56 digest of the full binary .docx."""
-    import hashlib
-
     paras = docx_paragraphs(text)
     runs = [r for p in paras for r in p.runs]
     blob = docx_bytes(text)
@@ -288,6 +287,6 @@ def docx_stats(text: str) -> dict:
         "n_breaks": sum(1 for r in runs if r.br),
         "n_list_items": sum(1 for p in paras if p.num_id is not None),
         "n_headings": sum(1 for p in paras if p.style is not None),
-        "docx_digest": int(hashlib.md5(blob).hexdigest()[:14], 16),
+        "docx_digest": md5_56(blob),
         "docx_size": len(blob),
     }
