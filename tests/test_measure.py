@@ -37,7 +37,7 @@ KEYS = {
     "band_bits": {"n", "fixed", "scaled"},
     "ann_recall": {
         "n_vectors", "n_queries", "query_stride", "lsh_pct", "ivf_pct",
-        "pq_pct", "pq_rerank_pct",
+        "pq_pct", "shortlists", "pq_rerank_pct",
     },
     "pca_ann": {"dim", "recall", "variance", "n_vectors", "n_queries", "query_stride"},
     "substr_split_scale": {
@@ -67,7 +67,14 @@ def test_probe_runs_at_1x(spark, name):
     assert rows
     for r in rows:
         assert set(r) == KEYS[name], name
-    assert "|---|" in render(rows, SF)
+    page = render(rows, SF)
+    assert "|---|" in page
+    if name == "ann_recall":
+        # the page renders the whole measured re-rank sweep
+        (r,) = rows
+        assert r["shortlists"] == list(M.SHORTLISTS)
+        assert len(r["pq_rerank_pct"]) == len(M.SHORTLISTS)
+        assert f"at shortlist {' / '.join(map(str, M.SHORTLISTS))}" in page
     if name == "increment_scale":
         # every planted exact duplicate must be confirmed by the band join
         (r,) = rows

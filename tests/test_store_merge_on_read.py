@@ -511,3 +511,126 @@ def test_large_retraction_side_compacts(spark, tmp_path):
         assert "Join" not in _plan(store.results(spark))
     finally:
         spark.conf.set(conf, saved)
+
+
+def _data_files(table_dir: str) -> list:
+    return [f for f in os.listdir(table_dir) if not f.startswith(("_", "."))]
+
+
+def _twelve(spark):
+    """Twelve conversations: enough turns that all four extraction
+    partitions of a 4-way run hold rows."""
+    return spark.createDataFrame(
+        G.transcripts_pandas(12, median_turns=4, hot_factor=2,
+                             include_oversize=False),
+        schema=TRANSCRIPTS_SCHEMA)
+
+
+def _sized_run(spark, root: str):
+    """run_extraction at 4 partitions into a fresh store at ``root``;
+    returns the store, its one snapshot's results/ dir, the run's output
+    and the plan of the frame append was handed, read while the
+    extraction frame is still cached."""
+    store = DirCheckpointStore(root)
+    written = []
+    append = store.append
+
+    def spy(results, *args, **kwargs):
+        written.append(_plan(results))
+        return append(results, *args, **kwargs)
+
+    store.append = spy
+    out = run_extraction(spark, _twelve(spark), store=store, num_partitions=4)
+    table = os.path.join(store.snap_dir, out["snapshot_id"], "results")
+    return store, table, out, written[0]
+
+
+def _rows(spark, store) -> list:
+    return sorted((_canon(r) for r in store.results(spark).collect()), key=repr)
+
+
+def test_extraction_append_writes_one_file_per_split(spark, tmp_path):
+    """At the default split a small run writes ONE results/ file, while
+    its lineage keeps one row per non-empty extraction partition.  The
+    written frame is a Coalesce over the cached extraction, so the
+    Python stage does not run again."""
+    from unraveldocs_spark.pipeline import salted_repartition
+
+    store, table, out, plan = _sized_run(spark, str(tmp_path / "one"))
+    assert len(_data_files(table)) == 1
+    lin = store.lineage(spark).collect()
+    parts = salted_repartition(_twelve(spark), 4).groupBy(F.spark_partition_id()).count()
+    assert len(lin) == parts.count() > 1
+    assert sum(r.turns_processed for r in lin) == out["new_rows"]
+
+    # the operators above the cached relation, AQE's wrapper aside
+    physical = plan.split("== Physical Plan ==")[-1].strip().splitlines()
+    ops = [line.strip(" +-").split(" ")[0] for line in physical]
+    assert "InMemoryRelation" in ops  # the append reads the cache
+    above = [op for op in ops[: ops.index("InMemoryRelation")]
+             if op != "AdaptiveSparkPlan"]
+    assert above == ["Coalesce", "InMemoryTableScan"]
+    assert "Coalesce 1" in plan
+
+
+def test_extraction_append_splits_by_max_partition_bytes(spark, tmp_path):
+    """With spark.sql.files.maxPartitionBytes lowered below the cached
+    bytes, the append writes min(4, ceil(cached / split)) files, and the
+    results equal those of the one-file run."""
+    from unraveldocs_spark.extract import extract_stage
+    from unraveldocs_spark.pipeline import salted_repartition
+
+    one, _, _, _ = _sized_run(spark, str(tmp_path / "one"))
+    probe = extract_stage(salted_repartition(_twelve(spark), 4)).persist()
+    probe.count()
+    cached = probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    probe.unpersist()
+    split = cached // 3 + 1  # three splits' worth of cached bytes
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, str(split))
+        many, table, _, _ = _sized_run(spark, str(tmp_path / "many"))
+    finally:
+        spark.conf.set(conf, saved)
+    want = min(4, -(-cached // split))
+    assert want > 1 and len(_data_files(table)) == want
+    assert _rows(spark, many) == _rows(spark, one)
+
+
+def test_compaction_writes_one_file_per_split(spark, tmp_path):
+    """A five-snapshot store (two extraction runs, an upsert, a delete
+    and an append) compacts to ONE results/ file at the default split;
+    its results, completed keys and lineage are unchanged."""
+    pdf = G.transcripts_pandas(6, median_turns=4, hot_factor=2,
+                               include_oversize=False)
+    full = spark.createDataFrame(pdf, schema=TRANSCRIPTS_SCHEMA)
+    store = DirCheckpointStore(str(tmp_path / "c"))
+    run_extraction(spark, full.filter(F.col("turn_idx") % 2 == 0), store=store,
+                   num_partitions=4)
+    keys = sorted(
+        (r.conv_id, r.turn_idx) for r in store.completed_keys(spark).collect()
+    )
+    store.upsert(store.results(spark).filter(
+        (F.col("conv_id") == keys[0][0]) & (F.col("turn_idx") == keys[0][1])
+    ).withColumn("edited_by", F.lit("e")), spark)
+    store.delete(spark.createDataFrame(keys[1:3], "conv_id string, turn_idx int"),
+                 spark)
+    run_extraction(spark, full, store=store, num_partitions=4)
+    new = ("conv-new", 0, "x", [], "COMPLETED", None, "MARKDOWN", "plain", 1, 1,
+           None, None)
+    store.append(spark.createDataFrame([new], EXTRACTIONS_SCHEMA))
+    assert len(store.snapshots()) == 5
+
+    def reads():
+        return (
+            _rows(spark, store),
+            sorted(tuple(r) for r in store.completed_keys(spark).collect()),
+            sorted(tuple(r) for r in store.lineage(spark).collect()),
+        )
+
+    want = reads()
+    snap = store.maybe_compact(spark, threshold=0)
+    assert store.snapshots() == [snap]
+    assert len(_data_files(os.path.join(store.snap_dir, snap, "results"))) == 1
+    assert reads() == want

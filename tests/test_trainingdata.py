@@ -175,6 +175,30 @@ class TestAnnConstants:
 
 
 class TestMultimodal:
+    def test_media_rule_moves_spark_and_oracle(self, spark, monkeypatch):
+        """MEDIA_TYPES is the one home of the doc_id -> media type rule:
+        reordered, the Spark rows of the four queries that read it equal
+        DuckDB running the SQL oracle_sql() renders."""
+        import duckdb
+
+        import __spark_entry__ as entry
+        from unraveldocs_spark import multimodal
+
+        monkeypatch.setattr(multimodal, "MEDIA_TYPES",
+                            ("video/mp4", "image/png", "audio/wav", "image/jpeg"))
+        sql = entry.oracle_sql()
+        con = duckdb.connect()
+        con.execute(
+            f"CREATE VIEW documents AS "
+            f"SELECT * FROM read_parquet('{SF}/documents.parquet')"
+        )
+        for name in ("multimodal_meta", "multimodal_decode", "multimodal_resize",
+                     "frame_sample"):
+            got = sorted(tuple(r) for r in entry.queries()[name](spark, SF).collect())
+            assert got and got == sorted(con.execute(sql[name]).fetchall()), name
+        assert "doc_id % 4 IN (1, 3)" in sql["multimodal_resize"]
+        assert "doc_id % 4 = 0" in sql["frame_sample"]
+
     def test_decode_stage(self, spark):
         from unraveldocs_spark.multimodal import attach_binary_payload, decode_stage
 

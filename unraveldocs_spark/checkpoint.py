@@ -23,6 +23,14 @@ protocol here has two interchangeable stores:
   passes its threshold or the retraction files the fold broadcasts pass
   ``spark.sql.autoBroadcastJoinThreshold``.  Every table is written as
   zstd parquet (Iceberg's default codec), set per write in ``_publish``.
+  The full-row tables are split-sized, the analog of Iceberg's
+  ``write.target-file-size-bytes``: the extraction append and the
+  compaction rewrite coalesce to ``scanfan.files`` files, one per read
+  split (``spark.sql.files.maxPartitionBytes``).  Each coalesces a frame
+  with no Python stage below it (the cached extraction result, the
+  store's own fold), so the narrow coalesce narrows no Python work.
+  Upsert and delete tables keep their tasks' layout (sizing them needs a
+  shuffle); compaction folds their files away.
 
 Resume (the idempotency primitive — ProcessOcr.java:71-74,
 ExtractTextFromDocumentImpl.java:50-54) is a LEFT ANTI join of the input
@@ -51,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
+from .scanfan import files
 from .schemas import EXTRACTIONS_SCHEMA, LINEAGE_SCHEMA
 
 KEYS = ["conv_id", "turn_idx"]
@@ -76,6 +85,17 @@ def _loose(t):
     if isinstance(t, MapType):
         return MapType(_loose(t.keyType), _loose(t.valueType))
     return t
+
+
+def _bytes(dirs: list[str]) -> int:
+    """On-disk bytes of the data files under ``dirs``: the bytes Spark
+    estimates a parquet scan's size from, counted with no Spark job."""
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d in dirs
+        for f in os.listdir(d)
+        if not f.startswith(("_", "."))  # Spark's data-file filter
+    )
 
 
 def _snap_of_file():
@@ -410,19 +430,17 @@ class DirCheckpointStore:
         loop a long-lived micro-batch ingest runs every N commits so
         ``results()`` never unions an unbounded directory — the
         DirCheckpointStore analog of Iceberg's rewrite_data_files +
-        expire_snapshots maintenance pair.  Returns the new snapshot id
-        or None if under both limits."""
+        expire_snapshots maintenance pair.  The rewrite is split-sized by
+        :func:`scanfan.files` over the on-disk bytes of the live
+        ``results/`` files, not one file per scan task.  Returns the new
+        snapshot id or None if under both limits."""
         # Spark's own parse of the byte-string conf ("10485760b", "32k", -1)
         limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        retract_bytes = sum(
-            os.path.getsize(os.path.join(d, f))
-            for d in self._chain()[1]
-            for f in os.listdir(d)
-            if not f.startswith(("_", "."))  # Spark's data-file filter
-        )
-        if len(self._live_snapshots()) <= threshold and not 0 < limit < retract_bytes:
+        rows, retract = self._chain()
+        if len(self._live_snapshots()) <= threshold and not 0 < limit < _bytes(retract):
             return None
-        snap = self.append(self.results(spark), compacted=True)
+        state = self.results(spark).coalesce(files(spark, _bytes(rows)))
+        snap = self.append(state, compacted=True)
         if expire:
             self.expire_snapshots()
         return snap

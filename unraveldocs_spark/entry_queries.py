@@ -281,15 +281,16 @@ def q_multimodal_resize(spark, sf_dir):
     )
 
 
-SQL_MULTIMODAL_RESIZE = f"""
+def _multimodal_resize_sql() -> str:
+    return f"""
 WITH src AS (
   SELECT doc_id,
-         CASE WHEN doc_id % 4 = 0 THEN 'image/png' ELSE 'image/jpeg' END AS media_type,
+         {mm.media_type_sql("image/")} AS media_type,
          CAST(octet_length(encode(text)) AS INT) AS n,
          COALESCE(list_aggregate(list_transform(
              range(1, CAST(least(length(text), {mm.DECODE_PREFIX}) + 1 AS INT)),
              i -> ascii(substr(text, CAST(i AS INT), 1))), 'sum'), 0) AS checksum
-  FROM documents WHERE doc_id % 4 IN (0, 1)
+  FROM documents WHERE {mm.media_filter_sql("image/")}
 ), dims AS (
   SELECT doc_id, media_type,
          CAST({mm.DECODE_BASE_PX} + (checksum % {mm.DECODE_WIDTH_STEPS}) * {mm.DECODE_STEP_PX} AS INT) AS width,
@@ -343,10 +344,11 @@ def q_frame_sample(spark, sf_dir):
     )
 
 
-SQL_FRAME_SAMPLE = f"""
+def _frame_sample_sql() -> str:
+    return f"""
 WITH src AS (
   SELECT doc_id, CAST(octet_length(encode(text)) AS INT) AS n
-  FROM documents WHERE doc_id % 4 = 3
+  FROM documents WHERE {mm.media_filter_sql("video/")}
 ), decoded AS (
   SELECT doc_id, 1 + n % {mm.DECODE_MAX_FRAMES} AS n_frames FROM src
 )
@@ -530,8 +532,9 @@ ENTRY_REGISTRY: dict[str, dict] = {
         "builder": q_multimodal_decode,
         "sql_fn": osg.multimodal_decode_sql,
     },
-    "frame_sample": {"builder": q_frame_sample, "sql": SQL_FRAME_SAMPLE},
-    "multimodal_resize": {"builder": q_multimodal_resize, "sql": SQL_MULTIMODAL_RESIZE},
+    "frame_sample": {"builder": q_frame_sample, "sql_fn": _frame_sample_sql},
+    "multimodal_resize": {"builder": q_multimodal_resize,
+                          "sql_fn": _multimodal_resize_sql},
     "multimodal_features": {"builder": q_multimodal_features, "sql_fn": _features_sql},
 }
 

@@ -29,6 +29,8 @@ RESIZE_TARGET = 224  # resize box side (px)
 FEATURE_BINS = 8  # byte-class histogram bins
 FEATURE_PREFIX = 64  # payload bytes the histogram reads
 FRAME_STRIDE = 30  # sample every FRAME_STRIDE-th video frame
+# a document's media type is MEDIA_TYPES[doc_id % len(MEDIA_TYPES)]
+MEDIA_TYPES = ("image/png", "image/jpeg", "audio/wav", "video/mp4")
 
 DECODED_SCHEMA = (
     "doc_id long, media_type string, payload_bytes int, "
@@ -36,19 +38,49 @@ DECODED_SCHEMA = (
 )
 
 
+def _arms(family: str = "") -> list[tuple[int, str]]:
+    """(doc_id residue, media type) of the MEDIA_TYPES whose name starts
+    with ``family`` ("image/", "video/"; all of them by default)."""
+    return [(r, t) for r, t in enumerate(MEDIA_TYPES) if t.startswith(family)]
+
+
+def media_type_col():
+    """The media type of each ``doc_id`` as a Spark column: MEDIA_TYPES
+    by ``doc_id`` residue, one WHEN arm per type, the last an otherwise."""
+    n, doc_id = len(MEDIA_TYPES), F.col("doc_id")
+    kind = F.when(doc_id % n == 0, F.lit(MEDIA_TYPES[0]))
+    for r, t in _arms()[1:-1]:
+        kind = kind.when(doc_id % n == r, F.lit(t))
+    return kind.otherwise(F.lit(MEDIA_TYPES[-1]))
+
+
+def media_type_sql(family: str = "", sep: str = " ") -> str:
+    """The same rule as a SQL CASE over the documents of ``family``
+    (those :func:`media_filter_sql` keeps): a WHEN arm per type, the last
+    an ELSE, arms joined by ``sep``."""
+    arms = _arms(family)
+    whens = sep.join(
+        f"WHEN doc_id % {len(MEDIA_TYPES)} = {r} THEN '{t}'" for r, t in arms[:-1]
+    )
+    return f"CASE {whens}{sep}ELSE '{arms[-1][1]}' END"
+
+
+def media_filter_sql(family: str) -> str:
+    """A SQL predicate keeping the documents of ``family``."""
+    rs = [str(r) for r, _ in _arms(family)]
+    n = len(MEDIA_TYPES)
+    if len(rs) == 1:
+        return f"doc_id % {n} = {rs[0]}"
+    return f"doc_id % {n} IN ({', '.join(rs)})"
+
+
 def attach_binary_payload(docs: DataFrame) -> DataFrame:
     """Derive an opaque binary payload + media_type from the documents
     table (stand-in for a real multimodal ingest; at scale the payload
     column comes from the lake as BinaryType with typed metadata)."""
-    kind = (
-        F.when(F.col("doc_id") % 4 == 0, F.lit("image/png"))
-        .when(F.col("doc_id") % 4 == 1, F.lit("image/jpeg"))
-        .when(F.col("doc_id") % 4 == 2, F.lit("audio/wav"))
-        .otherwise(F.lit("video/mp4"))
-    )
     return docs.select(
         "doc_id",
-        kind.alias("media_type"),
+        media_type_col().alias("media_type"),
         F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
 
@@ -132,7 +164,7 @@ def frame_sample_stage(decoded: DataFrame) -> DataFrame:
     frame as (doc_id, frame_no) rows via sequence+explode — pure JVM, no
     Python."""
     return (
-        decoded.filter(F.col("media_type") == "video/mp4")
+        decoded.filter(F.col("media_type").isin(*(t for _, t in _arms("video/"))))
         .filter(F.col("n_frames") > 0)
         .select(
             "doc_id",

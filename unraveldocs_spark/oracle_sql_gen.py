@@ -276,10 +276,7 @@ def multimodal_decode_sql() -> str:
     return f"""
 WITH src AS (
   SELECT doc_id, text,
-         CASE WHEN doc_id % 4 = 0 THEN 'image/png'
-              WHEN doc_id % 4 = 1 THEN 'image/jpeg'
-              WHEN doc_id % 4 = 2 THEN 'audio/wav'
-              ELSE 'video/mp4' END AS media_type,
+         {mm.media_type_sql(sep=chr(10) + " " * 14)} AS media_type,
          CAST(octet_length(encode(text)) AS INT) AS n,
          {checksum} AS checksum
   FROM documents

@@ -6,8 +6,17 @@ bulk upload → Kafka → OCR data path, SURVEY.md §3.2):
       -> salted repartition on (conv_id, salt(turn_idx))   [skew defusal]
       -> sortWithinPartitions(conv_id, turn_idx)           [stable order]
       -> mapInArrow extraction (Arrow batches)
+      -> persist + count (the one extraction job)
       -> append results + per-partition lineage in ONE snapshot
+         [results coalesced to scanfan.files(cached bytes)]
       -> conversation rollup (ProcessOcr.java:185-217)
+
+File layout: the results are written as one file per read split
+(``scanfan.files`` over the cached bytes, at least one), not one per
+Python task.  The coalesce is narrow over the materialized cache, so it
+adds no job, no shuffle and no second run of the extraction stage; the
+lineage is computed from the uncoalesced frame and keeps one row per
+extraction task.
 
 Partitioning rationale (100 TB scale): the reference preserves order per
 collection by keying Kafka on collectionId over 6 partitions
@@ -31,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .extract import extract_stage
 from .rollup import conversation_rollup
-from .scanfan import tasks
+from .scanfan import files, tasks
 
 DEFAULT_SALT = 16
 
@@ -171,8 +180,14 @@ def run_extraction(
         n = extractions.count()
         wall_ms = int((time.monotonic() - t0) * 1000)
         if n > 0:
+            # lineage keeps one row per extraction task; the results are
+            # written split-sized by a narrow coalesce of the cache (after
+            # count(), its plan stats are the exact cached bytes)
             lineage = partition_lineage(extractions, run_id, wall_ms)
-            snapshot_id = store.append(extractions, lineage, run_id=run_id)
+            stats = extractions._jdf.queryExecution().optimizedPlan().stats()
+            snapshot_id = store.append(
+                extractions.coalesce(files(spark, stats.sizeInBytes())),
+                lineage, run_id=run_id)
         extractions.unpersist()
         result_df = store.results(spark)
     else:

@@ -84,6 +84,19 @@ def tasks(spark, python: bool = False) -> int:
     return 2 * cores if python else cores
 
 
+def files(spark, nbytes: int) -> int:
+    """The package's one file-count rule, beside :func:`tasks`: one
+    output file per read split, ``ceil(nbytes /
+    spark.sql.files.maxPartitionBytes)`` and at least one, so a reader
+    never packs several of our files into one split (Iceberg's
+    ``write.target-file-size-bytes``, with the read split as target).
+    ``nbytes`` is what the written frame holds: its cached bytes, or
+    the on-disk bytes of the files it rewrites."""
+    # Spark's own parse of the byte-string conf ("128m", "4m")
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, -(-nbytes // split))
+
+
 def fan_out(spark, df, path: str):
     """Repartition ``df`` to one task per core (:func:`tasks`) iff the
     parquet input at ``path`` has fewer row groups than cores (the scan

@@ -351,7 +351,7 @@ def pq_topk(
     # candidates, then ONLY those join back to their exact vectors for a
     # true-cosine re-rank — recall recovers from quantization error while
     # the corpus-wide scan still reads 8-byte codes.  Measured at sf0.1
-    # (BENCH/ANN_RECALL.md): recall@10 15% ADC-only -> 51% / 77% / 87% at
+    # (BENCH/ANN_RECALL.md): recall@10 15% ADC-only -> 51% / 73% / 86% at
     # shortlist 100 / 250 / 500; the residual gap is the deliberately
     # tiny 16-seed codebook (production trains Ksub=256 per subspace with
     # k-means, which shrinks the shortlist needed for a given recall).

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from . import multimodal as mm
 from .generator import FIXTURE, mix64, transcript_rows, transcripts_spark
 # fan_out stays bound here although every scan goes through scan():
 # perfbench/workloads.py times the fan-out by patching
@@ -1777,31 +1778,28 @@ FROM documents ORDER BY doc_id
 
 def q_multimodal_meta(spark, sf_dir):
     d = scan(spark, sf_dir, "documents")
-    kind = (
-        F.when(F.col("doc_id") % 4 == 0, F.lit("image/png"))
-        .when(F.col("doc_id") % 4 == 1, F.lit("image/jpeg"))
-        .when(F.col("doc_id") % 4 == 2, F.lit("audio/wav"))
-        .otherwise(F.lit("video/mp4"))
-    )
     payload = F.encode(F.col("text"), "UTF-8")
+
+    def fake_px(steps):
+        return mm.DECODE_BASE_PX + (F.col("doc_id") % steps) * mm.DECODE_STEP_PX
+
     return d.select(
         "doc_id",
-        kind.alias("media_type"),
+        mm.media_type_col().alias("media_type"),
         F.length(payload).alias("payload_bytes"),
-        (64 + (F.col("doc_id") % 16) * 32).cast("int").alias("fake_width"),
-        (64 + (F.col("doc_id") % 12) * 32).cast("int").alias("fake_height"),
+        fake_px(mm.DECODE_WIDTH_STEPS).cast("int").alias("fake_width"),
+        fake_px(mm.DECODE_HEIGHT_STEPS).cast("int").alias("fake_height"),
     ).orderBy("doc_id")
 
 
-SQL_MULTIMODAL_META = """
+def _multimodal_meta_sql() -> str:
+    base, step = mm.DECODE_BASE_PX, mm.DECODE_STEP_PX
+    return f"""
 SELECT doc_id,
-       CASE WHEN doc_id % 4 = 0 THEN 'image/png'
-            WHEN doc_id % 4 = 1 THEN 'image/jpeg'
-            WHEN doc_id % 4 = 2 THEN 'audio/wav'
-            ELSE 'video/mp4' END AS media_type,
+       {mm.media_type_sql(sep=chr(10) + " " * 12)} AS media_type,
        CAST(strlen(text) AS INT) AS payload_bytes,
-       CAST(64 + (doc_id % 16) * 32 AS INT) AS fake_width,
-       CAST(64 + (doc_id % 12) * 32 AS INT) AS fake_height
+       CAST({base} + (doc_id % {mm.DECODE_WIDTH_STEPS}) * {step} AS INT) AS fake_width,
+       CAST({base} + (doc_id % {mm.DECODE_HEIGHT_STEPS}) * {step} AS INT) AS fake_height
 FROM documents ORDER BY doc_id
 """
 
@@ -3513,7 +3511,7 @@ TRAINING_REGISTRY: dict[str, dict] = {
     },
     "token_count": {"builder": q_token_count, "sql": SQL_TOKEN_COUNT},
     "doc_fingerprint": {"builder": q_doc_fingerprint, "sql": SQL_DOC_FINGERPRINT},
-    "multimodal_meta": {"builder": q_multimodal_meta, "sql": SQL_MULTIMODAL_META},
+    "multimodal_meta": {"builder": q_multimodal_meta, "sql_fn": _multimodal_meta_sql},
 }
 
 
