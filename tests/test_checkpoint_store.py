@@ -59,12 +59,19 @@ def test_manifests_parsed_at_most_once(tmp_path):
     assert store.has_run("run-4")
 
 
-def test_iceberg_merge_sql_pinned():
+def test_iceberg_merge_sql_pinned(monkeypatch):
+    from unraveldocs_spark import checkpoint
+
     assert iceberg_merge_sql("cat.db.results") == (
         "MERGE INTO cat.db.results t USING _upsert_updates u "
         "ON t.conv_id = u.conv_id AND t.turn_idx = u.turn_idx "
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *"
+    )
+    monkeypatch.setattr(checkpoint, "KEYS", ["doc_id"])
+    assert iceberg_merge_sql("cat.db.ocr") == (
+        "MERGE INTO cat.db.ocr t USING _upsert_updates u ON t.doc_id = u.doc_id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
     )
 
 
@@ -117,7 +124,8 @@ def test_iceberg_append_stamps_run_id_snapshot_property():
     assert results2.writer.appended
 
 
-def test_iceberg_delete_sql_pinned():
+def test_iceberg_delete_sql_pinned(monkeypatch):
+    from unraveldocs_spark import checkpoint
     from unraveldocs_spark.checkpoint import iceberg_delete_sql
 
     assert iceberg_delete_sql("cat.db.results") == (
@@ -125,22 +133,9 @@ def test_iceberg_delete_sql_pinned():
         "ON t.conv_id = u.conv_id AND t.turn_idx = u.turn_idx "
         "WHEN MATCHED THEN DELETE"
     )
-    assert iceberg_delete_sql("cat.db.ocr", keys=["doc_id"]) == (
+    monkeypatch.setattr(checkpoint, "KEYS", ["doc_id"])
+    assert iceberg_delete_sql("cat.db.ocr") == (
         "MERGE INTO cat.db.ocr t USING _delete_keys u "
         "ON t.doc_id = u.doc_id "
         "WHEN MATCHED THEN DELETE"
-    )
-
-
-def test_iceberg_maintenance_sql_pinned():
-    from unraveldocs_spark.checkpoint import iceberg_maintenance_sql
-
-    rewrite, expire = iceberg_maintenance_sql("cat.db.results")
-    assert rewrite == (
-        "CALL cat.system.rewrite_data_files(table => 'cat.db.results')"
-    )
-    assert expire == (
-        "CALL cat.system.expire_snapshots(table => 'cat.db.results', "
-        "older_than => current_timestamp() - INTERVAL 7 DAYS, "
-        "retain_last => 10)"
     )

@@ -88,8 +88,7 @@ def store(iceberg_spark):
         "CREATE TABLE local.db.lineage "
         "(run_id STRING, part_id INT, n_rows BIGINT) USING iceberg"
     )
-    return IcebergCheckpointStore("local.db.results", "local.db.lineage",
-                                  iceberg_spark)
+    return IcebergCheckpointStore("local.db.results", "local.db.lineage")
 
 
 def _rows(spark, table):
@@ -139,17 +138,3 @@ def test_merge_delete_retracts_by_key(iceberg_spark, store):
     store.delete(keys, iceberg_spark)
     rows = _rows(iceberg_spark, "local.db.results")
     assert ("c1", 0) not in rows and len(rows) == 2
-
-
-def test_maintenance_procedures_execute(iceberg_spark, store):
-    from unraveldocs_spark.checkpoint import iceberg_maintenance_sql
-
-    rewrite, expire = iceberg_maintenance_sql(
-        "local.db.results", retain_last=1
-    )
-    iceberg_spark.sql(rewrite).collect()
-    iceberg_spark.sql(expire).collect()
-    # history survives with at least the retained floor
-    assert iceberg_spark.sql(
-        "SELECT COUNT(*) AS n FROM local.db.results.snapshots"
-    ).collect()[0]["n"] >= 1

@@ -7,6 +7,7 @@ import os
 import pandas as pd
 import pytest
 
+from unraveldocs_spark import checkpoint
 from unraveldocs_spark import generator as G
 from unraveldocs_spark import oracle as O
 from unraveldocs_spark.checkpoint import DirCheckpointStore
@@ -737,7 +738,7 @@ class TestDeleteRetract:
 
 
 class TestAiEnrichUpsertPath:
-    def test_ai_fields_flow_through_keyed_store(self, spark, tmp_path):
+    def test_ai_fields_flow_through_keyed_store(self, spark, tmp_path, monkeypatch):
         """The V54 AI columns (ai_summary/document_type/ai_tags) written
         through a doc_id-keyed store: upsert replaces the enriched rows
         in place and delete retracts one (AiSummarizationService.java:
@@ -754,9 +755,8 @@ class TestAiEnrichUpsertPath:
             T.StructField("ai_tags", T.StringType(), True),
             T.StructField("confidence_e2", T.LongType(), True),
         ])
-        store = DirCheckpointStore(
-            str(tmp_path / "ai"), results_schema=schema, keys=["doc_id"]
-        )
+        monkeypatch.setattr(checkpoint, "KEYS", ["doc_id"])
+        store = DirCheckpointStore(str(tmp_path / "ai"), results_schema=schema)
         enriched = q_ai_enrich(spark, "/root/testdata/sf0.001").limit(20)
         store.append(enriched)
         n = store.results(spark).count()

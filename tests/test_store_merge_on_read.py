@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from unraveldocs_spark import generator as G
+from unraveldocs_spark import checkpoint
 from unraveldocs_spark import oracle as O
 from unraveldocs_spark.checkpoint import DirCheckpointStore
 from unraveldocs_spark.pipeline import run_extraction
@@ -30,6 +31,12 @@ DOC_SCHEMA = T.StructType([
     T.StructField("summary", T.StringType(), True),
     T.StructField("version", T.IntegerType(), True),
 ])
+
+
+@pytest.fixture
+def doc_keys(monkeypatch):
+    """Stores of DOC_SCHEMA rows merge and delete on doc_id."""
+    monkeypatch.setattr(checkpoint, "KEYS", ["doc_id"])
 
 
 def _canon(row) -> tuple:
@@ -183,12 +190,11 @@ def test_extraction_store_matches_copy_on_write_fold(spark, tmp_path):
             fold.check(spark, store, snap)
 
 
-def test_doc_keyed_store_matches_copy_on_write_fold(spark, tmp_path):
+def test_doc_keyed_store_matches_copy_on_write_fold(spark, tmp_path, doc_keys):
     """The same fold on a doc_id-keyed store with its own results_schema:
     a seeded random run of append, upsert (edit and insert), delete and
     compaction."""
-    store = DirCheckpointStore(str(tmp_path / "d"), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / "d"), results_schema=DOC_SCHEMA)
     fold = Fold(1)
     rng = random.Random(7)
     next_id = 0
@@ -223,12 +229,11 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_results_plan_is_one_scan_and_one_broadcast_anti_join(spark, tmp_path):
+def test_results_plan_is_one_scan_and_one_broadcast_anti_join(spark, tmp_path, doc_keys):
     """Appends alone read as one scan, no join.  After an upsert and a
     delete, one scan reads the rows and one broadcast left-anti join
     drops the retracted ones — no Union of per-snapshot scans."""
-    store = DirCheckpointStore(str(tmp_path / "p"), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / "p"), results_schema=DOC_SCHEMA)
     for lo in (0, 10):
         store.append(spark.createDataFrame(
             [(i, "a", 0) for i in range(lo, lo + 10)], DOC_SCHEMA))
@@ -247,13 +252,12 @@ def test_results_plan_is_one_scan_and_one_broadcast_anti_join(spark, tmp_path):
     assert "Union" not in plan
 
 
-def test_results_plan_shuffles_when_broadcast_is_off(spark, tmp_path):
+def test_results_plan_shuffles_when_broadcast_is_off(spark, tmp_path, doc_keys):
     """The retraction join is the planner's choice: with
     spark.sql.autoBroadcastJoinThreshold at -1 nothing is broadcast and
     results() is the same fold."""
     conf = "spark.sql.autoBroadcastJoinThreshold"
-    store = DirCheckpointStore(str(tmp_path / "nb"), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / "nb"), results_schema=DOC_SCHEMA)
     store.append(spark.createDataFrame([(i, "a", 0) for i in range(10)], DOC_SCHEMA))
     store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
     store.delete(spark.createDataFrame([(2,)], "doc_id long"), spark)
@@ -330,11 +334,47 @@ def test_compaction_reclaims_deleted_rows(spark, tmp_path):
     assert first in os.listdir(os.path.join(store.root, "expired-lineage"))
 
 
+def test_run_ids_outlive_compaction(spark, tmp_path, doc_keys):
+    """A compacted manifest lists the run ids it folds, those of the
+    compaction before it included: after two compactions expired every
+    commit's snapshot, has_run still finds both runs and a replayed
+    micro-batch commit appends nothing."""
+    from unraveldocs_spark.streaming import commit_to_store
+
+    store = DirCheckpointStore(str(tmp_path / "h"), results_schema=DOC_SCHEMA)
+    commit = commit_to_store(store, "ingest")
+    batches = {i: spark.createDataFrame([(i, "a", 0)], DOC_SCHEMA) for i in (1, 2)}
+    for i, batch in batches.items():
+        commit(batch, i)
+        assert store.maybe_compact(spark, threshold=0)
+    assert len(store.snapshots()) == 1
+    assert store.has_run("ingest-1") and store.has_run("ingest-2")
+    assert not store.has_run("ingest-3")
+    commit(batches[1], 1)
+    assert sorted(tuple(r) for r in store.results(spark).collect()) == [
+        (1, "a", 0), (2, "a", 0)]
+
+
+def test_publish_retries_a_taken_snapshot_id(spark, tmp_path, doc_keys, monkeypatch):
+    """Two writers can list the same max and pick the same id: the one
+    whose rename finds the id taken publishes at the next id instead of
+    losing its commit."""
+    store = DirCheckpointStore(str(tmp_path / "t"), results_schema=DOC_SCHEMA)
+    first = store.append(spark.createDataFrame([(1, "a", 0)], DOC_SCHEMA))
+    taken = iter([first])
+    pick = store._next_snapshot_id
+    monkeypatch.setattr(store, "_next_snapshot_id", lambda: next(taken, None) or pick())
+    second = store.append(spark.createDataFrame([(2, "b", 0)], DOC_SCHEMA))
+    assert (first, second) == ("snap-000001", "snap-000002")
+    assert not [d for d in os.listdir(store.root) if d.startswith("_tmp-")]
+    assert sorted(tuple(r) for r in store.results(spark).collect()) == [
+        (1, "a", 0), (2, "b", 0)]
+
+
 @pytest.mark.parametrize("op", ["upsert", "delete"])
-def test_retraction_on_an_empty_store(spark, tmp_path, op):
+def test_retraction_on_an_empty_store(spark, tmp_path, op, doc_keys):
     """An upsert on an empty store is an insert; a delete leaves it empty."""
-    store = DirCheckpointStore(str(tmp_path / op), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / op), results_schema=DOC_SCHEMA)
     if op == "upsert":
         store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
         assert [tuple(r) for r in store.results(spark).collect()] == [(1, "u", 1)]
@@ -344,12 +384,11 @@ def test_retraction_on_an_empty_store(spark, tmp_path, op):
 
 
 @pytest.mark.parametrize("change", ["missing", "extra", "retyped"])
-def test_upsert_rejects_columns_off_the_schema(spark, tmp_path, change):
+def test_upsert_rejects_columns_off_the_schema(spark, tmp_path, change, doc_keys):
     """A frame whose columns differ from results_schema by name or type
     would read back with all-NULL columns; upsert raises naming the
     column and publishes nothing."""
-    store = DirCheckpointStore(str(tmp_path / change), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / change), results_schema=DOC_SCHEMA)
     rows = spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA)
     bad, column = {
         "missing": (rows.drop("version"), "version"),
@@ -464,11 +503,10 @@ def test_snappy_snapshots_fold_with_zstd_ones(spark, tmp_path):
     assert reads() == want
 
 
-def test_failed_publish_removes_its_staging_dir(spark, tmp_path):
+def test_failed_publish_removes_its_staging_dir(spark, tmp_path, doc_keys):
     """An append whose lineage frame fails in its Python stage publishes
     nothing and leaves no _tmp-* dir; the prior state still reads."""
-    store = DirCheckpointStore(str(tmp_path / "f"), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / "f"), results_schema=DOC_SCHEMA)
     rows = spark.createDataFrame([(1, "a", 0), (2, "b", 0)], DOC_SCHEMA)
     store.append(rows)
     before = store.snapshots()
@@ -484,14 +522,13 @@ def test_failed_publish_removes_its_staging_dir(spark, tmp_path):
         (1, "a", 0), (2, "b", 0)]
 
 
-def test_large_retraction_side_compacts(spark, tmp_path):
+def test_large_retraction_side_compacts(spark, tmp_path, doc_keys):
     """Under a snapshot-count threshold it never reaches, a store
     compacts once its retraction files outgrow
     spark.sql.autoBroadcastJoinThreshold: a small upsert does not, a
     large one does, and a non-positive limit never does."""
     conf = "spark.sql.autoBroadcastJoinThreshold"
-    store = DirCheckpointStore(str(tmp_path / "s"), results_schema=DOC_SCHEMA,
-                               keys=["doc_id"])
+    store = DirCheckpointStore(str(tmp_path / "s"), results_schema=DOC_SCHEMA)
     store.append(spark.createDataFrame([(i, "a", 0) for i in range(10)], DOC_SCHEMA))
     store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
     big = [(i, hashlib.sha256(str(i).encode()).hexdigest() * 4, 2)

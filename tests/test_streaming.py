@@ -65,11 +65,12 @@ def test_replayed_micro_batch_is_deduped(spark, tmp_path):
     ), "replay introduced duplicate keys"
 
 
-def test_windowed_rollup_with_watermark(spark, tmp_path):
+def test_windowed_rollup_with_watermark(spark, tmp_path, monkeypatch):
     """Watermarked windowed rollup: append mode emits only finalized
     windows; counts match the batch ladder per (conv, window)."""
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark import streaming_windows
     from unraveldocs_spark.streaming_windows import run_windowed_rollup
 
     pdf = G.transcripts_pandas(5, hot_factor=2, include_oversize=False)
@@ -78,10 +79,8 @@ def test_windowed_rollup_with_watermark(spark, tmp_path):
     sdf.repartition(3).write.parquet(input_dir)
 
     out_dir = str(tmp_path / "win-out")
-    q = run_windowed_rollup(
-        spark, input_dir, out_dir, str(tmp_path / "win-ckpt"),
-        window="1 hour", watermark="10 minutes",
-    )
+    monkeypatch.setattr(streaming_windows, "WATERMARK", "10 minutes")
+    q = run_windowed_rollup(spark, input_dir, out_dir, str(tmp_path / "win-ckpt"))
     q.awaitTermination(180)
 
     got = spark.read.parquet(out_dir)
@@ -280,12 +279,13 @@ def test_stream_dedup_ingest_commits_each_digest_once(spark, tmp_path):
     assert store.results(spark).count() == n_distinct_texts
 
 
-def test_stream_stream_join_matches_batch_join(spark, tmp_path):
+def test_stream_stream_join_matches_batch_join(spark, tmp_path, monkeypatch):
     """Watermarked stream-stream correlation: matched pairs and latencies
     must equal the batch inner join with the same time-range predicate;
     results outside [req_ts, req_ts + max_lag] never match."""
     from pyspark.sql import functions as F
 
+    from unraveldocs_spark import streaming_windows
     from unraveldocs_spark.streaming_windows import (
         REQUEST_STREAM_SCHEMA,
         RESULT_STREAM_SCHEMA,
@@ -323,9 +323,9 @@ def test_stream_stream_join_matches_batch_join(spark, tmp_path):
     res.repartition(1).write.parquet(res_dir)
 
     out_dir = str(tmp_path / "corr-out")
+    monkeypatch.setattr(streaming_windows, "WATERMARK", "10 minutes")
     q = run_stream_correlation(
         spark, req_dir, res_dir, out_dir, str(tmp_path / "corr-ckpt"),
-        watermark="10 minutes", max_lag_minutes=60,
     )
     q.awaitTermination(180)
 
@@ -424,7 +424,7 @@ def test_stream_dedup_ingest_drops_null_text(spark, tmp_path):
     assert store.results(spark).count() == n
 
 
-def test_quota_enforcer_matches_batch_ranking(spark, tmp_path):
+def test_quota_enforcer_matches_batch_ranking(spark, tmp_path, monkeypatch):
     """Streamed per-(user, day) admission must equal the batch oracle's
     row_number ranking: first `limit` events of a user's day ALLOWED,
     the rest DENIED — including counts carried ACROSS micro-batches
@@ -432,6 +432,7 @@ def test_quota_enforcer_matches_batch_ranking(spark, tmp_path):
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
+    from unraveldocs_spark import streaming_state
     from unraveldocs_spark.streaming_state import quota_enforcer_stream
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -451,7 +452,8 @@ def test_quota_enforcer_matches_batch_ranking(spark, tmp_path):
     out = str(tmp_path / "q-out")
     ckpt = str(tmp_path / "q-ckpt")
     LIMIT = 3
-    q = quota_enforcer_stream(spark, input_dir, out, ckpt, daily_limit=LIMIT)
+    monkeypatch.setattr(streaming_state, "DAILY_QUOTA", LIMIT)
+    q = quota_enforcer_stream(spark, input_dir, out, ckpt)
     q.awaitTermination(180)
 
     got = {

@@ -811,11 +811,12 @@ class TestPCA:
 
 
 class TestAdviceGuards:
-    def test_connected_components_raises_when_unconverged(self, spark):
-        """A chain deeper than max_iters must fail loudly (wrong labels
+    def test_connected_components_raises_when_unconverged(self, spark, monkeypatch):
+        """A chain deeper than _CC_MAX_ITERS must fail loudly (wrong labels
         would silently diverge from the recursive-CTE oracle), and the
         large-star/small-star variant must solve the same graph in its
         log(n) rounds."""
+        from unraveldocs_spark import trainingdata
         from unraveldocs_spark.trainingdata import (
             connected_components,
             connected_components_star,
@@ -824,10 +825,13 @@ class TestAdviceGuards:
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(30)], "doc_a long, doc_b long"
         )
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(chain, max_iters=3)
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components_star(chain, max_iters=1)
+        with monkeypatch.context() as m:
+            m.setattr(trainingdata, "_CC_MAX_ITERS", 3)
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(chain)
+            m.setattr(trainingdata, "_CC_MAX_ITERS", 1)
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components_star(chain)
         # star variant: one component, min label 0
         labels = connected_components_star(chain).collect()
         assert {r.label for r in labels} == {0}

@@ -50,6 +50,7 @@ payload on conv_id alone, the skewed key.
 
 from __future__ import annotations
 
+import errno
 import json
 import os
 import shutil
@@ -62,7 +63,9 @@ from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 from .scanfan import files
 from .schemas import EXTRACTIONS_SCHEMA, LINEAGE_SCHEMA
 
-KEYS = ["conv_id", "turn_idx"]
+KEYS = ["conv_id", "turn_idx"]  # every store's merge and delete key
+UPSERT_VIEW = "_upsert_updates"  # the temp views the Iceberg MERGEs read
+DELETE_VIEW = "_delete_keys"
 
 
 def _empty(spark: SparkSession, schema) -> DataFrame:
@@ -116,10 +119,11 @@ class DirCheckpointStore:
     results are the full state; readers start here), ``replacing`` (an
     upsert: its rows' keys retract earlier rows) and ``removed`` (a
     delete).  Stores that predate the last two flags wrote upserts and
-    deletes as compacted snapshots, which read the same."""
+    deletes as compacted snapshots, which read the same.  A compacted
+    manifest also lists the ``run_ids`` of the snapshots it folds, so
+    :meth:`has_run` still finds them once they expire."""
 
-    def __init__(self, root: str, results_schema=None, keys=None,
-                 lineage_schema=None):
+    def __init__(self, root: str, results_schema=None, lineage_schema=None):
         self.root = root
         self.snap_dir = os.path.join(root, "snapshots")
         os.makedirs(self.snap_dir, exist_ok=True)
@@ -132,10 +136,6 @@ class DirCheckpointStore:
         # CORPUS_LINEAGE_SCHEMA).
         self.results_schema = results_schema or EXTRACTIONS_SCHEMA
         self.lineage_schema = lineage_schema or LINEAGE_SCHEMA
-        # merge/delete key columns; (conv_id, turn_idx) for the extraction
-        # store, overridable for stores of other grains (e.g. doc_id for
-        # the AI-enrichment OcrData analog)
-        self.keys = list(keys) if keys is not None else list(KEYS)
         # manifest cache keyed by snapshot name: manifests are immutable
         # once published (atomic rename), so each is parsed at most once
         # per store instance — has_run on every micro-batch is then
@@ -169,11 +169,18 @@ class DirCheckpointStore:
             key=self._snap_num,
         )
 
+    def _run_ids(self, snaps: list[str]) -> list[str]:
+        """The run ids ``snaps`` committed, those a compacted one folded
+        included."""
+        return [r for m in map(self._manifest, snaps)
+                for r in (m.get("run_id"), *m.get("run_ids", ()))]
+
     def has_run(self, run_id: str) -> bool:
         """True if a committed snapshot already carries ``run_id`` — the
         idempotent-foreachBatch dedup primitive (a replayed micro-batch
-        re-appends under the same run_id and must be skipped)."""
-        return run_id in {self._manifest(s).get("run_id") for s in self.snapshots()}
+        re-appends under the same run_id and must be skipped).  Runs
+        folded by compaction count, also after their snapshots expire."""
+        return run_id in self._run_ids(self.snapshots())
 
     def _next_snapshot_id(self) -> str:
         # consider every snap-* directory, committed or not: a crashed
@@ -191,8 +198,9 @@ class DirCheckpointStore:
                  **flags) -> str:
         """Write one snapshot atomically: stage each table under a _tmp
         dir, fsync a manifest, then rename into place — a snapshot
-        either fully exists or doesn't.  A failed write removes its
-        staging dir before re-raising.
+        either fully exists or doesn't.  A rename onto an id another
+        writer took first retries with the next id; any other failure
+        removes the staging dir before re-raising.
 
         Every table is zstd parquet at the codec's default level, the
         default of the store this stands in for (Iceberg's
@@ -212,32 +220,29 @@ class DirCheckpointStore:
                 json.dump(manifest, f)
                 f.flush()
                 os.fsync(f.fileno())
-            snap_id = self._next_snapshot_id()
-            os.rename(staging, os.path.join(self.snap_dir, snap_id))  # atomic publish
+            while True:
+                snap_id = self._next_snapshot_id()
+                try:
+                    os.rename(staging, os.path.join(self.snap_dir, snap_id))  # atomic publish
+                    break
+                except OSError as e:
+                    if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
+                        raise
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
         return snap_id
 
-    def append(
-        self,
-        results: DataFrame,
-        lineage: DataFrame | None = None,
-        run_id: str | None = None,
-        compacted: bool = False,
-    ) -> str:
-        """Publish results (+lineage) as one snapshot.  A snapshot marked
-        ``compacted`` carries the FULL current state (see
-        :meth:`maybe_compact`); readers start from the latest compacted
-        one."""
+    def append(self, results: DataFrame, lineage: DataFrame | None = None,
+               run_id: str | None = None) -> str:
+        """Publish results (+lineage) as one snapshot."""
         tables = {"results": results}
         if lineage is not None:
             tables["lineage"] = lineage
-        return self._publish(tables, run_id, compacted=compacted)
+        return self._publish(tables, run_id)
 
     # -- upsert (MERGE equivalent) ---------------------------------------
-    def upsert(self, updates: DataFrame, spark: SparkSession,
-               run_id: str | None = None) -> str:
+    def upsert(self, updates: DataFrame, spark: SparkSession) -> str:
         """Replace rows by key — the batch analog of the reference's
         edited-content save (UpdateOcrContentImpl.java:72-78) and of
         ``MERGE INTO`` on the Iceberg path.
@@ -266,11 +271,10 @@ class DirCheckpointStore:
                     f"upsert column {name!r} is {got.get(name)}, "
                     f"results_schema declares {want.get(name)}"
                 )
-        return self._publish({"results": updates}, run_id, replacing=True)
+        return self._publish({"results": updates}, replacing=True)
 
     # -- delete (retract) -------------------------------------------------
-    def delete(self, keys: DataFrame, spark: SparkSession,
-               run_id: str | None = None) -> str:
+    def delete(self, keys: DataFrame, spark: SparkSession) -> str:
         """Remove rows by key — the right-to-be-forgotten primitive and
         the batch analog of the reference's collection/file delete
         (DocumentDeleteImpl.java:61,117: remove the entry, reclaim its
@@ -292,9 +296,9 @@ class DirCheckpointStore:
         superseded snapshots (lineage is kept under
         ``expired-lineage/``)."""
         removed = keys.select(
-            *(F.col(k).cast(self.results_schema[k].dataType) for k in self.keys)
+            *(F.col(k).cast(self.results_schema[k].dataType) for k in KEYS)
         )
-        return self._publish({"removed": removed}, run_id, removed=True)
+        return self._publish({"removed": removed}, removed=True)
 
     # -- read -------------------------------------------------------------
     def _live_snapshots(self, upto: str | None = None) -> list[str]:
@@ -351,13 +355,13 @@ class DirCheckpointStore:
         scan = spark.read.schema(self.results_schema).parquet(*rows)
         if not retract:
             return scan
-        key_schema = StructType([self.results_schema[k] for k in self.keys])
+        key_schema = StructType([self.results_schema[k] for k in KEYS])
         gone = spark.read.schema(key_schema).parquet(*retract).select(
-            *(F.col(k).alias(f"_retract_{k}") for k in self.keys),
+            *(F.col(k).alias(f"_retract_{k}") for k in KEYS),
             _snap_of_file().alias("_retract_snap"),
         )
         tagged = scan.withColumn("_row_snap", _snap_of_file())
-        cond = [tagged[k] == gone[f"_retract_{k}"] for k in self.keys]
+        cond = [tagged[k] == gone[f"_retract_{k}"] for k in KEYS]
         cond.append(gone["_retract_snap"] > tagged["_row_snap"])
         return tagged.join(gone, cond, "left_anti").drop("_row_snap")
 
@@ -383,7 +387,7 @@ class DirCheckpointStore:
         return spark.read.schema(self.lineage_schema).parquet(*paths)
 
     def completed_keys(self, spark: SparkSession) -> DataFrame:
-        return self.results(spark).select(*self.keys)
+        return self.results(spark).select(*KEYS)
 
     # -- maintenance ------------------------------------------------------
     def expire_snapshots(self) -> list[str]:
@@ -417,12 +421,14 @@ class DirCheckpointStore:
         ``threshold``, or the retraction side :meth:`_state` broadcasts
         outgrows Spark's own limit for a broadcast side, rewrite full
         current state as one compacted snapshot (and optionally expire
-        the superseded ones).  The retraction side is measured as the
-        on-disk bytes of the live ``replacing`` ``results/`` and
-        ``removed/`` files — the bytes Spark estimates a parquet scan's
-        size from — against ``spark.sql.autoBroadcastJoinThreshold`` when
-        that is positive; one large upsert then compacts at once instead
-        of being broadcast by every later read.
+        the superseded ones).  Its manifest lists the run ids of the
+        snapshots it folds, so :meth:`has_run` outlives their expiry.
+        The retraction side is measured as the on-disk bytes of the live
+        ``replacing`` ``results/`` and ``removed/`` files — the bytes
+        Spark estimates a parquet scan's size from — against
+        ``spark.sql.autoBroadcastJoinThreshold`` when that is positive;
+        one large upsert then compacts at once instead of being broadcast
+        by every later read.
 
         This is the only full-state rewrite: it folds in every upsert and
         delete, so the retraction join goes away and, once the superseded
@@ -436,11 +442,13 @@ class DirCheckpointStore:
         snapshot id or None if under both limits."""
         # Spark's own parse of the byte-string conf ("10485760b", "32k", -1)
         limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        live = self._live_snapshots()
         rows, retract = self._chain()
-        if len(self._live_snapshots()) <= threshold and not 0 < limit < _bytes(retract):
+        if len(live) <= threshold and not 0 < limit < _bytes(retract):
             return None
         state = self.results(spark).coalesce(files(spark, _bytes(rows)))
-        snap = self.append(state, compacted=True)
+        snap = self._publish({"results": state}, compacted=True,
+                             run_ids=self._run_ids(live))
         if expire:
             self.expire_snapshots()
         return snap
@@ -454,12 +462,12 @@ class DirCheckpointStore:
         Iceberg changelog read (``table_changes``) the production path
         gets for free.  Both snapshots must still exist (run before
         expire_snapshots)."""
-        a, b = (self._state(spark, upto=s).select(*self.keys)
+        a, b = (self._state(spark, upto=s).select(*KEYS)
                 for s in (snap_a, snap_b))
-        added = b.join(a, self.keys, "left_anti").withColumn(
+        added = b.join(a, KEYS, "left_anti").withColumn(
             "change", F.lit("added")
         )
-        removed = a.join(b, self.keys, "left_anti").withColumn(
+        removed = a.join(b, KEYS, "left_anti").withColumn(
             "change", F.lit("removed")
         )
         return added.unionByName(removed)
@@ -468,53 +476,31 @@ class DirCheckpointStore:
 RUN_ID_SNAPSHOT_PROPERTY = "run-id"
 
 
-def iceberg_merge_sql(results_table: str, updates_view: str = "_upsert_updates") -> str:
+def _on_keys() -> str:
+    return " AND ".join(f"t.{k} = u.{k}" for k in KEYS)
+
+
+def iceberg_merge_sql(results_table: str) -> str:
     """The MERGE the Iceberg upsert path executes — rendered by a pure
     function so the SQL is unit-pinned even though the sandbox has no
     Iceberg jar to execute it against (the batch analog of the reference's
     edited-content save, UpdateOcrContentImpl.java:72-78)."""
     return (
-        f"MERGE INTO {results_table} t USING {updates_view} u "
-        "ON t.conv_id = u.conv_id AND t.turn_idx = u.turn_idx "
+        f"MERGE INTO {results_table} t USING {UPSERT_VIEW} u ON {_on_keys()} "
         "WHEN MATCHED THEN UPDATE SET * "
         "WHEN NOT MATCHED THEN INSERT *"
     )
 
 
-def iceberg_delete_sql(results_table: str, keys_view: str = "_delete_keys",
-                       keys=None) -> str:
+def iceberg_delete_sql(results_table: str) -> str:
     """The keyed delete the Iceberg retract path executes (rendered pure
     so the SQL is unit-pinned without an Iceberg jar) — the
     ``MERGE ... WHEN MATCHED THEN DELETE`` analog of the reference's
     collection/file delete (DocumentDeleteImpl.java:61,117)."""
-    keys = list(keys) if keys is not None else list(KEYS)
-    on = " AND ".join(f"t.{k} = u.{k}" for k in keys)
     return (
-        f"MERGE INTO {results_table} t USING {keys_view} u "
-        f"ON {on} "
+        f"MERGE INTO {results_table} t USING {DELETE_VIEW} u ON {_on_keys()} "
         "WHEN MATCHED THEN DELETE"
     )
-
-
-def iceberg_maintenance_sql(results_table: str,
-                            older_than: str = "current_timestamp() - INTERVAL 7 DAYS",
-                            retain_last: int = 10) -> tuple[str, str]:
-    """The Iceberg analog of DirCheckpointStore.maybe_compact: small-file
-    compaction plus snapshot expiry with a retained-history floor.  No
-    job runs it; it is rendered pure for a deployment's maintenance
-    scheduler and unit-pinned without an Iceberg jar.  ``catalog`` is
-    the first identifier segment of ``results_table``."""
-    catalog = results_table.split(".", 1)[0]
-    rewrite = (
-        f"CALL {catalog}.system.rewrite_data_files(table => '{results_table}')"
-    )
-    expire = (
-        f"CALL {catalog}.system.expire_snapshots("
-        f"table => '{results_table}', "
-        f"older_than => {older_than}, "
-        f"retain_last => {retain_last})"
-    )
-    return rewrite, expire
 
 
 def iceberg_has_run_sql(results_table: str, run_id: str) -> str:
@@ -544,14 +530,12 @@ class IcebergCheckpointStore:
     has no Iceberg runtime jar to execute it against.
     """
 
-    def __init__(self, results_table: str, lineage_table: str,
-                 spark: SparkSession | None = None):
+    def __init__(self, results_table: str, lineage_table: str):
         self.results_table = results_table
         self.lineage_table = lineage_table
-        self._spark = spark
 
     def _session(self) -> SparkSession:
-        spark = self._spark or SparkSession.getActiveSession()
+        spark = SparkSession.getActiveSession()
         if spark is None:
             raise RuntimeError("no active SparkSession for Iceberg store")
         return spark
@@ -564,24 +548,22 @@ class IcebergCheckpointStore:
         ).collect()
         return rows[0]["n"] > 0
 
-    def upsert(self, updates: DataFrame, spark: SparkSession,
-               run_id: str | None = None) -> str:
+    def upsert(self, updates: DataFrame, spark: SparkSession) -> str:
         """Replace rows by (conv_id, turn_idx) via ``MERGE INTO`` —
         Iceberg copy-on-write/merge-on-read handles the rewrite."""
-        updates.createOrReplaceTempView("_upsert_updates")
+        updates.createOrReplaceTempView(UPSERT_VIEW)
         spark.sql(iceberg_merge_sql(self.results_table))
-        return run_id or "iceberg-merge"
+        return "iceberg-merge"
 
-    def delete(self, keys: DataFrame, spark: SparkSession,
-               run_id: str | None = None) -> str:
+    def delete(self, keys: DataFrame, spark: SparkSession) -> str:
         """Remove rows by key via ``MERGE ... WHEN MATCHED THEN DELETE``
         (same retract semantics as DirCheckpointStore.delete)."""
-        keys.createOrReplaceTempView("_delete_keys")
+        keys.createOrReplaceTempView(DELETE_VIEW)
         spark.sql(iceberg_delete_sql(self.results_table))
-        return run_id or "iceberg-delete"
+        return "iceberg-delete"
 
     def append(self, results: DataFrame, lineage: DataFrame | None = None,
-               run_id: str | None = None, compacted: bool = False) -> str:
+               run_id: str | None = None) -> str:
         writer = results.writeTo(self.results_table)
         if run_id is not None:
             # stamped into the commit's snapshot summary; read back by

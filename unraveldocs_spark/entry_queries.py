@@ -17,7 +17,7 @@ from . import multimodal as mm, oracle_sql_gen as osg
 from .extract import extract_stage
 from .generator import FIXTURE, transcripts_spark
 from .pipeline import salted_repartition
-from .queries import _spark_java_word_count, _sql_java_word_count
+from .queries import _spark_java_word_count, _sql_java_word_count, turn_number
 from .rollup import conversation_rollup
 from .scanfan import scan
 from .schemas import map_rows
@@ -28,7 +28,6 @@ def derived_transcripts(spark, sf_dir):
     """documents -> transcripts(conv_id, turn_idx, role, text, tool, ts):
     conversation = source, turn order = doc_id order within source."""
     d = scan(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("doc_id")
     role = (
         F.when(F.col("doc_id") % 5 == 4, F.lit("tool"))
         .when(F.col("doc_id") % 2 == 0, F.lit("user"))
@@ -36,7 +35,7 @@ def derived_transcripts(spark, sf_dir):
     )
     return d.select(
         F.col("source").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
+        turn_number().alias("turn_idx"),
         role.alias("role"),
         F.col("text"),
         F.when(role == "tool", F.lit("search")).otherwise(F.lit(None)).alias("tool"),
@@ -214,10 +213,9 @@ def q_pdf_layout(spark, sf_dir):
     envelope = F.concat(
         F.lit('{"kind":"layout","runs":'), F.to_json(runs), F.lit("}")
     )
-    w = Window.partitionBy("source").orderBy("doc_id")
     t = d.select(
         F.col("source").alias("conv_id"),
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
+        turn_number().alias("turn_idx"),
         F.lit("user").alias("role"),
         envelope.alias("text"),
         F.lit(None).cast("string").alias("tool"),
@@ -655,11 +653,9 @@ def _attributed_responses(spark, sf_dir):
     1000*word_count + n_chars.  Columns: conv_id, turn_idx, role, text,
     prompt_idx, prompt_text, reward."""
     d = scan(spark, sf_dir, "documents")
-    w0 = Window.partitionBy("source").orderBy("doc_id")
-    turn_idx = (F.row_number().over(w0) - 1).cast("int")
     t = d.select(
         F.col("source").alias("conv_id"),
-        turn_idx.alias("turn_idx"),
+        turn_number().alias("turn_idx"),
         F.col("text"),
     ).withColumn(
         "role",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import semantics as S
 from .rollup import status_rollup
 from .scanfan import scan
 
@@ -564,17 +565,19 @@ ORDER BY doc_id
 # ---------------------------------------------------------------------------
 
 def q_text_preview(spark, sf_dir):
-    """text[:200] + '...' (DocumentSearchService.java:188-194)."""
+    """text[:S.PREVIEW_LIMIT] + '...' (DocumentSearchService.java:188-194)."""
     d = scan(spark, sf_dir, "documents")
+    n = S.PREVIEW_LIMIT
     preview = F.when(
-        F.length("text") > 200, F.concat(F.substring("text", 1, 200), F.lit("..."))
+        F.length("text") > n, F.concat(F.substring("text", 1, n), F.lit("..."))
     ).otherwise(F.col("text"))
     return d.select("doc_id", preview.alias("preview")).orderBy("doc_id")
 
 
-SQL_TEXT_PREVIEW = """
+def _text_preview_sql() -> str:
+    return f"""
 SELECT doc_id,
-       CASE WHEN length(text) > 200 THEN substr(text, 1, 200) || '...' ELSE text END AS preview
+       CASE WHEN length(text) > {S.PREVIEW_LIMIT} THEN substr(text, 1, {S.PREVIEW_LIMIT}) || '...' ELSE text END AS preview
 FROM documents ORDER BY doc_id
 """
 
@@ -713,7 +716,7 @@ def q_error_type_sanitize(spark, sf_dir):
     """metric-tag sanitizer (OcrMetrics.java:162-170)."""
     e = scan(spark, sf_dir, "events")
     sanitized = F.substring(
-        F.regexp_replace(F.lower(F.col("props")), "[^a-z0-9_]", "_"), 1, 50
+        F.regexp_replace(F.lower(F.col("props")), "[^a-z0-9_]", "_"), 1, S.ERROR_TYPE_CAP
     )
     return (
         e.select("event_id", sanitized.alias("error_type"))
@@ -722,8 +725,9 @@ def q_error_type_sanitize(spark, sf_dir):
     )
 
 
-SQL_ERROR_TYPE_SANITIZE = """
-SELECT event_id, substr(regexp_replace(lower(props), '[^a-z0-9_]', '_', 'g'), 1, 50) AS error_type
+def _error_type_sanitize_sql() -> str:
+    return f"""
+SELECT event_id, substr(regexp_replace(lower(props), '[^a-z0-9_]', '_', 'g'), 1, {S.ERROR_TYPE_CAP}) AS error_type
 FROM events ORDER BY event_id LIMIT 500
 """
 
@@ -742,13 +746,19 @@ FROM documents ORDER BY doc_id
 """
 
 
+def turn_number():
+    """A document's 0-based turn index in its conversation (source), in
+    doc_id order: the turn order of every documents-derived transcript."""
+    w = Window.partitionBy("source").orderBy("doc_id")
+    return (F.row_number().over(w) - 1).cast("int")
+
+
 def q_turn_window(spark, sf_dir):
     """row_number over (partition, order) — the per-conversation turn
     check (SURVEY.md §2.8)."""
     d = scan(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("doc_id")
     return d.select(
-        "doc_id", "source", (F.row_number().over(w) - 1).alias("turn_idx")
+        "doc_id", "source", turn_number().alias("turn_idx")
     ).orderBy("doc_id")
 
 
@@ -791,12 +801,12 @@ REGISTRY: dict[str, dict] = {
         "builder": q_pdf_extension_predicate,
         "sql": SQL_PDF_EXTENSION_PREDICATE,
     },
-    "text_preview": {"builder": q_text_preview, "sql": SQL_TEXT_PREVIEW},
+    "text_preview": {"builder": q_text_preview, "sql_fn": _text_preview_sql},
     "tag_split": {"builder": q_tag_split, "sql": SQL_TAG_SPLIT},
     "fence_strip": {"builder": q_fence_strip, "sql": SQL_FENCE_STRIP},
     "truncate_text": {"builder": q_truncate_text, "sql": SQL_TRUNCATE_TEXT},
     "word_char_counts": {"builder": q_word_char_counts, "sql": SQL_WORD_CHAR_COUNTS},
-    "error_type_sanitize": {"builder": q_error_type_sanitize, "sql": SQL_ERROR_TYPE_SANITIZE},
+    "error_type_sanitize": {"builder": q_error_type_sanitize, "sql_fn": _error_type_sanitize_sql},
     "log_sanitize": {"builder": q_log_sanitize, "sql": SQL_LOG_SANITIZE},
     "turn_window": {"builder": q_turn_window, "sql": SQL_TURN_WINDOW},
 }

@@ -309,9 +309,9 @@ def parse_classification(text: str) -> tuple[str, list[str], float]:
 MAX_INPUT_LENGTH = 30_000
 
 
-def truncate_text(text: str, max_length: int = MAX_INPUT_LENGTH) -> str:
+def truncate_text(text: str) -> str:
     """truncateText: substring(0, maxLength) only when longer."""
-    return text[:max_length] if len(text) > max_length else text
+    return text[:MAX_INPUT_LENGTH] if len(text) > MAX_INPUT_LENGTH else text
 
 
 # ---------------------------------------------------------------------------
@@ -319,6 +319,8 @@ def truncate_text(text: str, max_length: int = MAX_INPUT_LENGTH) -> str:
 # ---------------------------------------------------------------------------
 
 SINGLE_FILE_BYTE_CAP = 10 * 1024 * 1024  # FileSize.java:7 (10 MB single file)
+PREVIEW_LIMIT = 200  # DocumentSearchService.java:188-194
+ERROR_TYPE_CAP = 50  # OcrMetrics.java:162-170
 
 # error messages (F7) — analogs of the reference's exception texts
 ERR_NO_DATA = "Invalid OCR request: no image data provided"  # TesseractOcrProvider.java:64-69
@@ -336,12 +338,12 @@ def split_tags(tags: str | None) -> list[str]:
     return [t for t in (java_trim(p) for p in tags.split(",")) if t != ""]
 
 
-def text_preview(text: str | None, limit: int = 200) -> str | None:
+def text_preview(text: str | None) -> str | None:
     """DocumentSearchService.createPreview (DocumentSearchService.java:188-194):
-    text[:200] + "..." when longer."""
+    text[:PREVIEW_LIMIT] + "..." when longer."""
     if text is None:
         return None
-    return text[:limit] + "..." if len(text) > limit else text
+    return text[:PREVIEW_LIMIT] + "..." if len(text) > PREVIEW_LIMIT else text
 
 
 def sanitize_logging(value: str | None) -> str | None:
@@ -352,15 +354,15 @@ def sanitize_logging(value: str | None) -> str | None:
     return value.replace("\r", "").replace("\n", "")
 
 
-def sanitize_error_type(error: str | None, cap: int = 50) -> str:
+def sanitize_error_type(error: str | None) -> str:
     """OcrMetrics.sanitizeErrorType (OcrMetrics.java:162-170): lowercase,
-    non-[a-z0-9_] -> '_', truncate to 50 chars.  The reference rule,
-    pinned by tests, that the ``error_type_sanitize`` column query
+    non-[a-z0-9_] -> '_', truncate to ERROR_TYPE_CAP chars.  The reference
+    rule, pinned by tests, that the ``error_type_sanitize`` column query
     implements."""
     if error is None or error == "":
         return "unknown"
     out = re.sub(r"[^a-z0-9_]", "_", error.lower())
-    return out[:cap]
+    return out[:ERROR_TYPE_CAP]
 
 
 # Java regex \s is ASCII-only: [ \t\n\x0B\f\r]

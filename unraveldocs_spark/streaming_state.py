@@ -145,6 +145,7 @@ QUOTA_OUTPUT_SCHEMA = (
     "event_id long, user_id long, day string, n_in_day long, allowed boolean"
 )
 QUOTA_STATE_SCHEMA = "n long"
+DAILY_QUOTA = 3  # admitted events per user per day (the tier limit)
 
 EVENTS_STREAM_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -186,11 +187,10 @@ def quota_enforcer_stream(
     input_path: str,
     out_path: str,
     checkpoint_dir: str,
-    daily_limit: int = 3,
 ):
     """File stream of events -> per-(user, day) stateful admission:
     each event is ALLOWED while the user's running daily count stays
-    within ``daily_limit``, DENIED after — the streaming analog of the
+    within ``DAILY_QUOTA``, DENIED after — the streaming analog of the
     reference's consume-or-reject quota check, with the counter in
     Spark's managed state store instead of a row lock.
 
@@ -206,7 +206,7 @@ def quota_enforcer_stream(
     stream = read_stream(spark, EVENTS_STREAM_SCHEMA, input_path, 1)
     keyed = stream.withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
     decided = keyed.groupBy("user_id", "day").applyInPandasWithState(
-        _make_quota_update(daily_limit),
+        _make_quota_update(DAILY_QUOTA),
         outputStructType=QUOTA_OUTPUT_SCHEMA,
         stateStructType=QUOTA_STATE_SCHEMA,
         outputMode="update",

@@ -21,6 +21,7 @@ from .streaming_state import EVENTS_STREAM_SCHEMA
 # new files per micro-batch for every operator here; window, join and
 # session results do not depend on batch boundaries
 _MAX_FILES = 8
+WATERMARK = "30 minutes"  # how late any event here may arrive
 
 
 def run_windowed_rollup(
@@ -28,19 +29,17 @@ def run_windowed_rollup(
     input_path: str,
     output_path: str,
     checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
 ):
     """readStream(turns) -> extract -> watermark(ts) -> per (conv_id,
-    window) status counts with the reference's status ladder, drained
+    hour window) status counts with the reference's status ladder, drained
     with an availableNow trigger and appended to parquet (append mode:
     only watermark-closed windows are emitted — exactly-once per
     window).  Returns the query handle (caller awaits)."""
     stream = read_stream(spark, TRANSCRIPTS_SCHEMA, input_path, _MAX_FILES)
     extracted = extract_stage(stream, carry_ts=True)
     counts = status_rollup(
-        extracted.withWatermark("ts", watermark).groupBy(
-            F.window("ts", window).alias("win"), F.col("conv_id")
+        extracted.withWatermark("ts", WATERMARK).groupBy(
+            F.window("ts", "1 hour").alias("win"), F.col("conv_id")
         )
     )
     rollup = counts.select(
@@ -69,8 +68,6 @@ def run_stream_correlation(
     results_path: str,
     output_path: str,
     checkpoint_dir: str,
-    watermark: str = "30 minutes",
-    max_lag_minutes: int = 60,
 ):
     """Watermarked stream-stream INNER join: upload/request events
     correlated with their OCR completion events on (conv_id, turn_idx),
@@ -80,21 +77,21 @@ def run_stream_correlation(
 
     State stays bounded by BOTH requirements Spark imposes on
     stream-stream joins: each side carries an event-time watermark, and
-    the join condition bounds done_ts to [req_ts, req_ts + max_lag] — so
-    a request buffered in state is dropped once the result-side watermark
-    passes req_ts + max_lag, and vice versa.  Without the time-range
+    the join condition bounds done_ts to [req_ts, req_ts + 60 minutes] —
+    so a request buffered in state is dropped once the result-side
+    watermark passes req_ts + 60 minutes, and vice versa.  Without the time-range
     bound the request buffer would grow forever at 10^12 turns.
 
     Both streams drain with an availableNow trigger, appending matched
     pairs to parquet.  Returns the query handle (caller awaits)."""
     req = read_stream(
         spark, REQUEST_STREAM_SCHEMA, requests_path, _MAX_FILES
-    ).withWatermark("req_ts", watermark)
+    ).withWatermark("req_ts", WATERMARK)
     res = (
         read_stream(spark, RESULT_STREAM_SCHEMA, results_path, _MAX_FILES)
         .withColumnRenamed("conv_id", "r_conv_id")
         .withColumnRenamed("turn_idx", "r_turn_idx")
-        .withWatermark("done_ts", watermark)
+        .withWatermark("done_ts", WATERMARK)
     )
     joined = req.join(
         res,
@@ -103,7 +100,7 @@ def run_stream_correlation(
         & (F.col("done_ts") >= F.col("req_ts"))
         & (
             F.col("done_ts")
-            <= F.col("req_ts") + F.expr(f"INTERVAL {max_lag_minutes} MINUTES")
+            <= F.col("req_ts") + F.expr("INTERVAL 60 MINUTES")
         ),
         "inner",
     )
@@ -130,20 +127,18 @@ def run_session_rollup(
     input_path: str,
     output_path: str,
     checkpoint_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "30 minutes",
 ):
-    """readStream(events) -> watermark(ts) -> F.session_window(gap) per
-    user: the streaming restatement of the batch `sessionize` query.
-    Spark merges events whose gaps are under ``gap`` into one growing
+    """readStream(events) -> watermark(ts) -> F.session_window(30 minutes)
+    per user: the streaming restatement of the batch `sessionize` query.
+    Spark merges events whose gaps are under 30 minutes into one growing
     session window and finalizes it once the watermark passes session_end
     — state per user is ONE open session, not the event history.  Drains
     with availableNow, appending watermark-finalized sessions; returns
     the query handle (caller awaits)."""
     sessions = (
         read_stream(spark, EVENTS_STREAM_SCHEMA, input_path, _MAX_FILES)
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window(F.col("ts"), gap).alias("win"), F.col("user_id"))
+        .withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window(F.col("ts"), "30 minutes").alias("win"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",

@@ -890,7 +890,7 @@ def q_dedup_cluster(spark, sf_dir):
     )
 
 
-def connected_components(pairs, max_iters: int = _CC_MAX_ITERS):
+def connected_components(pairs):
     """(doc_a, doc_b) pair DataFrame -> (doc_id, label) with label = the
     minimum doc_id reachable in the undirected pair graph.  Iterative
     min-label propagation; each round is two equi-joins + a groupBy on
@@ -912,7 +912,7 @@ def connected_components(pairs, max_iters: int = _CC_MAX_ITERS):
         .withColumn("label", F.col("doc_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         nbr_min = (
             edges.join(labels, edges.doc_b == labels.doc_id)
             .groupBy(edges.doc_a.alias("doc_id"))
@@ -938,14 +938,14 @@ def connected_components(pairs, max_iters: int = _CC_MAX_ITERS):
         if changed == 0:
             return labels
     # min-label propagation needs ~component-diameter rounds: a chain
-    # deeper than max_iters would exit here with WRONG labels, silently
+    # deeper than _CC_MAX_ITERS would exit here with WRONG labels, silently
     # diverging from the exact recursive-CTE oracle — fail loudly instead
     # (the availableNow+timeout guard precedent). Dense near-dup
     # components converge in a handful of rounds; hitting this means the
     # graph shape assumption broke, so the caller should switch to
     # connected_components_star (log(n)-round large-star/small-star).
     raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds; "
+        f"connected_components did not converge in {_CC_MAX_ITERS} rounds; "
         "use connected_components_star for deep/skewed components"
     )
 
@@ -978,7 +978,7 @@ def q_dedup_cluster_star(spark, sf_dir):
     )
 
 
-def connected_components_star(pairs, max_iters: int = _CC_MAX_ITERS):
+def connected_components_star(pairs):
     """Skew-safe connected components: alternating large-star/small-star
     edge rewriting (Kiveris et al., 'Connected Components in MapReduce and
     Beyond', SOCC'14) until the edge set is a star forest, then read the
@@ -991,8 +991,13 @@ def connected_components_star(pairs, max_iters: int = _CC_MAX_ITERS):
     slow or skewed.  The star algorithm converges in O(log n) rounds on
     ANY topology and every operation here is groupBy-min + equi-join —
     no neighborhood is ever collected into one task.  Both
-    implementations are property-tested equal; q_dedup_cluster keeps the
-    simple one because near-dup components are shallow.
+    implementations are property-tested equal.  The five propagation
+    callers keep propagation, measured (``tools/measure.py time -n 3 --sf
+    sf0.1``, 4 interleaved pairs, 4 vCPUs): it won 4/4 pairs on each, e.g.
+    dedup_cluster 2.33 vs 4.01 s and semantic_dedup 5.22 vs 7.97 s here
+    (ROADMAP D7 lists all five); on dedup_cluster's 256-pair graph a call
+    runs 20 Spark jobs there and 36 here (30 with a one-job convergence
+    check, 1.25 s vs 0.75 s).
 
     Returns (doc_id, label) like connected_components."""
     und = pairs.union(
@@ -1037,7 +1042,7 @@ def connected_components_star(pairs, max_iters: int = _CC_MAX_ITERS):
         attach_self = m.select(F.col("u"), F.col("m").alias("v"))
         return attach_small.union(attach_self).distinct()
 
-    for _ in range(max_iters):
+    for _ in range(_CC_MAX_ITERS):
         new_edges = _small_star(_large_star(edges)).localCheckpoint()
         changed = (
             new_edges.exceptAll(edges).limit(1).count()
@@ -1049,7 +1054,7 @@ def connected_components_star(pairs, max_iters: int = _CC_MAX_ITERS):
     else:
         # not yet a star forest: the labels read below would be wrong
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} rounds"
+            f"connected_components_star did not converge in {_CC_MAX_ITERS} rounds"
         )
     # star forest: every non-root points at its component min; roots are
     # nodes never appearing on the u side
