@@ -950,7 +950,7 @@ class TestDedupIncrementPlan:
 
 class TestSimhashNearDupesPlan:
     def test_python_stage_runs_once_and_band_join_carries_ids(
-        self, spark, monkeypatch
+        self, spark, patch_materialize
     ):
         """SimHash candidates come from the shared band builder: the
         signature table is materialized once, so across the query and
@@ -962,15 +962,13 @@ class TestSimhashNearDupesPlan:
 
         from unraveldocs_spark.entry_queries import q_simhash_near_dupes
 
-        cls = type(spark.range(1))
-        real = cls.localCheckpoint
         materialized = []
 
-        def spy(df, *args, **kwargs):
+        def spy(df, label):
             materialized.append(plan_of(df))
-            return real(df, *args, **kwargs)
+            return real(df, label)
 
-        monkeypatch.setattr(cls, "localCheckpoint", spy)
+        real = patch_materialize(spy)
         plan = plan_of(q_simhash_near_dupes(spark, SF))
         arrow = [
             len(re.findall(r"^\(\d+\) MapInArrow", p, re.M))

@@ -371,6 +371,47 @@ def test_publish_retries_a_taken_snapshot_id(spark, tmp_path, doc_keys, monkeypa
         (1, "a", 0), (2, "b", 0)]
 
 
+def test_compaction_commits_only_onto_its_base(spark, tmp_path, doc_keys):
+    """A commit that lands after the compaction's rewrite is built (its
+    base) is not hidden behind it: the compaction publishes nothing and
+    leaves no _tmp-* dir, the late row still reads, and the next
+    compaction folds it."""
+    store = DirCheckpointStore(str(tmp_path / "c"), results_schema=DOC_SCHEMA)
+    store.append(spark.createDataFrame([(1, "a", 0)], DOC_SCHEMA))
+    store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
+    publish = store._publish
+
+    def late_writer(tables, *args, **kwargs):
+        if kwargs.get("compacted"):
+            store.append(spark.createDataFrame([(2, "b", 0)], DOC_SCHEMA))
+        return publish(tables, *args, **kwargs)
+
+    store._publish = late_writer
+    assert store.maybe_compact(spark, threshold=0) is None
+    del store._publish
+    want = [(1, "u", 1), (2, "b", 0)]
+    assert not [d for d in os.listdir(store.root) if d.startswith("_tmp-")]
+    assert sorted(tuple(r) for r in store.results(spark).collect()) == want
+    snap = store.maybe_compact(spark, threshold=0)
+    assert snap is not None and store.snapshots() == [snap]
+    assert sorted(tuple(r) for r in store.results(spark).collect()) == want
+
+
+def test_only_caller_run_ids_are_recorded(spark, tmp_path, doc_keys):
+    """Upserts, deletes, id-less appends and compactions mint no run
+    id, so a compacted manifest lists only the ids callers gave."""
+    store = DirCheckpointStore(str(tmp_path / "i"), results_schema=DOC_SCHEMA)
+    store.append(spark.createDataFrame([(1, "a", 0)], DOC_SCHEMA), run_id="r1")
+    store.append(spark.createDataFrame([(2, "b", 0)], DOC_SCHEMA))
+    store.upsert(spark.createDataFrame([(1, "u", 1)], DOC_SCHEMA), spark)
+    store.delete(spark.createDataFrame([(2,)], "doc_id long"), spark)
+    assert store._run_ids(store.snapshots()) == ["r1"]
+    assert store.maybe_compact(spark, threshold=0)
+    [snap] = store.snapshots()
+    assert store._run_ids([snap]) == ["r1"] and "run_id" not in store._manifest(snap)
+    assert store.has_run("r1") and not store.has_run(None)
+
+
 @pytest.mark.parametrize("op", ["upsert", "delete"])
 def test_retraction_on_an_empty_store(spark, tmp_path, op, doc_keys):
     """An upsert on an empty store is an insert; a delete leaves it empty."""

@@ -89,17 +89,16 @@ def _widths(plan: str, kind: str) -> set[int]:
 
 
 @pytest.fixture
-def plans(spark, monkeypatch):
+def plans(spark, patch_materialize):
     """Builds the plans of quality_score (a fanned scan), extract_turns
-    and extract_synthetic at sf0.001.  fan_out's localCheckpoint barrier
+    and extract_synthetic at sf0.001.  fan_out's ``materialize`` barrier
     is identity here: it materializes the round-robin exchange at build
     time, so the plan would show the checkpointed rows instead of the
     width they were spread to."""
     from unraveldocs_spark.entry_queries import q_extract_synthetic, q_extract_turns
     from unraveldocs_spark.trainingdata import q_quality_score
 
-    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint",
-                        lambda self, *a, **k: self)
+    patch_materialize(lambda df, label: df)
 
     def build():
         return {q.__name__[2:]: _plan(q(spark, SF)) for q in

@@ -2,6 +2,8 @@
 the non-SQL-expressible ops, plus Spark-vs-pure-Python equality on the
 driver's documents/embeddings tables (sf0.001)."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -1448,3 +1450,56 @@ class TestSharedStages:
         for r in td.q_corpus_export_shards(spark, SF).collect():
             shards[r["lang"]] += r["n_docs"]
         assert shards == Counter(r["lang"] for r in export)
+
+
+class TestZeroVectorParity:
+    """A zero embedding has no direction: Spark's cosine and unit vector
+    are NULL on it (``try_divide``), as DuckDB's division by zero is, so
+    the cosine family holds parity on a corpus with zero vectors
+    instead of raising ANSI ``DIVIDE_BY_ZERO``."""
+
+    QUERIES = ("semantic_dedup", "knn_join", "dedup_embedding_cosine", "ann_topk")
+
+    @staticmethod
+    def _zeroed_corpus(tmp_path):
+        """sf0.001 with the embeddings of vec_ids 1-9 set to zero."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from tools.check_correctness import TABLES
+
+        for t in TABLES:
+            if t != "embeddings":
+                os.symlink(f"{SF}/{t}.parquet", tmp_path / f"{t}.parquet")
+        emb = pq.read_table(f"{SF}/embeddings.parquet")
+        vecs = [
+            [0.0] * len(v) if i in range(1, 10) else v
+            for i, v in zip(emb.column("vec_id").to_pylist(),
+                            emb.column("embedding").to_pylist())
+        ]
+        col = emb.schema.names.index("embedding")
+        emb = emb.set_column(col, emb.schema.field(col),
+                             pa.array(vecs, emb.schema.field(col).type))
+        pq.write_table(emb, tmp_path / "embeddings.parquet")
+        return str(tmp_path)
+
+    def test_cosine_family_matches_duckdb(self, spark, tmp_path):
+        import duckdb
+
+        import __spark_entry__ as entry
+        from tools.check_correctness import TABLES, frame_hash
+
+        sf = self._zeroed_corpus(tmp_path)
+        con = duckdb.connect()
+        for t in TABLES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+        builders, sqls = entry.queries(), entry.oracle_sql()
+        for q in self.QUERIES:
+            df = builders[q](spark, sf)
+            rows, cols = df.collect(), df.columns
+            cur = con.execute(sqls[q])
+            dcols, drows = [d[0] for d in cur.description], cur.fetchall()
+            assert sorted(cols) == sorted(dcols), q
+            assert len(rows) == len(drows), q
+            assert frame_hash(cols, [[r[c] for c in cols] for r in rows]) == (
+                frame_hash(dcols, drows)), q

@@ -170,10 +170,11 @@ class DirCheckpointStore:
         )
 
     def _run_ids(self, snaps: list[str]) -> list[str]:
-        """The run ids ``snaps`` committed, those a compacted one folded
-        included."""
+        """The caller-given run ids ``snaps`` committed, those a
+        compacted one folded included."""
         return [r for m in map(self._manifest, snaps)
-                for r in (m.get("run_id"), *m.get("run_ids", ()))]
+                for r in (m.get("run_id"), *m.get("run_ids", ()))
+                if r is not None]
 
     def has_run(self, run_id: str) -> bool:
         """True if a committed snapshot already carries ``run_id`` — the
@@ -195,12 +196,21 @@ class DirCheckpointStore:
 
     # -- write ------------------------------------------------------------
     def _publish(self, tables: dict, run_id: str | None = None,
-                 **flags) -> str:
+                 base: str | None = None, **flags) -> str | None:
         """Write one snapshot atomically: stage each table under a _tmp
         dir, fsync a manifest, then rename into place — a snapshot
-        either fully exists or doesn't.  A rename onto an id another
-        writer took first retries with the next id; any other failure
-        removes the staging dir before re-raising.
+        either fully exists or doesn't.  The manifest carries ``run_id``
+        only when the caller gave one, the id a replay asks
+        :meth:`has_run` about.
+
+        A rename onto an id another writer took first retries with the
+        next id, unless the snapshot was built from ``base``: then it
+        publishes only at the id after ``base``, and a taken id means
+        another writer committed after the base, so the staging dir is
+        removed and nothing is published (None).  This is Iceberg's
+        optimistic-concurrency check, with the atomic rename as the
+        compare-and-swap.  Any other failure removes the staging dir
+        before re-raising.
 
         Every table is zstd parquet at the codec's default level, the
         default of the store this stands in for (Iceberg's
@@ -208,26 +218,30 @@ class DirCheckpointStore:
         not a session conf, so other parquet writes keep Spark's
         default; readers need nothing, since parquet records the codec
         per column chunk and older snappy snapshots fold unchanged."""
-        run_id = run_id or uuid.uuid4().hex[:12]
         staging = os.path.join(self.root, f"_tmp-{uuid.uuid4().hex}")
         try:
             for name, df in tables.items():
                 df.write.mode("overwrite").option("compression", "zstd").parquet(
                     os.path.join(staging, name))
-            manifest = {"run_id": run_id, "has_lineage": "lineage" in tables,
-                        **flags}
+            manifest = {"has_lineage": "lineage" in tables, **flags}
+            if run_id is not None:
+                manifest["run_id"] = run_id
             with open(os.path.join(staging, "_manifest.json"), "w") as f:
                 json.dump(manifest, f)
                 f.flush()
                 os.fsync(f.fileno())
             while True:
-                snap_id = self._next_snapshot_id()
+                snap_id = (self._next_snapshot_id() if base is None
+                           else f"snap-{self._snap_num(base) + 1:06d}")
                 try:
                     os.rename(staging, os.path.join(self.snap_dir, snap_id))  # atomic publish
                     break
                 except OSError as e:
                     if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
                         raise
+                    if base is not None:
+                        shutil.rmtree(staging, ignore_errors=True)
+                        return None
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
@@ -430,6 +444,13 @@ class DirCheckpointStore:
         one large upsert then compacts at once instead of being broadcast
         by every later read.
 
+        The rewrite is built from one listing: its base is the newest
+        snapshot then, and it folds the state as of that base.  It
+        publishes only at the id after the base, so a commit that lands
+        while the rewrite is written is never hidden behind it: the
+        compaction publishes nothing and returns None, and the next call
+        folds that commit too.
+
         This is the only full-state rewrite: it folds in every upsert and
         delete, so the retraction join goes away and, once the superseded
         snapshots expire, deleted rows leave the disk.  The operational
@@ -439,17 +460,22 @@ class DirCheckpointStore:
         expire_snapshots maintenance pair.  The rewrite is split-sized by
         :func:`scanfan.files` over the on-disk bytes of the live
         ``results/`` files, not one file per scan task.  Returns the new
-        snapshot id or None if under both limits."""
+        snapshot id, or None if under both limits or another writer
+        committed after the base."""
         # Spark's own parse of the byte-string conf ("10485760b", "32k", -1)
         limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        live = self._live_snapshots()
-        rows, retract = self._chain()
+        snaps = self.snapshots()
+        if not snaps:
+            return None
+        base = snaps[-1]
+        live = self._live_snapshots(base)
+        rows, retract = self._chain(base)
         if len(live) <= threshold and not 0 < limit < _bytes(retract):
             return None
-        state = self.results(spark).coalesce(files(spark, _bytes(rows)))
-        snap = self._publish({"results": state}, compacted=True,
+        state = self._state(spark, upto=base).coalesce(files(spark, _bytes(rows)))
+        snap = self._publish({"results": state}, base=base, compacted=True,
                              run_ids=self._run_ids(live))
-        if expire:
+        if snap is not None and expire:
             self.expire_snapshots()
         return snap
 
@@ -523,9 +549,13 @@ class IcebergCheckpointStore:
 
     Requires an Iceberg catalog on the session (spark.sql.catalog.*) and
     the iceberg-spark-runtime jar; ``results_table``/``lineage_table`` are
-    fully-qualified identifiers.  MERGE-free by design: appends only, with
-    resume by anti-join, so concurrent writers only need snapshot
-    isolation.  The SQL this class executes is rendered by the module-level
+    fully-qualified identifiers.  Appends and resume (an anti-join) need
+    only snapshot isolation, so concurrent appenders never conflict.
+    :meth:`upsert` and :meth:`delete` run ``MERGE INTO``, which rewrites
+    or retracts rows it read: a MERGE concurrent with another writer to
+    the same keys needs serializable isolation (Iceberg's
+    ``write.merge.isolation-level``, serializable by default) and may
+    fail its commit validation.  The SQL this class executes is rendered by the module-level
     ``iceberg_*_sql`` functions and pinned by unit tests, since the sandbox
     has no Iceberg runtime jar to execute it against.
     """

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window
 
 from . import semantics as S
 from .rollup import status_rollup
-from .scanfan import scan
+from .scanfan import materialize, scan
 
 
 # ---------------------------------------------------------------------------
@@ -1132,7 +1132,9 @@ def q_search_bm25(spark, sf_dir):
     fname = F.lower(
         F.concat(F.col("source"), F.lit("-"), F.col("doc_id").cast("string"))
     )
-    per_doc = d.select(
+    # narrow per-doc stats table consumed twice (corpus stats agg + the
+    # scoring join): truncate lineage so the tokenizing scan runs once
+    per_doc = materialize(d.select(
         "doc_id",
         fname.alias("fname"),
         F.size(toks).cast("bigint").alias("dl"),
@@ -1140,9 +1142,7 @@ def q_search_bm25(spark, sf_dir):
             F.size(F.filter(toks, _eq_lit(t))).cast("bigint").alias(f"tf{i}")
             for i, t in enumerate(_BM25_TERMS)
         ],
-    # narrow per-doc stats table consumed twice (corpus stats agg + the
-    # scoring join): truncate lineage so the tokenizing scan runs once
-    ).localCheckpoint()
+    ), "bm25_per_doc")
     stats = per_doc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("dl").alias("sum_dl"),
@@ -2216,9 +2216,9 @@ def q_dashboard_kpi(spark, sf_dir):
     e = scan(spark, sf_dir, "events")
     # per-user activity is read twice (global "now" + the user join):
     # materialize the narrow #users-sized aggregate once
-    activity = e.groupBy(F.col("user_id")).agg(
+    activity = materialize(e.groupBy(F.col("user_id")).agg(
         F.min("ts").alias("created_ts"), F.max("ts").alias("last_login")
-    ).localCheckpoint()
+    ), "kpi_activity")
     now_df = activity.agg(F.max("last_login").alias("now_ts"))
     ck = F.col("c_custkey")
     u = c.select(

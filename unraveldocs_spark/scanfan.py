@@ -20,6 +20,13 @@ carries thousands of row groups, the condition is false, and the frame
 is returned unchanged — no extra Exchange.  The repartition itself
 shuffles only the scanned bytes once (here: single-digit MB) and is
 deterministic (Spark's sort-before-repartition covers retry stability).
+
+The module is also the home of the registry's other two physical
+decisions.  :func:`materialize` is the package's one plan barrier (the
+only ``localCheckpoint()``, which ``fan_out`` calls too), run under a job
+description that names it.  :func:`rows` is the one table-size rule: band
+shapes read a table's row count from the same footers ``fan_out`` opens,
+so sizing a query costs no Spark job.
 """
 
 from __future__ import annotations
@@ -33,7 +40,7 @@ def scan(spark, sf_dir: str, name: str, cols: list[str] | None = None,
          fan: bool = False):
     """Read table ``name`` (``{sf_dir}/{name}.parquet``) — the one scan
     path of the operator registry.  ``cols`` prunes the projection BEFORE
-    any fan-out barrier: the checkpoint materializes every column it is
+    any fan-out barrier: the barrier materializes every column it is
     given, so wide unused columns (e.g. events.props JSON) must not ride
     through it.  ``fan=True`` adds the scale-adaptive :func:`fan_out` for
     heavy per-row work above the scan.  Fan-out is a per-call-site
@@ -48,25 +55,40 @@ def scan(spark, sf_dir: str, name: str, cols: list[str] | None = None,
 
 
 @functools.cache
-def _row_groups(path: str) -> int:
-    """Total parquet row groups under ``path`` (file or directory).
-    Footer metadata only — never reads row data.  Cached per path: the
-    testdata inputs are immutable for a session, exactly like Spark's
-    own file-index cache."""
+def _footer(path: str, mtime_ns: int, size: int) -> tuple[int, int] | None:
+    """(row groups, rows) of one parquet file's footer, or None when it
+    is unreadable; read once per version of the file."""
     import pyarrow.parquet as pq
 
+    try:
+        meta = pq.ParquetFile(path).metadata
+    except Exception:
+        return None
+    return meta.num_row_groups, meta.num_rows
+
+
+def _footers(path: str) -> list[tuple[int, int] | None]:
+    """The footer of each parquet file of the input at ``path`` (file or
+    directory).  Footer metadata only — never reads row data, and each
+    footer once per (path, mtime, size), so an input rewritten in place
+    is re-read, as Spark's own listing would."""
     files = (
         [path]
         if os.path.isfile(path)
         else sorted(glob.glob(os.path.join(path, "*.parquet")))
     )
-    total = 0
-    for f in files:
-        try:
-            total += pq.ParquetFile(f).metadata.num_row_groups
-        except Exception:
-            total += 1  # unreadable footer: assume one split, stay safe
-    return total
+    return [_footer(f, (st := os.stat(f)).st_mtime_ns, st.st_size) for f in files]
+
+
+def rows(sf_dir: str, name: str) -> int:
+    """The package's one table-size rule: the row count of table
+    ``name``, summed from its parquet footers.  It is the number
+    ``scan(spark, sf_dir, name).count()`` returns, exactly, without a
+    Spark job; band shapes size themselves from it."""
+    footers = _footers(f"{sf_dir}/{name}.parquet")
+    if None in footers:
+        raise ValueError(f"unreadable parquet footer in table {name!r} under {sf_dir}")
+    return sum(n for _, n in footers)
 
 
 def tasks(spark, python: bool = False) -> int:
@@ -97,22 +119,50 @@ def files(spark, nbytes: int) -> int:
     return max(1, -(-nbytes // split))
 
 
+def materialize(df, label: str):
+    """The package's one plan barrier: ``df.localCheckpoint()``, run
+    eagerly under the job description ``materialize:<label>``.  A
+    description the caller set (``tools/measure.py`` sets
+    ``measure:<query>``) is kept in front of it and restored afterwards,
+    so every barrier job names its query and what it materialized.
+
+    Query code cuts a plan here where it must: a fan-out repartition
+    (:func:`fan_out`), a table several branches read (signature tables,
+    per-doc stats), and each round of an iterative algorithm.  Only
+    local checkpoints exist today; a reliable checkpoint for a cluster
+    would be chosen here, for every barrier at once.
+
+    ``pipeline.run_extraction``'s ``persist()``/``count()`` is not a
+    barrier of this kind and does not come here: its coalesce reads the
+    cached frame's exact byte stats, and its plan test pins the Coalesce
+    over the ``InMemoryTableScan``."""
+    sc = df.sparkSession.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(" ".join(filter(None, (caller, f"materialize:{label}"))))
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.setJobDescription(caller)
+
+
 def fan_out(spark, df, path: str):
     """Repartition ``df`` to one task per core (:func:`tasks`) iff the
     parquet input at ``path`` has fewer row groups than cores (the scan
     cannot reach core-count parallelism on its own).  Identity at scale.
 
-    The repartitioned frame is ALSO localCheckpoint()ed: Catalyst pushes
-    deterministic filters below a repartition, so a downstream filter on
-    a derived column (``score > 0``, ``size(shingles) > 0``) would
-    otherwise re-derive the whole expression on the unsplit 1-2-task
-    scan — exactly the serialization the fan-out exists to remove.  The
-    checkpoint is a plan barrier that keeps every derived expression
-    above the 32-way partitioning, and multi-branch queries read the
-    materialized input instead of re-scanning.  At production scale the
-    branch is not taken, so parquet filter/column pushdown is untouched
-    where it actually matters."""
+    The repartitioned frame is ALSO materialized (label
+    ``fan_out:<table>``): Catalyst pushes deterministic filters below a
+    repartition, so a downstream filter on a derived column
+    (``score > 0``, ``size(shingles) > 0``) would otherwise re-derive the
+    whole expression on the unsplit 1-2-task scan — exactly the
+    serialization the fan-out exists to remove.  The barrier keeps every
+    derived expression above the 32-way partitioning, and multi-branch
+    queries read the materialized input instead of re-scanning.  At
+    production scale the branch is not taken, so parquet filter/column
+    pushdown is untouched where it actually matters."""
     cores = tasks(spark)
-    if _row_groups(path) >= cores:
+    # an unreadable footer counts as one split, the safe side
+    if sum(f[0] if f else 1 for f in _footers(path)) >= cores:
         return df
-    return df.repartition(cores).localCheckpoint()
+    table = os.path.basename(path).removesuffix(".parquet")
+    return materialize(df.repartition(cores), f"fan_out:{table}")

@@ -144,13 +144,15 @@ def band_pairs(a_bands: DataFrame, b_bands: DataFrame, payload: DataFrame,
 
 def cosine(a, b):
     """Cosine similarity of two array columns, in double, computed
-    JVM-side with higher-order functions (no Python in the scan)."""
+    JVM-side with higher-order functions (no Python in the scan).  A
+    zero vector has no direction: its cosine is NULL, as DuckDB's
+    division by zero gives, not an ANSI ``DIVIDE_BY_ZERO`` error."""
     av = F.transform(a, lambda x: x.cast("double"))
     bv = F.transform(b, lambda x: x.cast("double"))
     dot = F.aggregate(F.zip_with(av, bv, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
     na = F.aggregate(av, F.lit(0.0), lambda s, x: s + x * x)
     nb = F.aggregate(bv, F.lit(0.0), lambda s, x: s + x * x)
-    return dot / (F.sqrt(na) * F.sqrt(nb))
+    return F.try_divide(dot, F.sqrt(na) * F.sqrt(nb))
 
 
 def brute_force_topk(embeddings: DataFrame, query_vec: list[float], k: int) -> DataFrame:

@@ -14,6 +14,7 @@ import numpy as np
 
 from pyspark.sql import DataFrame
 
+from .scanfan import materialize
 from .schemas import map_rows
 from .similarity import band_pairs, band_rows
 
@@ -87,7 +88,7 @@ def simhash_near_dupes(docs: DataFrame) -> DataFrame:
     self-join and both join-backs read it."""
     from pyspark.sql import functions as F
 
-    sigs = simhash_stage(docs).localCheckpoint()
+    sigs = materialize(simhash_stage(docs), "simhash_signatures")
     n_bands = len(simhash_band_shifts())
     bands = band_rows(sigs, "doc_id", [F.col(f"band{i}") for i in range(n_bands)])
     cands = band_pairs(

@@ -27,7 +27,7 @@ from .generator import FIXTURE, mix64, transcript_rows, transcripts_spark
 # fan_out stays bound here although every scan goes through scan():
 # perfbench/workloads.py times the fan-out by patching
 # trainingdata.fan_out and scanfan.fan_out by name
-from .scanfan import fan_out, scan  # noqa: F401
+from .scanfan import fan_out, materialize, rows, scan  # noqa: F401
 from .similarity import ANN_K, EMB_DIM, band_pairs, band_rows, signature_stage
 
 
@@ -108,11 +108,10 @@ def _jaccard_keep():
 def _doc_jaccard_counts(spark, sf_dir):
     """Doc-grain MinHash-band candidates with their exact Jaccard counts,
     unthresholded and unordered."""
-    docs = scan(spark, sf_dir, "documents")
     return _jaccard_counts(_minhash_candidate_pairs(
         scan(spark, sf_dir, "documents", fan=True)
         .select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
-        shape_n=docs.count(),  # metadata-cheap parquet count
+        shape_n=rows(sf_dir, "documents"),
     ))
 
 
@@ -259,15 +258,13 @@ def _minhash_signatures(sh):
     (doc_id, sh, hs) of the docs with at least one shingle — the table a
     production pipeline persists between runs.  Every MinHash band join
     reads it several ways (bands, join-backs, spines), so it is
-    localCheckpoint()ed once and each read is a cheap RDD scan.  The
-    empty-shingle filter runs AFTER the checkpoint so its predicate
+    materialized once and each read is a cheap RDD scan.  The
+    empty-shingle filter runs AFTER the barrier so its predicate
     cannot be pushed below a fan-out repartition (where it re-derived
     the shingles on the unsplit scan)."""
-    return (
-        sh.withColumn("hs", _spark_shingle_hashes(F.col("sh")))
-        .localCheckpoint()
-        .filter(F.size("sh") > 0)
-    )
+    return materialize(
+        sh.withColumn("hs", _spark_shingle_hashes(F.col("sh"))), "minhash_signatures"
+    ).filter(F.size("sh") > 0)
 
 
 def _minhash_bands(d, n_bands: int, n_rows: int):
@@ -313,17 +310,20 @@ def _hyperplane_candidate_pairs(e, n_bands: int, band_bits: int,
     left, right = ("vec_id", "nbr_id") if symmetric else ("vec_a", "vec_b")
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(dv, F.lit(0.0), lambda acc, x: acc + x * x))
-    unit = (
+    # a zero vector's unit is NULLs, as DuckDB's x / 0 gives, not an ANSI
+    # DIVIDE_BY_ZERO error
+    unit_v = F.transform(F.col("v"), lambda x: F.try_divide(x, F.col("nrm")))
+    unit = materialize(
         e.select("vec_id", dv.alias("v"), norm.alias("nrm"))
-        .select(
-            "vec_id",
-            F.transform(F.col("v"), lambda x: x / F.col("nrm")).alias("unit"),
-        )
-        .localCheckpoint()
+        .select("vec_id", unit_v.alias("unit")),
+        "hyperplane_units",
     )
-    sigs = signature_stage(e, dim=EMB_DIM, bits=n_bands * band_bits).select(
-        "vec_id", "signature"
-    ).localCheckpoint()
+    sigs = materialize(
+        signature_stage(e, dim=EMB_DIM, bits=n_bands * band_bits).select(
+            "vec_id", "signature"
+        ),
+        "hyperplane_signatures",
+    )
     mask = (1 << band_bits) - 1
     bands = band_rows(sigs, "vec_id", [
         F.shiftright(F.col("signature"), b * band_bits).bitwiseAND(F.lit(mask))
@@ -525,18 +525,18 @@ def q_dedup_paragraph(spark, sf_dir):
     paras = _paragraphs(scan(spark, sf_dir, "documents", fan=True)).withColumn(
         "para_id", F.col("doc_id") * _PARA_STRIDE + F.col("para_idx")
     )
-    keepers = (
+    # distinct-paragraph table, read twice (shingle bands + the two
+    # copies joins): materialize once instead of re-running the
+    # explode + md5 groupBy per reader
+    keepers = materialize(
         paras.groupBy(F.md5(F.col("para").cast("binary")).alias("h"))
         .agg(
             F.min("para_id").alias("para_id"),
             F.count(F.lit(1)).alias("n_copies"),
             F.min("para").alias("para"),  # all rows in a group are identical
         )
-        .select("para_id", "n_copies", "para")
-        # distinct-paragraph table, read twice (shingle bands + the two
-        # copies joins): materialize once instead of re-running the
-        # explode + md5 groupBy per reader
-        .localCheckpoint()
+        .select("para_id", "n_copies", "para"),
+        "paragraph_keepers",
     )
     # shape_n: the banded universe is PARAGRAPHS (~10-20x docs), so the
     # measured log-rule must see a paragraph count, not the raw doc
@@ -637,7 +637,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     embedding dedup.  Band bits scale with corpus size via
     :func:`embedding_band_bits` (BENCH/BAND_BITS.md rule; 4-bit at
     driver scales, oracle-mirrored)."""
-    band_bits = embedding_band_bits(scan(spark, sf_dir, "embeddings").count())
+    band_bits = embedding_band_bits(rows(sf_dir, "embeddings"))
     e = scan(spark, sf_dir, "embeddings", fan=True)
     cands = _hyperplane_candidate_pairs(e, _EC_BANDS, band_bits, symmetric=False)
     return (
@@ -896,21 +896,22 @@ def connected_components(pairs):
     min-label propagation; each round is two equi-joins + a groupBy on
     doc_id keys, and the driver sees only a per-round converged boolean.
 
-    Every round's labels are localCheckpoint()ed: each iteration's plan
+    Every round's labels are materialized: each iteration's plan
     references the previous labels TWICE (propagation + convergence
     check), so without lineage truncation the logical plan doubles per
     round and the analyzer itself OOMs after ~10 rounds — caching alone
     does not cut the logical plan.  A cluster deployment uses reliable
     checkpoint() to HDFS/object storage for the same reason (plus
-    executor-loss recovery); localCheckpoint is its single-node stand-in."""
-    edges = pairs.union(
+    executor-loss recovery); :func:`scanfan.materialize`'s local
+    checkpoint is its single-node stand-in."""
+    edges = materialize(pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint()
-    labels = (
+    ), "cc_edges")
+    labels = materialize(
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
+        .withColumn("label", F.col("doc_id")),
+        "cc_labels",
     )
     for _ in range(_CC_MAX_ITERS):
         nbr_min = (
@@ -922,16 +923,15 @@ def connected_components(pairs):
         # labels only ever DECREASE, so "changed" is exactly
         # nbr_label < label, known at join time; the old shape paid a
         # second full join of new vs old labels every round
-        new_labels = (
-            labels.join(nbr_min, "doc_id", "left")
-            .select(
+        new_labels = materialize(
+            labels.join(nbr_min, "doc_id", "left").select(
                 "doc_id",
                 F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias(
                     "new_label"
                 ),
                 (F.coalesce("nbr_label", "label") < F.col("label")).alias("chg"),
-            )
-            .localCheckpoint()
+            ),
+            "cc_round",
         )
         changed = new_labels.filter("chg").limit(1).count()
         labels = new_labels.select("doc_id", F.col("new_label").alias("label"))
@@ -1003,16 +1003,18 @@ def connected_components_star(pairs):
     und = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
-    nodes = und.select(F.col("doc_a").alias("doc_id")).distinct().localCheckpoint()
+    nodes = materialize(
+        und.select(F.col("doc_a").alias("doc_id")).distinct(), "cc_star_nodes"
+    )
     # canonical edge orientation (u > v), self-loops dropped
-    edges = (
+    edges = materialize(
         pairs.select(
             F.greatest("doc_a", "doc_b").alias("u"),
             F.least("doc_a", "doc_b").alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "cc_star_edges",
     )
 
     def _large_star(e):
@@ -1043,7 +1045,7 @@ def connected_components_star(pairs):
         return attach_small.union(attach_self).distinct()
 
     for _ in range(_CC_MAX_ITERS):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint()
+        new_edges = materialize(_small_star(_large_star(edges)), "cc_star_round")
         changed = (
             new_edges.exceptAll(edges).limit(1).count()
             + edges.exceptAll(new_edges).limit(1).count()
@@ -1160,9 +1162,8 @@ def q_knn_join(spark, sf_dir):
     log2(n) per the same rule."""
     from pyspark.sql.window import Window
 
-    band_bits = knn_band_bits(  # measured rule, 8 at driver scales
-        scan(spark, sf_dir, "embeddings").count()
-    )
+    # measured rule, 8 at driver scales
+    band_bits = knn_band_bits(rows(sf_dir, "embeddings"))
     e = scan(spark, sf_dir, "embeddings", fan=True)
     scored = _hyperplane_candidate_pairs(
         e, _KNN_BANDS, band_bits, symmetric=True
@@ -1895,12 +1896,12 @@ def q_corpus_build_full(spark, sf_dir):
     # shingles, final resolution); materialize it once — the standard
     # corpus-build shape, each stage's output persisted before the next
     # (recomputing it re-ran the stopword gate + md5 groupBy per reader)
-    kept = kept.localCheckpoint()
-    # shape_n from the cheap base-table count (upper bound on the gate
-    # survivors the bands actually see)
+    kept = materialize(kept, "corpus_build_kept")
+    # shape_n from the base table's footer row count (upper bound on the
+    # gate survivors the bands actually see)
     cands = _minhash_candidate_pairs(
         kept.select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
-        shape_n=scan(spark, sf_dir, "documents").count(),
+        shape_n=rows(sf_dir, "documents"),
     )
     pairs = _jaccard_counts(cands).filter(_jaccard_keep()).select("doc_a", "doc_b")
     labels = connected_components(pairs)
@@ -2141,11 +2142,12 @@ def _chunk_doc_freq(d):
     """C4 chunk table of a documents frame: every 16-word chunk
     (doc_id, para_idx, para, h = md5) with ``n_docs``, the number of
     distinct documents containing that chunk corpus-wide."""
-    paras = _paragraphs(d).withColumn(
-        "h", F.md5(F.col("para").cast("binary"))
     # the chunk table feeds the corpus-wide frequency AND the join back:
     # materialize it once (C4 pipelines persist the line/chunk table)
-    ).localCheckpoint()
+    paras = materialize(
+        _paragraphs(d).withColumn("h", F.md5(F.col("para").cast("binary"))),
+        "chunk_table",
+    )
     freq = paras.groupBy("h").agg(F.countDistinct("doc_id").alias("n_docs"))
     return paras.join(freq, "h")
 
@@ -2303,7 +2305,10 @@ def _contamination(d):
     # corpus side) consume it, and the size(sh) predicate would
     # otherwise push below the fan-out repartition and re-derive the
     # shingles on the unsplit scan
-    sh = d.select("doc_id", _spark_shingles(F.col("text")).alias("sh")).localCheckpoint()
+    sh = materialize(
+        d.select("doc_id", _spark_shingles(F.col("text")).alias("sh")),
+        "contamination_shingles",
+    )
     bench_sh = (
         sh.filter(F.col("doc_id") % _BENCH_MOD == 0)
         .select(F.explode("sh").alias("sh"))
@@ -4632,10 +4637,10 @@ def q_dsir_importance(spark, sf_dir):
     # aggregate: the explode + per-token md5 pass runs a single time
     # instead of once per consumer (bstats and db are differently-keyed
     # Exchanges, so Catalyst cannot share the subplan itself)
-    db = (
+    db = materialize(
         tb.groupBy("doc_id", "lang", "bucket")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_b"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_b")),
+        "dsir_doc_buckets",
     )
     bstats = db.groupBy("bucket").agg(
         F.sum("n_b").cast("bigint").alias("cnt_r"),
@@ -4976,7 +4981,7 @@ def q_domain_mix(spark, sf_dir):
     # #domains-sized: truncate lineage so the totals agg and the final
     # join consume this tiny table instead of re-running the corpus scan
     # twice (Catalyst does not share the subplan across the two readers)
-    dom = dom.localCheckpoint()
+    dom = materialize(dom, "domain_mix_domains")
     tot = dom.agg(
         F.expr("GREATEST(CAST(SUM(n_tokens) AS BIGINT), CAST(1 AS BIGINT))").alias(
             "tot_tok"
@@ -5064,7 +5069,7 @@ def q_curriculum_order(spark, sf_dir):
     # (histogram, total, final join): truncate lineage so the tokenizing
     # corpus scan runs ONCE instead of three times — the guide §8
     # "decide with small rows" shape, with the small rows materialized
-    per_doc = per_doc.localCheckpoint()
+    per_doc = materialize(per_doc, "curriculum_per_doc")
     hist = per_doc.groupBy("difficulty_e6").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     )
@@ -5187,7 +5192,7 @@ def q_classifier_trainset(spark, sf_dir):
     )
     # narrow per-doc decision table consumed twice (stats agg + final
     # filter): truncate lineage so the tokenizing scan runs once
-    base = base.localCheckpoint()
+    base = materialize(base, "classifier_base")
     stats = base.agg(
         F.sum(F.when(F.col("is_pos"), 1).otherwise(0))
         .cast("bigint")
@@ -5292,7 +5297,7 @@ def q_dedup_increment(spark, sf_dir):
     keeps unique new docs (the common case) flowing through without
     matches."""
     docs = scan(spark, sf_dir, "documents")
-    n_bands, n_rows = minhash_band_shape(docs.count())
+    n_bands, n_rows = minhash_band_shape(rows(sf_dir, "documents"))
     t = int(
         docs.agg(F.expr("CAST((4 * MAX(doc_id)) DIV 5 AS BIGINT)")).collect()[
             0
