@@ -32,6 +32,7 @@ def main():
     from pyspark.sql import SparkSession, functions as F
 
     from unraveldocs_spark.checkpoint import DirCheckpointStore
+    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.schemas import (
         CORPUS_LINEAGE_SCHEMA,
         CORPUS_SHARDS_SCHEMA,
@@ -48,7 +49,7 @@ def main():
     if os.path.basename(sf_dir) == "documents.parquet":
         sf_dir = os.path.dirname(sf_dir)
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = scan(spark, sf_dir, "documents")
     # content fingerprint via XOR of per-row hashes: order-independent and
     # overflow-free at any corpus size (a SUM of products throws under
     # ANSI once doc_id * constant exceeds BIGINT at ~10^12-scale ids)

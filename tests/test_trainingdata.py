@@ -1456,9 +1456,13 @@ class TestZeroVectorParity:
     """A zero embedding has no direction: Spark's cosine and unit vector
     are NULL on it (``try_divide``), as DuckDB's division by zero is, so
     the cosine family holds parity on a corpus with zero vectors
-    instead of raising ANSI ``DIVIDE_BY_ZERO``."""
+    instead of raising ANSI ``DIVIDE_BY_ZERO``.  The numpy centroid
+    paths (IVF, SemDeDup) score a zero vector or a zero seed centroid
+    -1.0, as DuckDB ``list_cosine_similarity`` does, with no NaN
+    centroid (a RuntimeWarning fails the test)."""
 
-    QUERIES = ("semantic_dedup", "knn_join", "dedup_embedding_cosine", "ann_topk")
+    QUERIES = ("semantic_dedup", "knn_join", "dedup_embedding_cosine", "ann_topk",
+               "ann_ivf_topk")
 
     @staticmethod
     def _zeroed_corpus(tmp_path):
@@ -1483,6 +1487,7 @@ class TestZeroVectorParity:
         pq.write_table(emb, tmp_path / "embeddings.parquet")
         return str(tmp_path)
 
+    @pytest.mark.filterwarnings("error::RuntimeWarning")
     def test_cosine_family_matches_duckdb(self, spark, tmp_path):
         import duckdb
 

@@ -47,6 +47,9 @@ from contextlib import redirect_stdout
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from unraveldocs_spark import scanfan  # noqa: E402
+from unraveldocs_spark.scanfan import scan  # noqa: E402
+
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 GROWTH_ROOT = "/tmp/unraveldocs-growth"
@@ -118,7 +121,7 @@ def growth_corpus(spark, base_dir: str, mult: int) -> str:
     out = os.path.join(GROWTH_ROOT, key, f"x{mult}")
     if os.path.exists(os.path.join(out, "documents.parquet", "_SUCCESS")):
         return out
-    base = spark.read.parquet(f"{base_dir}/documents.parquet")
+    base = scan(spark, base_dir, "documents")
     df = base
     for k in range(1, mult):
         df = df.unionByName(
@@ -155,7 +158,6 @@ def _sf(sf_dir: str) -> str:
 def dedup_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
     from pyspark.sql import functions as F
 
-    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _minhash_candidate_pairs,
         _paragraphs,
@@ -361,7 +363,7 @@ def _unit_vectors(spark, sf_dir: str):
     """(embeddings frame, sorted ids, raw matrix, unit-norm matrix)."""
     import numpy as np
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = scan(spark, sf_dir, "embeddings")
     rows = sorted(e.collect(), key=lambda r: r.vec_id)
     ids = [r.vec_id for r in rows]
     mat = np.stack([np.asarray(r.embedding, dtype=np.float64) for r in rows])
@@ -567,7 +569,6 @@ def substr_split_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
     split sizes."""
     from pyspark.sql import functions as F
 
-    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _esub_grams,
         _esub_tokens,
@@ -658,7 +659,6 @@ def paragraph_scale(spark, sf_dir: str, mults=(1, 4)) -> list[dict]:
     baseline-similarity collisions curve up once widening stops?"""
     from pyspark.sql import functions as F
 
-    from unraveldocs_spark.scanfan import scan
     from unraveldocs_spark.trainingdata import (
         _minhash_candidate_pairs,
         _paragraphs,
@@ -758,7 +758,7 @@ def _increment_batch(spark, sf_dir: str):
     key is disjoint from every growth copy-universe)."""
     from pyspark.sql import functions as F
 
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    base = scan(spark, sf_dir, "documents")
     dups = base.filter(F.col("doc_id") < BATCH_DUPS).select(
         (F.col("doc_id") + BATCH_BASE_ID).alias("doc_id"), "text"
     )
@@ -801,8 +801,8 @@ def increment_scale(spark, sf_dir: str, mults=(1, 4, 16)) -> list[dict]:
     rows = []
     for mult in mults:
         corpus = growth_corpus(spark, sf_dir, mult)
-        existing = spark.read.parquet(f"{corpus}/documents.parquet")
-        n_existing = existing.count()
+        existing = scan(spark, corpus, "documents")
+        n_existing = scanfan.rows(corpus, "documents")
         n_bands, n_rows = minhash_band_shape(n_existing + n_batch)
         all_side = nz(existing.select("doc_id", "text").unionByName(batch))
         batch_side = all_side.filter(F.col("doc_id") >= BATCH_BASE_ID)

@@ -21,12 +21,21 @@ is returned unchanged — no extra Exchange.  The repartition itself
 shuffles only the scanned bytes once (here: single-digit MB) and is
 deterministic (Spark's sort-before-repartition covers retry stability).
 
-The module is also the home of the registry's other two physical
+The module is also the home of the registry's other physical
 decisions.  :func:`materialize` is the package's one plan barrier (the
 only ``localCheckpoint()``, which ``fan_out`` calls too), run under a job
 description that names it.  :func:`rows` is the one table-size rule: band
 shapes read a table's row count from the same footers ``fan_out`` opens,
-so sizing a query costs no Spark job.
+so sizing a query costs no Spark job; :func:`column_max` reads a column's
+maximum from the same footers' statistics.
+
+One notion of a table version serves all of them: :func:`_version`, the
+``(file, st_mtime_ns, st_size)`` of each parquet file of the input.  The
+footers are read once per version, and so is the schema: ``scan`` hands
+Spark a schema inferred once per session and table version
+(:func:`_schema`), where ``spark.read.parquet(path)`` alone runs a
+one-task schema-inference job on every call — as a catalog table keeps
+its schema in metadata and never infers it.
 """
 
 from __future__ import annotations
@@ -47,37 +56,67 @@ def scan(spark, sf_dir: str, name: str, cols: list[str] | None = None,
     choice: map-side-collapsing aggregates (dashboard_kpi,
     event_type_pivot) measured ~2x slower fanned."""
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_schema(spark, path, _version(path))).parquet(path)
     if cols is not None:
         df = df.select(*cols)
     # module-global lookup, so a patched scanfan.fan_out sees every scan
     return fan_out(spark, df, path) if fan else df
 
 
-@functools.cache
-def _footer(path: str, mtime_ns: int, size: int) -> tuple[int, int] | None:
-    """(row groups, rows) of one parquet file's footer, or None when it
-    is unreadable; read once per version of the file."""
-    import pyarrow.parquet as pq
-
-    try:
-        meta = pq.ParquetFile(path).metadata
-    except Exception:
-        return None
-    return meta.num_row_groups, meta.num_rows
-
-
-def _footers(path: str) -> list[tuple[int, int] | None]:
-    """The footer of each parquet file of the input at ``path`` (file or
-    directory).  Footer metadata only — never reads row data, and each
-    footer once per (path, mtime, size), so an input rewritten in place
-    is re-read, as Spark's own listing would."""
+def _version(path: str) -> tuple[tuple[str, int, int], ...]:
+    """The version of the parquet input at ``path`` (file or directory):
+    ``(file, st_mtime_ns, st_size)`` of each of its parquet files, so an
+    input rewritten in place is a new version, as Spark's own listing
+    would see it.  Every per-table cache of this module keys on it."""
     files = (
         [path]
         if os.path.isfile(path)
         else sorted(glob.glob(os.path.join(path, "*.parquet")))
     )
-    return [_footer(f, (st := os.stat(f)).st_mtime_ns, st.st_size) for f in files]
+    return tuple((f, (st := os.stat(f)).st_mtime_ns, st.st_size) for f in files)
+
+
+@functools.cache
+def _footer(path: str, mtime_ns: int, size: int):
+    """One parquet file's footer metadata, or None when it is
+    unreadable; read once per version of the file."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.ParquetFile(path).metadata
+    except Exception:
+        return None
+
+
+def _footers(path: str) -> list:
+    """The footer of each parquet file of the input at ``path``.  Footer
+    metadata only — never reads row data."""
+    return [_footer(*v) for v in _version(path)]
+
+
+@functools.cache
+def _schema(spark, path: str, version: tuple):
+    """The schema Spark infers for the parquet input at ``path``, asked
+    of Spark (``spark.read.parquet(path).schema``) once per session and
+    per :func:`_version` of the input, so every later scan of that
+    version runs no inference job.  Two threads racing on a cold key
+    can at worst infer the same schema twice.  The cache keeps each
+    session it served alive; a process builds one or two.
+
+    Deriving the schema from the pyarrow footers instead would save the
+    first job too, but Spark's parquet-to-Catalyst mapping is its own
+    (INT96, the TIMESTAMP_NTZ inference conf, unsigned ints, legacy list
+    layouts), and a mismatch would silently retype a column."""
+    return spark.read.parquet(path).schema
+
+
+def _table_footers(sf_dir: str, name: str) -> list:
+    """The footers of table ``name``; ValueError when one is unreadable,
+    since a size read from the others would be a guess."""
+    footers = _footers(f"{sf_dir}/{name}.parquet")
+    if None in footers:
+        raise ValueError(f"unreadable parquet footer in table {name!r} under {sf_dir}")
+    return footers
 
 
 def rows(sf_dir: str, name: str) -> int:
@@ -85,10 +124,30 @@ def rows(sf_dir: str, name: str) -> int:
     ``name``, summed from its parquet footers.  It is the number
     ``scan(spark, sf_dir, name).count()`` returns, exactly, without a
     Spark job; band shapes size themselves from it."""
-    footers = _footers(f"{sf_dir}/{name}.parquet")
-    if None in footers:
-        raise ValueError(f"unreadable parquet footer in table {name!r} under {sf_dir}")
-    return sum(n for _, n in footers)
+    return sum(m.num_rows for m in _table_footers(sf_dir, name))
+
+
+def column_max(sf_dir: str, name: str, column: str):
+    """``MAX(column)`` of table ``name``, read from the column statistics
+    of its parquet footers instead of a Spark job.  Raises ValueError
+    when a row group lacks the statistic, as :func:`rows` does for an
+    unreadable footer: no guess."""
+    maxes = []
+    for m in _table_footers(sf_dir, name):
+        for i in range(m.num_row_groups):
+            rg = m.row_group(i)
+            stats = next(
+                (c.statistics for c in map(rg.column, range(rg.num_columns))
+                 if c.path_in_schema == column),
+                None,
+            )
+            if stats is None or not stats.has_min_max:
+                raise ValueError(
+                    f"no max statistic for {name}.{column} under {sf_dir}")
+            maxes.append(stats.max)
+    if not maxes:
+        raise ValueError(f"no row groups in table {name!r} under {sf_dir}")
+    return max(maxes)
 
 
 def tasks(spark, python: bool = False) -> int:
@@ -162,7 +221,7 @@ def fan_out(spark, df, path: str):
     pushdown is untouched where it actually matters."""
     cores = tasks(spark)
     # an unreadable footer counts as one split, the safe side
-    if sum(f[0] if f else 1 for f in _footers(path)) >= cores:
+    if sum(m.num_row_groups if m else 1 for m in _footers(path)) >= cores:
         return df
     table = os.path.basename(path).removesuffix(".parquet")
     return materialize(df.repartition(cores), f"fan_out:{table}")

@@ -204,11 +204,26 @@ def lsh_topk(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
     return brute_force_topk(pruned, query_vec, ANN_K)
 
 
+def unit_rows(mat: np.ndarray) -> np.ndarray:
+    """``mat``'s rows scaled to unit norm; a zero row stays zero."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    return mat / np.where(norms == 0, 1.0, norms)
+
+
+def _cosines(mat: np.ndarray, cents_unit: np.ndarray) -> np.ndarray:
+    """Cosine of each row of ``mat`` against each unit centroid, by the
+    definition the oracles rank with, DuckDB ``list_cosine_similarity``:
+    a zero vector on either side scores -1.0."""
+    unit = unit_rows(mat)
+    zero = ~unit.any(axis=1)[:, None] | ~cents_unit.any(axis=1)[None, :]
+    return np.where(zero, -1.0, unit @ cents_unit.T)
+
+
 def _assign_stage(
     embeddings: DataFrame, cents_unit: np.ndarray, quantize_e4: bool = False
 ) -> DataFrame:
-    """vec_id -> nearest-centroid id by cosine (numpy over Arrow batches;
-    argmax ties resolve to the lowest centroid id).
+    """vec_id -> nearest-centroid id by cosine (numpy over Arrow batches,
+    :func:`_cosines`; argmax ties resolve to the lowest centroid id).
 
     ``quantize_e4`` rounds each cosine to an e4 integer (half-away-from-
     zero, the DuckDB/Spark ROUND rule) before the argmax, so the
@@ -218,10 +233,7 @@ def _assign_stage(
     item 4; same discipline as the integer-e6 PQ lookup tables)."""
 
     def assign(batch):
-        mat = _matrix(batch, cents_unit.shape[1])
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (mat / norms) @ cents_unit.T
+        sims = _cosines(_matrix(batch, cents_unit.shape[1]), cents_unit)
         if quantize_e4:
             sims = np.copysign(
                 np.floor(np.abs(sims) * 1e4 + 0.5), sims
@@ -243,12 +255,12 @@ def ivf_topk(embeddings: DataFrame, query_vec: list[float]) -> DataFrame:
     At scale the assignment is computed once and stored as a partition
     column, so a query scans only nprobe partitions of the table."""
     cents = seed_vectors(embeddings, IVF_CENTROIDS)
-    cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
+    cents_unit = unit_rows(cents)
     assigned = _assign_stage(embeddings, cents_unit)
 
-    q = np.asarray(query_vec, dtype=np.float64)
-    qsims = (q / np.linalg.norm(q)) @ cents_unit.T
-    probe = [int(i) for i in np.argsort(-qsims)[:IVF_NPROBE]]
+    qsims = _cosines(np.asarray([query_vec], dtype=np.float64), cents_unit)[0]
+    # a stable sort: equal cosines probe the lowest cid first
+    probe = [int(i) for i in np.argsort(-qsims, kind="stable")[:IVF_NPROBE]]
 
     candidates = assigned.filter(F.col("centroid_id").isin(probe)).select("vec_id")
     pruned = embeddings.join(candidates, "vec_id", "left_semi")

@@ -27,7 +27,7 @@ from .generator import FIXTURE, mix64, transcript_rows, transcripts_spark
 # fan_out stays bound here although every scan goes through scan():
 # perfbench/workloads.py times the fan-out by patching
 # trainingdata.fan_out and scanfan.fan_out by name
-from .scanfan import fan_out, materialize, rows, scan  # noqa: F401
+from .scanfan import column_max, fan_out, materialize, rows, scan  # noqa: F401
 from .similarity import ANN_K, EMB_DIM, band_pairs, band_rows, signature_stage
 
 
@@ -3276,14 +3276,11 @@ def q_semantic_dedup(spark, sf_dir):
     ``list_cosine_similarity`` can therefore never flip cluster
     membership or a keep verdict — the same discipline as the
     integer-e6 PQ lookup tables."""
-    import numpy as np
-
-    from .similarity import _assign_stage, cosine, seed_vectors
+    from .similarity import _assign_stage, cosine, seed_vectors, unit_rows
 
     e = scan(spark, sf_dir, "embeddings")
-    cents = seed_vectors(e, _SEMDEDUP_K)
-    cents_unit = cents / np.linalg.norm(cents, axis=1, keepdims=True)
-    assigned = _assign_stage(e, cents_unit, quantize_e4=True)
+    assigned = _assign_stage(
+        e, unit_rows(seed_vectors(e, _SEMDEDUP_K)), quantize_e4=True)
     v = e.join(assigned, "vec_id").select("vec_id", "centroid_id", "embedding")
     a = v.alias("a")
     b = v.alias("b")
@@ -5293,16 +5290,12 @@ def q_dedup_increment(spark, sf_dir):
     growing 16x (5k -> 80k docs) holds batch-side candidate pairs
     absolutely flat (296 -> 271 -> 271) — ``minhash_band_shape``
     widening at the 8k boundary is what keeps them from curving up.
-    The batch threshold is one bounded 1-row agg; the final LEFT join
-    keeps unique new docs (the common case) flowing through without
-    matches."""
-    docs = scan(spark, sf_dir, "documents")
+    The batch threshold reads MAX(doc_id) from the parquet footers'
+    column statistics (``scanfan.column_max``), with no Spark job; the
+    final LEFT join keeps unique new docs (the common case) flowing
+    through without matches."""
     n_bands, n_rows = minhash_band_shape(rows(sf_dir, "documents"))
-    t = int(
-        docs.agg(F.expr("CAST((4 * MAX(doc_id)) DIV 5 AS BIGINT)")).collect()[
-            0
-        ][0]
-    )
+    t = 4 * column_max(sf_dir, "documents", "doc_id") // 5
     # read four ways below: corpus bands, batch bands, new-doc spine
     # and shingle join-back
     nz = _minhash_signatures(
